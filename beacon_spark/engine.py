@@ -17,9 +17,11 @@ from DataFusion statements (``parser/beacon_parser.rs:33-115``).
 from __future__ import annotations
 
 import json
+import logging
 import posixpath
 import re
-from typing import Any
+import uuid
+from typing import Any, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -58,6 +60,36 @@ _COPY_RE = re.compile(
 _ANALYZE_RE = re.compile(
     r"^\s*ANALYZE\s+FILES(?:\s+'([^']*)')?(\s+FORCE)?;?\s*$", re.IGNORECASE
 )
+
+_log = logging.getLogger("beacon_spark.engine")
+
+_ND_FMTS = ("netcdf", "hdf5", "zarr", "tiff", "atlas")
+# a SQL temp view stores its text and resolves the views it names on
+# every use, so the nd views such a statement binds must outlive it
+_DEFINES_TEMP_VIEW_RE = re.compile(
+    r"^\s*CREATE\s+(?:OR\s+REPLACE\s+)?(?:GLOBAL\s+)?TEMP(?:ORARY)?\s+VIEW\b",
+    re.IGNORECASE,
+)
+#: parsed command node -> the field holding the query it would run
+_QUERY_CHILD = {
+    "CreateTableAsSelect": "query",
+    "ReplaceTableAsSelect": "query",
+    "InsertIntoStatement": "query",
+    "CreateViewCommand": "plan",
+    "ExplainCommand": "logicalPlan",
+}
+#: Catalyst comparison with the attribute on the left -> (bounds it from
+#: below, bounds it from above); a literal on the left swaps the pair
+_ND_BOUNDS = {
+    "EqualTo": (True, True),
+    "GreaterThan": (True, False),
+    "GreaterThanOrEqual": (True, False),
+    "LessThan": (False, True),
+    "LessThanOrEqual": (False, True),
+}
+_NUMERIC_TYPES = {"byte", "short", "integer", "long", "float", "double"}
+
+
 _EXCLUDE_RE = re.compile(
     r"(\*\s+)EXCLUDE\s*(\(([^)]*)\)|(\w+))", re.IGNORECASE
 )
@@ -578,6 +610,136 @@ def _parse_crawler_opts(with_opts: str | None) -> dict:
     return out
 
 
+class _NdCall(NamedTuple):
+    """One SQL nd table-function call: the reserved view name standing
+    in for it in the statement, and (once bound) its placeholder's
+    schema and RDD id."""
+
+    name: str
+    fmt: str
+    globs: tuple
+    dims: list | None
+    schema: T.StructType | None = None
+    rdd_id: int | None = None
+
+
+def _jseq(seq) -> list:
+    """A Scala Seq over py4j as a Python list."""
+    return [seq.apply(i) for i in range(seq.size())]
+
+
+def _with_dot_prefixes(names) -> list[str]:
+    """Column names -> the nd variables that produce them: every dotted
+    prefix joins the set ("temperature.units" needs variable
+    "temperature"; a tiff's "geo.lat" is itself a variable)."""
+    out = set(names)
+    for name in names:
+        parts = name.split(".")
+        out.update(".".join(parts[:i]) for i in range(1, len(parts)))
+    return sorted(out)
+
+
+def _filter_ranges(cond, attrs: dict, ranges: dict) -> None:
+    """Tighten ``ranges`` (column -> (lo, hi)) by a Filter condition over
+    one placeholder's attributes (``attrs``: exprId -> column name). Only
+    AND-ed attribute-vs-numeric-literal comparisons count, in either
+    orientation; strict bounds widen to inclusive hulls. Everything else
+    (``isnotnull``, ORs, casts, NaN) is skipped: Spark re-applies the
+    whole WHERE, so a range can only shrink what is read."""
+    todo = [cond]
+    while todo:
+        e = todo.pop()
+        kind = e.nodeName()
+        if kind == "And":
+            todo += [e.left(), e.right()]
+            continue
+        if kind not in _ND_BOUNDS:
+            continue
+        lower, upper = _ND_BOUNDS[kind]
+        attr, lit = e.left(), e.right()
+        if attr.nodeName() == "Literal":
+            attr, lit, lower, upper = lit, attr, upper, lower
+        if attr.nodeName() != "AttributeReference" or lit.nodeName() != "Literal":
+            continue
+        name = attrs.get(attr.exprId().id())
+        if name is None or lit.dataType().typeName() not in _NUMERIC_TYPES:
+            continue
+        v = lit.value()
+        if v is None or v != v:
+            continue
+        lo, hi = ranges.get(name, (None, None))
+        if lower:
+            lo = float(v) if lo is None else max(lo, float(v))
+        if upper:
+            hi = float(v) if hi is None else min(hi, float(v))
+        ranges[name] = (lo, hi)
+
+
+def _nd_pushdown(plan, nd_calls) -> dict:
+    """Walk an optimized plan for each nd placeholder instance ->
+    ``{placeholder: (ranges, columns)}``, read off the Filter and Project
+    nodes stacked directly above the instance.
+
+    ``ranges`` are the Filters' numeric bounds (:func:`_filter_ranges`).
+    ``columns`` are the attributes those Filters and the first Project
+    reference, widened to their variables. That Project is the one
+    Catalyst's column pruning puts above a relation that outputs more
+    than its consumers need; the references of nodes further up could
+    under-count, since a Union consumes its children's columns by
+    position without referencing them. ``columns`` is None (every
+    variable) when no Project sits there (``SELECT *``), when it keeps
+    everything, or when nothing is referenced (``count(1)``: a flatten
+    of no variables would carry no rows).
+
+    A placeholder used twice (a CTE joined to itself) reads the union:
+    ranges only on keys every instance bounds, as the hull of the
+    instances' ranges."""
+    by_rdd = {c.rdd_id: c for c in nd_calls}
+    found: dict[str, list] = {}
+    # (node, the Filter/Project nodes stacked directly above it, nearest first)
+    todo = [(plan, [])]
+    while todo:
+        node, above = todo.pop()
+        kind = node.nodeName()
+        call = by_rdd.get(node.rdd().id()) if kind == "LogicalRDD" else None
+        if call is not None:
+            attrs = {a.exprId().id(): a.name() for a in _jseq(node.output())}
+            ranges: dict = {}
+            used: set | None = None
+            refs: set = set()
+            for op in above:
+                refs.update(a.exprId().id()
+                            for a in _jseq(op.references().toSeq()))
+                if op.nodeName() == "Filter":
+                    _filter_ranges(op.condition(), attrs, ranges)
+                else:
+                    used = {n for i, n in attrs.items() if i in refs}
+                    break
+            found.setdefault(call.name, []).append((ranges, used))
+            continue
+        chain = [node] + above if kind in ("Filter", "Project") else []
+        todo += [(c, chain) for c in _jseq(node.children())]
+        todo += [(q, []) for q in _jseq(node.subqueries())]
+    out = {}
+    for call in nd_calls:
+        insts = found.get(call.name)
+        if not insts:
+            continue
+        ranges = {}
+        for key in set.intersection(*(set(r) for r, _ in insts)):
+            los = [r[key][0] for r, _ in insts]
+            his = [r[key][1] for r, _ in insts]
+            ranges[key] = (None if None in los else min(los),
+                           None if None in his else max(his))
+        columns = None
+        if all(used for _, used in insts):
+            names = set().union(*(used for _, used in insts))
+            if len(names) < len(call.schema):
+                columns = _with_dot_prefixes(names)
+        out[call.name] = (ranges or None, columns)
+    return out
+
+
 class Engine:
     def __init__(
         self,
@@ -589,14 +751,6 @@ class Engine:
         self.datasets_root = datasets_root
         self.default_table = default_table
         register_functions(spark)
-        try:
-            from beacon_spark.sources.nd_datasource import register_nd_datasource
-
-            register_nd_datasource(spark)
-        except Exception:
-            # idiomatic spark.read.format("beacon_nd") surface is optional;
-            # Engine read_netcdf/read_zarr/... remain the primary path
-            pass
         import threading as _threading
 
         self.catalog = None
@@ -906,7 +1060,8 @@ class Engine:
         statement = self._rewrite_system_tables(statement)
         statement = self._rewrite_information_schema(statement)
         statement = self._rewrite_time_travel(statement)
-        statement = self._rewrite_read_fns(statement)
+        nd_calls: list[_NdCall] = []
+        statement = self._rewrite_read_fns(statement, nd_calls)
         statement = self._rewrite_metadata_fns(statement)
         statement = self._rewrite_try_arrow_cast(statement)
         statement = self._rewrite_macros(statement)
@@ -942,7 +1097,19 @@ class Engine:
             args = params
         elif params is not None:
             statement, args = _bind_placeholders(statement, params)
-        df = self.spark.sql(statement, args=args) if args else self.spark.sql(statement)
+        nd_views: list[str] = []
+        try:
+            if nd_calls:
+                statement = self._bind_nd_views(
+                    statement, args, nd_calls, nd_views)
+            df = (self.spark.sql(statement, args=args) if args
+                  else self.spark.sql(statement))
+        finally:
+            # the analyzed plan holds the scans; only a SQL temp view
+            # (stored as text) resolves the names again later
+            if not _DEFINES_TEMP_VIEW_RE.match(statement):
+                for view in nd_views:
+                    self.spark.catalog.dropTempView(view)
         if replaces:
             from pyspark.sql import functions as F
 
@@ -2619,132 +2786,130 @@ class Engine:
                 location, token=token)
         return rb
 
-    def _nd_sql_columns(self, fmt, globs, dims, statement) -> list | None:
-        """Referenced-variable set for SQL nd projection, FAIL-OPEN.
+    def _nd_read(self, fmt, paths, dimensions=None, ranges=None,
+                 columns=None) -> DataFrame:
+        """The one nd read both surfaces plan: the DSL ``from`` resolver
+        and the SQL ``read_netcdf/zarr/tiff/atlas/hdf5`` views."""
+        reader = {
+            "netcdf": self.read_netcdf,
+            "hdf5": self.read_netcdf,
+            "zarr": self.read_zarr,
+            "tiff": self.read_tiff,
+            "atlas": self.read_atlas,
+        }[fmt]
+        return reader(paths, dimensions, ranges=ranges, columns=columns)
 
-        Spark's Python DataSource has no column-pruning hook (the
-        reader receives the full schema even under a narrow SELECT —
-        verified on 4.1), so decode projection must be derived from
-        the statement itself. A store variable is droppable only when
-        its name appears NOWHERE in the statement as an identifier
-        token — over-inclusion merely decodes extra columns, and any
-        shape that could reference columns namelessly (``*`` anywhere,
-        NATURAL joins) disables projection outright. Dotted tokens
-        split into parts so an alias-qualified ``t.time`` keeps
-        ``time`` and a backquoted ``\\`geo.lat\\``` keeps itself AND
-        its variable; attribute columns (``var.attr``) ride flatten's
-        variable-level filter the same way."""
-        blanked = _noncode_blanked(statement)
-        if "*" in blanked or re.search(r"\bnatural\b", blanked, re.I):
-            return None
-        tokens: set[str] = set()
+    def _nd_placeholder(self, call: _NdCall) -> _NdCall:
+        """Register ``call``'s schema-only placeholder view: an empty RDD
+        relation, which Catalyst cannot fold away the way it folds an
+        empty local relation, so the optimized plan keeps the pushed-down
+        Filter and the column-pruning Project directly above it. The
+        schema is read_nd's own 1-row sample. (The relation is built in
+        the JVM, as createDataFrame does for an RDD, minus the Python
+        round trip.)"""
+        from beacon_spark.sources.nd import nd_sample_schema
 
-        def add(tok: str) -> None:
-            tokens.add(tok.lower())
-            for part in tok.split("."):
-                if part:
-                    tokens.add(part.lower())
+        sample = _paths.resolve_globs(list(call.globs), self.datasets_root)[0]
+        schema = tabular._arrow_to_spark_schema(
+            nd_sample_schema(call.fmt, sample, call.dims))
+        jdf = self.spark._jsparkSession.applySchemaToPythonRDD(
+            self.spark._jsc.emptyRDD().rdd(), schema.json())
+        jdf.createOrReplaceTempView(call.name)
+        rdd_id = jdf.queryExecution().analyzed().rdd().id()
+        return call._replace(schema=schema, rdd_id=rdd_id)
 
-        for t in re.findall(r"[A-Za-z_]\w*(?:\.\w+)*", blanked):
-            add(t)
-        # backtick identifiers are non-code to the lexer scrub — pull
-        # them from the ORIGINAL text (`` = an escaped backtick)
-        for bq in re.findall(r"`((?:[^`]|``)+)`", statement):
-            add(bq.replace("``", "`"))
-        # under spark.sql.ansi.doubleQuotedIdentifiers=true, "var" is an
-        # identifier the scrub blanked as a string literal — harvest
-        # double-quoted spans too; over-inclusion only keeps an extra
-        # variable decoded, so this is safe when they really are strings
-        for dq in re.findall(r'"((?:[^"]|"")+)"', statement):
-            add(dq.replace('""', '"'))
-        from beacon_spark.sources.nd import _OPENERS
-        from beacon_spark.sources.paths import resolve_globs
+    def _register_nd_view(self, fmt, globs, dims, ranges, columns,
+                          schema) -> str:
+        """Temp view over the ``read_nd`` scan of one SQL nd call, pruned
+        to ``ranges`` (chunk-grid and atlas dataset pruning) and
+        ``columns`` (decode projection). The columns of the placeholder's
+        ``schema`` that a pruned read leaves out come back as typed nulls
+        above the scan, so the statement analyzes against exactly the
+        schema it was optimized against (and the optimizer prunes the
+        nulls again). The name hashes every value baked into the view and
+        adds a per-statement suffix: no statement reads another's pruned
+        region, and ``Engine.sql`` drops the view once the statement is
+        analyzed."""
+        from beacon_spark.sources.nd import nd_rows_per_task
 
-        sample = resolve_globs(globs, self.datasets_root)[0]
-        if fmt == "atlas":
-            from beacon_spark.sources.atlaslite import (
-                DATASET_SEP,
-                list_datasets,
-            )
+        df = self._nd_read(fmt, list(globs), dims, ranges, columns)
+        if columns is not None:
+            have = set(df.columns)
 
-            if DATASET_SEP not in sample:
-                names = list_datasets(sample)
-                if not names:
-                    return None
-                sample = f"{sample}{DATASET_SEP}{names[0]}"
-        variables = list(_OPENERS[fmt](sample).variables)
-        cols = [v for v in variables if v.lower() in tokens]
-        if not cols or len(cols) == len(variables):
-            # nothing referenced (count(1)-style) or everything is —
-            # either way the full flatten is the right plan
-            return None
-        return cols
+            def ident(name: str) -> str:
+                return "`" + name.replace("`", "``") + "`"
 
-    def _register_nd_view(self, fmt, globs, dims, statement) -> str:
-        """Temp view over ``spark.read.format("beacon_nd")`` for a SQL
-        ``read_netcdf/zarr/tiff/atlas/hdf5`` call: WHERE comparisons
-        reach NDReader.pushFilters (chunk-grid pruning + atlas dataset
-        stats pruning at plan time) and the statement's referenced
-        variables bound what decodes — the same pruned plan the DSL
-        and DataFrame surfaces already get."""
-        from beacon_spark.sources.nd_datasource import register_nd_datasource
-
-        register_nd_datasource(self.spark)
-        try:
-            cols = self._nd_sql_columns(fmt, globs, dims, statement)
-        except Exception:
-            cols = None  # projection is an optimization, never a gate
-        reader = (
-            self.spark.read.format("beacon_nd")
-            .option("fmt", fmt)
-            .option("paths", json.dumps(list(globs)))
-            # partitions() runs in a plan-time Python worker without a
-            # SparkSession — ship the cluster parallelism for the
-            # scale-adaptive task sizing (nd_datasource.NDReader)
-            .option("parallelism",
-                    str(self.spark.sparkContext.defaultParallelism))
-        )
-        if self.datasets_root:
-            reader = reader.option("datasets_root", self.datasets_root)
-        if dims:
-            reader = reader.option("dimensions", ",".join(dims))
-        if cols is not None:
-            reader = reader.option("columns", json.dumps(cols))
-        rpt = self.spark.conf.get("spark.beacon.nd.rowsPerTask", None)
-        if rpt:
-            reader = reader.option("rows_per_task", rpt)
-        # compute the schema DRIVER-SIDE and hand it to the reader:
-        # without it Spark spawns a plan-time Python worker just to call
-        # DataSource.schema() (worker spawn + imports + metadata open +
-        # 1-row flatten) — a measured ~0.15s fixed cost per SQL nd query
-        # (r14 verdict #8); the IDENTICAL code path runs in-process at
-        # the DSL planner's ~0.01s. Fail-open: any error falls back to
-        # worker-side inference (schema is an optimization, never a gate).
-        try:
-            from beacon_spark.sources.nd_datasource import BeaconNDDataSource
-
-            opts = {"fmt": fmt, "paths": json.dumps(list(globs))}
-            if self.datasets_root:
-                opts["datasets_root"] = self.datasets_root
-            if dims:
-                opts["dimensions"] = ",".join(dims)
-            if cols is not None:
-                opts["columns"] = json.dumps(cols)
-            reader = reader.schema(BeaconNDDataSource(opts).schema())
-        except Exception:
-            pass
-        df = reader.load()
-        name = (
-            f"__beacon_read_"
-            f"{abs(hash((self.datasets_root, fmt, tuple(globs), tuple(dims or ()), tuple(cols or ()), rpt))) % 10**10}"
-        )
+            df = df.selectExpr(*[
+                ident(f.name) if f.name in have
+                else f"CAST(NULL AS {f.dataType.simpleString()}) AS {ident(f.name)}"
+                for f in schema
+            ])
+        key = (self.datasets_root, fmt, tuple(globs), tuple(dims or ()),
+               tuple(sorted((ranges or {}).items())), tuple(columns or ()),
+               nd_rows_per_task(self.spark))
+        name = f"__beacon_nd_{abs(hash(key)) % 10**10}_{uuid.uuid4().hex[:8]}"
         df.createOrReplaceTempView(name)
         return name
 
-    def _rewrite_read_fns(self, statement: str) -> str:
+    def _nd_optimized_plan(self, statement: str, args: dict | None):
+        """Optimize the fully rewritten statement without executing it,
+        the way Spark's EXPLAIN does. A CTAS/INSERT/EXPLAIN/CREATE VIEW
+        optimizes its query child (the command itself never runs)."""
+        jss = self.spark._jsparkSession
+        jvm = self.spark._jvm
+        plan = jss.sessionState().sqlParser().parsePlan(statement)
+        field = _QUERY_CHILD.get(plan.nodeName())
+        if field is not None:
+            plan = getattr(plan, field)()
+        if args:
+            from pyspark.sql import functions as F
+            from pyspark.sql.classic.column import _to_java_column
+
+            names = list(args)
+            values = [jss.expression(_to_java_column(F.lit(args[n])))
+                      for n in names]
+            plan = jvm.org.apache.spark.sql.catalyst.analysis.NameParameterizedQuery(
+                plan, jvm.PythonUtils.toSeq(names), jvm.PythonUtils.toSeq(values))
+        skip = jvm.org.apache.spark.sql.execution.CommandExecutionMode.SKIP()
+        return jss.sessionState().executePlan(plan, skip).optimizedPlan()
+
+    def _bind_nd_views(self, statement: str, args: dict | None,
+                       nd_calls: list, views: list) -> str:
+        """Bind every nd call in ``statement`` to its pruned ``read_nd``
+        view (appended to ``views``): placeholders stand in while
+        Catalyst optimizes the statement, and the ranges and columns come
+        from that plan (:func:`_nd_pushdown`). A call the walk cannot use
+        reads unpruned — Spark still applies the WHERE, so rows stay
+        exact — and is reported at WARNING (``nd_sql_pushdown``)."""
+        bound: list[_NdCall] = []
+        try:
+            bound = [self._nd_placeholder(call) for call in nd_calls]
+            reason = "not found in the optimized plan"
+            try:
+                pushed = _nd_pushdown(
+                    self._nd_optimized_plan(statement, args), bound)
+            except Exception as exc:
+                pushed = {}
+                reason = f"{type(exc).__name__}: {str(exc).splitlines()[0]}"
+        finally:
+            for call in nd_calls:
+                self.spark.catalog.dropTempView(call.name)
+        for call in bound:
+            if call.name not in pushed:
+                _log.warning("nd_sql_pushdown: read_%s(%s) runs unpruned: %s",
+                             call.fmt, ", ".join(call.globs), reason)
+            ranges, columns = pushed.get(call.name, (None, None))
+            views.append(self._register_nd_view(
+                call.fmt, call.globs, call.dims, ranges, columns, call.schema))
+            statement = statement.replace(call.name, views[-1])
+        return statement
+
+    def _rewrite_read_fns(self, statement: str, nd_calls: list) -> str:
         """Replace ``read_*('glob' [, 'glob'...])`` table functions with
         temp views backed by the matching reader (the reference registers
-        these as UDTFs — beacon-functions/src/file_formats/mod.rs:21-107)."""
+        these as UDTFs — beacon-functions/src/file_formats/mod.rs:21-107).
+        An nd call leaves a reserved name and appends itself to
+        ``nd_calls`` for :meth:`_bind_nd_views`."""
 
         def repl(m: re.Match) -> str:
             fmt = m.group(1).lower()
@@ -2762,8 +2927,7 @@ class Engine:
             if dims_m:
                 tail = tail[:dims_m.start()] + tail[dims_m.end():]
             extras = re.findall(r"'([^']*)'|(\d+)", tail)
-            if dims is not None and fmt not in (
-                    "netcdf", "hdf5", "zarr", "tiff", "atlas"):
+            if dims is not None and fmt not in _ND_FMTS:
                 raise ValueError(
                     f"read_{fmt} takes no dimensions list")
             if fmt == "csv":
@@ -2818,49 +2982,23 @@ class Engine:
                 raise ValueError(
                     f"read_{fmt} takes only path arguments, got extras: "
                     f"{tail.strip()!r}")
-            if fmt in ("netcdf", "hdf5", "zarr", "tiff", "atlas"):
-                # SQL surface of the nd readers rides the beacon_nd
-                # DataSource so a WHERE on a coordinate variable drives
-                # chunk-grid pruning at plan time (pushFilters →
-                # coord_region) and the statement's referenced-variable
-                # set drives decode projection — the reference's
-                # 'predicate pushdown is automatic' SQL contract
-                # (docs/docs/2.0.0-rc2/sql/table-functions.md:79-83,
-                # beacon-arrow-zarr/src/datafusion/source.rs:165-305).
-                # Any failure falls back to the eager read_nd plan
-                # (full-store scan, residual Spark filter — correct,
-                # just unpruned).
-                try:
-                    return self._register_nd_view(
-                        fmt, globs, dims, statement)
-                except Exception:
-                    pass
-            if dims is not None:
-                df = {
-                    "netcdf": self.read_netcdf,
-                    "hdf5": self.read_netcdf,
-                    "zarr": self.read_zarr,
-                    "tiff": self.read_tiff,
-                    "atlas": self.read_atlas,
-                }[fmt](globs, dims)
-            else:
-                df = {
-                    "parquet": self.read_parquet,
-                    "csv": self.read_csv,
-                    "arrow": self.read_arrow,
-                    "netcdf": self.read_netcdf,
-                    "zarr": self.read_zarr,
-                    "hdf5": self.read_netcdf,
-                    "odv": self.read_odv,
-                    "odv_ascii": self.read_odv,
-                    "delta": lambda gs: self.read_delta(gs[0]),
-                    "iceberg": lambda gs: self.read_iceberg(gs[0]),
-                    "tiff": self.read_tiff,
-                    "atlas": self.read_atlas,
-                    "geoparquet": self.read_geoparquet,
-                }[fmt](globs)
+            if fmt in _ND_FMTS:
+                # the nd readers plan through read_nd like the DSL does;
+                # WHERE ranges and referenced columns come from Catalyst
+                # (the reference's 'predicate pushdown is automatic' SQL
+                # contract, docs/docs/2.0.0-rc2/sql/table-functions.md:79-83)
+                name = f"__beacon_ndp_{uuid.uuid4().hex}"
+                nd_calls.append(_NdCall(name, fmt, tuple(globs), dims))
+                return name
+            df = {
+                "parquet": self.read_parquet,
+                "arrow": self.read_arrow,
+                "odv": self.read_odv,
+                "odv_ascii": self.read_odv,
+                "geoparquet": self.read_geoparquet,
+            }[fmt](globs)
             name = (f"__beacon_read_"
-                    f"{abs(hash((self.datasets_root, fmt, tuple(globs), tuple(dims or ())))) % 10**10}")
+                    f"{abs(hash((self.datasets_root, fmt, tuple(globs)))) % 10**10}")
             df.createOrReplaceTempView(name)
             return name
 
@@ -3414,42 +3552,18 @@ class Engine:
                 return self.read_csv(cfg["paths"], cfg.get("delimiter"))
             if fmt == "arrow":
                 return self.read_arrow(cfg["paths"])
-            # nd projection pushdown: the scan flattens and ships ONLY
-            # the select+filter column set (None = all). Range/term/eq
-            # keys join the set (they are source columns by
-            # construction), and every dotted name also contributes its
-            # prefixes — "temperature.units" needs variable
-            # "temperature"'s attrs, and tiff's "geo.lat" IS a variable.
-            nd_cols = None
-            if projection is not None:
-                cols = set(projection)
-                for extra in (ranges or {}), (terms or {}), (eqs or {}):
-                    cols |= set(extra)
-                for c in list(cols):
-                    parts = c.split(".")
-                    for i in range(1, len(parts)):
-                        cols.add(".".join(parts[:i]))
-                nd_cols = sorted(cols)
-            if fmt in ("netcdf", "hdf5"):
-                return self.read_netcdf(
-                    cfg["paths"], cfg.get("dimensions"), ranges=ranges,
-                    columns=nd_cols,
-                )
-            if fmt == "zarr":
-                return self.read_zarr(
-                    cfg["paths"], cfg.get("dimensions"), ranges=ranges,
-                    columns=nd_cols,
-                )
-            if fmt == "tiff":
-                return self.read_tiff(
-                    cfg["paths"], cfg.get("dimensions"), ranges=ranges,
-                    columns=nd_cols,
-                )
-            if fmt == "atlas":
-                return self.read_atlas(
-                    cfg["paths"], cfg.get("dimensions"), ranges=ranges,
-                    columns=nd_cols,
-                )
+            if fmt in _ND_FMTS:
+                # nd projection pushdown: the scan flattens and ships
+                # ONLY the select+filter column set (None = all).
+                # Range/term/eq keys join the set (they are source
+                # columns by construction)
+                nd_cols = None
+                if projection is not None:
+                    nd_cols = _with_dot_prefixes(
+                        set(projection).union(ranges or {}, terms or {},
+                                              eqs or {}))
+                return self._nd_read(fmt, cfg["paths"], cfg.get("dimensions"),
+                                     ranges, nd_cols)
             if fmt == "odv":
                 return self.read_odv(cfg["paths"])
             if fmt == "delta":

@@ -427,17 +427,6 @@ def bulk_point_predicate(g: Geom, x: np.ndarray, y: np.ndarray) -> np.ndarray:
     return out
 
 
-def _on_any_segment(segs: np.ndarray, x: float, y: float) -> bool:
-    if not len(segs):
-        return False
-    d = _pt_seg_dist(
-        np.array([x])[:, None], np.array([y])[:, None],
-        segs[:, 0][None, :], segs[:, 1][None, :],
-        segs[:, 2][None, :], segs[:, 3][None, :],
-    )
-    return float(d.min()) == 0.0
-
-
 def _pt_seg_dist(px, py, sx1, sy1, sx2, sy2):
     dx, dy = sx2 - sx1, sy2 - sy1
     ll = dx * dx + dy * dy

@@ -152,8 +152,7 @@ def _cosine_scores_arrow(
     # opaque map never defeats scan pruning (guide §4.1)
     return (
         df.select(F.col(id_col),
-                  (F.col(vec_col) if isinstance(vec_col, Column)
-                   else F.col(vec_col)).cast("array<double>").alias("__v"))
+                  F.col(vec_col).cast("array<double>").alias("__v"))
         .mapInArrow(_score, out_schema)
     )
 

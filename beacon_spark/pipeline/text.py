@@ -36,10 +36,17 @@ def _marker_hits(t: Column, words: list[str]) -> Column:
     metachar must match literally, not corrupt the whole language's
     alternation; an empty word would make the alternation match every
     boundary, so it is rejected outright. (re.escape only backslash-
-    escapes ASCII punctuation, which Java's regex reads identically.)"""
+    escapes ASCII punctuation, which Java's regex reads identically.)
+
+    Markers must start and end with a word character: the ``\\b``
+    anchors sit outside the alternation, so a marker that starts or ends
+    with a non-word character matches only where a word character sits
+    on that side — ``"c++"`` never matches before a space or at the end
+    of the text."""
     import re
 
-    assert words and all(words), f"empty marker word in {words!r}"
+    if not words or not all(words):
+        raise ValueError(f"empty marker word in {words!r}")
     pat = r"(?i)\b(?:" + "|".join(re.escape(w) for w in words) + r")\b"
     return F.regexp_count(t, F.lit(pat))
 

@@ -599,13 +599,62 @@ def interleave_tasks(tasks: list, n_slices: int) -> list:
     return [t for i in range(n_slices) for t in tasks[i::n_slices]]
 
 
+def nd_rows_per_task(spark) -> int:
+    """Row cap per nd scan task: ``spark.beacon.nd.rowsPerTask`` (default
+    1M). Both the DSL and the SQL ``read_*`` surface size tasks through
+    :func:`read_nd`, so this is the one place the setting is read."""
+    return int(spark.conf.get("spark.beacon.nd.rowsPerTask", "1000000"))
+
+
+def _spark_safe(t: pa.DataType) -> pa.DataType:
+    """Widen an Arrow type to what Spark's ArrowUtils accepts (it rejects
+    unsigned ints outright): the BATCHES must match the widened Spark
+    schema, not just the schema declaration — a uint8 TIFF band crashed
+    at read time otherwise."""
+    if pa.types.is_uint8(t):
+        return pa.int16()
+    if pa.types.is_uint16(t):
+        return pa.int32()
+    if pa.types.is_uint32(t):
+        return pa.int64()
+    if pa.types.is_uint64(t):
+        return pa.decimal128(20, 0)
+    if pa.types.is_timestamp(t) and t.unit == "ns":
+        return pa.timestamp("us", t.tz)
+    return t
+
+
+def nd_sample_schema(fmt: str, path: str, dimensions: list[str] | None = None,
+                     columns: list[str] | None = None) -> pa.Schema:
+    """The Spark-safe Arrow schema of an nd scan, from a 1-row sample of
+    ``path`` (so constant attribute columns carry their value type, not
+    null). The sample region is the first element of every grid
+    dimension, so lazy variables decode one chunk each, not a whole
+    leading hyper-row. The one schema source for :func:`read_nd` and the
+    engine's SQL placeholder views. An atlas marker path samples its
+    first dataset."""
+    if fmt == "atlas":
+        from beacon_spark.sources.atlaslite import DATASET_SEP, list_datasets
+
+        if DATASET_SEP not in path:
+            names = list_datasets(path)
+            if not names:
+                raise FileNotFoundError(f"atlas store {path!r} has no datasets")
+            path = f"{path}{DATASET_SEP}{names[0]}"
+    ds = _OPENERS[fmt](path)
+    region = [(0, min(1, ds.dims[d])) for d in ds.grid(dimensions)]
+    sample = ds.flatten(dimensions, columns=columns, row_range=(0, 1),
+                        region=region).schema
+    return pa.schema([pa.field(f.name, _spark_safe(f.type)) for f in sample])
+
+
 def read_nd(
     spark,
     fmt: str,
     paths: str | list[str],
     datasets_root: str | None = None,
     dimensions: list[str] | None = None,
-    rows_per_task: int = 1_000_000,
+    rows_per_task: int | None = None,
     ranges: dict[str, tuple[float | None, float | None]] | None = None,
     columns: list[str] | None = None,
 ):
@@ -613,10 +662,11 @@ def read_nd(
     per task.
 
     ``columns`` = projection pushdown (the DSL's select+filter column
-    set): only the named variables flatten and ship through the Arrow
-    boundary — on a wide store the python-worker transfer is the scan's
-    dominant cost. None = every variable (SQL read_* table functions,
-    where Catalyst prunes after the scan).
+    set, or the attributes Catalyst's optimized plan references for a
+    SQL ``read_*`` call): only the named variables flatten and ship
+    through the Arrow boundary — on a wide store the python-worker
+    transfer is the scan's dominant cost. None = every variable.
+    ``rows_per_task`` defaults to :func:`nd_rows_per_task`.
 
     Planning learns each file's grid size and coordinate hulls from
     *metadata + coordinate variables only* (lazy openers touch no data
@@ -637,6 +687,8 @@ def read_nd(
 
     files = resolve_globs(paths, datasets_root)
     opener = _OPENERS[fmt]
+    if rows_per_task is None:
+        rows_per_task = nd_rows_per_task(spark)
 
     def _plan(f: str):
         ds = opener(f)
@@ -659,13 +711,6 @@ def read_nd(
     else:
         plans = [_plan(f) for f in files]
 
-    sample_schema: pa.Schema | None = None
-    if files:
-        # 1-row sample (O(1) element reads on lazy variables) so constant
-        # attribute columns carry their value type, not null
-        sample_schema = opener(files[0]).flatten(
-            dimensions, columns=columns, row_range=(0, 1)).schema
-
     # scale-adaptive task sizing (guide §2.2): ~2 tasks/core over the
     # whole scan, chunk-band-aligned per file so no band decodes twice
     n_total = sum(p[2] for p in plans)
@@ -684,25 +729,7 @@ def read_nd(
         for lo, hi in split_task_rows(n, eff, use_block, lead_off):
             tasks.append((f, rjson, lo, hi))
 
-    # widen the ARROW batch types to what Spark's ArrowUtils accepts
-    # (it rejects unsigned ints outright): the BATCHES must match the
-    # widened Spark schema, not just the schema declaration — a uint8
-    # TIFF band crashed at read time otherwise
-    def _spark_safe(t: pa.DataType) -> pa.DataType:
-        if pa.types.is_uint8(t):
-            return pa.int16()
-        if pa.types.is_uint16(t):
-            return pa.int32()
-        if pa.types.is_uint32(t):
-            return pa.int64()
-        if pa.types.is_uint64(t):
-            return pa.decimal128(20, 0)
-        if pa.types.is_timestamp(t) and t.unit == "ns":
-            return pa.timestamp("us", t.tz)
-        return t
-
-    sample_schema = pa.schema(
-        [pa.field(f.name, _spark_safe(f.type)) for f in sample_schema])
+    sample_schema = nd_sample_schema(fmt, files[0], dimensions, columns)
     spark_schema = _arrow_to_spark_schema(sample_schema)
     if not tasks:
         # every chunk provably outside the requested coordinate ranges

@@ -66,7 +66,7 @@ BENCH_QUERIES = [
     # tiff window. Fixtures build once per (version, sf) in the temp
     # dir; best-of-2 records the warm-fixture READ time.
     "nd_zarr_slice",
-    "nd_zarr_slice_sql",   # same slice via SQL (r10: beacon_nd DataSource)
+    "nd_zarr_slice_sql",   # same slice via SQL (same read_nd scan)
     "nd_netcdf_ragged_agg",
     "nd_tiff_window",
 ]

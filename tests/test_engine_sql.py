@@ -809,8 +809,8 @@ def test_read_fn_views_keyed_by_engine_root(spark, tmp_path):
             .parquet(str(d / "t.parquet"))
     ea = Engine(spark, datasets_root=str(tmp_path / "ra"))
     eb = Engine(spark, datasets_root=str(tmp_path / "rb"))
-    sa = ea._rewrite_read_fns("SELECT * FROM read_parquet('t.parquet')")
-    sb = eb._rewrite_read_fns("SELECT * FROM read_parquet('t.parquet')")
+    sa = ea._rewrite_read_fns("SELECT * FROM read_parquet('t.parquet')", [])
+    sb = eb._rewrite_read_fns("SELECT * FROM read_parquet('t.parquet')", [])
     assert sa != sb  # distinct view names per root
     assert ea.sql("SELECT count(*) AS n FROM read_parquet('t.parquet')"
                   ).collect()[0].n == 2

@@ -1,7 +1,8 @@
-"""Python DataSource V2 surface for nd formats (sources/nd_datasource.py):
-``spark.read.format("beacon_nd")`` — same planning-time pushdown story as
-read_nd, idiomatic reader registration (the Spark-native analog of the
-reference's DataFusion TableProviders, beacon-arrow-netcdf/src/)."""
+"""SQL surface of the nd readers: ``read_netcdf/zarr/tiff/atlas/hdf5``
+plan through the same ``read_nd`` scan as the DSL, with WHERE ranges and
+referenced columns taken from Catalyst's optimized plan (the Spark analog
+of the reference's nd TableProvider pushdown,
+beacon-arrow-zarr/src/datafusion/source.rs:165-305)."""
 
 import os
 
@@ -11,120 +12,17 @@ import pytest
 from beacon_spark.sources.netcdf3 import write_netcdf3
 
 
-@pytest.fixture()
-def nc_file(tmp_path):
-    p = str(tmp_path / "grid.nc")
-    write_netcdf3(
-        p,
-        dims={"time": 4, "lat": 3},
-        variables={
-            "time": (("time",), np.arange(4, dtype=np.int32)),
-            "lat": (("lat",), np.array([10.0, 20.0, 30.0])),
-            "temp": (
-                ("time", "lat"),
-                np.arange(12, dtype=np.float32).reshape(4, 3),
-            ),
-        },
-    )
-    return p
+# The reference's 'predicate pushdown is automatic' contract holds for
+# its PRIMARY surface, SQL (docs/docs/2.0.0-rc2/sql/table-functions.md:79-83).
 
 
-def test_format_read_matches_read_nd(spark, nc_file):
-    from beacon_spark.sources.nd import read_nd
-    from beacon_spark.sources.nd_datasource import register_nd_datasource
-
-    register_nd_datasource(spark)
-    via_ds = (
-        spark.read.format("beacon_nd").option("fmt", "netcdf").load(nc_file)
-    )
-    via_fn = read_nd(spark, "netcdf", [nc_file])
-    assert sorted(via_ds.columns) == sorted(via_fn.columns)
-    s = sorted(tuple(r) for r in via_ds.select(*sorted(via_ds.columns)).collect())
-    b = sorted(tuple(r) for r in via_fn.select(*sorted(via_ds.columns)).collect())
-    assert s == b and len(s) == 12
-
-
-def test_format_read_partitions_chunk(spark, nc_file):
-    from beacon_spark.sources.nd_datasource import register_nd_datasource
-
-    register_nd_datasource(spark)
-    df = (
-        spark.read.format("beacon_nd")
-        .option("fmt", "netcdf")
-        .option("rows_per_task", "5")
-        .load(nc_file)
-    )
-    # 12 rows at 5 rows/task -> 3 partitions, all rows intact
-    assert df.rdd.getNumPartitions() == 3
-    assert df.count() == 12
-
-
-def test_format_read_tiff(spark, tmp_path):
-    from beacon_spark.sources.nd_datasource import register_nd_datasource
-    from beacon_spark.sources.tifflite import write_tiff
-
-    p = str(tmp_path / "r.tif")
-    band = np.arange(24, dtype=np.float32).reshape(4, 6)
-    write_tiff(p, [band], pixel_scale=(0.5, 0.25), tiepoint=(0, 0, 10.0, 60.0))
-    register_nd_datasource(spark)
-    df = spark.read.format("beacon_nd").option("fmt", "tiff").load(p)
-    assert df.count() == 24
-    from pyspark.sql import functions as F
-
-    total = df.agg(F.sum(F.col("`band.0`"))).collect()[0][0]
-    assert total == float(band.sum())
-
-
-def test_nd_datasource_where_pushdown_prunes_partitions(spark, tmp_path):
-    """r9: the reference's 'predicate pushdown is automatic' for the
-    SQL/DataFrame surface — a WHERE on a coordinate variable reaches
-    NDReader.pushFilters and shrinks the PLANNED partitions (chunk-grid
-    pruning), while every filter is handed back to Spark so results
-    stay exact."""
-    import numpy as np
-
-    from beacon_spark.sources.nd_datasource import register_nd_datasource
-    from beacon_spark.sources.zarrlite import write_zarr_store
-
-    root = str(tmp_path / "push.zarr")
-    write_zarr_store(
-        root,
-        {
-            "t": (("t",), np.arange(40.0)),
-            "v": (("t",), np.arange(40.0) * 2),
-        },
-        version=2, codec=None,
-        chunk_shapes={"v": (5,), "t": (40,)},
-    )
-    register_nd_datasource(spark)
-
-    def load():
-        return (
-            spark.read.format("beacon_nd")
-            .option("fmt", "zarr").option("rows_per_task", "5")
-            .load(root)
-        )
-
-    full = load()
-    assert full.rdd.getNumPartitions() == 8  # 40 rows / 5 per task
-    sliced = load().filter("t >= 10 AND t <= 19")
-    # the planned region shrank to 10 rows -> 2 partitions
-    assert sliced.rdd.getNumPartitions() == 2
-    rows = sliced.orderBy("t").collect()
-    assert [r.t for r in rows] == [float(x) for x in range(10, 20)]
-    assert rows[0].v == 20.0
-    # strict bounds widen to inclusive hulls; the residual filter
-    # restores exactness
-    strict = load().filter("t > 10 AND t < 12")
-    assert [r.t for r in strict.collect()] == [11.0]
-
-
-# =====================================================================
-# r10: the SQL surface of the nd readers rides the beacon_nd DataSource
-# (engine._register_nd_view) — the reference's 'predicate pushdown is
-# automatic' contract holds for its PRIMARY surface too
-# (docs/docs/2.0.0-rc2/sql/table-functions.md:79-83).
-# =====================================================================
+def _scan_line(df) -> str:
+    """The nd scan node (the MapInArrow that flattens each task) of an
+    executed plan: its output lists exactly the decoded columns."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    lines = [ln for ln in plan.split("\n") if "MapInArrow" in ln]
+    assert lines, plan
+    return lines[0]
 
 
 @pytest.fixture()
@@ -150,6 +48,65 @@ def zarr_store(tmp_path):
         chunk_shapes={"v": (5,), "w": (5,), "t": (40,)},
     )
     return root
+
+
+@pytest.fixture()
+def nc_file(tmp_path):
+    p = str(tmp_path / "grid.nc")
+    write_netcdf3(
+        p,
+        dims={"time": 4, "lat": 3},
+        variables={
+            "time": (("time",), np.arange(4, dtype=np.int32)),
+            "lat": (("lat",), np.array([10.0, 20.0, 30.0])),
+            "temp": (
+                ("time", "lat"),
+                np.arange(12, dtype=np.float32).reshape(4, 3),
+            ),
+        },
+    )
+    return p
+
+
+def test_format_read_matches_read_nd(nd_engine, nc_file):
+    """A SQL ``read_netcdf`` is the ``read_nd`` scan: same columns, same
+    rows."""
+    from beacon_spark.sources.nd import read_nd
+
+    via_sql = nd_engine.sql(f"SELECT * FROM read_netcdf('{nc_file}')")
+    via_fn = read_nd(nd_engine.spark, "netcdf", [nc_file])
+    assert via_sql.columns == via_fn.columns
+    s = sorted(tuple(r) for r in via_sql.collect())
+    b = sorted(tuple(r) for r in via_fn.collect())
+    assert s == b and len(s) == 12
+
+
+def test_format_read_partitions_chunk(nd_engine, nc_file):
+    """``spark.beacon.nd.rowsPerTask`` sizes the SQL scan's tasks: 12
+    rows at 5 rows/task -> 3 partitions, all rows intact."""
+    spark = nd_engine.spark
+    spark.conf.set("spark.beacon.nd.rowsPerTask", "5")
+    try:
+        df = nd_engine.sql(f"SELECT * FROM read_netcdf('{nc_file}')")
+        assert df.rdd.getNumPartitions() == 3
+        assert df.count() == 12
+    finally:
+        spark.conf.unset("spark.beacon.nd.rowsPerTask")
+
+
+def test_nd_datasource_where_pushdown_prunes_partitions(spark, zarr_store):
+    """read_nd's own ``ranges`` shrink the PLANNED partitions (chunk-grid
+    pruning) — the pruning both the DSL and SQL surfaces drive."""
+    from beacon_spark.sources.nd import read_nd
+
+    full = read_nd(spark, "zarr", zarr_store, rows_per_task=5)
+    assert full.rdd.getNumPartitions() == 8  # 40 rows / 5 per task
+    sliced = read_nd(spark, "zarr", zarr_store, rows_per_task=5,
+                     ranges={"t": (10.0, 19.0)})
+    assert sliced.rdd.getNumPartitions() == 2  # 10 surviving rows
+    rows = sliced.orderBy("t").collect()
+    assert [r.t for r in rows] == [float(x) for x in range(10, 20)]
+    assert rows[0].v == 20.0
 
 
 def test_sql_where_prunes_scan_partitions(nd_engine, zarr_store):
@@ -181,55 +138,53 @@ def test_sql_where_prunes_scan_partitions(nd_engine, zarr_store):
 
 def test_sql_projection_narrows_scan(nd_engine, zarr_store):
     """Referenced-variable projection: a narrow SELECT through SQL must
-    drop unreferenced variables AT THE SCAN (the beacon_nd view's schema
-    narrows — Spark's Python DataSource has no column-pruning hook, so
-    a full-schema view would decode every variable)."""
+    drop unreferenced variables AT THE SCAN — the columns Catalyst's
+    optimized plan references become read_nd's ``columns``, so the
+    MapInArrow never decodes ``w``."""
     df = nd_engine.sql(
         f"SELECT sum(v) AS s FROM read_zarr('{zarr_store}') WHERE t >= 0"
     )
     assert df.collect()[0].s == sum(range(40)) * 2.0
-    scan = [
-        ln for ln in df._jdf.queryExecution().executedPlan().toString().split("\n")
-        if "BatchScan beacon_nd" in ln
-    ]
-    assert scan and "w#" not in scan[0]
-    assert "v#" in scan[0] and "t#" in scan[0]
-
-
-def test_sql_view_schema_matches_worker_inference(nd_engine, zarr_store):
-    """r15: the engine hands the beacon_nd reader a DRIVER-computed
-    schema (skipping the plan-time Python worker's schema() round
-    trip). It must be byte-equal to what worker-side inference yields —
-    BeaconNDDataSource.schema() run in-process IS that code path."""
-    import json as _json
-
-    from beacon_spark.sources.nd_datasource import BeaconNDDataSource
-
-    df = nd_engine.sql(
-        f"SELECT t, v FROM read_zarr('{zarr_store}') WHERE t >= 10")
-    inferred = BeaconNDDataSource(
-        {"fmt": "zarr", "paths": _json.dumps([zarr_store]),
-         "columns": _json.dumps(["t", "v"])}).schema()
-    # the view schema (before projection) equals the inferred one
-    view_schema = nd_engine.sql(
-        f"SELECT * FROM (SELECT t, v FROM read_zarr('{zarr_store}'))").schema
-    assert [(f.name, f.dataType) for f in view_schema] == [
-        (f.name, f.dataType) for f in inferred]
-    assert [r.t for r in df.orderBy("t").collect()] == [
-        float(x) for x in range(10, 40)]
+    scan = _scan_line(df)
+    assert "w#" not in scan
+    assert "v#" in scan and "t#" in scan
 
 
 def test_sql_star_fails_open(nd_engine, zarr_store):
     """SELECT * (and any star shape) disables projection — every
-    variable must survive."""
+    variable must survive. count(1) references no variable and reads
+    every one too: a flatten of no variables would carry no rows."""
     df = nd_engine.sql(f"SELECT * FROM read_zarr('{zarr_store}')")
     assert {"t", "v", "w"} <= set(df.columns)
     assert df.count() == 40
+    n = nd_engine.sql(f"SELECT count(1) AS n FROM read_zarr('{zarr_store}')")
+    assert n.collect()[0].n == 40
+    assert all(f"{c}#" in _scan_line(n) for c in "tvw")
+
+
+def test_sql_union_and_self_join_read_what_every_branch_needs(
+        nd_engine, zarr_store):
+    """Each read reads what all of its uses need. A Union consumes its
+    children's columns by position, so the second branch must still
+    decode ``v`` and ``w``; a CTE joined to itself prunes to the union
+    of both sides' columns and to no range, since only one side is
+    bounded."""
+    z = f"read_zarr('{zarr_store}')"
+    rows = nd_engine.sql(
+        f"SELECT * FROM {z} WHERE t < 2 "
+        f"UNION ALL SELECT * FROM {z} WHERE t > 37").collect()
+    assert sorted((r.t, r.v, r.w) for r in rows) == [
+        (float(t), 2.0 * t, 3.0 * t) for t in (0, 1, 38, 39)]
+    joined = nd_engine.sql(
+        f"WITH a AS (SELECT * FROM {z}) SELECT x.t, y.w FROM a x "
+        "JOIN a y ON y.t = x.t + 30 WHERE x.t < 3").collect()
+    assert sorted((r.t, r.w) for r in joined) == [
+        (0.0, 90.0), (1.0, 93.0), (2.0, 96.0)]
 
 
 def test_sql_attr_and_global_columns_survive_projection(nd_engine, tmp_path):
     """§2.1 attribute columns under SQL projection (r9 verdict #5): a
-    SELECT naming only `var.attr` keeps the variable (dot-part tokens),
+    SELECT naming only `var.attr` keeps the variable (dotted prefixes),
     its attribute constants, and the global-attr columns — the
     harmonized reader-appended columns are exactly the narrowed-schema
     casualty the reference docs call out (sql/table-functions.md:50-66)."""
@@ -256,11 +211,7 @@ def test_sql_attr_and_global_columns_survive_projection(nd_engine, tmp_path):
     assert rows[0].u == "C" and rows[0].ttl == "t0"
     # the unreferenced variable really is projected out at the scan
     view = nd_engine.sql(f"SELECT temp FROM read_netcdf('{p}')")
-    scan = [
-        ln for ln in view._jdf.queryExecution().executedPlan().toString().split("\n")
-        if "BatchScan beacon_nd" in ln
-    ]
-    assert scan and "salt#" not in scan[0]
+    assert "salt#" not in _scan_line(view)
 
 
 def test_sql_ragged_read_under_projection(nd_engine, tmp_path):
@@ -289,9 +240,9 @@ def test_sql_ragged_read_under_projection(nd_engine, tmp_path):
 
 
 def test_sql_atlas_stats_pruning(nd_engine, tmp_path):
-    """Atlas via SQL: dataset STATS pruning now rides the pushed WHERE
-    ranges (prune_datasets inside partitions()) — a time window that
-    excludes one dataset plans zero partitions for it."""
+    """Atlas via SQL: dataset STATS pruning rides the WHERE ranges lifted
+    from the optimized plan (prune_datasets in Engine.read_atlas) — a
+    time window that excludes one dataset plans zero partitions for it."""
     import numpy as np
 
     from beacon_spark.sources.atlaslite import write_atlas_store
@@ -334,11 +285,11 @@ def test_sql_atlas_stats_pruning(nd_engine, tmp_path):
 
 def test_sql_tiff_dotted_coordinate_pushdown(nd_engine, tmp_path):
     """The tiff reader's coordinate columns carry dotted names
-    (`geo.lat`); Spark's filter pushdown must deliver them as ONE
-    attribute (backquoted identifier), not a split struct path — pinned
-    here because a ColumnPath change would silently disable lat-band
-    pruning on the SQL surface (fail-open: results stay right, the
-    full raster decodes)."""
+    (`geo.lat`); the optimized plan must deliver them as ONE attribute
+    (backquoted identifier), not a split struct path — pinned here
+    because a resolution change would silently disable lat-band pruning
+    on the SQL surface (fail-open: results stay right, the full raster
+    decodes)."""
     import numpy as np
 
     from beacon_spark.sources.tifflite import write_tiff
@@ -365,10 +316,9 @@ def test_sql_tiff_dotted_coordinate_pushdown(nd_engine, tmp_path):
 def test_sql_double_quoted_identifiers_survive_projection(
         nd_engine, zarr_store):
     """ADVICE r10: with spark.sql.ansi.doubleQuotedIdentifiers=true a
-    variable referenced only as "var" was scrubbed as a string literal
-    and dropped from the projection — the query failed with an
-    unresolved-column error. Double-quoted spans are now harvested as
-    candidate identifier tokens (over-inclusion is safe)."""
+    variable referenced only as "var" must stay in the projection (it
+    once failed with an unresolved-column error). Catalyst resolves the
+    identifier, so the referenced set sees it like any other."""
     spark = nd_engine.spark
     spark.conf.set("spark.sql.ansi.enabled", "true")
     spark.conf.set("spark.sql.ansi.doubleQuotedIdentifiers", "true")
@@ -379,12 +329,205 @@ def test_sql_double_quoted_identifiers_survive_projection(
         )
         assert df.collect()[0].s == sum(range(40)) * 2.0
         # w is still unreferenced — projection stays narrow
-        scan = [
-            ln for ln in
-            df._jdf.queryExecution().executedPlan().toString().split("\n")
-            if "BatchScan beacon_nd" in ln
-        ]
-        assert scan and "w#" not in scan[0]
+        assert "w#" not in _scan_line(df)
     finally:
         spark.conf.unset("spark.sql.ansi.doubleQuotedIdentifiers")
         spark.conf.unset("spark.sql.ansi.enabled")
+
+
+# ---------------------------------------------------------------------
+# one nd read path: SQL and the DSL plan the same read_nd scan
+
+
+def _nd_fixture(kind: str, root: str) -> tuple[str, str]:
+    """Write one fixture of ``kind`` under ``root`` -> (format, path
+    relative to root). Each carries what the two surfaces once typed
+    differently: unsigned ints (widened for Spark), CF time (ns -> µs
+    timestamps), attribute and global-attribute columns."""
+    from beacon_spark.sources.atlaslite import write_atlas_store
+    from beacon_spark.sources.hdf5write import write_netcdf4
+    from beacon_spark.sources.tifflite import write_tiff
+    from beacon_spark.sources.zarrlite import write_zarr_store
+
+    time_attrs = {"units": "hours since 2000-01-01 00:00:00"}
+    if kind == "netcdf3":
+        write_netcdf3(
+            os.path.join(root, "g.nc"), dims={"time": 4, "lat": 3},
+            variables={
+                "time": (("time",), np.arange(4, dtype=np.int32)),
+                "lat": (("lat",), np.array([10.0, 20.0, 30.0])),
+                "temp": (("time", "lat"),
+                         np.arange(12, dtype=np.float32).reshape(4, 3)),
+                "flag": (("time",), np.array([1, -2, 3, -4], dtype=np.int8)),
+            },
+            var_attrs={"time": time_attrs, "temp": {"units": "C"}},
+            global_attrs={"title": "grid"})
+        return "netcdf", "g.nc"
+    if kind == "netcdf4":
+        write_netcdf4(
+            os.path.join(root, "g.h5"), dims={"time": 5},
+            variables={
+                "time": (("time",), np.arange(5, dtype=np.float64)),
+                "count": (("time",), np.array([0, 1, 250, 65535, 7],
+                                              dtype=np.uint16)),
+                "big": (("time",), np.array([0, 1, 2**32 - 1, 5, 9],
+                                            dtype=np.uint32)),
+            },
+            var_attrs={"time": time_attrs}, global_attrs={"src": "h5"})
+        return "hdf5", "g.h5"
+    if kind in ("zarr2", "zarr3"):
+        write_zarr_store(
+            os.path.join(root, "s.zarr"),
+            {
+                "t": (("t",), np.arange(6, dtype=np.int64)),
+                "u8": (("t",), np.array([0, 1, 2, 200, 254, 255],
+                                        dtype=np.uint8)),
+                "u64": (("t",), np.array([0, 1, 2, 3, 2**63, 2**64 - 1],
+                                         dtype=np.uint64)),
+                "v": (("t",), np.linspace(0.0, 1.0, 6)),
+            },
+            var_attrs={"t": time_attrs, "v": {"long_name": "value"}},
+            version=int(kind[-1]), codec=None)
+        return "zarr", "s.zarr"
+    if kind == "tiff":
+        write_tiff(os.path.join(root, "r.tif"),
+                   [np.arange(24, dtype=np.uint8).reshape(4, 6)],
+                   pixel_scale=(0.5, 0.25), tiepoint=(0, 0, 10.0, 60.0),
+                   compression="none")
+        return "tiff", "r.tif"
+    if kind == "atlas":
+        marker = write_atlas_store(
+            os.path.join(root, "obs.atlas"),
+            {name: {"variables": {
+                        "time": (("t",), np.arange(lo, lo + 4.0)),
+                        "temp": (("t",), np.arange(4.0) + lo / 10)},
+                    "attrs": {}, "array_attrs": {}}
+             for name, lo in (("a", 0.0), ("b", 100.0))})
+        return "atlas", os.path.relpath(marker, root)
+    assert kind == "ragged"
+    write_netcdf3(
+        os.path.join(root, "ragged.nc"), dims={"profile": 3, "obs": 6},
+        variables={
+            "custkey": (("profile",), np.array([7, 8, 9], dtype=np.int32)),
+            "rowSize": (("profile",), np.array([1, 2, 3], dtype=np.int32)),
+            "val": (("obs",), np.arange(6, dtype=np.float64)),
+        },
+        var_attrs={"rowSize": {"sample_dimension": "obs"}})
+    return "netcdf", "ragged.nc"
+
+
+def _rows(df) -> list:
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+@pytest.mark.parametrize("kind", ["netcdf3", "netcdf4", "zarr2", "zarr3",
+                                  "tiff", "atlas", "ragged"])
+def test_sql_and_dsl_read_the_same_table(nd_engine, tmp_path, kind):
+    """``SELECT * FROM read_<fmt>(…)`` and the DSL ``from`` block must
+    agree on column names, Spark types and rows for every nd fixture
+    kind — the two surfaces share one schema source (read_nd's 1-row
+    sample, widened for Spark) and one scan."""
+    fmt, rel = _nd_fixture(kind, str(tmp_path))
+    sql = nd_engine.sql(f"SELECT * FROM read_{fmt}('{rel}')")
+    dsl = nd_engine.query({"select": ["*"], "from": {fmt: {"paths": [rel]}}})
+    assert [(f.name, f.dataType) for f in sql.schema] == [
+        (f.name, f.dataType) for f in dsl.schema]
+    assert _rows(sql) == _rows(dsl)
+    types = dict(sql.dtypes)
+    if kind in ("netcdf3", "netcdf4", "zarr2", "zarr3"):
+        # CF time decodes to ns; both surfaces ship it as Spark's µs type
+        assert types["time" if "time" in types else "t"] == "timestamp_ntz"
+    if kind == "netcdf4":
+        assert (types["count"], types["big"]) == ("int", "bigint")
+    if kind.startswith("zarr"):
+        assert (types["u8"], types["u64"]) == ("smallint", "decimal(20,0)")
+    if kind == "tiff":
+        assert types["band.0"] == "smallint" and "geo.lat" in types
+
+
+def test_concurrent_sql_windows_never_share_a_view(nd_engine, tmp_path,
+                                                   monkeypatch):
+    """Two threads query the same zarr store with disjoint WHERE windows,
+    20 times each. A barrier holds each thread between binding its pruned
+    view and analyzing its statement until the other has bound its own,
+    so a view name shared by the two windows would hand one thread the
+    other's region. Each statement's view is named from every value baked
+    into it plus a per-statement suffix, and is dropped once the
+    statement is analyzed, so none are left behind."""
+    import threading
+
+    from beacon_spark.engine import Engine
+    from beacon_spark.sources.zarrlite import write_zarr_store
+
+    store = str(tmp_path / "conc.zarr")
+    write_zarr_store(store, {"t": (("t",), np.arange(200.0)),
+                             "v": (("t",), np.arange(200.0) * 2)},
+                     version=2, codec=None, chunk_shapes={"v": (10,)})
+    barrier = threading.Barrier(2, timeout=120)
+    register = Engine._register_nd_view
+
+    def register_then_wait(self, *args):
+        name = register(self, *args)
+        barrier.wait()
+        return name
+
+    monkeypatch.setattr(Engine, "_register_nd_view", register_then_wait)
+    errors: list = []
+
+    def run(lo, hi):
+        try:
+            for _ in range(20):
+                rows = nd_engine.sql(
+                    f"SELECT t, v FROM read_zarr('{store}') "
+                    f"WHERE t BETWEEN {lo} AND {hi}").collect()
+                got = sorted((r.t, r.v) for r in rows)
+                want = [(float(t), 2.0 * t) for t in range(lo, hi + 1)]
+                if got != want:
+                    errors.append((lo, hi, got[:3], len(got)))
+        except Exception as exc:  # surfaced by the assert below
+            errors.append(exc)
+            barrier.abort()
+
+    threads = [threading.Thread(target=run, args=w)
+               for w in ((10, 29), (120, 159))]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(timeout=600)
+        assert not th.is_alive()
+    assert not errors
+    left = [t.name for t in nd_engine.spark.catalog.listTables()
+            if t.name.startswith("__beacon_nd")]
+    assert left == []
+
+
+def test_pushdown_fallback_is_reported_and_exact(nd_engine, zarr_store,
+                                                 monkeypatch, caplog):
+    """When the optimized-plan walk fails, read_nd runs unpruned and the
+    WHERE still applies in Spark (exact rows), and the fallback is logged
+    at WARNING under the stable site name ``nd_sql_pushdown``."""
+    import logging
+
+    from beacon_spark.engine import Engine
+
+    def boom(self, statement, args):
+        raise RuntimeError("plan walk unavailable")
+
+    monkeypatch.setattr(Engine, "_nd_optimized_plan", boom)
+    spark = nd_engine.spark
+    spark.conf.set("spark.beacon.nd.rowsPerTask", "5")
+    try:
+        with caplog.at_level(logging.WARNING, logger="beacon_spark.engine"):
+            df = nd_engine.sql(
+                f"SELECT t, v FROM read_zarr('{zarr_store}') "
+                "WHERE t >= 10 AND t <= 19")
+        assert df.rdd.getNumPartitions() == 8  # unpruned: all 40 rows
+        assert "w#" in _scan_line(df)  # and every variable decodes
+        rows = df.orderBy("t").collect()
+    finally:
+        spark.conf.unset("spark.beacon.nd.rowsPerTask")
+    assert [(r.t, r.v) for r in rows] == [
+        (float(t), 2.0 * t) for t in range(10, 20)]
+    hits = [r for r in caplog.records if r.levelno == logging.WARNING
+            and "nd_sql_pushdown" in r.getMessage()]
+    assert hits and "plan walk unavailable" in hits[0].getMessage()

@@ -189,9 +189,9 @@ def test_marker_hits_escapes_metachars_and_rejects_empty(spark):
     # literal 'a.b' twice (case-insensitive); an unescaped '.' would
     # also swallow 'axb' and read 3
     assert n == 2
-    with pytest.raises(AssertionError):
+    with pytest.raises(ValueError, match="empty marker word"):
         _marker_hits(F.col("text"), ["the", ""])
-    with pytest.raises(AssertionError):
+    with pytest.raises(ValueError, match="empty marker word"):
         _marker_hits(F.col("text"), [])
 
 
