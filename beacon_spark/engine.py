@@ -64,8 +64,6 @@ _ANALYZE_RE = re.compile(
 _log = logging.getLogger("beacon_spark.engine")
 
 _ND_FMTS = ("netcdf", "hdf5", "zarr", "tiff", "atlas")
-# a SQL temp view stores its text and resolves the views it names on
-# every use, so the nd views such a statement binds must outlive it
 _DEFINES_TEMP_VIEW_RE = re.compile(
     r"^\s*CREATE\s+(?:OR\s+REPLACE\s+)?(?:GLOBAL\s+)?TEMP(?:ORARY)?\s+VIEW\b",
     re.IGNORECASE,
@@ -787,8 +785,8 @@ class Engine:
 
     # ------------------------------------------------------------ sources
 
-    def read_parquet(self, paths, merge: str = "supertype") -> DataFrame:
-        return tabular.read_parquet(self.spark, paths, self.datasets_root, merge)
+    def read_parquet(self, paths) -> DataFrame:
+        return tabular.read_parquet(self.spark, paths, self.datasets_root)
 
     def read_csv(self, paths, delimiter: str | None = None,
                  infer_records: int | None = None) -> DataFrame:
@@ -957,7 +955,8 @@ class Engine:
         """Spark SQL with the dialect extensions pre-compiled away.
 
         - ``SUMMARIZE <table|query>`` → one-pass profiling aggregate
-        - ``read_parquet('glob')`` etc. in FROM → temp views over our readers
+        - ``read_parquet('glob')`` etc. in FROM → per-statement temp views
+          over ``resolve_from``, dropped once the statement is analyzed
         - ``try_arrow_cast(e, 'Int32')`` → ``try_cast`` with Spark type names
         - ``params``: positional values bound to ``$1..$n`` placeholders
           (runtime.rs:107-116) or a dict for ``:name`` markers
@@ -1060,55 +1059,56 @@ class Engine:
         statement = self._rewrite_system_tables(statement)
         statement = self._rewrite_information_schema(statement)
         statement = self._rewrite_time_travel(statement)
+        # a SQL temp view stores its text and resolves the views it names
+        # on every use, so the read views such a statement binds must
+        # outlive it; every other statement's analyzed plan holds its scans
+        keep_views = _DEFINES_TEMP_VIEW_RE.match(statement)
         nd_calls: list[_NdCall] = []
-        statement = self._rewrite_read_fns(statement, nd_calls)
-        statement = self._rewrite_metadata_fns(statement)
-        statement = self._rewrite_try_arrow_cast(statement)
-        statement = self._rewrite_macros(statement)
-        statement = self._rewrite_extract_fields(statement)
-        statement = self._rewrite_numeric_trunc(statement)
-        statement = self._rewrite_qualify(statement)
-        # Explicit spaces in the replacement: `WHERE(flag)` (no space —
-        # \s* matches empty) must become `WHERE flag`, not the fused
-        # token `WHEREflag` (an alias parse again); and `WHERE (a)IN(…)`
-        # must become `WHERE a IN(…)`, not `WHERE aIN(…)`.
-        statement = _sub_outside_literals(
-            _WHERE_PAREN_IDENT_RE,
-            lambda m: f"{m.group(1).rstrip()} {m.group(2)} ",
-            statement,
-        )
-        statement = _sub_outside_literals(
-            _EXCLUDE_RE,
-            lambda m: f"{m.group(1)}EXCEPT ({m.group(3) or m.group(4)})",
-            statement,
-        )
-        statement, replaces = _extract_star_replace(statement)
-        order_clause = limit_clause = offset_clause = None
-        if replaces:
-            # ORDER BY must resolve to the REPLACED output column
-            # (DataFusion/DuckDB semantics), so the trailing ORDER BY /
-            # LIMIT / OFFSET are peeled off, replacements applied
-            # position-preserving, then ordering applied on the output.
-            statement, order_clause, limit_clause, offset_clause = _split_order_limit(
-                statement
-            )
-        args: dict | None = None
-        if isinstance(params, dict):
-            args = params
-        elif params is not None:
-            statement, args = _bind_placeholders(statement, params)
-        nd_views: list[str] = []
+        views: list[str] = []
         try:
+            statement = self._rewrite_read_fns(statement, nd_calls, views)
+            statement = self._rewrite_metadata_fns(statement)
+            statement = self._rewrite_try_arrow_cast(statement)
+            statement = self._rewrite_macros(statement)
+            statement = self._rewrite_extract_fields(statement)
+            statement = self._rewrite_numeric_trunc(statement)
+            statement = self._rewrite_qualify(statement)
+            # Explicit spaces in the replacement: `WHERE(flag)` (no space —
+            # \s* matches empty) must become `WHERE flag`, not the fused
+            # token `WHEREflag` (an alias parse again); and `WHERE (a)IN(…)`
+            # must become `WHERE a IN(…)`, not `WHERE aIN(…)`.
+            statement = _sub_outside_literals(
+                _WHERE_PAREN_IDENT_RE,
+                lambda m: f"{m.group(1).rstrip()} {m.group(2)} ",
+                statement,
+            )
+            statement = _sub_outside_literals(
+                _EXCLUDE_RE,
+                lambda m: f"{m.group(1)}EXCEPT ({m.group(3) or m.group(4)})",
+                statement,
+            )
+            statement, replaces = _extract_star_replace(statement)
+            order_clause = limit_clause = offset_clause = None
+            if replaces:
+                # ORDER BY must resolve to the REPLACED output column
+                # (DataFusion/DuckDB semantics), so the trailing ORDER BY /
+                # LIMIT / OFFSET are peeled off, replacements applied
+                # position-preserving, then ordering applied on the output.
+                statement, order_clause, limit_clause, offset_clause = (
+                    _split_order_limit(statement))
+            args: dict | None = None
+            if isinstance(params, dict):
+                args = params
+            elif params is not None:
+                statement, args = _bind_placeholders(statement, params)
             if nd_calls:
                 statement = self._bind_nd_views(
-                    statement, args, nd_calls, nd_views)
+                    statement, args, nd_calls, views)
             df = (self.spark.sql(statement, args=args) if args
                   else self.spark.sql(statement))
         finally:
-            # the analyzed plan holds the scans; only a SQL temp view
-            # (stored as text) resolves the names again later
-            if not _DEFINES_TEMP_VIEW_RE.match(statement):
-                for view in nd_views:
+            if not keep_views:
+                for view in views:
                     self.spark.catalog.dropTempView(view)
         if replaces:
             from pyspark.sql import functions as F
@@ -1436,70 +1436,22 @@ class Engine:
             cat = self.catalog._load()
             for name, path in cat["tables"].items():
                 ManagedTable(self.spark, path).read().createOrReplaceTempView(name)
-            self._ext_cache = getattr(self, "_ext_cache", {})
             remote_ext: dict[str, tuple] = {}
             for name, ext in cat["external_tables"].items():
                 try:
-                    opts = dict(ext.get("options") or {})
-                    sname = ext.get("password_secret")
-                    if sname:
-                        from beacon_spark.secretbox import default_box
-
-                        raw = cat.get("secrets", {}).get(sname, {}) \
-                                 .get("options", {}).get("password")
-                        if raw:
-                            opts["password"] = default_box().decrypt(raw)
-                    if ext["format"] in ("postgres", "mysql"):
-                        # remote-DB tables are LIVE lazy scans (the
-                        # reference's federated provider): a beacon_sqldb
-                        # DataSource whose filters push into the remote
-                        # WHERE and whose fetch runs on an executor at
-                        # query time. Only the SCHEMA is probed+cached
-                        # per catalog entry — data is never snapshotted.
-                        import json as _json
-
-                        key = _json.dumps(ext, sort_keys=True)
-                        cached = self._ext_cache.get(name)
-                        if cached is not None and cached[0] == key:
-                            schema = cached[1]
-                        else:
-                            if ext["format"] == "postgres":
-                                from beacon_spark.sources.pglite import (
-                                    postgres_table_schema as _probe,
-                                )
-                            else:
-                                from beacon_spark.sources.mysqllite import (
-                                    mysql_table_schema as _probe,
-                                )
-                            schema = _probe(ext["paths"][0], opts)
-                            self._ext_cache[name] = (key, schema)
-                        self._register_remote_datasource()
-                        (
-                            self.spark.read.format("beacon_sqldb")
-                            .schema(schema)
-                            .options(
-                                engine=ext["format"],
-                                table=ext["paths"][0],
-                                **{k: str(v) for k, v in opts.items()},
-                            )
-                            .load()
-                            .createOrReplaceTempView(name)
-                        )
-                        continue
+                    spec = self._ext_spec(ext, cat)
                     if ext["format"] == "remote":
                         # registry for the federation pushdown: a join
                         # of same-endpoint STORED AS REMOTE tables ships
-                        # whole (token decrypted above)
+                        # whole (token decrypted by _ext_spec)
+                        opts = spec["remote"]["options"]
                         remote_ext[name] = (
                             ext["paths"][0],
                             opts.get("token") or opts.get("password")
                             or None,
                             str(opts.get("tls", "")).lower() == "true",
                         )
-                    self.resolve_from(
-                        {ext["format"]: {"paths": ext["paths"],
-                                         "options": opts}}
-                    ).createOrReplaceTempView(name)
+                    self.resolve_from(spec).createOrReplaceTempView(name)
                 except Exception as e:
                     # fail-open: a missing optional reader lib (netcdf/zarr)
                     # must not break unrelated statements — but say so
@@ -1564,7 +1516,7 @@ class Engine:
                         )
                     for t, ext in subcat["external_tables"].items():
                         sub.resolve_from(
-                            {ext["format"]: {"paths": ext["paths"]}}
+                            sub._ext_spec(ext, subcat)
                         ).createOrReplaceTempView(f"{aname}_{t}")
                 except Exception as e:
                     import sys
@@ -1585,6 +1537,20 @@ class Engine:
             self._force_full = False  # the demanded full pass ran
         finally:
             self._registering = False
+
+    @staticmethod
+    def _ext_spec(ext: dict, cat: dict) -> dict:
+        """The from-spec of one catalog external table: its paths, its
+        OPTIONS and the password from its encrypted secret."""
+        opts = dict(ext.get("options") or {})
+        sname = ext.get("password_secret")
+        raw = (cat.get("secrets", {}).get(sname, {}).get("options", {})
+               .get("password") if sname else None)
+        if raw:
+            from beacon_spark.secretbox import default_box
+
+            opts["password"] = default_box().decrypt(raw)
+        return {ext["format"]: {"paths": ext["paths"], "options": opts}}
 
     def _apply_secret(self, entry: dict, params: dict[str, str]) -> None:
         """Wire an s3-type secret onto the Hadoop connector config (the
@@ -1712,15 +1678,9 @@ class Engine:
             # validate format + location/connection eagerly (the
             # reference plans the listing at CREATE time,
             # actions.rs:221-492; sql-databases connects at CREATE).
-            # DB formats probe with LIMIT 0 — connect + schema, never a
-            # full download of the remote table just to validate it
-            probe_loc = (
-                f"SELECT * FROM {loc} LIMIT 0"
-                if fmt_l in ("postgres", "mysql")
-                else loc
-            )
+            # DB formats only probe their schema (LIMIT 0)
             probe_df = self.resolve_from(
-                {fmt_l: {"paths": [probe_loc], "options":
+                {fmt_l: {"paths": [loc], "options":
                          {**opts, **({"password": password}
                                      if password else {})}}}
             )
@@ -2457,11 +2417,10 @@ class Engine:
         from beacon_spark.server.remote_datasource import RemoteTableDataSource
         from beacon_spark.sources.sqldb_datasource import SqlDbDataSource
 
+        # registering again (another Engine on this session) replaces
+        # the source
         for ds in (RemoteTableDataSource, SqlDbDataSource):
-            try:
-                self.spark.dataSource.register(ds)
-            except Exception:
-                pass  # already registered by another Engine on this session
+            self.spark.dataSource.register(ds)
         self.spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
         self._remote_ds_ready = True
 
@@ -2527,6 +2486,45 @@ class Engine:
             self.spark.read.format("beacon_remote")
             .schema(rb.table_schema(tbl))
             .options(url=rb.location, table=tbl, token=token or "")
+            .load()
+        )
+
+    def _sqldb_df(self, fmt: str, loc: str, opts: dict) -> DataFrame:
+        """A PostgreSQL/MySQL table or query as a LIVE lazy scan (the
+        reference's federated provider): a ``beacon_sqldb`` DataSource
+        whose filters push into the remote WHERE and whose fetch runs on
+        an executor at query time (sources/sqldb_datasource.py). Only the
+        schema is probed (LIMIT 0) and cached per spec; data is never
+        snapshotted. A query location (SELECT/WITH/VALUES/TABLE head) is
+        read as a derived table."""
+        if fmt == "postgres":
+            sslmode = str(opts.get("sslmode", "disable")).lower()
+            if sslmode not in ("disable", "prefer", "allow"):
+                # accepted-but-ignored would be a silent security downgrade
+                raise NotImplementedError(
+                    f"sslmode={sslmode!r}: TLS is not implemented in this "
+                    "client; use sslmode=disable (or tunnel the connection)")
+        if re.match(r"(?i)^\s*(select|with|values|table)\b", loc):
+            loc = f"({loc}) AS q"
+        cache = self._sqldb_schemas = getattr(self, "_sqldb_schemas", {})
+        key = json.dumps([fmt, loc, opts], sort_keys=True)
+        schema = cache.get(key)
+        if schema is None:
+            if fmt == "postgres":
+                from beacon_spark.sources.pglite import (
+                    postgres_table_schema as probe,
+                )
+            else:
+                from beacon_spark.sources.mysqllite import (
+                    mysql_table_schema as probe,
+                )
+            schema = cache[key] = probe(loc, opts)
+        self._register_remote_datasource()
+        return (
+            self.spark.read.format("beacon_sqldb")
+            .schema(schema)
+            .options(engine=fmt, table=loc,
+                     **{k: str(v) for k, v in opts.items()})
             .load()
         )
 
@@ -2786,19 +2784,6 @@ class Engine:
                 location, token=token)
         return rb
 
-    def _nd_read(self, fmt, paths, dimensions=None, ranges=None,
-                 columns=None) -> DataFrame:
-        """The one nd read both surfaces plan: the DSL ``from`` resolver
-        and the SQL ``read_netcdf/zarr/tiff/atlas/hdf5`` views."""
-        reader = {
-            "netcdf": self.read_netcdf,
-            "hdf5": self.read_netcdf,
-            "zarr": self.read_zarr,
-            "tiff": self.read_tiff,
-            "atlas": self.read_atlas,
-        }[fmt]
-        return reader(paths, dimensions, ranges=ranges, columns=columns)
-
     def _nd_placeholder(self, call: _NdCall) -> _NdCall:
         """Register ``call``'s schema-only placeholder view: an empty RDD
         relation, which Catalyst cannot fold away the way it folds an
@@ -2832,7 +2817,9 @@ class Engine:
         analyzed."""
         from beacon_spark.sources.nd import nd_rows_per_task
 
-        df = self._nd_read(fmt, list(globs), dims, ranges, columns)
+        df = self.resolve_from(
+            {fmt: {"paths": list(globs), "dimensions": dims}},
+            projection=columns, ranges=ranges)
         if columns is not None:
             have = set(df.columns)
 
@@ -2844,10 +2831,19 @@ class Engine:
                 else f"CAST(NULL AS {f.dataType.simpleString()}) AS {ident(f.name)}"
                 for f in schema
             ])
-        key = (self.datasets_root, fmt, tuple(globs), tuple(dims or ()),
-               tuple(sorted((ranges or {}).items())), tuple(columns or ()),
-               nd_rows_per_task(self.spark))
-        name = f"__beacon_nd_{abs(hash(key)) % 10**10}_{uuid.uuid4().hex[:8]}"
+        return self._read_view("nd", df, (
+            fmt, tuple(globs), tuple(dims or ()),
+            tuple(sorted((ranges or {}).items())), tuple(columns or ()),
+            nd_rows_per_task(self.spark)))
+
+    def _read_view(self, kind: str, df: DataFrame, key) -> str:
+        """Register ``df`` as the temp view one SQL read call stands for.
+        The name hashes the root and every value baked into the read
+        (``key``) and adds a per-statement suffix, so no statement reads
+        another's view; ``Engine.sql`` drops it once the statement is
+        analyzed."""
+        h = abs(hash((self.datasets_root, key))) % 10**10
+        name = f"__beacon_{kind}_{h}_{uuid.uuid4().hex[:8]}"
         df.createOrReplaceTempView(name)
         return name
 
@@ -2904,12 +2900,15 @@ class Engine:
             statement = statement.replace(call.name, views[-1])
         return statement
 
-    def _rewrite_read_fns(self, statement: str, nd_calls: list) -> str:
+    def _rewrite_read_fns(self, statement: str, nd_calls: list,
+                          views: list | None = None) -> str:
         """Replace ``read_*('glob' [, 'glob'...])`` table functions with
-        temp views backed by the matching reader (the reference registers
-        these as UDTFs — beacon-functions/src/file_formats/mod.rs:21-107).
-        An nd call leaves a reserved name and appends itself to
-        ``nd_calls`` for :meth:`_bind_nd_views`."""
+        temp views over ``resolve_from`` of the call's from-spec (the
+        reference registers these as UDTFs —
+        beacon-functions/src/file_formats/mod.rs:21-107; its SQL and JSON
+        surfaces share one format registry). Each view's name is appended
+        to ``views``. An nd call leaves a reserved name and appends itself
+        to ``nd_calls`` for :meth:`_bind_nd_views`."""
 
         def repl(m: re.Match) -> str:
             fmt = m.group(1).lower()
@@ -2930,6 +2929,7 @@ class Engine:
             if dims is not None and fmt not in _ND_FMTS:
                 raise ValueError(
                     f"read_{fmt} takes no dimensions list")
+            cfg: dict[str, Any] = {"paths": globs}
             if fmt == "csv":
                 # read_csv(paths[, delimiter[, infer_records]])
                 # (table-functions.md): in the BARE form only the first
@@ -2937,26 +2937,19 @@ class Engine:
                 # options
                 if not bracketed and len(globs) > 1:
                     extras = [(g, "") for g in globs[1:]] + extras
-                    globs = globs[:1]
-                delimiter = None
-                infer_records = None
+                    cfg["paths"] = globs[:1]
                 for s, n in extras:
                     if n:
-                        infer_records = int(n)
-                    elif delimiter is None:
+                        cfg["infer_records"] = int(n)
+                    elif "delimiter" not in cfg:
                         # the raw SQL text of '\t' is backslash+t — decode
                         # the common escapes the way Spark's lexer would
-                        delimiter = {"\\t": "\t", "\\n": "\n",
-                                     "\\r": "\r", "\\\\": "\\"}.get(s, s)
+                        cfg["delimiter"] = {"\\t": "\t", "\\n": "\n",
+                                            "\\r": "\r", "\\\\": "\\"}.get(s, s)
                     else:
                         raise ValueError(
                             f"read_csv: unexpected argument {s!r}")
-                df = self.read_csv(globs, delimiter,
-                                   infer_records=infer_records)
-                name = (f"__beacon_read_{abs(hash((self.datasets_root, fmt, tuple(globs), delimiter, infer_records))) % 10**10}")
-                df.createOrReplaceTempView(name)
-                return name
-            if fmt in ("delta", "iceberg"):
+            elif fmt in ("delta", "iceberg"):
                 # read_delta(location[, version_or_timestamp]) /
                 # read_iceberg(location[, snapshot_id]) — the second
                 # argument used to be silently DROPPED (quoted form) so
@@ -2964,25 +2957,18 @@ class Engine:
                 tt = globs[1] if len(globs) > 1 else None
                 for s, n_ in extras:
                     tt = n_ or s
-                if fmt == "delta":
-                    if tt is None:
-                        df = self.read_delta(globs[0])
-                    elif re.fullmatch(r"\d+", str(tt)):
-                        df = self.read_delta(globs[0], int(tt))
-                    else:
-                        df = self.read_delta(globs[0], timestamp_as_of=tt)
-                else:
-                    df = self.read_iceberg(
-                        globs[0], int(tt) if tt is not None else None)
-                name = (f"__beacon_read_"
-                        f"{abs(hash((self.datasets_root, fmt, tuple(globs), str(tt)))) % 10**10}")
-                df.createOrReplaceTempView(name)
-                return name
-            if extras:
+                cfg["paths"] = globs[:1]
+                if tt is not None and fmt == "iceberg":
+                    cfg["snapshot_id"] = int(tt)
+                elif tt is not None and re.fullmatch(r"\d+", str(tt)):
+                    cfg["version_as_of"] = int(tt)
+                elif tt is not None:
+                    cfg["timestamp_as_of"] = tt
+            elif extras:
                 raise ValueError(
                     f"read_{fmt} takes only path arguments, got extras: "
                     f"{tail.strip()!r}")
-            if fmt in _ND_FMTS:
+            elif fmt in _ND_FMTS:
                 # the nd readers plan through read_nd like the DSL does;
                 # WHERE ranges and referenced columns come from Catalyst
                 # (the reference's 'predicate pushdown is automatic' SQL
@@ -2990,16 +2976,12 @@ class Engine:
                 name = f"__beacon_ndp_{uuid.uuid4().hex}"
                 nd_calls.append(_NdCall(name, fmt, tuple(globs), dims))
                 return name
-            df = {
-                "parquet": self.read_parquet,
-                "arrow": self.read_arrow,
-                "odv": self.read_odv,
-                "odv_ascii": self.read_odv,
-                "geoparquet": self.read_geoparquet,
-            }[fmt](globs)
-            name = (f"__beacon_read_"
-                    f"{abs(hash((self.datasets_root, fmt, tuple(globs)))) % 10**10}")
-            df.createOrReplaceTempView(name)
+            spec = {fmt: cfg}
+            name = self._read_view(
+                "read", self.resolve_from(spec),
+                json.dumps(spec, sort_keys=True))
+            if views is not None:
+                views.append(name)
             return name
 
         return _sub_outside_literals(_READ_FN_RE, repl, statement)
@@ -3506,9 +3488,12 @@ class Engine:
         eqs: dict | None = None,
     ) -> DataFrame:
         """Resolve a DSL ``from`` (query/from.rs:23-131): named table, or
-        ``{"<format>": {"paths": [...], ...}}``. ``projection`` is the
-        DSL compiler's pushdown column set — Catalyst prunes scans on its
-        own, so it only gates nd readers (which prune variables).
+        ``{"<format>": {"paths": [...], ...}}``. The one place a format
+        name becomes a reader: SQL ``read_*`` calls, catalog external
+        tables and attached roots all build their from-spec and come
+        here. ``projection`` is the DSL compiler's pushdown column set —
+        Catalyst prunes scans on its own, so it only gates nd readers
+        (which prune variables).
         ``ranges`` (column → [lo, hi] from the filter) drives stats-index
         file pruning for parquet collections (fail-open)."""
         if spec is None:
@@ -3531,6 +3516,8 @@ class Engine:
                     f"got: {spec!r}")
             ((fmt, cfg),) = spec.items()
             fmt = fmt.lower()
+            # the one location of a table, repository or database format
+            loc = cfg["paths"][0] if cfg.get("paths") else cfg.get("location")
             if fmt == "parquet":
                 if ranges and self.datasets_root:
                     from beacon_spark.sources.paths import resolve_globs
@@ -3545,11 +3532,12 @@ class Engine:
                     if pruned != files:
                         return self.read_parquet(pruned)
                 return self.read_parquet(cfg["paths"])
-            if fmt == "csv" and isinstance(cfg.get("options"), dict) \
-                    and "delimiter" in cfg["options"]:
-                cfg = {**cfg, "delimiter": cfg["options"]["delimiter"]}
             if fmt == "csv":
-                return self.read_csv(cfg["paths"], cfg.get("delimiter"))
+                # a catalog entry carries its delimiter in OPTIONS
+                delimiter = (cfg.get("options") or {}).get(
+                    "delimiter", cfg.get("delimiter"))
+                return self.read_csv(cfg["paths"], delimiter,
+                                     cfg.get("infer_records"))
             if fmt == "arrow":
                 return self.read_arrow(cfg["paths"])
             if fmt in _ND_FMTS:
@@ -3562,18 +3550,23 @@ class Engine:
                     nd_cols = _with_dot_prefixes(
                         set(projection).union(ranges or {}, terms or {},
                                               eqs or {}))
-                return self._nd_read(fmt, cfg["paths"], cfg.get("dimensions"),
-                                     ranges, nd_cols)
-            if fmt == "odv":
+                reader = {
+                    "netcdf": self.read_netcdf,
+                    "hdf5": self.read_netcdf,
+                    "zarr": self.read_zarr,
+                    "tiff": self.read_tiff,
+                    "atlas": self.read_atlas,
+                }[fmt]
+                return reader(cfg["paths"], cfg.get("dimensions"),
+                              ranges=ranges, columns=nd_cols)
+            if fmt in ("odv", "odv_ascii"):
                 return self.read_odv(cfg["paths"])
             if fmt == "delta":
-                loc = cfg["paths"][0] if "paths" in cfg else cfg["location"]
                 return self.read_delta(loc, cfg.get("version_as_of"),
                                        cfg.get("timestamp_as_of"))
             if fmt == "geoparquet":
                 return self.read_geoparquet(cfg["paths"])
             if fmt == "iceberg":
-                loc = cfg["paths"][0] if "paths" in cfg else cfg["location"]
                 return self.read_iceberg(loc, cfg.get("snapshot_id"))
             if fmt == "icechunk":
                 # repository detection + refs/version resolution are
@@ -3583,7 +3576,6 @@ class Engine:
                 from beacon_spark.sources.icechunklite import open_icechunk
                 from beacon_spark.sources.paths import resolve_dir
 
-                loc = cfg["paths"][0] if "paths" in cfg else cfg["location"]
                 return open_icechunk(
                     resolve_dir(loc, self.datasets_root),
                     branch=cfg.get("branch"), tag=cfg.get("tag"),
@@ -3603,22 +3595,9 @@ class Engine:
                 # test_remote_federation.py). A lazy beacon_remote
                 # DataSource scan: filters push into the remote WHERE,
                 # Arrow batches stream to an executor.
-                loc = cfg["paths"][0] if "paths" in cfg else cfg["location"]
                 return self._remote_table_df(loc, cfg.get("options") or {})
-            if fmt == "postgres":
-                # from-spec v3 wire-protocol client (sources/pglite.py;
-                # the reference federates via beacon-sql-databases)
-                from beacon_spark.sources.pglite import read_postgres
-
-                loc = cfg["paths"][0] if "paths" in cfg else cfg["location"]
-                return read_postgres(self.spark, loc, cfg.get("options") or {})
-            if fmt == "mysql":
-                # from-spec client/server-protocol client
-                # (sources/mysqllite.py) — same contract as postgres
-                from beacon_spark.sources.mysqllite import read_mysql
-
-                loc = cfg["paths"][0] if "paths" in cfg else cfg["location"]
-                return read_mysql(self.spark, loc, cfg.get("options") or {})
+            if fmt in ("postgres", "mysql"):
+                return self._sqldb_df(fmt, loc, cfg.get("options") or {})
             raise ValueError(f"unsupported from format: {fmt}")
         raise ValueError(f"bad from spec: {spec!r}")
 

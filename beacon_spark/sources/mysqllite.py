@@ -18,10 +18,12 @@ driver, no JDBC jar:
     the Spark type), rows of lenenc strings, OK/EOF terminators,
     ERR packets raised with the server's message
 
-Scale note identical to pglite: registered ``STORED AS MYSQL`` tables
-are LIVE lazy scans via ``sources/sqldb_datasource.py`` (executor-side
-fetch, predicates pushed to the database); :func:`read_mysql` is the
-direct driver-side form. Passwords ride the secret machinery.
+As with pglite, every read of a MySQL table (catalog tables, ``CREATE``
+validation, DSL ``{"mysql": …}`` reads) is a LIVE lazy scan via
+``sources/sqldb_datasource.py`` (executor-side fetch, predicates pushed
+to the database); the driver only probes the schema
+(:func:`mysql_table_schema`, LIMIT 0). Passwords ride the secret
+machinery.
 """
 
 from __future__ import annotations
@@ -32,8 +34,8 @@ import struct
 
 from pyspark.sql import types as T
 
-__all__ = ["MySqlClient", "MySqlError", "read_mysql",
-           "mysql_table_schema", "MYSQL_TYPE_TO_SPARK"]
+__all__ = ["MySqlClient", "MySqlError", "mysql_table_schema",
+           "MYSQL_TYPE_TO_SPARK"]
 
 
 class MySqlError(RuntimeError):
@@ -349,26 +351,3 @@ def mysql_table_schema(table: str, options: dict):
     finally:
         client.close()
     return mysql_schema(columns)
-
-
-def read_mysql(spark, table_or_query: str, options: dict) -> "DataFrame":
-    import re as _re
-
-    sql = (
-        table_or_query
-        if _re.match(r"(?i)^\s*(select|with|values|table)\b",
-                     table_or_query)  # CTE/VALUES heads are queries too
-        else f"SELECT * FROM {table_or_query}"
-    )
-    client = MySqlClient(
-        host=options.get("host", "127.0.0.1"),
-        port=int(options.get("port", 3306)),
-        user=options.get("user", "root"),
-        password=options.get("password"),
-        database=options.get("database"),
-    )
-    try:
-        columns, rows = client.query(sql)
-    finally:
-        client.close()
-    return spark.createDataFrame(rows, mysql_schema(columns))

@@ -22,14 +22,14 @@ Implemented surface (what a read-only federated table needs):
     types (bool/int2/int4/int8/float4/float8/numeric/text/varchar/
     date/timestamp(tz)/bytea)
 
-Scale note: registered ``STORED AS POSTGRES`` tables are LIVE lazy
-scans through ``sources/sqldb_datasource.py`` — the fetch runs on an
-EXECUTOR at query time with supported predicates pushed into the
-database's WHERE (the reference's federated-provider semantics).
-:func:`read_postgres` here is the direct driver-side form (used for
-LIMIT-0 probes and ad-hoc DSL reads). Passwords ride the engine's
-secret machinery, not the catalog entry (same contract as ATTACH
-tokens).
+Every read of a PostgreSQL table — ``STORED AS POSTGRES`` catalog
+tables, ``CREATE`` validation and DSL ``{"postgres": …}`` reads alike —
+is a LIVE lazy scan through ``sources/sqldb_datasource.py``: the fetch
+runs on an EXECUTOR at query time with supported predicates pushed into
+the database's WHERE (the reference's federated-provider semantics).
+The driver only probes the schema (:func:`postgres_table_schema`, one
+LIMIT-0 round trip). Passwords ride the engine's secret machinery, not
+the catalog entry (same contract as ATTACH tokens).
 """
 
 from __future__ import annotations
@@ -40,8 +40,8 @@ import struct
 
 from pyspark.sql import types as T
 
-__all__ = ["PgClient", "PgError", "read_postgres",
-           "postgres_table_schema", "OID_TO_SPARK"]
+__all__ = ["PgClient", "PgError", "postgres_table_schema",
+           "OID_TO_SPARK"]
 
 
 class PgError(RuntimeError):
@@ -318,35 +318,3 @@ def postgres_table_schema(table: str, options: dict):
     finally:
         client.close()
     return pg_schema(columns)
-
-
-def read_postgres(spark, table_or_query: str, options: dict) -> "DataFrame":
-    """``STORED AS POSTGRES`` read: connect, fetch, land as a DataFrame.
-    ``table_or_query`` is a table name (identifier) or a full SELECT."""
-    import re as _re
-
-    sql = (
-        table_or_query
-        if _re.match(r"(?i)^\s*(select|with|values|table)\b",
-                     table_or_query)  # CTE/VALUES heads are queries too
-        else f'SELECT * FROM {table_or_query}'
-    )
-    sslmode = options.get("sslmode", "disable").lower()
-    if sslmode not in ("disable", "prefer", "allow"):
-        # accepted-but-ignored would be a silent security downgrade
-        raise NotImplementedError(
-            f"sslmode={sslmode!r}: TLS is not implemented in this "
-            "client; use sslmode=disable (or tunnel the connection)"
-        )
-    client = PgClient(
-        host=options.get("host", "127.0.0.1"),
-        port=int(options.get("port", 5432)),
-        user=options.get("user", "postgres"),
-        password=options.get("password"),
-        database=options.get("database"),
-    )
-    try:
-        columns, rows = client.query(sql)
-    finally:
-        client.close()
-    return spark.createDataFrame(rows, pg_schema(columns))

@@ -16,8 +16,9 @@ builds a ``beacon_sqldb`` scan whose
   - the SELECT lists exactly the schema's columns.
 
 One partition per scan (one remote statement, one resultset). The
-engine probes the schema once per catalog entry (LIMIT 0) and caches
-it — data is never cached.
+engine probes the schema once per from-spec (LIMIT 0) and caches it —
+data is never cached. ``table`` is a table name or a parenthesized
+derived table (``(<query>) AS q``).
 """
 
 from __future__ import annotations
@@ -104,7 +105,7 @@ class SqlDbDataSource(DataSource):
     def schema(self):
         raise NotImplementedError(
             "beacon_sqldb requires an explicit schema (the engine probes "
-            "it once with LIMIT 0 at registration)"
+            "it once per from-spec with LIMIT 0)"
         )
 
     def reader(self, schema):

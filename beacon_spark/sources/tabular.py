@@ -7,19 +7,22 @@ merging per-file schemas through the supertype lattice
 
   1. read per-file schemas (parquet footer / IPC header) driver-side in a
      thread pool — the same O(files) metadata pass the reference performs;
-  2. group files by identical schema — the common case is ONE group, which
-     takes the zero-overhead ``spark.read.parquet(*files)`` path and keeps
-     full pushdown/pruning;
+  2. group files by identical schema — the common case is ONE group, read
+     with ``spark.read.schema(<footer schema>).parquet(*files)``: the
+     schema those footers already gave is handed to Spark, so planning
+     starts no schema-inference job, and pushdown/pruning stay intact;
   3. heterogeneous groups are each read natively, aligned to the super
      schema (cast/NULL-fill projections — no shuffle), and unioned.
 
-At 100 TB the footer scan is the scaling risk: ``fast`` mode (default when
-no type conflicts are expected) skips it entirely and trusts
-``mergeSchema``; harmonized mode is opt-in via ``merge="supertype"``.
+Hive-partitioned roots skip the footer pass and keep Spark's own
+partition discovery (``mergeSchema``). Arrow IPC reads merge their IPC
+header schemas the same way and align each file to the merged schema in
+the scan task (``mapInArrow``).
 """
 
 from __future__ import annotations
 
+import json
 from concurrent.futures import ThreadPoolExecutor
 
 import pyarrow as pa
@@ -32,20 +35,13 @@ from beacon_spark.schema import align_to_schema, super_schema
 from beacon_spark.sources.paths import expand_parquet_dirs, resolve_globs
 
 
-def _arrow_to_spark_schema(schema: pa.Schema) -> T.StructType:
+def _arrow_to_spark_schema(schema: pa.Schema,
+                           ns_as_long: bool = False) -> T.StructType:
     """Arrow → Spark schema, with the documented unsigned/ns divergences
     (SURVEY.md §1.2): UInt8/16/32 → next wider signed, UInt64 →
-    Decimal(20,0), ns timestamps → µs."""
-    return T.StructType.fromJson(_schema_json(schema))
-
-
-def _schema_json(schema: pa.Schema) -> dict:
-    fields = []
-    for f in schema:
-        fields.append(
-            {"name": f.name, "type": _type_json(f.type), "nullable": True, "metadata": {}}
-        )
-    return {"type": "struct", "fields": fields}
+    Decimal(20,0), ns timestamps → µs (or, with ``ns_as_long``, the long
+    Spark's ``nanosAsLong`` parquet reads return)."""
+    return T.StructType.fromJson(_type_json(pa.struct(list(schema)), ns_as_long))
 
 
 _SIMPLE = {
@@ -60,31 +56,36 @@ _SIMPLE = {
 }
 
 
-def _type_json(t: pa.DataType):
+def _type_json(t: pa.DataType, ns_as_long: bool = False):
     if t in _SIMPLE:
         return _SIMPLE[t]
     if pa.types.is_uint64(t):
         return "decimal(20,0)"
     if pa.types.is_timestamp(t):
+        if ns_as_long and t.unit == "ns":
+            return "long"
         return "timestamp" if t.tz is not None else "timestamp_ntz"
     if pa.types.is_decimal(t):
         return f"decimal({t.precision},{t.scale})"
     if pa.types.is_list(t) or pa.types.is_large_list(t):
-        return {"type": "array", "elementType": _type_json(t.value_type),
+        return {"type": "array",
+                "elementType": _type_json(t.value_type, ns_as_long),
                 "containsNull": True}
     if pa.types.is_struct(t):
         return {"type": "struct",
-                "fields": [{"name": f.name, "type": _type_json(f.type),
+                "fields": [{"name": f.name,
+                            "type": _type_json(f.type, ns_as_long),
                             "nullable": True, "metadata": {}} for f in t]}
     if pa.types.is_map(t):
-        return {"type": "map", "keyType": _type_json(t.key_type),
-                "valueType": _type_json(t.item_type), "valueContainsNull": True}
+        return {"type": "map", "keyType": _type_json(t.key_type, ns_as_long),
+                "valueType": _type_json(t.item_type, ns_as_long),
+                "valueContainsNull": True}
     if pa.types.is_dictionary(t):
-        return _type_json(t.value_type)
+        return _type_json(t.value_type, ns_as_long)
     raise TypeError(f"unsupported arrow type {t}")
 
 
-def _schemas_parallel(files: list[str], read_one) -> list[pa.Schema]:
+def _schemas_parallel(files: list[str], read_one) -> list:
     if len(files) == 1:
         return [read_one(files[0])]
     with ThreadPoolExecutor(max_workers=min(32, len(files))) as ex:
@@ -94,28 +95,54 @@ def _schemas_parallel(files: list[str], read_one) -> list[pa.Schema]:
 def _read_harmonized(
     spark: SparkSession,
     files: list[str],
-    schemas: list[pa.Schema],
-    read_group,
+    schemas: list[T.StructType],
 ) -> DataFrame:
+    """One parquet read per group of files with the same footer schema,
+    each with that schema supplied; several groups are aligned to their
+    supertype schema and unioned."""
     groups: dict[tuple, list[str]] = {}
     spark_schemas: dict[tuple, T.StructType] = {}
-    for f, s in zip(files, schemas):
-        sp = _arrow_to_spark_schema(s)
+    for f, sp in zip(files, schemas):
         key = tuple((fld.name, fld.dataType.simpleString()) for fld in sp.fields)
         groups.setdefault(key, []).append(f)
         spark_schemas[key] = sp
-    if len(groups) == 1:
-        ((key, grp),) = groups.items()
-        return read_group(grp, spark_schemas[key])
+    parts = [spark.read.schema(spark_schemas[key]).parquet(*grp)
+             for key, grp in groups.items()]
+    if len(parts) == 1:
+        return parts[0]
     target = super_schema(list(spark_schemas.values()))
-    parts = [
-        align_to_schema(read_group(grp, spark_schemas[key]), target)
-        for key, grp in groups.items()
-    ]
-    out = parts[0]
+    out = align_to_schema(parts[0], target)
     for p in parts[1:]:
-        out = out.unionByName(p)
+        out = out.unionByName(align_to_schema(p, target))
     return out
+
+
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _parquet_spark_schema(spark: SparkSession, path: str,
+                          ns_as_long: bool) -> T.StructType:
+    """The schema Spark would infer from one parquet footer, without a
+    Spark job. A Spark writer stores its own schema in the footer, and
+    Spark's inference returns exactly that; other files convert their
+    Arrow schema. INT96 columns (legacy Hive/Impala timestamps), which
+    pyarrow reports as zone-less ns, are Spark's zoned timestamp; a
+    nested INT96 leaf from a non-Spark writer is left to Spark's
+    inference. ns timestamps follow the session's ``nanosAsLong``: long
+    when it is on; otherwise a timestamp the scan refuses, as inference
+    refuses the file."""
+    md = pq.read_metadata(path)
+    stored = (md.metadata or {}).get(_SPARK_ROW_METADATA)
+    if stored:
+        return T.StructType.fromJson(json.loads(stored))
+    int96 = {md.schema.column(i).path for i in range(md.num_columns)
+             if md.schema.column(i).physical_type == "INT96"}
+    if any("." in c for c in int96):
+        return spark.read.parquet(path).schema
+    schema = md.schema.to_arrow_schema()
+    return _arrow_to_spark_schema(pa.schema([
+        f.with_type(pa.timestamp("us", tz="UTC")) if f.name in int96 else f
+        for f in schema]), ns_as_long)
 
 
 # ---------------------------------------------------------------- parquet
@@ -125,11 +152,8 @@ def read_parquet(
     spark: SparkSession,
     paths: str | list[str],
     datasets_root: str | None = None,
-    merge: str = "supertype",
 ) -> DataFrame:
-    """``read_parquet(globs)`` (table-functions.md:25-40). ``merge='fast'``
-    skips the footer scan (delegates to Spark's parallel file index +
-    mergeSchema) for homogeneous lakes at scale."""
+    """``read_parquet(globs)`` (table-functions.md:25-40)."""
     from beacon_spark.schema import union_all_by_name
     from beacon_spark.sources.paths import _is_hive_partitioned
 
@@ -144,16 +168,11 @@ def read_parquet(
         spark.read.option("mergeSchema", "true").parquet(h) for h in hive
     ]
     if files:
-        if merge == "fast":
-            parts.append(spark.read.option("mergeSchema", "true").parquet(*files))
-        else:
-            schemas = _schemas_parallel(files, pq.read_schema)
-            parts.append(
-                _read_harmonized(
-                    spark, files, schemas,
-                    lambda grp, schema: spark.read.parquet(*grp),
-                )
-            )
+        ns_as_long = spark.conf.get(
+            "spark.sql.legacy.parquet.nanosAsLong", "false") == "true"
+        schemas = _schemas_parallel(
+            files, lambda f: _parquet_spark_schema(spark, f, ns_as_long))
+        parts.append(_read_harmonized(spark, files, schemas))
     if not parts:
         raise FileNotFoundError(f"no parquet inputs matched {paths!r}")
     return parts[0] if len(parts) == 1 else union_all_by_name(*parts)

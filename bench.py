@@ -161,64 +161,6 @@ def _calibration(spark) -> dict:
             "runs": 2}
 
 
-def _cpu_scaling(spark, sf_dir: str, cpus: int) -> dict:
-    """CPU-bound scaling probes (r14 verdict item 2): every sf0.1 bench
-    shape finishes in 0.2-1.1s dominated by fixed per-query costs, so
-    the driver's low-core rerun reads ~1.0x per query and its
-    `suspect_cpus_ignored` heuristic fires even though bench.py honors
-    $SPARK_GRAFT_CPUS. These shapes hold the WORK fixed and large
-    enough to be compute-bound, so wall time ~ work/cores: comparing
-    this section across the driver's 32-core and 8-core artifacts
-    demonstrates the env contract directly (8-core reads >=2x slower).
-
-    Deliberately NOT part of `queries`/`value`: the headline total is
-    compared round-over-round and must keep measuring the same work.
-    Timed with the noop sink (guide §1.4) so only compute is measured.
-    """
-    from pyspark.sql import functions as F
-
-    from beacon_spark.pipeline.text import quality_metrics
-
-    shapes: dict[str, float] = {}
-
-    # 1) pure-JVM codegen hash chain: fixed 192M md5 rounds (6M rows x
-    #    32-deep nesting amortizes row overhead) spread over 4*cpus
-    #    tasks — embarrassingly parallel, zero shuffle. Sized so the
-    #    work is genuinely compute-bound (~60 CPU-seconds): smaller
-    #    probes measured overhead-bound (6M single-md5: 0.65s at 32
-    #    cores vs 0.80s at 8 — useless as a signal; 48M: 1.7 vs 2.4)
-    spark.sparkContext.setJobDescription("cpu_scaling: md5_chain")
-    col = F.col("id").cast("string")
-    for _ in range(32):
-        col = F.md5(col)
-    t0 = time.perf_counter()
-    (spark.range(0, 6_000_000, 1, max(4 * cpus, 32))
-     .select(col.alias("h"))
-     .write.format("noop").mode("overwrite").save())
-    shapes["md5_chain_192m"] = round(time.perf_counter() - t0, 3)
-
-    # 2) a real operator at fixed 80x work: quality_metrics (pure map
-    #    stage, regex+translate per doc) over the sf docs replicated 80x.
-    #    The narrow base spreads FIRST (the one-file scan is serial —
-    #    exploding before the exchange put the 80x replication behind an
-    #    Amdahl bottleneck and compressed the 8-vs-32-core ratio to
-    #    1.75x); the explode runs post-shuffle in every task.
-    docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .select("doc_id", "text")
-            .repartition(max(4 * cpus, 32), F.col("doc_id")))
-    big = (docs.withColumn(
-               "__r", F.explode(F.array(*[F.lit(i) for i in range(80)])))
-           .select((F.col("doc_id") * 80 + F.col("__r")).alias("doc_id"),
-                   "text"))
-    spark.sparkContext.setJobDescription("cpu_scaling: text_quality_80x")
-    t0 = time.perf_counter()
-    (quality_metrics(big).write.format("noop").mode("overwrite").save())
-    shapes["text_quality_80x"] = round(time.perf_counter() - t0, 3)
-    spark.sparkContext.setJobDescription(None)
-    return {"cpus": cpus, "shapes": shapes,
-            "total": round(sum(shapes.values()), 3)}
-
-
 def _run_side(label: str, side_dir: str, env_extra: dict) -> dict | None:
     """Run bench.py in `side_dir` as a fresh subprocess restricted to
     AB_QUERIES; return its parsed JSON line (None on failure)."""
@@ -474,14 +416,6 @@ def main() -> None:
     if sf1 is not None:
         out["sf1"] = sf1
 
-    # ---- CPU-bound scaling demonstration (skippable) ------------------
-    # (r14 verdict item 2; additions-only — not folded into `value`)
-    if not only and os.environ.get("SPARK_GRAFT_SCALING", "1") != "0":
-        try:
-            out["cpu_scaling"] = _cpu_scaling(spark, sf_dir, cpus)
-            print(f"  cpu_scaling: {out['cpu_scaling']}", file=sys.stderr)
-        except Exception as e:  # demonstration must never sink the artifact
-            out["cpu_scaling"] = {"skipped": f"{type(e).__name__}: {e}"}
     spark.stop()
 
     # ---- interleaved A/B vs the pinned prior round (drift-proof) -----

@@ -65,6 +65,28 @@ def test_attach_detach(spark, tmp_path):
         mine.sql("SELECT * FROM oth_remote_t").collect()
 
 
+def test_attached_external_table_keeps_its_options(spark, tmp_path):
+    """An attached root's external tables resolve with their own OPTIONS:
+    a ';'-delimited csv table reads as columns a, b through ATTACH, just
+    as it does in its own root."""
+    from beacon_spark.engine import Engine
+
+    other_root = tmp_path / "other"
+    other_root.mkdir()
+    (other_root / "semi.csv").write_text("a;b\n1;x\n2;y\n")
+    other = Engine(spark, datasets_root=str(other_root))
+    other.sql("CREATE EXTERNAL TABLE semi STORED AS CSV "
+              "LOCATION 'semi.csv' OPTIONS (delimiter ';')")
+    assert other.sql("SELECT * FROM semi").columns == ["a", "b"]
+
+    (tmp_path / "mine").mkdir()
+    mine = Engine(spark, datasets_root=str(tmp_path / "mine"))
+    mine.sql(f"ATTACH '{other_root}' AS oth")
+    df = mine.sql("SELECT * FROM oth_semi")
+    assert df.columns == ["a", "b"]
+    assert sorted((r.a, r.b) for r in df.collect()) == [(1, "x"), (2, "y")]
+
+
 def test_explain_analyze(spark, sf_dir):
     from beacon_spark.engine import Engine
 

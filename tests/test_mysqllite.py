@@ -299,3 +299,42 @@ def test_zero_dates_read_as_null():
     assert _parse_value(b"0000-00-00", 0x0A, 0x21) is None
     assert _parse_value(b"0000-00-00 00:00:00", 0x0C, 0x21) is None
     assert str(_parse_value(b"2024-05-06", 0x0A, 0x21)) == "2024-05-06"
+
+
+def _my_opts(port: int) -> dict:
+    return {"host": "127.0.0.1", "port": str(port), "user": USER,
+            "password": PASSWORD, "database": DB}
+
+
+def test_dsl_mysql_read_is_the_live_scan(spark, tmp_path, my):
+    """A DSL ``{"mysql": …}`` read plans the live ``beacon_sqldb`` scan:
+    the predicate runs in the database (the mock applies the pushed
+    WHERE; the local plan has no Filter left to apply it)."""
+    import re as _re
+
+    eng = Engine(spark, str(tmp_path))
+    out = eng.query({"select": ["name"],
+                     "from": {"mysql": {"paths": ["obs"],
+                                        "options": _my_opts(my.port)}},
+                     "filter": {"column": "v", "gt": 0}})
+    assert [r.name for r in out.collect()] == ["alpha"]
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "beacon_sqldb" in plan, plan
+    assert not _re.search(r"\bFilter \(", plan), plan
+
+
+def test_mysql_query_location_reads(spark, tmp_path, my):
+    """A WITH-headed location reads as a derived table, through the DSL
+    and through CREATE EXTERNAL TABLE."""
+    eng = Engine(spark, str(tmp_path))
+    loc = "WITH q AS (SELECT * FROM obs) SELECT * FROM q"
+    out = eng.query({"select": ["name"],
+                     "from": {"mysql": {"paths": [loc],
+                                        "options": _my_opts(my.port)}},
+                     "filter": {"column": "v", "gt": 0}})
+    assert [r.name for r in out.collect()] == ["alpha"]
+    eng.sql(
+        f"CREATE EXTERNAL TABLE wq STORED AS MYSQL LOCATION '{loc}' "
+        f"OPTIONS ('host' '127.0.0.1', 'port' '{my.port}', "
+        f"'user' '{USER}', 'password' '{PASSWORD}', 'database' '{DB}')")
+    assert eng.sql("SELECT count(*) AS n FROM wq").collect()[0].n == 3

@@ -416,20 +416,88 @@ def _nd_fixture(kind: str, root: str) -> tuple[str, str]:
     return "netcdf", "ragged.nc"
 
 
+def _table_fixture(spark, kind: str, root: str) -> tuple[str, str, dict]:
+    """Write one non-nd fixture of ``kind`` under ``root`` -> (format,
+    the SQL call's argument list, the DSL from-spec body). Each call
+    carries the options its format takes: csv a delimiter and a schema
+    sample size, delta a version, iceberg a snapshot."""
+    import pyarrow as pa
+    import pyarrow.ipc as pa_ipc
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    obs = spark.range(6).select(
+        F.col("id"), (F.col("id") * 1.5 - 5).alias("lon"),
+        (F.col("id") * 2.0 - 9).alias("lat"))
+    if kind == "parquet":
+        pq.write_table(pa.table({"u8": pa.array([1, 200], pa.uint8()),
+                                 "l": pa.array([[1], None])}),
+                       os.path.join(root, "a.parquet"))
+        pq.write_table(pa.table({"u8": pa.array([7], pa.int64())}),
+                       os.path.join(root, "b.parquet"))
+        return "parquet", "'*.parquet'", {"paths": ["*.parquet"]}
+    if kind == "csv":
+        with open(os.path.join(root, "semi.csv"), "w") as f:
+            f.write("k;v\n1;10\n2;20\n3;x\n")
+        return "csv", "'semi.csv', ';', 2", {
+            "paths": ["semi.csv"], "delimiter": ";", "infer_records": 2}
+    if kind == "arrow":
+        t = pa.table({"k": pa.array([1, 2], pa.int32()),
+                      "v": pa.array([0.5, None])})
+        with pa_ipc.new_file(os.path.join(root, "t.arrow"), t.schema) as w:
+            w.write_table(t)
+        return "arrow", "'t.arrow'", {"paths": ["t.arrow"]}
+    if kind in ("odv", "odv_ascii"):
+        from beacon_spark.sources.odv import write_odv
+
+        write_odv(obs, os.path.join(root, "obs.txt"),
+                  longitude_column="lon", latitude_column="lat")
+        return kind, "'obs.txt'", {"paths": ["obs.txt"]}
+    if kind == "geoparquet":
+        from beacon_spark.outputs import write_geoparquet
+
+        write_geoparquet(obs, os.path.join(root, "pts.parquet"), "lon", "lat")
+        return "geoparquet", "'pts.parquet'", {"paths": ["pts.parquet"]}
+    if kind == "delta":
+        from beacon_spark.sources.delta import write_delta
+
+        loc = os.path.join(root, "dt")
+        write_delta(obs, loc, mode="overwrite")
+        write_delta(obs, loc, mode="append")
+        return "delta", "'dt', 0", {"paths": ["dt"], "version_as_of": 0}
+    assert kind == "iceberg"
+    from beacon_spark.sources.iceberg import write_iceberg
+
+    loc = os.path.join(root, "ice")
+    first = write_iceberg(obs, loc, mode="overwrite")
+    write_iceberg(obs, loc, mode="append")
+    return "iceberg", f"'ice', {first}", {"paths": ["ice"],
+                                          "snapshot_id": first}
+
+
 def _rows(df) -> list:
     return sorted((tuple(r) for r in df.collect()), key=repr)
 
 
+_TABLE_KINDS = ["parquet", "csv", "arrow", "odv", "odv_ascii", "geoparquet",
+                "delta", "iceberg"]
+
+
 @pytest.mark.parametrize("kind", ["netcdf3", "netcdf4", "zarr2", "zarr3",
-                                  "tiff", "atlas", "ragged"])
+                                  "tiff", "atlas", "ragged"] + _TABLE_KINDS)
 def test_sql_and_dsl_read_the_same_table(nd_engine, tmp_path, kind):
     """``SELECT * FROM read_<fmt>(…)`` and the DSL ``from`` block must
-    agree on column names, Spark types and rows for every nd fixture
-    kind — the two surfaces share one schema source (read_nd's 1-row
-    sample, widened for Spark) and one scan."""
-    fmt, rel = _nd_fixture(kind, str(tmp_path))
-    sql = nd_engine.sql(f"SELECT * FROM read_{fmt}('{rel}')")
-    dsl = nd_engine.query({"select": ["*"], "from": {fmt: {"paths": [rel]}}})
+    agree on column names, Spark types and rows for every format and
+    the options each takes — both surfaces build their reader through
+    ``Engine.resolve_from`` (nd formats: one schema source, read_nd's
+    1-row sample widened for Spark, and one scan)."""
+    if kind in _TABLE_KINDS:
+        fmt, args, cfg = _table_fixture(nd_engine.spark, kind, str(tmp_path))
+    else:
+        fmt, rel = _nd_fixture(kind, str(tmp_path))
+        args, cfg = f"'{rel}'", {"paths": [rel]}
+    sql = nd_engine.sql(f"SELECT * FROM read_{fmt}({args})")
+    dsl = nd_engine.query({"select": ["*"], "from": {fmt: cfg}})
     assert [(f.name, f.dataType) for f in sql.schema] == [
         (f.name, f.dataType) for f in dsl.schema]
     assert _rows(sql) == _rows(dsl)
@@ -443,6 +511,16 @@ def test_sql_and_dsl_read_the_same_table(nd_engine, tmp_path, kind):
         assert (types["u8"], types["u64"]) == ("smallint", "decimal(20,0)")
     if kind == "tiff":
         assert types["band.0"] == "smallint" and "geo.lat" in types
+    if kind == "parquet":
+        assert (types["u8"], types["l"]) == ("bigint", "array<bigint>")
+    if kind == "csv":
+        # the 2-row sample types v as int; the third row degrades to NULL
+        assert types == {"k": "int", "v": "int"}
+        assert sorted(r.k for r in sql.where("v IS NULL").collect()) == [3]
+    if kind == "geoparquet":
+        assert types["geometry"] == "string"
+    if kind in ("delta", "iceberg"):
+        assert sql.count() == 6  # the first version, not both appends
 
 
 def test_concurrent_sql_windows_never_share_a_view(nd_engine, tmp_path,
@@ -463,6 +541,15 @@ def test_concurrent_sql_windows_never_share_a_view(nd_engine, tmp_path,
     write_zarr_store(store, {"t": (("t",), np.arange(200.0)),
                              "v": (("t",), np.arange(200.0) * 2)},
                      version=2, codec=None, chunk_shapes={"v": (10,)})
+
+    def read_views() -> set:
+        return {t.name for t in nd_engine.spark.catalog.listTables()
+                if t.name.startswith("__beacon_read")}
+
+    # the session is shared with other tests, some of which keep read
+    # views on purpose (CREATE TEMP VIEW): count only what this test's
+    # statements leave
+    before = read_views()
     barrier = threading.Barrier(2, timeout=120)
     register = Engine._register_nd_view
 
@@ -496,9 +583,22 @@ def test_concurrent_sql_windows_never_share_a_view(nd_engine, tmp_path,
         th.join(timeout=600)
         assert not th.is_alive()
     assert not errors
+    # tabular read_* views follow the same per-statement lifetime, also
+    # when the statement fails after its views were bound
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    (tmp_path / "t.csv").write_text("a,b\n1,2\n")
+    pq.write_table(pa.table({"x": [1, 2, 3]}), str(tmp_path / "t.parquet"))
+    assert nd_engine.sql(
+        "SELECT count(*) AS n FROM read_csv('t.csv') "
+        "JOIN read_parquet('t.parquet') ON true").collect()[0].n == 3
+    with pytest.raises(Exception):
+        nd_engine.sql("SELECT nope FROM read_csv('t.csv')")
     left = [t.name for t in nd_engine.spark.catalog.listTables()
             if t.name.startswith("__beacon_nd")]
     assert left == []
+    assert read_views() - before == set()
 
 
 def test_pushdown_fallback_is_reported_and_exact(nd_engine, zarr_store,

@@ -363,3 +363,66 @@ def test_pg_query_stream_is_lazy_and_reusable(pg):
     assert [r[1] for r in rows2] == ["alpha"]
     c.close()
     assert len(remaining) >= 1
+
+
+def _pg_opts(port: int, **extra) -> dict:
+    return {"host": "127.0.0.1", "port": str(port), "user": USER,
+            "password": PASSWORD, "database": DB, **extra}
+
+
+def test_dsl_postgres_read_is_the_live_scan(spark, tmp_path, pg):
+    """A DSL ``{"postgres": …}`` read plans the same live ``beacon_sqldb``
+    scan as a catalog table: the predicate executes in the database (it
+    is in a recorded remote statement and the local plan has no Filter),
+    and the schema probe (LIMIT 0) runs once per from-spec."""
+    import re as _re
+
+    eng = Engine(spark, str(tmp_path))
+    body = {"select": ["name"],
+            "from": {"postgres": {"paths": ["obs"],
+                                  "options": _pg_opts(pg.port)}},
+            "filter": {"column": "v", "gt": 0}}
+    out = eng.query(body)
+    assert [r.name for r in out.collect()] == ["alpha"]
+    assert [q for q in pg.queries if "WHERE" in q and '"v" > 0' in q]
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "beacon_sqldb" in plan, plan
+    assert not _re.search(r"\bFilter \(", plan), plan
+    assert [r.name for r in eng.query(body).collect()] == ["alpha"]
+    assert sum("LIMIT 0" in q for q in pg.queries) == 1, pg.queries
+
+
+def test_postgres_query_location_reads(spark, tmp_path, pg):
+    """A location that is a query (here a WITH head) reads as a derived
+    table, through the DSL and through CREATE EXTERNAL TABLE."""
+    eng = Engine(spark, str(tmp_path))
+    loc = "WITH q AS (SELECT * FROM obs) SELECT * FROM q"
+    out = eng.query({"select": ["name"],
+                     "from": {"postgres": {"paths": [loc],
+                                           "options": _pg_opts(pg.port)}},
+                     "filter": {"column": "v", "gt": 0}})
+    assert [r.name for r in out.collect()] == ["alpha"]
+    eng.sql(
+        f"CREATE EXTERNAL TABLE wq STORED AS POSTGRES LOCATION '{loc}' "
+        f"OPTIONS ('host' '127.0.0.1', 'port' '{pg.port}', "
+        f"'user' '{USER}', 'password' '{PASSWORD}', 'database' '{DB}')")
+    assert eng.sql("SELECT count(*) AS n FROM wq").collect()[0].n == 3
+
+
+def test_postgres_sslmode_require_fails_before_connecting(spark, tmp_path):
+    """sslmode=require is refused before any connection: nothing listens
+    on the port, so a connection attempt would raise a connection error
+    instead of NotImplementedError."""
+    probe = socket.socket()
+    probe.bind(("127.0.0.1", 0))
+    port = probe.getsockname()[1]
+    probe.close()
+    eng = Engine(spark, str(tmp_path))
+    with pytest.raises(NotImplementedError, match="sslmode"):
+        eng.sql(
+            f"CREATE EXTERNAL TABLE s STORED AS POSTGRES LOCATION 'obs' "
+            f"OPTIONS ('host' '127.0.0.1', 'port' '{port}', "
+            f"'user' '{USER}', 'sslmode' 'require')")
+    with pytest.raises(NotImplementedError, match="sslmode"):
+        eng.query({"select": ["*"], "from": {"postgres": {
+            "paths": ["obs"], "options": _pg_opts(port, sslmode="require")}}})

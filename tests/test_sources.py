@@ -221,3 +221,118 @@ def test_read_csv_default_samples_128k_like_reference(spark, tmp_path):
     full = read_csv(spark, str(p), infer_records=-1)
     assert dict(full.dtypes)["v"] == "string"  # unbounded pass widens
     assert full.where("k = 129000").collect()[0].v == "not-a-number"
+
+
+def _footer_fixtures(spark, root: str) -> dict[str, str]:
+    """One parquet file per typing case -> {case: path}."""
+    import datetime as dt
+    import decimal
+
+    out = {}
+
+    def put(case, table, **kw):
+        out[case] = os.path.join(root, f"{case}.parquet")
+        pq.write_table(table, out[case], **kw)
+
+    put("unsigned", pa.table({
+        "u8": pa.array([0, 255], pa.uint8()),
+        "u16": pa.array([0, 65535], pa.uint16()),
+        "u32": pa.array([0, 2**32 - 1], pa.uint32()),
+        "u64": pa.array([0, 2**64 - 1], pa.uint64())}))
+    put("nested", pa.table({
+        "d": pa.array([decimal.Decimal("1.25"), None], pa.decimal128(9, 2)),
+        "wide": pa.array([decimal.Decimal("12345678901234567890.5"), None],
+                         pa.decimal128(38, 1)),
+        "l": pa.array([[1, 2], None], pa.list_(pa.int64())),
+        "s": pa.array([{"a": 1, "b": "x"}, None],
+                      pa.struct([("a", pa.int32()), ("b", pa.string())])),
+        "ls": pa.array([[{"k": 1.5}], []],
+                       pa.list_(pa.struct([("k", pa.float64())])))}))
+    ts = [dt.datetime(2024, 1, 2, 3, 4, 5, 6), None]
+    put("timestamps", pa.table({
+        "naive": pa.array(ts, pa.timestamp("us")),
+        "zoned": pa.array(ts, pa.timestamp("us", tz="Europe/Paris")),
+        "ms": pa.array(ts, pa.timestamp("ms"))}))
+    # ns timestamps: long under the session's nanosAsLong
+    put("ns", pa.table({
+        "t": pa.array(ts, pa.timestamp("ns")),
+        "s": pa.array([{"u": ts[0]}, None],
+                      pa.struct([("u", pa.timestamp("ns"))]))}))
+    put("int96", pa.table({"t": pa.array(ts, pa.timestamp("us"))}),
+        use_deprecated_int96_timestamps=True)
+    put("int96_nested", pa.table({"s": pa.array(
+        [{"t": ts[0]}, None], pa.struct([("t", pa.timestamp("us"))]))}),
+        use_deprecated_int96_timestamps=True)
+    # Spark's own writer: INT96 timestamps and its schema in the footer
+    spark_dir = os.path.join(root, "spark_written")
+    spark.sql("SELECT timestamp'2024-01-02 03:04:05' AS ts, "
+              "named_struct('t', timestamp'2024-01-02 03:04:05') AS s, "
+              "CAST(7 AS TINYINT) AS b, 1.5BD AS d") \
+        .coalesce(1).write.parquet(spark_dir)
+    out["spark_written"] = next(
+        os.path.join(spark_dir, f) for f in sorted(os.listdir(spark_dir))
+        if f.endswith(".parquet"))
+    return out
+
+
+def test_supplied_parquet_schema_matches_inference(spark, tmp_path):
+    """read_parquet hands Spark the schema it built from the footers
+    instead of letting Spark infer it again. For every typing case the
+    supplied schema must equal Spark's own inference and read the same
+    rows, one file at a time and over a collection of mixed schemas."""
+    from beacon_spark.schema import align_to_schema, super_schema
+    from beacon_spark.sources import tabular
+
+    files = _footer_fixtures(spark, str(tmp_path))
+    for case, path in files.items():
+        supplied = tabular.read_parquet(spark, [path])
+        inferred = spark.read.parquet(path)
+        assert supplied.schema == inferred.schema, case
+        assert sorted(map(repr, supplied.collect())) == sorted(
+            map(repr, inferred.collect())), case
+    assert dict(tabular.read_parquet(spark, [files["unsigned"]]).dtypes) == {
+        "u8": "smallint", "u16": "int", "u32": "bigint",
+        "u64": "decimal(20,0)"}
+    assert dict(tabular.read_parquet(spark, [files["timestamps"]]).dtypes)[
+        "zoned"] == "timestamp"
+    assert dict(tabular.read_parquet(spark, [files["ns"]]).dtypes) == {
+        "t": "bigint", "s": "struct<u:bigint>"}
+
+    mixed = [files["unsigned"], files["timestamps"], files["int96"]]
+    pq.write_table(pa.table({"u8": pa.array([7], pa.int64())}),
+                   os.path.join(str(tmp_path), "widen.parquet"))
+    mixed.append(os.path.join(str(tmp_path), "widen.parquet"))
+    got = tabular.read_parquet(spark, mixed)
+    parts = [spark.read.parquet(p) for p in mixed]
+    target = super_schema([p.schema for p in parts])
+    want = align_to_schema(parts[0], target)
+    for p in parts[1:]:
+        want = want.unionByName(align_to_schema(p, target))
+    assert got.schema == want.schema
+    assert dict(got.dtypes)["u8"] == "bigint"
+    assert sorted(map(repr, got.collect())) == sorted(
+        map(repr, want.collect()))
+
+
+def test_ns_timestamp_parquet_fails_loudly_without_nanos_as_long(
+        spark, tmp_path):
+    """Without ``nanosAsLong`` Spark cannot read nanosecond parquet
+    timestamps. With a supplied schema the failure moves from planning to
+    execution, but a read must still raise rather than return values.
+    (With it on, the session default, the parity test above pins long.)"""
+    import datetime as dt
+
+    from beacon_spark.sources import tabular
+
+    path = os.path.join(str(tmp_path), "ns.parquet")
+    pq.write_table(pa.table({"t": pa.array(
+        [dt.datetime(2024, 1, 2, 3, 4, 5)], pa.timestamp("ns"))}), path)
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        with pytest.raises(Exception,
+                           match="PARQUET_TYPE_ILLEGAL|SchemaColumnConvert"):
+            tabular.read_parquet(spark, [path]).collect()
+    finally:
+        spark.conf.set(key, before)
