@@ -339,7 +339,7 @@ def authorize(engine, statement: str, user: str | None) -> None:
     for call in _READ_FN_RE.finditer(statement):
         if _in_literal(spans, call.start()):
             continue
-        arglist = call.group(2) if call.group(2) is not None else call.group(3)
+        arglist = call.group(3) if call.group(3) is not None else call.group(4)
         for g in arglist.split(","):
             _check_path(engine, a, roles, g.strip()[1:-1])
     # Spark's direct-file scans (parquet.`/path`) are path reads with no

@@ -16,6 +16,11 @@ accepted). This module is the Spark analog: the same API over
     con.read_parquet("obs/*.parquet").df()        # pandas
     con.execute("SELECT * FROM t WHERE x > ?", [3]).fetchall()
 
+``con.read_<fmt>(paths, **options)`` reads through the same RBAC gate
+and ``Engine.resolve_from`` as a DSL query; the ``read_<fmt>_schema``
+twins are SQL table functions
+(``con.sql("SELECT * FROM read_parquet_schema('obs/*.parquet')")``).
+
 ``connect(":memory:")`` backs the catalog with a throwaway directory
 (dropped at ``close()``) — the embedded-scratch mode of the reference's
 in-memory database file.
@@ -370,12 +375,11 @@ class Relation:
         return self._df.count()
 
     def explain(self, analyze: bool = False) -> str:
-        qe = self._df._jdf.queryExecution()
         if analyze:
-            # run, then render with per-node stats (EXPLAIN ANALYZE role)
-            self._df.count()
-            return qe.stringWithStats()
-        return qe.toString()
+            from beacon_spark.engine import explain_analyze
+
+            return explain_analyze(self._df)
+        return self._df._jdf.queryExecution().toString()
 
     def show(self, limit: int = 10) -> None:
         self._df.show(limit)
@@ -411,13 +415,6 @@ class Relation:
 
 
 # --------------------------------------------------------- Connection
-
-_READ_FNS = {
-    "read_parquet", "read_csv", "read_arrow", "read_netcdf", "read_hdf5",
-    "read_zarr", "read_atlas", "read_tiff", "read_odv_ascii", "read_delta",
-    "read_iceberg", "read_geoparquet",
-}
-
 
 class Connection:
     """PEP 249 connection over an embedded Engine (the reference's
@@ -513,20 +510,28 @@ class Connection:
 
     # ---------------------------------------------------------- readers
 
-    def read(self, function: str, *args, **kwargs) -> Relation:
-        """Resolve a ``read_*`` table function by name (the reference
-        resolves these from the catalog via ``__getattr__``)."""
-        fn = function if function.startswith("read_") else f"read_{function}"
-        if fn == "read_odv_ascii":
-            fn = "read_odv"
-        elif fn == "read_hdf5":
-            fn = "read_netcdf"  # engine.py maps hdf5 onto the nd reader
-        target = getattr(self.engine, fn, None)
-        if target is None:
+    def read(self, function: str, paths, *, columns=None,
+             **options) -> Relation:
+        """Read ``paths`` as a ``read_*`` table function's format
+        (``"parquet"`` or ``"read_parquet"``): the from-spec
+        ``{fmt: {"paths": paths, **options}}`` passes the same RBAC gate
+        as a DSL query for this connection's user, then
+        ``Engine.resolve_from``. Options go by keyword under the spec's
+        keys (``delimiter``, ``infer_records``, ``dimensions``,
+        ``version_as_of``, ``timestamp_as_of``, ``snapshot_id``);
+        ``columns`` projects."""
+        from beacon_spark import auth as _auth
+        from beacon_spark.engine import READ_FORMATS
+
+        self._check_open()
+        fmt = function.removeprefix("read_")
+        if fmt not in READ_FORMATS:
             raise NotSupportedError(f"unknown table function {function!r}")
-        columns = kwargs.pop("columns", None)
+        spec = {fmt: {"paths": [paths] if isinstance(paths, str)
+                      else list(paths), **options}}
         try:
-            df = target(*args, **kwargs)
+            _auth.authorize_dsl(self.engine, {"from": spec}, self._user)
+            df = self.engine.resolve_from(spec, projection=columns)
         except Exception as e:
             raise _wrap_error(e) from e
         if columns:
@@ -536,7 +541,7 @@ class Connection:
     def __getattr__(self, name: str):
         # read_* passthroughs (read_parquet, read_zarr, …) resolve
         # dynamically, like the reference's catalog-backed __getattr__
-        if name in _READ_FNS:
+        if name.startswith("read_") and name in self.table_functions():
             return lambda *a, **kw: self.read(name, *a, **kw)
         raise AttributeError(name)
 
@@ -545,7 +550,9 @@ class Connection:
         return Relation(self, self.engine.list_datasets(), "list_datasets()")
 
     def table_functions(self) -> list[str]:
-        return sorted(_READ_FNS)
+        from beacon_spark.engine import READ_FORMATS
+
+        return sorted(f"read_{fmt}" for fmt in READ_FORMATS)
 
     def functions(self) -> Relation:
         return Relation(

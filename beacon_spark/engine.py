@@ -4,7 +4,7 @@
     engine = Engine(spark, datasets_root="/data")
     engine.sql("SELECT ... FROM read_parquet('obs/*.parquet')")
     engine.query({"select": [...], "filter": {...}, "from": ...})
-    engine.read_parquet("obs/*.parquet")
+    engine.resolve_from({"parquet": {"paths": ["obs/*.parquet"]}})
 
 Both the SQL and the JSON interfaces compile to the same DataFrame plans
 (the reference's unified statement pipeline, ``statement_plan/mod.rs:1-13``).
@@ -33,8 +33,13 @@ from beacon_spark.sources import paths as _paths
 from beacon_spark.sources import tabular
 from beacon_spark.sources.nd import read_nd
 
+#: every format a ``read_<fmt>(…)`` SQL table function (and its
+#: ``read_<fmt>_schema`` twin) names — the one list the SQL rewrite, the
+#: embedded client's readers and HTTP /api/table-functions are built from
+READ_FORMATS = ("parquet", "csv", "arrow", "netcdf", "hdf5", "zarr", "atlas",
+                "tiff", "odv", "odv_ascii", "delta", "iceberg", "geoparquet")
 _READ_FN_RE = re.compile(
-    r"\bread_(geoparquet|parquet|csv|arrow|netcdf|zarr|hdf5|odv_ascii|odv|delta|iceberg|tiff|atlas)\s*\("
+    r"\bread_(" + "|".join(READ_FORMATS) + r")(_schema)?\s*\("
     # bare 'a', 'b' argument lists AND the reference's bracketed form
     # read_parquet(['a', 'b']) (integration-tests/test_etl_pipeline.py);
     # a trailing option tail — quoted strings, bare ints, or a bracketed
@@ -626,6 +631,37 @@ def _jseq(seq) -> list:
     return [seq.apply(i) for i in range(seq.size())]
 
 
+def explain_analyze(df: DataFrame) -> str:
+    """EXPLAIN ANALYZE of ``df`` (runtime.rs:444-509): execute the
+    DataFrame's OWN physical plan, then render the final (post-AQE) plan
+    one node per line with the SQL metrics the run filled in, walking
+    into every query stage AQE ran. (Any other action — ``count()`` —
+    executes a different plan and leaves this one unexecuted:
+    ``isFinalPlan=false`` and no metric values.)"""
+    qe = df._jdf.queryExecution()
+    qe.toRdd().count()
+    lines: list[str] = []
+
+    def walk(node, depth: int) -> None:
+        metrics = sorted(f"{kv._1()}={kv._2().value()}"
+                         for kv in _jseq(node.metrics().toSeq()))
+        head = node.simpleString(25).splitlines()[0]
+        lines.append("  " * depth + head
+                     + (f"  [{', '.join(metrics)}]" if metrics else ""))
+        kind = node.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            kids = [node.executedPlan()]
+        elif kind.endswith("QueryStageExec"):
+            kids = [node.plan()]
+        else:
+            kids = _jseq(node.children())
+        for kid in kids:
+            walk(kid, depth + 1)
+
+    walk(qe.executedPlan(), 0)
+    return "\n".join(lines)
+
+
 def _with_dot_prefixes(names) -> list[str]:
     """Column names -> the nd variables that produce them: every dotted
     prefix joins the set ("temperature.units" needs variable
@@ -774,149 +810,17 @@ class Engine:
         return self._metrics
 
     def record_query_metrics(self, **kw) -> None:
-        """Best-effort transport hook: engines without a catalog (or with
-        a broken store) must never fail the query they are recording."""
+        """Best-effort transport hook: engines without a catalog record
+        nothing, and a broken store is reported at WARNING — it must
+        never fail the query it is recording."""
         if self.catalog is None:
             return
         try:
             self.metrics.record(**kw)
-        except Exception:
-            pass
-
-    # ------------------------------------------------------------ sources
-
-    def read_parquet(self, paths) -> DataFrame:
-        return tabular.read_parquet(self.spark, paths, self.datasets_root)
-
-    def read_csv(self, paths, delimiter: str | None = None,
-                 infer_records: int | None = None) -> DataFrame:
-        return tabular.read_csv(self.spark, paths, self.datasets_root,
-                                delimiter, infer_records)
-
-    def read_arrow(self, paths) -> DataFrame:
-        return tabular.read_arrow(self.spark, paths, self.datasets_root)
-
-    def read_odv(self, paths) -> DataFrame:
-        from beacon_spark.sources.odv import read_odv
-
-        return read_odv(self.spark, paths, self.datasets_root)
-
-    def read_netcdf(self, paths, dimensions=None, ranges=None,
-                    columns=None) -> DataFrame:
-        return read_nd(
-            self.spark, "netcdf", paths, self.datasets_root, dimensions,
-            ranges=ranges, columns=columns
-        )
-
-    def read_zarr(self, paths, dimensions=None, ranges=None,
-                  columns=None) -> DataFrame:
-        return read_nd(
-            self.spark, "zarr", paths, self.datasets_root, dimensions,
-            ranges=ranges, columns=columns
-        )
-
-    def read_geoparquet(self, paths, keep_wkb: bool = False) -> DataFrame:
-        from beacon_spark.sources.geoparquet import read_geoparquet
-
-        return read_geoparquet(self.spark, paths, self.datasets_root, keep_wkb)
-
-    def read_geoparquet_schema(self, paths) -> DataFrame:
-        from beacon_spark.sources.geoparquet import read_geoparquet_schema
-
-        return read_geoparquet_schema(self.spark, paths, self.datasets_root)
-
-    def read_delta(self, location, version_as_of: int | None = None,
-                   timestamp_as_of: str | None = None) -> DataFrame:
-        from beacon_spark.sources.delta import read_delta
-
-        return read_delta(self.spark, location, self.datasets_root,
-                          version_as_of, timestamp_as_of)
-
-    def read_iceberg(self, location, snapshot_id: int | None = None) -> DataFrame:
-        from beacon_spark.sources.iceberg import read_iceberg
-
-        return read_iceberg(self.spark, location, self.datasets_root, snapshot_id)
-
-    def read_iceberg_schema(self, location) -> DataFrame:
-        from beacon_spark.sources.iceberg import read_iceberg_schema
-
-        return read_iceberg_schema(self.spark, location, self.datasets_root)
-
-    def read_tiff(self, paths, dimensions=None, ranges=None,
-                  columns=None) -> DataFrame:
-        return read_nd(
-            self.spark, "tiff", paths, self.datasets_root, dimensions,
-            ranges=ranges, columns=columns
-        )
-
-    def read_tiff_schema(self, paths) -> DataFrame:
-        from beacon_spark.sources.tabular import _schema_df
-
-        return _schema_df(self.spark, self.read_tiff(paths).schema)
-
-    def read_atlas(self, paths, dimensions=None, ranges=None,
-                   columns=None) -> DataFrame:
-        """Atlas array stores (read_atlas table function,
-        beacon-arrow-atlas/): paths address ``atlas.json`` markers (exact
-        or glob). Each marker's datasets expand to per-dataset scan units
-        AFTER stats pruning — datasets whose column stats cannot match
-        the query's ranges are dropped before any array data is read
-        (the format's headline capability, pruning.rs)."""
-        from beacon_spark.sources import atlaslite
-        from beacon_spark.sources.atlaslite import DATASET_SEP, prune_datasets
-        from beacon_spark.sources.paths import resolve_globs
-
-        markers = resolve_globs(paths, self.datasets_root)
-        units: list[str] = []
-        for mk in markers:
-            for name in prune_datasets(mk, ranges):
-                units.append(f"{mk}{DATASET_SEP}{name}")
-        if not units:
-            # all datasets pruned: empty frame with the full-store schema
-            units = [
-                f"{mk}{DATASET_SEP}{n}"
-                for mk in markers
-                for n in atlaslite.list_datasets(mk)
-            ]
-            df = read_nd(self.spark, "atlas", units, None, dimensions,
-                         ranges=ranges, columns=columns)
-            return df.limit(0)
-        return read_nd(self.spark, "atlas", units, None, dimensions,
-                       ranges=ranges, columns=columns)
-
-    def read_atlas_schema(self, paths) -> DataFrame:
-        from beacon_spark.sources.tabular import _schema_df
-
-        return _schema_df(self.spark, self.read_atlas(paths).schema)
-
-    def read_parquet_schema(self, paths) -> DataFrame:
-        return tabular.read_parquet_schema(self.spark, paths, self.datasets_root)
-
-    def read_csv_schema(self, paths, delimiter=None) -> DataFrame:
-        return tabular.read_csv_schema(self.spark, paths, self.datasets_root, delimiter)
-
-    def read_arrow_schema(self, paths) -> DataFrame:
-        return tabular.read_arrow_schema(self.spark, paths, self.datasets_root)
-
-    def read_netcdf_schema(self, paths) -> DataFrame:
-        from beacon_spark.sources.tabular import _schema_df
-
-        return _schema_df(self.spark, self.read_netcdf(paths).schema)
-
-    def read_zarr_schema(self, paths) -> DataFrame:
-        from beacon_spark.sources.tabular import _schema_df
-
-        return _schema_df(self.spark, self.read_zarr(paths).schema)
-
-    def read_delta_schema(self, location) -> DataFrame:
-        from beacon_spark.sources.delta import read_delta_schema
-
-        return read_delta_schema(self.spark, location, self.datasets_root)
-
-    def read_odv_schema(self, paths) -> DataFrame:
-        from beacon_spark.sources.tabular import _schema_df
-
-        return _schema_df(self.spark, self.read_odv(paths).schema)
+        except Exception as exc:
+            _log.warning("query-metrics record failed for %s: %s: %s",
+                         kw.get("query_id"), type(exc).__name__, exc,
+                         exc_info=True)
 
     def table_names(self) -> list[str]:
         """All catalog-addressable table names (managed + external +
@@ -955,8 +859,9 @@ class Engine:
         """Spark SQL with the dialect extensions pre-compiled away.
 
         - ``SUMMARIZE <table|query>`` → one-pass profiling aggregate
-        - ``read_parquet('glob')`` etc. in FROM → per-statement temp views
-          over ``resolve_from``, dropped once the statement is analyzed
+        - ``read_parquet('glob')`` etc. (and their ``read_*_schema``
+          twins) in FROM → per-statement temp views over
+          ``resolve_from``, dropped once the statement is analyzed
         - ``try_arrow_cast(e, 'Int32')`` → ``try_cast`` with Spark type names
         - ``params``: positional values bound to ``$1..$n`` placeholders
           (runtime.rs:107-116) or a dict for ``:name`` markers
@@ -983,15 +888,12 @@ class Engine:
 
         m = _EXPLAIN_ANALYZE_RE.match(statement)
         if m:
-            # EXPLAIN ANALYZE <q> (runtime.rs:444-509): execute fully, then
-            # surface the executed plan with its runtime metrics. params
-            # ride through — the reference binds placeholders before the
-            # analyze wrapper, so `EXPLAIN ANALYZE … WHERE x = $1` works
+            # EXPLAIN ANALYZE <q>: params ride through — the reference
+            # binds placeholders before the analyze wrapper, so
+            # `EXPLAIN ANALYZE … WHERE x = $1` works
             inner = self.sql(m.group(1), params=params)
-            inner.count()
-            plan = inner._jdf.queryExecution().executedPlan().toString()
             return self.spark.createDataFrame(
-                [(line,) for line in plan.splitlines()],
+                [(line,) for line in explain_analyze(inner).splitlines()],
                 T.StructType([T.StructField("plan", T.StringType())]),
             )
 
@@ -2906,15 +2808,18 @@ class Engine:
         temp views over ``resolve_from`` of the call's from-spec (the
         reference registers these as UDTFs —
         beacon-functions/src/file_formats/mod.rs:21-107; its SQL and JSON
-        surfaces share one format registry). Each view's name is appended
-        to ``views``. An nd call leaves a reserved name and appends itself
-        to ``nd_calls`` for :meth:`_bind_nd_views`."""
+        surfaces share one format registry). A ``read_<fmt>_schema``
+        twin parses the same arguments into the same spec and reads as
+        that read's (column_name, data_type, nullable) rows. Each view's
+        name is appended to ``views``. An nd call leaves a reserved name
+        and appends itself to ``nd_calls`` for :meth:`_bind_nd_views`."""
 
         def repl(m: re.Match) -> str:
             fmt = m.group(1).lower()
-            bracketed = m.group(2) is not None
-            arglist = m.group(2) if bracketed else m.group(3)
-            tail = m.group(4) or ""
+            schema_only = m.group(2) is not None
+            bracketed = m.group(3) is not None
+            arglist = m.group(3) if bracketed else m.group(4)
+            tail = m.group(5) or ""
             # each glob is one quoted string — a comma INSIDE a quoted
             # path (a legal filename character) must not split it
             globs = re.findall(r"'([^']*)'", arglist)
@@ -2968,7 +2873,7 @@ class Engine:
                 raise ValueError(
                     f"read_{fmt} takes only path arguments, got extras: "
                     f"{tail.strip()!r}")
-            elif fmt in _ND_FMTS:
+            elif fmt in _ND_FMTS and not schema_only:
                 # the nd readers plan through read_nd like the DSL does;
                 # WHERE ranges and referenced columns come from Catalyst
                 # (the reference's 'predicate pushdown is automatic' SQL
@@ -2977,9 +2882,11 @@ class Engine:
                 nd_calls.append(_NdCall(name, fmt, tuple(globs), dims))
                 return name
             spec = {fmt: cfg}
+            df = self.resolve_from(spec)
+            if schema_only:
+                df = tabular._schema_df(self.spark, df.schema)
             name = self._read_view(
-                "read", self.resolve_from(spec),
-                json.dumps(spec, sort_keys=True))
+                "read", df, (schema_only, json.dumps(spec, sort_keys=True)))
             if views is not None:
                 views.append(name)
             return name
@@ -3489,11 +3396,12 @@ class Engine:
     ) -> DataFrame:
         """Resolve a DSL ``from`` (query/from.rs:23-131): named table, or
         ``{"<format>": {"paths": [...], ...}}``. The one place a format
-        name becomes a reader: SQL ``read_*`` calls, catalog external
-        tables and attached roots all build their from-spec and come
-        here. ``projection`` is the DSL compiler's pushdown column set —
-        Catalyst prunes scans on its own, so it only gates nd readers
-        (which prune variables).
+        name becomes a reader: SQL ``read_*`` calls and their
+        ``read_*_schema`` twins, the embedded client's readers, catalog
+        external tables and attached roots all build their from-spec and
+        come here. ``projection`` is the DSL compiler's pushdown column
+        set — Catalyst prunes scans on its own, so it only gates nd
+        readers (which prune variables).
         ``ranges`` (column → [lo, hi] from the filter) drives stats-index
         file pruning for parquet collections (fail-open)."""
         if spec is None:
@@ -3518,28 +3426,28 @@ class Engine:
             fmt = fmt.lower()
             # the one location of a table, repository or database format
             loc = cfg["paths"][0] if cfg.get("paths") else cfg.get("location")
+            paths, root = cfg.get("paths"), self.datasets_root
             if fmt == "parquet":
-                if ranges and self.datasets_root:
-                    from beacon_spark.sources.paths import resolve_globs
+                if ranges and root:
                     from beacon_spark.stats import prune_files
 
-                    files = resolve_globs(cfg["paths"], self.datasets_root)
-                    pruned = prune_files(self.datasets_root, files, ranges)
+                    files = _paths.resolve_globs(paths, root)
+                    pruned = prune_files(root, files, ranges)
                     if not pruned:
                         # every file provably dead → empty frame, full schema
-                        full = self.read_parquet(files)
+                        full = tabular.read_parquet(self.spark, files, root)
                         return self.spark.createDataFrame([], full.schema)
                     if pruned != files:
-                        return self.read_parquet(pruned)
-                return self.read_parquet(cfg["paths"])
+                        return tabular.read_parquet(self.spark, pruned, root)
+                return tabular.read_parquet(self.spark, paths, root)
             if fmt == "csv":
                 # a catalog entry carries its delimiter in OPTIONS
                 delimiter = (cfg.get("options") or {}).get(
                     "delimiter", cfg.get("delimiter"))
-                return self.read_csv(cfg["paths"], delimiter,
-                                     cfg.get("infer_records"))
+                return tabular.read_csv(self.spark, paths, root, delimiter,
+                                        cfg.get("infer_records"))
             if fmt == "arrow":
-                return self.read_arrow(cfg["paths"])
+                return tabular.read_arrow(self.spark, paths, root)
             if fmt in _ND_FMTS:
                 # nd projection pushdown: the scan flattens and ships
                 # ONLY the select+filter column set (None = all).
@@ -3550,24 +3458,48 @@ class Engine:
                     nd_cols = _with_dot_prefixes(
                         set(projection).union(ranges or {}, terms or {},
                                               eqs or {}))
-                reader = {
-                    "netcdf": self.read_netcdf,
-                    "hdf5": self.read_netcdf,
-                    "zarr": self.read_zarr,
-                    "tiff": self.read_tiff,
-                    "atlas": self.read_atlas,
-                }[fmt]
-                return reader(cfg["paths"], cfg.get("dimensions"),
-                              ranges=ranges, columns=nd_cols)
+                empty = False
+                if fmt == "atlas":
+                    # atlas.json markers (exact or glob) expand to
+                    # per-dataset scan units AFTER stats pruning: datasets
+                    # whose column stats cannot match ``ranges`` are
+                    # dropped before any array data is read (the format's
+                    # headline capability, beacon-arrow-atlas pruning.rs)
+                    from beacon_spark.sources import atlaslite
+
+                    markers = _paths.resolve_globs(paths, root)
+                    paths = [f"{mk}{atlaslite.DATASET_SEP}{name}"
+                             for mk in markers
+                             for name in atlaslite.prune_datasets(mk, ranges)]
+                    # all datasets pruned: empty frame, full-store schema
+                    empty, root = not paths, None
+                    if empty:
+                        paths = [f"{mk}{atlaslite.DATASET_SEP}{name}"
+                                 for mk in markers
+                                 for name in atlaslite.list_datasets(mk)]
+                df = read_nd(self.spark, "netcdf" if fmt == "hdf5" else fmt,
+                             paths, root, cfg.get("dimensions"),
+                             ranges=ranges, columns=nd_cols)
+                return df.limit(0) if empty else df
             if fmt in ("odv", "odv_ascii"):
-                return self.read_odv(cfg["paths"])
+                from beacon_spark.sources.odv import read_odv
+
+                return read_odv(self.spark, paths, root)
             if fmt == "delta":
-                return self.read_delta(loc, cfg.get("version_as_of"),
-                                       cfg.get("timestamp_as_of"))
+                from beacon_spark.sources.delta import read_delta
+
+                return read_delta(self.spark, loc, root,
+                                  cfg.get("version_as_of"),
+                                  cfg.get("timestamp_as_of"))
             if fmt == "geoparquet":
-                return self.read_geoparquet(cfg["paths"])
+                from beacon_spark.sources.geoparquet import read_geoparquet
+
+                return read_geoparquet(self.spark, paths, root)
             if fmt == "iceberg":
-                return self.read_iceberg(loc, cfg.get("snapshot_id"))
+                from beacon_spark.sources.iceberg import read_iceberg
+
+                return read_iceberg(self.spark, loc, root,
+                                    cfg.get("snapshot_id"))
             if fmt == "icechunk":
                 # repository detection + refs/version resolution are
                 # real (sources/icechunklite.py, mirroring the

@@ -499,18 +499,13 @@ def _nc_chunk(col, ftype: pa.DataType, t: int, width: int | None) -> np.ndarray:
     """One Arrow column chunk → the numpy values FlatStreamWriter expects
     for nc_type ``t`` — same value mapping as the in-memory path
     (``to_np`` + ``_nc_type_for``): None → ""/NaN, int64 → int32 clipped."""
+    if t == 2:
+        return _fixed_width_bytes(col, width).view("S1").reshape(-1, width)
     try:
         col = col.cast(ftype)
     except Exception:
         pass  # parquet round-trip kept an equivalent type
-    col = _cf_cast(col, ftype)
-    if t == 2:
-        vals = ["" if v is None else v for v in col.to_pylist()]
-        if not vals:
-            return np.empty((0, width), "S1")
-        enc = np.char.encode(np.asarray(vals, dtype="U"), "utf-8").astype(f"S{width}")
-        return np.frombuffer(enc.tobytes(), "S1").reshape(-1, width)
-    arr = col.to_pandas().to_numpy()
+    arr = _cf_cast(col, ftype).to_pandas().to_numpy()
     if t == 6:
         if arr.dtype == object:
             arr = np.asarray(
@@ -531,14 +526,12 @@ def _write_netcdf_flat_streamed(
 ) -> None:
     """Flat NetCDF with BOUNDED driver memory: spool once to parquet
     (written by the executors), size ``obs`` from parquet row counts,
-    decide each variable's nc type from the Arrow schema + parquet null
-    statistics (an int column with nulls becomes a NaN-filled double,
-    exactly like the in-memory path), take string widths from a
-    column-pruned metadata pass, then stream every variable's values
+    decide each variable's nc type from the Arrow schema + the spool's
+    exact nullability (an int column with nulls becomes a NaN-filled
+    double, exactly like the in-memory path), take every string width
+    from one column-pruned pass, then stream every variable's values
     sequentially through FlatStreamWriter. Schemas parquet can't hold
     (VOID, intervals) fall back to the materialized writer."""
-    import pyarrow.compute as pc
-
     target = arrow_schema_of(df)
     with _parquet_spool(df) as pfs:
         if pfs is None:
@@ -547,23 +540,7 @@ def _write_netcdf_flat_streamed(
         nrows = sum(pf.metadata.num_rows for pf in pfs)
 
         def has_nulls(name: str) -> bool:
-            """True unless parquet statistics PROVE the column null-free
-            (unknown stats choose the value-safe NaN-double encoding)."""
-            for pf in pfs:
-                md = pf.metadata
-                try:
-                    idx = [
-                        md.schema.column(i).path for i in range(len(md.schema))
-                    ].index(name)
-                except ValueError:
-                    return True
-                for g in range(md.num_row_groups):
-                    st = md.row_group(g).column(idx).statistics
-                    if st is None or st.null_count is None:
-                        return True
-                    if st.null_count:
-                        return True
-            return False
+            return _spool_has_nulls(pfs, name)
 
         _INT_T = {"int8": 1, "uint8": 1, "int16": 3, "int32": 4}
 
@@ -590,20 +567,13 @@ def _write_netcdf_flat_streamed(
                         return False
             return True
 
+        widths = _spool_str_widths(pfs, target)
         specs: list[tuple[str, int, int | None]] = []
         var_attrs: dict[str, dict] = {}
         for field in target:
             name, ft = field.name, field.type
-            if pa.types.is_string(ft) or pa.types.is_large_string(ft):
-                width = 1
-                for pf in pfs:
-                    for b in pf.iter_batches(columns=[name], batch_size=1 << 16):
-                        m = pc.max(
-                            pc.binary_length(b.column(0).cast(pa.large_binary()))
-                        ).as_py()
-                        if m:
-                            width = max(width, m)
-                specs.append((name, 2, width))
+            if name in widths:
+                specs.append((name, 2, widths[name]))
             elif pa.types.is_timestamp(ft):
                 specs.append((name, 6, None))
                 var_attrs[name] = {"units": "microseconds since 1970-01-01"}
@@ -683,6 +653,26 @@ def _spool_has_nulls(pfs, name: str) -> bool:
     return False
 
 
+def _spool_str_widths(pfs, target: pa.Schema) -> dict[str, int]:
+    """Every string column's byte width (at least 1) in ONE
+    column-pruned pass over the spool (r14, r13-verdict finding #1: a
+    per-column loop made N string columns cost N full spool scans)."""
+    import pyarrow.compute as pc
+
+    widths = {f.name: 1 for f in target
+              if pa.types.is_string(f.type)
+              or pa.types.is_large_string(f.type)}
+    if widths:
+        for pf in pfs:
+            for b in pf.iter_batches(columns=list(widths), batch_size=1 << 16):
+                for n in widths:
+                    m = pc.max(pc.binary_length(
+                        b.column(n).cast(pa.large_binary()))).as_py()
+                    if m:
+                        widths[n] = max(widths[n], m)
+    return widths
+
+
 def _fixed_width_bytes(col: pa.Array, w: int) -> np.ndarray:
     """Arrow string/binary batch → numpy ``S<w>`` with nulls as b"" —
     fully vectorized (r14, r13-verdict finding #1: the to_pylist branch
@@ -728,8 +718,6 @@ def _write_netcdf4_flat_streamed(
     (nulls choose the NaN-double encoding, like every other writer).
     Schemas parquet can't spool (VOID, intervals) fall back to the
     materialized writer, which those degenerate schemas keep tiny."""
-    import pyarrow.compute as pc
-
     from beacon_spark.sources.hdf5write import Nc4StreamWriter
 
     target = arrow_schema_of(df)
@@ -742,28 +730,12 @@ def _write_netcdf4_flat_streamed(
         def has_nulls(name: str) -> bool:
             return _spool_has_nulls(pfs, name)
 
-        # ONE column-pruned pass over the spool computes EVERY string
-        # column's width (r14, r13-verdict finding #1: the per-column
-        # loop made N string columns cost N full spool scans)
-        str_cols = [f.name for f in target
-                    if pa.types.is_string(f.type)
-                    or pa.types.is_large_string(f.type)]
-        widths = {n: 1 for n in str_cols}
-        if str_cols:
-            for pf in pfs:
-                for b in pf.iter_batches(columns=str_cols,
-                                         batch_size=1 << 16):
-                    for n in str_cols:
-                        m = pc.max(pc.binary_length(
-                            b.column(n).cast(pa.large_binary()))).as_py()
-                        if m:
-                            widths[n] = max(widths[n], m)
-
+        widths = _spool_str_widths(pfs, target)
         specs: dict[str, np.dtype] = {}
         var_attrs: dict[str, dict] = {}
         for field in target:
             name, ft = field.name, field.type
-            if pa.types.is_string(ft) or pa.types.is_large_string(ft):
+            if name in widths:
                 specs[name] = np.dtype(f"S{widths[name]}")
             elif pa.types.is_timestamp(ft):
                 specs[name] = np.dtype("<f8")

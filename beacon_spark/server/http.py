@@ -39,7 +39,6 @@ from __future__ import annotations
 
 import io
 import json
-import logging
 import re
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -476,13 +475,11 @@ class BeaconHttpServer:
                            "pressure_to_depth_teos_10", "summarize"}
                     ))
                 elif path == "/api/table-functions":
-                    self._send_json([
-                        "read_parquet", "read_csv", "read_arrow",
-                        "read_netcdf", "read_hdf5", "read_zarr",
-                        "read_atlas", "read_tiff", "read_odv_ascii",
-                        "read_delta", "read_iceberg", "read_geoparquet",
-                        "remote_query",
-                    ])
+                    from beacon_spark.engine import READ_FORMATS
+
+                    self._send_json(
+                        [f"read_{fmt}" for fmt in READ_FORMATS]
+                        + ["remote_query"])
                 elif path == "/api/dataset-schema":
                     ds = q.get("dataset")
                     if not ds:
@@ -587,10 +584,10 @@ class BeaconHttpServer:
                         elif u.path == "/api/explain-analyze-query":
                             # the query IS executed to collect per-node
                             # runtime metrics (query.rs:313-320)
+                            from beacon_spark.engine import explain_analyze
+
                             with outer._limits.time_guard(outer.engine.spark):
-                                df.count()
-                            plan = (df._jdf.queryExecution()
-                                    .executedPlan().toString())
+                                plan = explain_analyze(df)
                             self._send_json({"plan": plan})
                         else:
                             plan = df._jdf.queryExecution().toString()
@@ -791,16 +788,13 @@ class BeaconHttpServer:
                 chunk(sink.getvalue())
                 # record BEFORE the terminating chunk: a client that
                 # fetches /api/query/metrics/{id} the instant the body
-                # ends raced the (post-EOF) record and got a 404.
-                # A metrics bookkeeping failure must never truncate an
-                # otherwise-complete Arrow stream, though.
-                try:
-                    outer._record(qid, df, rows, t0,
-                                  getattr(self, '_qtext', None),
-                                  getattr(self, '_ident', None))
-                except Exception:
-                    logging.getLogger("beacon_spark.server").exception(
-                        "query-metrics record failed for %s", qid)
+                # ends raced the (post-EOF) record and got a 404. A
+                # failing metrics store is logged, never raised
+                # (Engine.record_query_metrics), so it cannot truncate
+                # an otherwise-complete Arrow stream.
+                outer._record(qid, df, rows, t0,
+                              getattr(self, '_qtext', None),
+                              getattr(self, '_ident', None))
                 if chunked:
                     self.wfile.write(b"0\r\n\r\n")
 

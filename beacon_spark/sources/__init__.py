@@ -1,17 +1,3 @@
-from beacon_spark.sources.tabular import (
-    read_arrow,
-    read_arrow_schema,
-    read_csv,
-    read_csv_schema,
-    read_parquet,
-    read_parquet_schema,
-)
-
-__all__ = [
-    "read_parquet",
-    "read_parquet_schema",
-    "read_csv",
-    "read_csv_schema",
-    "read_arrow",
-    "read_arrow_schema",
-]
+"""Format readers. Every surface (SQL ``read_<fmt>`` and its
+``read_<fmt>_schema`` twin, the JSON DSL, the embedded client, catalog
+and attached tables) reaches them through ``Engine.resolve_from``."""

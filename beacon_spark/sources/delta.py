@@ -52,7 +52,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 __all__ = [
-    "read_delta", "read_delta_schema", "write_delta", "delta_history",
+    "read_delta", "write_delta", "delta_history",
     "delta_delete_rows",
 ]
 
@@ -515,16 +515,6 @@ def _unquote(rel: str) -> str:
     from urllib.parse import unquote
 
     return unquote(rel)
-
-
-def read_delta_schema(
-    spark: SparkSession, location: str, datasets_root: str | None = None
-) -> DataFrame:
-    from beacon_spark.sources.paths import resolve_dir
-    from beacon_spark.sources.tabular import _schema_df
-
-    snap = _snapshot(resolve_dir(location, datasets_root))
-    return _schema_df(spark, snap.schema)
 
 
 def delta_history(

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from beacon_spark.sources.paths import expand_parquet_dirs, resolve_globs
 
-__all__ = ["read_geoparquet", "read_geoparquet_schema", "geo_metadata"]
+__all__ = ["read_geoparquet", "geo_metadata"]
 
 
 def geo_metadata(path: str) -> dict | None:
@@ -35,11 +35,9 @@ def read_geoparquet(
     spark: SparkSession,
     paths: str | list[str],
     datasets_root: str | None = None,
-    keep_wkb: bool = False,
 ) -> DataFrame:
     """``read_geoparquet(globs)``: parquet scan + WKB→WKT decode of every
-    column the `geo` metadata declares (encoding=WKB). ``keep_wkb=True``
-    keeps the raw binary alongside as ``<col>_wkb``."""
+    column the `geo` metadata declares (encoding=WKB)."""
     from beacon_spark.functions.geo import wkb_to_wkt_udf
     from beacon_spark.sources.tabular import read_parquet
 
@@ -55,15 +53,5 @@ def read_geoparquet(
     df = read_parquet(spark, files)
     decode = wkb_to_wkt_udf()
     for c in geom_cols:
-        if keep_wkb:
-            df = df.withColumn(f"{c}_wkb", df[c])
         df = df.withColumn(c, decode(df[c]))
     return df
-
-
-def read_geoparquet_schema(
-    spark: SparkSession, paths: str | list[str], datasets_root: str | None = None
-) -> DataFrame:
-    from beacon_spark.sources.tabular import _schema_df
-
-    return _schema_df(spark, read_geoparquet(spark, paths, datasets_root).schema)

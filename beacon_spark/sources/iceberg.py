@@ -46,7 +46,7 @@ from pyspark.sql import types as T
 from beacon_spark.sources.avrolite import read_avro, write_avro
 
 __all__ = [
-    "read_iceberg", "read_iceberg_schema", "write_iceberg",
+    "read_iceberg", "write_iceberg",
     "write_iceberg_deletes",
 ]
 
@@ -382,16 +382,6 @@ def read_iceberg(
             df = df.join(F.broadcast(right), cond, "left_anti")
         df = df.drop("__fp", "__pos", "__data_seq")
     return df
-
-
-def read_iceberg_schema(
-    spark: SparkSession, location: str, datasets_root: str | None = None
-) -> DataFrame:
-    from beacon_spark.sources.paths import resolve_dir
-    from beacon_spark.sources.tabular import _schema_df
-
-    md = _load_metadata(resolve_dir(location, datasets_root))
-    return _schema_df(spark, _ice_to_spark({**_current_schema(md), "type": "struct"}))
 
 
 # ------------------------------------------------------------ write (fixtures)

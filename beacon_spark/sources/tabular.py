@@ -178,12 +178,6 @@ def read_parquet(
     return parts[0] if len(parts) == 1 else union_all_by_name(*parts)
 
 
-def read_parquet_schema(
-    spark: SparkSession, paths: str | list[str], datasets_root: str | None = None
-) -> DataFrame:
-    return _schema_df(spark, read_parquet(spark, paths, datasets_root).schema)
-
-
 # ---------------------------------------------------------------- csv
 
 
@@ -223,15 +217,6 @@ def read_csv(
         .option("inferSchema", "true").csv(sample).schema
     )
     return base.schema(schema).csv(files)
-
-
-def read_csv_schema(
-    spark: SparkSession,
-    paths: str | list[str],
-    datasets_root: str | None = None,
-    delimiter: str | None = None,
-) -> DataFrame:
-    return _schema_df(spark, read_csv(spark, paths, datasets_root, delimiter).schema)
 
 
 # ---------------------------------------------------------------- arrow ipc
@@ -361,15 +346,6 @@ def read_arrow(
     return paths_df.mapInArrow(_scan, target)
 
 
-def read_arrow_schema(
-    spark: SparkSession, paths: str | list[str], datasets_root: str | None = None
-) -> DataFrame:
-    files = resolve_globs(paths, datasets_root)
-    schemas = _schemas_parallel(files, _ipc_schema)
-    target = super_schema([_arrow_to_spark_schema(s) for s in schemas])
-    return _schema_df(spark, target)
-
-
 def _spark_to_arrow_type(dt: T.DataType) -> pa.DataType:
     from pyspark.sql.pandas.types import to_arrow_type
 
@@ -380,7 +356,7 @@ def _spark_to_arrow_type(dt: T.DataType) -> pa.DataType:
 
 
 def _schema_df(spark: SparkSession, schema: T.StructType) -> DataFrame:
-    """``read_*_schema`` introspection twins return
+    """The rows a SQL ``read_<fmt>_schema`` introspection twin returns:
     (column_name, data_type, nullable) — table-functions-utility.md:6-33."""
     rows = [(f.name, f.dataType.simpleString(), True) for f in schema.fields]
     return spark.createDataFrame(

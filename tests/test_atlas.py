@@ -81,7 +81,8 @@ def test_read_atlas_sql_e2e(spark, store, tmp_path):
     ).collect()
     assert len(rows) == 20  # both datasets union'ed
     assert rows[0].time == 0.0 and rows[-1].time == 109.0
-    schema = {r.column_name for r in eng.read_atlas_schema("obs.atlas/atlas.json").collect()}
+    schema = {r.column_name for r in eng.sql(
+        "SELECT * FROM read_atlas_schema('obs.atlas/atlas.json')").collect()}
     assert {"time", "temp"} <= schema
 
 

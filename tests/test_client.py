@@ -136,6 +136,89 @@ def test_read_passthroughs(con, sf_small):
     assert "read_parquet" in con.table_functions()
     with pytest.raises(beacondb.NotSupportedError):
         con.read("bogus_format", "x")
+    # options go by keyword: an extra positional argument is refused
+    with pytest.raises(TypeError):
+        con.read("csv", os.path.join(sf_small, "nation.parquet"), ";")
+
+    # the client and HTTP /api/table-functions name every read_<fmt>
+    # SQL accepts, and nothing SQL refuses
+    import json
+    import urllib.request
+
+    from beacon_spark.engine import _READ_FN_RE
+    from beacon_spark.server.http import BeaconHttpServer
+
+    candidates = {f"read_{f}" for f in (
+        "parquet", "csv", "arrow", "netcdf", "hdf5", "zarr", "atlas", "tiff",
+        "odv", "odv_ascii", "delta", "iceberg", "geoparquet", "icechunk",
+        "bbf", "remote", "postgres", "mysql", "json", "avro")}
+    sql_accepts = {n for n in candidates if _READ_FN_RE.match(f"{n}('x')")}
+    assert {"read_odv", "read_odv_ascii", "read_hdf5"} <= sql_accepts
+    hs = BeaconHttpServer(con.engine, port=0)
+    port = hs.serve_background()
+    try:
+        with urllib.request.urlopen(
+                f"http://127.0.0.1:{port}/api/table-functions") as r:
+            http_fns = set(json.loads(r.read()))
+    finally:
+        hs.shutdown()
+    assert set(con.table_functions()) == sql_accepts
+    assert http_fns - {"remote_query"} == sql_accepts
+
+
+def test_client_reads_pass_the_rbac_gate(spark, tmp_path):
+    """The embedded client's readers are checked like SQL and the DSL: a
+    non-super user's DENY on a path refuses con.read_<fmt>, con.read and
+    the SQL read_<fmt>_schema twin; a granted path still reads."""
+    from beacon_spark.engine import Engine
+
+    spark.range(9).coalesce(1).write.parquet(str(tmp_path / "hidden.parquet"))
+    spark.range(3).coalesce(1).write.parquet(str(tmp_path / "open.parquet"))
+    eng = Engine(spark, datasets_root=str(tmp_path))
+    eng.sql("CREATE USER alice WITH PASSWORD 'pw1'")
+    eng.sql("CREATE ROLE readers")
+    eng.sql("GRANT ROLE readers TO USER alice")
+    eng.sql("SET AUTH ENFORCEMENT ON")
+    eng.sql("GRANT SELECT ON ALL TO ROLE readers")
+    eng.sql("DENY SELECT ON PATH 'hidden*' TO ROLE readers")
+
+    con = beacondb.connect(str(tmp_path), spark=spark, auth=True,
+                           username="alice", password="pw1")
+    try:
+        with pytest.raises(beacondb.NotPermittedError):
+            con.read_parquet("hidden.parquet")
+        with pytest.raises(beacondb.NotPermittedError):
+            con.read("parquet", "hidden.parquet")
+        with pytest.raises(beacondb.NotPermittedError):
+            con.sql("SELECT * FROM read_parquet_schema('hidden.parquet')")
+        assert con.read_parquet("open.parquet").shape == (3, 1)
+        assert con.sql("SELECT * FROM read_parquet_schema('open.parquet')"
+                       ).fetchall() == [("id", "bigint", True)]
+    finally:
+        con.close()
+
+
+def test_metrics_store_failure_is_logged_not_raised(con, caplog, monkeypatch):
+    """A broken query-metrics store never fails the query it records; it
+    is reported as one WARNING naming the query id and the exception."""
+    import logging
+
+    qids = []
+
+    def broken(**kw):
+        qids.append(kw["query_id"])
+        raise RuntimeError("metrics store down")
+
+    monkeypatch.setattr(con.engine.metrics, "record", broken)
+    with caplog.at_level(logging.WARNING, logger="beacon_spark.engine"):
+        assert con.sql("SELECT 1 AS a").fetchall() == [(1,)]
+    warned = [r for r in caplog.records
+              if r.name == "beacon_spark.engine"
+              and r.levelno == logging.WARNING]
+    assert len(warned) == 1 and len(qids) == 1
+    assert qids[0] in warned[0].getMessage()
+    assert "metrics store down" in warned[0].getMessage()
+    assert "RuntimeError" in warned[0].getMessage()
 
 
 def test_json_query(con):

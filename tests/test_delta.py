@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 from beacon_spark.sources.delta import (
     delta_history,
     read_delta,
-    read_delta_schema,
     write_delta,
 )
 
@@ -87,7 +86,10 @@ def test_schema_fn(spark, delta_dir):
     write_delta(
         spark.range(3).select("id", F.lit(1.5).alias("v")), delta_dir
     )
-    rows = {r["column_name"]: r["data_type"] for r in read_delta_schema(spark, delta_dir).collect()}
+    from beacon_spark.engine import Engine
+
+    rows = {r["column_name"]: r["data_type"] for r in Engine(spark).sql(
+        f"SELECT * FROM read_delta_schema('{delta_dir}')").collect()}
     assert rows == {"id": "bigint", "v": "double"}
 
 

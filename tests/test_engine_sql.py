@@ -40,7 +40,8 @@ def test_qualify_window_pred_form(eng, spark):
 
 
 def test_read_schema_twins(eng):
-    rows = {r.column_name: r.data_type for r in eng.read_parquet_schema("orders.parquet").collect()}
+    rows = {r.column_name: r.data_type for r in eng.sql(
+        "SELECT * FROM read_parquet_schema('orders.parquet')").collect()}
     assert rows["o_orderkey"] in ("bigint", "long")
     odv = None  # odv/netcdf twins need fixture files; schema twin for parquet covers the path
 
@@ -96,6 +97,16 @@ def test_explain_analyze(spark, sf_dir):
     ).collect()
     text = "\n".join(r.plan for r in out)
     assert "HashAggregate" in text or "Scan" in text
+    # the plan shown is the plan that ran: AQE's final plan, with the
+    # scan's runtime row count filled in
+    import re
+
+    assert "isFinalPlan=true" in text
+    n = eng.sql("SELECT count(*) AS n FROM read_parquet('orders.parquet')"
+                ).collect()[0].n
+    scanned = [int(m.group(1)) for line in text.splitlines() if "Scan" in line
+               for m in [re.search(r"numOutputRows=(\d+)", line)] if m]
+    assert scanned == [n], text
 
 
 def test_explain_analyze_binds_params(spark, sf_dir):
@@ -237,17 +248,17 @@ def test_copy_to(spark, tmp_path, sf_small):
         f"COPY (SELECT * FROM read_parquet('{sf_small}/region.parquet')) "
         f"TO 'out.csv'"
     )
-    back = eng.read_csv("out.csv")
+    back = eng.resolve_from({"csv": {"paths": ["out.csv"]}})
     assert back.count() == 5
     eng.sql(
         f"COPY (SELECT r_regionkey FROM read_parquet('{sf_small}/region.parquet') "
         f"WHERE r_regionkey < 2) TO 'two.parquet' STORED AS PARQUET"
     )
-    assert eng.read_parquet("two.parquet").count() == 2
+    assert eng.resolve_from({"parquet": {"paths": ["two.parquet"]}}).count() == 2
     # bare table name source
     eng.sql(f"CREATE TABLE reg AS SELECT * FROM read_parquet('{sf_small}/region.parquet')")
     eng.sql("COPY reg TO 'reg.arrow'")
-    assert eng.read_arrow("reg.arrow").count() == 5
+    assert eng.resolve_from({"arrow": {"paths": ["reg.arrow"]}}).count() == 5
 
 
 def test_positional_params(eng):

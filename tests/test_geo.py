@@ -111,11 +111,11 @@ def test_wkb_to_wkt_shapes():
 def test_geoparquet_roundtrip(spark, tmp_path):
     from pyspark.sql import functions as F
 
+    from beacon_spark.engine import Engine
     from beacon_spark.outputs import write_geoparquet
     from beacon_spark.sources.geoparquet import (
         geo_metadata,
         read_geoparquet,
-        read_geoparquet_schema,
     )
 
     df = spark.range(10).select(
@@ -133,7 +133,8 @@ def test_geoparquet_roundtrip(spark, tmp_path):
     assert rows[9] == "POINT (8.5 9)"
     schema = {
         r["column_name"]: r["data_type"]
-        for r in read_geoparquet_schema(spark, path).collect()
+        for r in Engine(spark).sql(
+            f"SELECT * FROM read_geoparquet_schema('{path}')").collect()
     }
     assert schema["geometry"] == "string"
 

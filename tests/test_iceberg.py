@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 from beacon_spark.sources.avrolite import read_avro, write_avro
 from beacon_spark.sources.iceberg import (
     read_iceberg,
-    read_iceberg_schema,
     write_iceberg,
 )
 
@@ -74,9 +73,12 @@ def test_schema_fn(spark, ice_dir):
         ),
         ice_dir,
     )
+    from beacon_spark.engine import Engine
+
     got = {
         r["column_name"]: r["data_type"]
-        for r in read_iceberg_schema(spark, ice_dir).collect()
+        for r in Engine(spark).sql(
+            f"SELECT * FROM read_iceberg_schema('{ice_dir}')").collect()
     }
     assert got == {"id": "bigint", "s": "string", "v": "double", "b": "boolean"}
 

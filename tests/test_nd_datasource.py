@@ -241,8 +241,9 @@ def test_sql_ragged_read_under_projection(nd_engine, tmp_path):
 
 def test_sql_atlas_stats_pruning(nd_engine, tmp_path):
     """Atlas via SQL: dataset STATS pruning rides the WHERE ranges lifted
-    from the optimized plan (prune_datasets in Engine.read_atlas) — a
-    time window that excludes one dataset plans zero partitions for it."""
+    from the optimized plan (prune_datasets in resolve_from's atlas
+    branch) — a time window that excludes one dataset plans zero
+    partitions for it."""
     import numpy as np
 
     from beacon_spark.sources.atlaslite import write_atlas_store
@@ -486,11 +487,15 @@ _TABLE_KINDS = ["parquet", "csv", "arrow", "odv", "odv_ascii", "geoparquet",
 @pytest.mark.parametrize("kind", ["netcdf3", "netcdf4", "zarr2", "zarr3",
                                   "tiff", "atlas", "ragged"] + _TABLE_KINDS)
 def test_sql_and_dsl_read_the_same_table(nd_engine, tmp_path, kind):
-    """``SELECT * FROM read_<fmt>(…)`` and the DSL ``from`` block must
-    agree on column names, Spark types and rows for every format and
-    the options each takes — both surfaces build their reader through
-    ``Engine.resolve_from`` (nd formats: one schema source, read_nd's
-    1-row sample widened for Spark, and one scan)."""
+    """``SELECT * FROM read_<fmt>(…)``, the DSL ``from`` block and the
+    embedded client's ``read`` must agree on column names, Spark types
+    and rows for every format and the options each takes, and
+    ``read_<fmt>_schema(…)`` must list that schema — every surface
+    builds its reader through ``Engine.resolve_from`` (nd formats: one
+    schema source, read_nd's 1-row sample widened for Spark, and one
+    scan)."""
+    from beacon_spark.client import Connection
+
     if kind in _TABLE_KINDS:
         fmt, args, cfg = _table_fixture(nd_engine.spark, kind, str(tmp_path))
     else:
@@ -498,9 +503,16 @@ def test_sql_and_dsl_read_the_same_table(nd_engine, tmp_path, kind):
         args, cfg = f"'{rel}'", {"paths": [rel]}
     sql = nd_engine.sql(f"SELECT * FROM read_{fmt}({args})")
     dsl = nd_engine.query({"select": ["*"], "from": {fmt: cfg}})
-    assert [(f.name, f.dataType) for f in sql.schema] == [
-        (f.name, f.dataType) for f in dsl.schema]
-    assert _rows(sql) == _rows(dsl)
+    client = Connection(nd_engine).read(
+        fmt, cfg["paths"], **{k: v for k, v in cfg.items() if k != "paths"})._df
+    for other in (dsl, client):
+        assert [(f.name, f.dataType) for f in sql.schema] == [
+            (f.name, f.dataType) for f in other.schema]
+        assert _rows(sql) == _rows(other)
+    described = nd_engine.sql(f"SELECT * FROM read_{fmt}_schema({args})")
+    assert described.columns == ["column_name", "data_type", "nullable"]
+    assert [(r.column_name, r.data_type) for r in described.collect()] == [
+        (f.name, f.dataType.simpleString()) for f in sql.schema]
     types = dict(sql.dtypes)
     if kind in ("netcdf3", "netcdf4", "zarr2", "zarr3"):
         # CF time decodes to ns; both surfaces ship it as Spark's µs type

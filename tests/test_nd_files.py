@@ -197,7 +197,8 @@ def test_read_netcdf_spark_e2e(spark, tmp_path, nc_file):
     assert len(rows) == 5
     assert rows[0].temperature == 1.0
     # schema twin
-    schema = {r.column_name for r in eng.read_netcdf_schema("grid.nc").collect()}
+    schema = {r.column_name for r in eng.sql(
+        "SELECT * FROM read_netcdf_schema('grid.nc')").collect()}
     assert {"time", "lat", "temperature"} <= schema
 
 

@@ -58,7 +58,7 @@ def test_reference_file_read():
 
 def test_spark_read_odv(spark):
     eng = Engine(spark)
-    df = eng.read_odv(REF_FILE)
+    df = eng.resolve_from({"odv": {"paths": [REF_FILE]}})
     assert df.count() == read_odv_table(REF_FILE).num_rows
     assert "Longitude" in df.columns
 
@@ -79,7 +79,7 @@ def test_odv_writer_roundtrip(spark, tmp_path):
     out = str(tmp_path / "out.txt")
     write_odv(df, out, longitude_column="Longitude", latitude_column="Latitude")
     eng = Engine(spark)
-    back = eng.read_odv(out)
+    back = eng.resolve_from({"odv": {"paths": [out]}})
     rows = sorted((r.Cruise, r.Latitude, r.Longitude, r.Depth)
                   for r in back.select("Cruise", "Latitude", "Longitude", "Depth").collect())
     assert rows == [("c1", 10.5, -4.25, 100), ("c2", 11.5, -3.5, None)]
@@ -99,7 +99,7 @@ def test_odv_writer_sanitizes_tabs_newlines(spark, tmp_path):
     out = str(tmp_path / "tabs.txt")
     write_odv(df, out, latitude_column="Latitude")
     eng = Engine(spark)
-    back = eng.read_odv(out)
+    back = eng.resolve_from({"odv": {"paths": [out]}})
     rows = sorted((r.Cruise, r.Latitude) for r in back.collect())
     assert rows == [("a b c", 1.5), ("plain", 2.5)]
 

@@ -34,7 +34,7 @@ def lake(tmp_path_factory):
 
 def test_parquet_supertype_merge(spark, lake):
     eng = Engine(spark, datasets_root=lake)
-    df = eng.read_parquet("*.parquet")
+    df = eng.resolve_from({"parquet": {"paths": ["*.parquet"]}})
     types = dict(df.dtypes)
     assert types["x"] == "double"  # int64 ⊔ float64 → double
     assert set(df.columns) == {"x", "y", "z"}
@@ -44,20 +44,21 @@ def test_parquet_supertype_merge(spark, lake):
 
 def test_parquet_schema_introspection(spark, lake):
     eng = Engine(spark, datasets_root=lake)
-    rows = {r.column_name: r.data_type for r in eng.read_parquet_schema("*.parquet").collect()}
+    rows = {r.column_name: r.data_type for r in eng.sql(
+        "SELECT * FROM read_parquet_schema('*.parquet')").collect()}
     assert rows == {"x": "double", "y": "string", "z": "int"}
 
 
 def test_arrow_ipc_distributed_read(spark, lake):
     eng = Engine(spark, datasets_root=lake)
-    df = eng.read_arrow("*.arrow")
+    df = eng.resolve_from({"arrow": {"paths": ["*.arrow"]}})
     rows = sorted((r.k, r.v) for r in df.collect())
     assert rows == [(1, 0.1), (2, 0.2), (3, None)]
 
 
 def test_csv_read(spark, lake):
     eng = Engine(spark, datasets_root=lake)
-    rows = sorted((r.a, r.b) for r in eng.read_csv("c.csv").collect())
+    rows = sorted((r.a, r.b) for r in eng.resolve_from({"csv": {"paths": ["c.csv"]}}).collect())
     assert rows == [(1, "x"), (2, "y")]
 
 
@@ -78,7 +79,7 @@ def test_sql_read_fn_multiple_globs(spark, lake):
 def test_missing_glob_errors(spark, lake):
     eng = Engine(spark, datasets_root=lake)
     with pytest.raises(FileNotFoundError):
-        eng.read_parquet("nope/*.parquet")
+        eng.resolve_from({"parquet": {"paths": ["nope/*.parquet"]}})
 
 
 def test_hive_partitioned_dataset(spark, tmp_path):
@@ -97,7 +98,7 @@ def test_hive_partitioned_dataset(spark, tmp_path):
     assert listed.get("lake/obs") == "parquet"
     assert not any("part=" in k for k in listed)
 
-    out = eng.read_parquet("lake/obs")
+    out = eng.resolve_from({"parquet": {"paths": ["lake/obs"]}})
     assert set(out.columns) == {"id", "part", "v"}
     assert out.filter("part = 1").count() == 10
     # partition pruning visible in the plan
