@@ -1864,10 +1864,7 @@ class Engine:
             # endpoint, and re-running the statement re-derives them)
             views = getattr(self, "_remote_views", {})
             for v in views.pop(name, set()) | views.pop("__federated__", set()):
-                try:
-                    self.spark.catalog.dropTempView(v)
-                except Exception:
-                    pass
+                self.spark.catalog.dropTempView(v)  # False when absent
             return self._status(status="ok", op="detach", name=name)
         if kind == "create_secret":
             # CREATE [PERSISTENT|TEMPORARY] SECRET n (TYPE t, k 'v', …,
@@ -2190,18 +2187,20 @@ class Engine:
             return
         self._crawler_stop = threading.Event()
 
+        def _streams():
+            from beacon_spark.streaming.ingest import run_due_streams
+
+            run_due_streams(self)
+
         def _loop():
             while not self._crawler_stop.wait(poll_secs):
-                try:
-                    self.run_due_crawlers()
-                except Exception:  # never kill the host app from a sweep
-                    pass
-                try:
-                    from beacon_spark.streaming.ingest import run_due_streams
-
-                    run_due_streams(self)
-                except Exception:
-                    pass
+                for sweep, run in (("crawler", self.run_due_crawlers),
+                                   ("stream", _streams)):
+                    try:
+                        run()
+                    except Exception as exc:  # never kill the host app
+                        _log.warning("%s sweep failed: %s: %s", sweep,
+                                     type(exc).__name__, exc, exc_info=True)
 
         self._crawler_thread = threading.Thread(
             target=_loop, name="beacon-crawler-scheduler", daemon=True
@@ -3433,12 +3432,14 @@ class Engine:
 
                     files = _paths.resolve_globs(paths, root)
                     pruned = prune_files(root, files, ranges)
+                    # read the resolved list, pruned or not (no root: it
+                    # is already joined); re-passing the globs would list
+                    # the collection a second time
                     if not pruned:
                         # every file provably dead → empty frame, full schema
-                        full = tabular.read_parquet(self.spark, files, root)
+                        full = tabular.read_parquet(self.spark, files, None)
                         return self.spark.createDataFrame([], full.schema)
-                    if pruned != files:
-                        return tabular.read_parquet(self.spark, pruned, root)
+                    return tabular.read_parquet(self.spark, pruned, None)
                 return tabular.read_parquet(self.spark, paths, root)
             if fmt == "csv":
                 # a catalog entry carries its delimiter in OPTIONS

@@ -2,12 +2,14 @@
 
 Mirrors the reference's listing-URL resolution (table functions accept one
 glob or a list of globs resolved against the datasets root,
-``docs/docs/2.0.0-rc2/sql/table-functions.md:8-23``). Local filesystem +
-anything fsspec-like later; v1 is local/posix because that is what the test
-environment provides. At cluster scale the file listing itself should be
-delegated to Spark's InMemoryFileIndex (``spark.read.load(glob)``), which
-lists in parallel on executors — we only materialize a python-side list when
-per-file schema harmonization is required.
+``docs/docs/2.0.0-rc2/sql/table-functions.md:8-23``). Local globs use
+``glob``; object-store URIs list through the scheme's filesystem
+(``bytesource``). The engine materializes the file list here and reads
+every footer or header from it (per-file schema harmonization, stats
+pruning); Spark then receives that explicit list and only stats the given
+files, above its discovery threshold in a listing job of one task per core
+(``session.get_spark``). Hive-partitioned roots are handed over as roots,
+so Spark's own partition discovery still applies to them.
 """
 
 from __future__ import annotations

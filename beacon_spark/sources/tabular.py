@@ -5,12 +5,17 @@ merging per-file schemas through the supertype lattice
 (``beacon-datafusion-ext/src/file_collection.rs:1-62``). Spark's
 ``mergeSchema`` only handles name-union of *compatible* types, so we:
 
-  1. read per-file schemas (parquet footer / IPC header) driver-side in a
-     thread pool — the same O(files) metadata pass the reference performs;
+  1. resolve the globs to a file list, then read per-file schemas
+     (parquet footer / IPC header) driver-side in a thread pool — the same
+     O(files) metadata pass the reference performs. Footers of object-store
+     URIs are read through the scheme's pyarrow filesystem;
   2. group files by identical schema — the common case is ONE group, read
-     with ``spark.read.schema(<footer schema>).parquet(*files)``: the
-     schema those footers already gave is handed to Spark, so planning
-     starts no schema-inference job, and pushdown/pruning stay intact;
+     with ``spark.read.schema(<footer schema>).parquet(*files)`` (paths in
+     their JVM form, ``bytesource.spark_path``): the schema those footers
+     already gave is handed to Spark, so planning starts no
+     schema-inference job, and pushdown/pruning stay intact. Spark still
+     stats the given files; above 32 paths it does so in one listing job
+     with one task per core (``session.get_spark``), not one per file;
   3. heterogeneous groups are each read natively, aligned to the super
      schema (cast/NULL-fill projections — no shuffle), and unioned.
 
@@ -32,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from beacon_spark.schema import align_to_schema, super_schema
+from beacon_spark.sources import bytesource as bs
 from beacon_spark.sources.paths import expand_parquet_dirs, resolve_globs
 
 
@@ -106,7 +112,7 @@ def _read_harmonized(
         key = tuple((fld.name, fld.dataType.simpleString()) for fld in sp.fields)
         groups.setdefault(key, []).append(f)
         spark_schemas[key] = sp
-    parts = [spark.read.schema(spark_schemas[key]).parquet(*grp)
+    parts = [spark.read.schema(spark_schemas[key]).parquet(*bs.spark_paths(grp))
              for key, grp in groups.items()]
     if len(parts) == 1:
         return parts[0]
@@ -131,14 +137,15 @@ def _parquet_spark_schema(spark: SparkSession, path: str,
     inference. ns timestamps follow the session's ``nanosAsLong``: long
     when it is on; otherwise a timestamp the scan refuses, as inference
     refuses the file."""
-    md = pq.read_metadata(path)
+    p, fs = bs.dataset_source(path)
+    md = pq.read_metadata(p, filesystem=fs)
     stored = (md.metadata or {}).get(_SPARK_ROW_METADATA)
     if stored:
         return T.StructType.fromJson(json.loads(stored))
     int96 = {md.schema.column(i).path for i in range(md.num_columns)
              if md.schema.column(i).physical_type == "INT96"}
     if any("." in c for c in int96):
-        return spark.read.parquet(path).schema
+        return spark.read.parquet(bs.spark_path(path)).schema
     schema = md.schema.to_arrow_schema()
     return _arrow_to_spark_schema(pa.schema([
         f.with_type(pa.timestamp("us", tz="UTC")) if f.name in int96 else f
@@ -165,7 +172,8 @@ def read_parquet(
     hive_set = set(hive)  # membership by set: resolved can be 100k files
     files = expand_parquet_dirs([f for f in resolved if f not in hive_set])
     parts: list[DataFrame] = [
-        spark.read.option("mergeSchema", "true").parquet(h) for h in hive
+        spark.read.option("mergeSchema", "true").parquet(bs.spark_path(h))
+        for h in hive
     ]
     if files:
         ns_as_long = spark.conf.get(
@@ -198,7 +206,7 @@ def read_csv(
     (PERMISSIVE), exactly the sampling trade the reference makes.
     Pass ``infer_records=-1`` for Spark's unbounded one-pass
     inference over every file."""
-    files = resolve_globs(paths, datasets_root)
+    files = bs.spark_paths(resolve_globs(paths, datasets_root))
     sep = delimiter or ","
     base = spark.read.option("header", "true").option("sep", sep)
     if infer_records is None:
@@ -227,10 +235,8 @@ def _ipc_source(path: str):
     (mmap), whole-object bytes for object-store URIs (pa_ipc.open_file
     took only raw paths before, so every remote .arrow read failed while
     parquet/csv/nd happily read the same store)."""
-    from beacon_spark.sources import bytesource as _bs
-
-    if _bs.is_uri(path):
-        return pa.BufferReader(_bs.read_bytes(path))
+    if bs.is_uri(path):
+        return pa.BufferReader(bs.read_bytes(path))
     return path
 
 
@@ -243,13 +249,11 @@ class _LazyBufFile:
         self._pos = 0
 
     def read(self, n=-1):
-        from beacon_spark.sources import bytesource as _bs
-
         if n is None or n < 0:
             n = len(self._buf) - self._pos
         # bs.read_range handles both buffer kinds (LazyBuf ranged GETs,
         # local file:// mmap slices)
-        out = _bs.read_range(self._buf, self._pos, n)
+        out = bs.read_range(self._buf, self._pos, n)
         self._pos += len(out)
         return out
 
@@ -276,12 +280,10 @@ class _LazyBufFile:
 
 
 def _ipc_schema(path: str) -> pa.Schema:
-    from beacon_spark.sources import bytesource as _bs
-
     # driver-side schema probe: a whole-object read here doubled the
     # egress of every remote .arrow query (the executor scan fetches
     # the object again) — ranged reads pull only the header messages
-    src = (_LazyBufFile(_bs.open_buffer(path)) if _bs.is_uri(path)
+    src = (_LazyBufFile(bs.open_buffer(path)) if bs.is_uri(path)
            else path)
     try:
         with pa_ipc.open_file(src) as r:

@@ -358,6 +358,38 @@ def test_crawler_scheduling(spark, tmp_path):
         eng.stop_crawler_scheduler()
 
 
+def test_failed_sweep_is_logged_and_scheduler_survives(
+        spark, tmp_path, caplog, monkeypatch):
+    """A sweep that raises is reported at WARNING, naming the sweep, and
+    the scheduler thread keeps polling."""
+    import logging
+    import time
+
+    eng = Engine(spark, datasets_root=str(tmp_path))
+    calls = []
+
+    def broken(now=None):
+        calls.append(now)
+        raise RuntimeError("store unreachable")
+
+    monkeypatch.setattr(eng, "run_due_crawlers", broken)
+    with caplog.at_level(logging.WARNING, logger="beacon_spark.engine"):
+        eng.start_crawler_scheduler(poll_secs=0.05)
+        try:
+            deadline = time.time() + 10
+            while len(calls) < 2 and time.time() < deadline:
+                time.sleep(0.05)
+            assert len(calls) >= 2  # a second sweep ran after the failure
+            assert eng._crawler_thread.is_alive()
+        finally:
+            eng.stop_crawler_scheduler()
+    warned = [r for r in caplog.records
+              if r.name == "beacon_spark.engine"
+              and r.levelno == logging.WARNING
+              and "crawler sweep failed" in r.getMessage()]
+    assert warned and "store unreachable" in warned[0].getMessage()
+
+
 def test_bitmap_index_prunes_files(spark, tmp_path):
     """CREATE INDEX ... USING bitmap posts (value, file) pairs; eq and
     OR-of-eq DSL filters then open a strict subset of files. Type-gated:

@@ -191,3 +191,29 @@ def test_persistence_across_engines_on_object_store(spark, meng, mock_root):
     eng2 = Engine(spark, datasets_root=mock_root)
     assert eng2.sql("SELECT count(*) AS n FROM keepme").collect()[0].n == 7
     assert "keepme" in eng2.table_names()
+
+
+def test_read_parquet_over_object_store_uris(spark, meng, mock_root):
+    """read_parquet globs, reads footers and scans through the store's
+    scheme: footers via its pyarrow filesystem, the scan via the JVM
+    form of each path (spark_path). read_csv hands Spark the same form."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    obs = MockStoreFS.root_dir + "/obs"
+    bs.makedirs("mock://lake/obs")
+    for i in range(3):
+        pq.write_table(pa.table({"id": pa.array(range(i * 10, i * 10 + 10)),
+                                 "v": pa.array([float(i)] * 10)}),
+                       f"{obs}/f{i}.parquet")
+    n = meng.sql("SELECT count(*) AS n FROM read_parquet('obs/*.parquet')")
+    assert n.collect()[0].n == 30
+    dsl = meng.query({"select": ["id"],
+                      "from": {"parquet": {"paths": ["obs/*.parquet"]}},
+                      "filter": {"column": "v", "min": 2.0}})
+    assert sorted(r.id for r in dsl.collect()) == list(range(20, 30))
+    with open(f"{obs}/c.csv", "w") as f:
+        f.write("a,b\n1,x\n2,y\n")
+    csv = meng.sql("SELECT sum(a) AS s FROM read_csv('obs/c.csv')")
+    assert csv.collect()[0].s == 3
+    assert _fs(mock_root).ops["spark_path"] >= 4

@@ -337,3 +337,42 @@ def test_ns_timestamp_parquet_fails_loudly_without_nanos_as_long(
             tabular.read_parquet(spark, [path]).collect()
     finally:
         spark.conf.set(key, before)
+
+
+def test_listing_job_runs_one_task_per_core(spark, tmp_path):
+    """A collection above Spark's discovery threshold (32 paths) is
+    listed in one job of at most defaultParallelism tasks, not one task
+    per file, and every file's rows are read."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    cores = sc.defaultParallelism
+    nfiles = max(64, 2 * cores)
+    many = tmp_path / "many"
+    many.mkdir()
+    for i in range(nfiles):
+        pq.write_table(pa.table({"id": pa.array([i] * (i % 3 + 1))}),
+                       str(many / f"f{i:05d}.parquet"))
+    want = sum(pq.read_metadata(str(p)).num_rows for p in many.iterdir())
+
+    eng = Engine(spark, datasets_root=str(tmp_path))
+    gid = f"listing-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(gid, "listing probe")
+    try:
+        df = eng.resolve_from({"parquet": {"paths": ["many/*.parquet"]}})
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    deadline = time.time() + 10  # job status reaches the tracker async
+    while time.time() < deadline:
+        jobs = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(gid)]
+        if jobs and all(j is not None and j.status == "SUCCEEDED"
+                        for j in jobs):
+            break
+        time.sleep(0.05)
+    assert jobs, "no listing job ran for the collection"
+    tasks = [tracker.getStageInfo(s).numTasks
+             for j in jobs for s in j.stageIds]
+    assert tasks and max(tasks) <= cores, tasks
+    assert df.count() == want
