@@ -30,15 +30,18 @@ super-user); ``auth=True`` starts the session as the named user (or
 anonymous read-only), and ``connect_as``/``as_anonymous``/``whoami``
 switch identities per the ``Connection`` stubs.
 
-Streaming note: ``Relation.record_batch()`` returns a
-``pyarrow.RecordBatchReader`` fed by executor-spooled batches
-(``outputs.iter_arrow_batches``) — memory-bounded like the reference's
-``fetch_record_batch``; ``arrow()``/``fetchall()`` materialize, as they
-do in the reference.
+Every terminal (fetch, ``arrow()``, ``record_batch()``, ``to_*``)
+executes through one ``beacon_spark.engine.Run`` as the connection's
+user, so it records one ``beacon.system.query_metrics`` row like any
+server surface. ``Relation.record_batch()`` returns a
+``pyarrow.RecordBatchReader`` fed by executor-spooled batches —
+memory-bounded like the reference's ``fetch_record_batch``;
+``arrow()``/``fetchall()`` materialize, as they do in the reference.
 """
 
 from __future__ import annotations
 
+import json
 import os
 from typing import Any
 
@@ -144,97 +147,13 @@ def engine_version() -> str:
     return VERSION
 
 
-# ------------------------------------------------------------- Result
-
-class Result:
-    """Materialized statement result (the reference's ``Result``)."""
-
-    def __init__(self, df):
-        self._df = df
-        self._rows: list[tuple] | None = None
-        self._cursor = 0
-
-    # lazy single materialization; every fetch shares it
-    def _materialize(self) -> list[tuple]:
-        if self._rows is None:
-            try:
-                self._rows = [tuple(r) for r in self._df.collect()]
-            except Exception as e:  # pragma: no cover - passthrough
-                raise _wrap_error(e) from e
-        return self._rows
-
-    @property
-    def columns(self) -> list[str]:
-        return list(self._df.columns)
-
-    @property
-    def types(self) -> list[str]:
-        return [f.dataType.simpleString() for f in self._df.schema.fields]
-
-    @property
-    def description(self):
-        return [
-            (f.name, f.dataType.simpleString(), None, None, None, None,
-             f.nullable)
-            for f in self._df.schema.fields
-        ]
-
-    @property
-    def rowcount(self) -> int:
-        return len(self._materialize())
-
-    def __len__(self) -> int:
-        return self.rowcount
-
-    def fetchone(self):
-        rows = self._materialize()
-        if self._cursor >= len(rows):
-            return None
-        row = rows[self._cursor]
-        self._cursor += 1
-        return row
-
-    def fetchmany(self, size: int = 1):
-        rows = self._materialize()
-        out = rows[self._cursor:self._cursor + size]
-        self._cursor += len(out)
-        return out
-
-    def fetchall(self):
-        rows = self._materialize()
-        out = rows[self._cursor:]
-        self._cursor = len(rows)
-        return out
-
-    def arrow(self):
-        import pyarrow as pa
-
-        from beacon_spark.outputs import arrow_schema_of, iter_arrow_batches
-
-        schema = arrow_schema_of(self._df)
-        # the spool may yield an uncast batch on cast-unfriendly schemas
-        # (iter_arrow_batches' fallback) — align like record_batch does
-        return pa.Table.from_batches(
-            (b if b.schema == schema else b.cast(schema)
-             for b in iter_arrow_batches(self._df)),
-            schema=schema,
-        )
-
-    def df(self):
-        return self.arrow().to_pandas()
-
-    fetchdf = df
-
-    def __arrow_c_stream__(self, requested_schema=None):
-        return self.arrow().__arrow_c_stream__(requested_schema)
-
-
 # ----------------------------------------------------------- Relation
 
 class Relation:
     """A lazily-composed query (the reference's ``Relation``): nothing
     executes until a terminal method pulls rows/batches or writes a
-    file."""
+    file. Each terminal executes through one
+    :class:`beacon_spark.engine.Run` as the connection's user."""
 
     def __init__(self, conn: "Connection", df, sql_text: str):
         self._conn = conn
@@ -243,43 +162,36 @@ class Relation:
 
     # ------------------------------------------------ terminal: fetch
 
-    def fetchone(self):
-        row = self._df.limit(1).collect()
-        return tuple(row[0]) if row else None
+    def _run(self, df=None):
+        from beacon_spark.engine import Run
 
-    def fetchmany(self, size: int = 1):
-        return [tuple(r) for r in self._df.limit(size).collect()]
+        return Run(self._conn.engine, self._df if df is None else df,
+                   self._sql, self._conn._user)
 
-    def _note_metrics(self, rows: int | None, t0: float) -> None:
-        # the embedded runtime records completed queries too
-        # (query_metrics_store.rs: "every query that runs to completion")
-        import time
-        import uuid
-
-        self._conn.engine.record_query_metrics(
-            query_id=str(uuid.uuid4()), query=self._sql or "",
-            username=self._conn._user, result_num_rows=rows,
-            execution_time_ms=int((time.perf_counter() - t0) * 1000),
-        )
-
-    def fetchall(self):
-        import time
-
-        t0 = time.perf_counter()
+    def _tuples(self, df=None) -> list[tuple]:
         try:
-            out = [tuple(r) for r in self._df.collect()]
+            return [tuple(r) for r in self._run(df).rows()]
         except Exception as e:
             raise _wrap_error(e) from e
-        self._note_metrics(len(out), t0)
-        return out
+
+    def fetchone(self):
+        rows = self._tuples(self._df.limit(1))
+        return rows[0] if rows else None
+
+    def fetchmany(self, size: int = 1):
+        return self._tuples(self._df.limit(size))
+
+    def fetchall(self):
+        return self._tuples()
 
     def arrow(self):
-        import time
+        import pyarrow as pa
 
-        t0 = time.perf_counter()
-        tbl = Result(self._df).arrow()
-        self._note_metrics(tbl.num_rows, t0)
-        return tbl
+        run = self._run()
+        try:
+            return pa.Table.from_batches(run.batches(), schema=run.schema)
+        except Exception as e:
+            raise _wrap_error(e) from e
 
     fetch_arrow_table = arrow
     to_arrow_table = arrow
@@ -296,16 +208,10 @@ class Relation:
         ``fetch_record_batch`` contract)."""
         import pyarrow as pa
 
-        from beacon_spark.outputs import arrow_schema_of, iter_arrow_batches
-
-        schema = arrow_schema_of(self._df)
+        run = self._run()
         kwargs = {} if batch_size is None else {"max_chunksize": batch_size}
-
-        def gen():
-            for b in iter_arrow_batches(self._df, **kwargs):
-                yield b if b.schema == schema else b.cast(schema)
-
-        return pa.RecordBatchReader.from_batches(schema, gen())
+        return pa.RecordBatchReader.from_batches(
+            run.schema, run.batches(**kwargs))
 
     fetch_record_batch = record_batch
     fetch_arrow_reader = record_batch
@@ -316,10 +222,8 @@ class Relation:
     # ------------------------------------------------ terminal: sinks
 
     def _write(self, fmt: str, path: str, **options) -> None:
-        from beacon_spark.outputs import write_output
-
         try:
-            write_output(self._df, fmt, path, **options)
+            self._run().write(fmt, path, **options)
         except Exception as e:
             raise _wrap_error(e) from e
 
@@ -414,6 +318,59 @@ class Relation:
         return self._conn.table(name)
 
 
+# ------------------------------------------------------------- Result
+
+class Result(Relation):
+    """Materialized statement result (the reference's ``Result``): a
+    relation whose fetches share one materialization behind a cursor."""
+
+    def __init__(self, conn: "Connection", df, sql_text: str):
+        super().__init__(conn, df, sql_text)
+        self._rows: list[tuple] | None = None
+        self._cursor = 0
+
+    # lazy single materialization; every fetch shares it
+    def _materialize(self) -> list[tuple]:
+        if self._rows is None:
+            self._rows = self._tuples()
+        return self._rows
+
+    @property
+    def description(self):
+        return [
+            (f.name, f.dataType.simpleString(), None, None, None, None,
+             f.nullable)
+            for f in self._df.schema.fields
+        ]
+
+    @property
+    def rowcount(self) -> int:
+        return len(self._materialize())
+
+    def __len__(self) -> int:
+        return self.rowcount
+
+    def fetchone(self):
+        rows = self._materialize()
+        if self._cursor >= len(rows):
+            return None
+        row = rows[self._cursor]
+        self._cursor += 1
+        return row
+
+    def fetchmany(self, size: int = 1):
+        rows = self._materialize()
+        out = rows[self._cursor:self._cursor + size]
+        self._cursor += len(out)
+        return out
+
+    def fetchall(self):
+        rows = self._materialize()
+        out = rows[self._cursor:]
+        self._cursor = len(rows)
+        return out
+
+
 # --------------------------------------------------------- Connection
 
 class Connection:
@@ -465,7 +422,7 @@ class Connection:
             params=(parameters if isinstance(parameters, dict)
                     else list(parameters)) if parameters else None
         )
-        self._result = Result(df)
+        self._result = Result(self, df, query)
         return self
 
     def executemany(self, query: str, seq_of_parameters) -> "Connection":
@@ -666,9 +623,10 @@ class Connection:
                     "connection is read-only: statement rejected"
                 )
         try:
-            return Result(self.engine.query(spec, user=self._user))
+            df = self.engine.query(spec, user=self._user)
         except Exception as e:
             raise _wrap_error(e) from e
+        return Result(self, df, json.dumps(spec, default=str))
 
     # ------------------------------------------------------ identity
 

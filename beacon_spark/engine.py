@@ -16,10 +16,13 @@ from DataFusion statements (``parser/beacon_parser.rs:33-115``).
 
 from __future__ import annotations
 
+import contextlib
+import functools
 import json
 import logging
 import posixpath
 import re
+import time
 import uuid
 from typing import Any, NamedTuple
 
@@ -774,6 +777,87 @@ def _nd_pushdown(plan, nd_calls) -> dict:
     return out
 
 
+class Run:
+    """One statement's execution under every surface (HTTP, Flight,
+    FlightSQL, MCP, the embedded client) — the reference's single
+    ``Runtime::run_query`` path (runtime.rs:94-155). Built by
+    :meth:`Engine.run` or around a DataFrame compiled earlier; each
+    terminal (:meth:`batches`, :meth:`rows`, :meth:`write`) executes
+    once under ``limits`` (server/limits.py) and, on completion, records
+    one ``beacon.system.query_metrics`` row. A failed run records none."""
+
+    def __init__(self, engine, df: DataFrame, text: str,
+                 user: str | None = None, limits=None):
+        self.engine = engine
+        self.df = df
+        self.text = text
+        self.user = user
+        self.limits = limits
+        self.query_id = str(uuid.uuid4())
+        self._t0 = time.perf_counter()
+
+    @functools.cached_property
+    def schema(self):
+        """The Arrow schema of every batch (the plan does not run)."""
+        from beacon_spark.outputs import arrow_schema_of
+
+        return arrow_schema_of(self.df)
+
+    def _guard(self):
+        return (contextlib.nullcontext() if self.limits is None
+                else self.limits.time_guard(self.df.sparkSession))
+
+    def _record(self, rows: int | None) -> None:
+        try:
+            plan = self.df._jdf.queryExecution().executedPlan().toString()
+        except Exception as exc:  # the row still records, plan-less
+            _log.warning("query %s: no plan for node_metrics: %r",
+                         self.query_id, exc)
+            plan = None
+        self.engine.record_query_metrics(
+            query_id=self.query_id, query=self.text, username=self.user,
+            result_num_rows=rows,
+            execution_time_ms=int((time.perf_counter() - self._t0) * 1000),
+            node_metrics=plan,
+        )
+
+    def batches(self, max_chunksize: int = 1 << 15):
+        """Capped Arrow batches of :attr:`schema`, spooled one at a time
+        (``outputs.iter_arrow_batches``); a zero-row result ends with an
+        empty batch. Records when the batches run out."""
+        import pyarrow as pa
+
+        from beacon_spark import outputs
+
+        schema, rows = self.schema, 0
+        with self._guard():
+            batches = outputs.iter_arrow_batches(self.df, max_chunksize)
+            if self.limits is not None:
+                batches = self.limits.guard_batches(batches)
+            for b in batches:
+                rows += b.num_rows
+                yield b if b.schema == schema else b.cast(schema)
+            if not rows:
+                yield pa.RecordBatch.from_pylist([], schema=schema)
+        self._record(rows)
+
+    def rows(self) -> list:
+        """The result rows: capped row dicts under ``limits``
+        (``QueryLimits.collect_rows``), Spark ``Row`` tuples without."""
+        rows = (self.df.collect() if self.limits is None
+                else self.limits.collect_rows(self.df))
+        self._record(len(rows))
+        return rows
+
+    def write(self, fmt: str, path: str, **options) -> None:
+        """The result as a file (``outputs.write_output``)."""
+        from beacon_spark import outputs
+
+        with self._guard():
+            rows = outputs.write_output(self.df, fmt, path, **options)
+        self._record(rows)
+
+
 class Engine:
     def __init__(
         self,
@@ -810,9 +894,9 @@ class Engine:
         return self._metrics
 
     def record_query_metrics(self, **kw) -> None:
-        """Best-effort transport hook: engines without a catalog record
-        nothing, and a broken store is reported at WARNING — it must
-        never fail the query it is recording."""
+        """Best-effort hook for :meth:`Run._record`: engines without a
+        catalog record nothing, and a broken store is reported at
+        WARNING — it must never fail the query it is recording."""
         if self.catalog is None:
             return
         try:
@@ -821,6 +905,19 @@ class Engine:
             _log.warning("query-metrics record failed for %s: %s: %s",
                          kw.get("query_id"), type(exc).__name__, exc,
                          exc_info=True)
+
+    def run(self, statement: str | dict, *, params=None,
+            user: str | None = None, limits=None) -> Run:
+        """Compile SQL text (:meth:`sql`) or a JSON-DSL body
+        (:meth:`query`) into a :class:`Run` for a surface to drain.
+        DDL/DML execute here; their status frame is the result."""
+        if isinstance(statement, str):
+            df = self.sql(statement, params=params, user=user)
+            return Run(self, df, statement, user, limits)
+        if params is not None:
+            raise ValueError("params bind SQL placeholders, not a DSL body")
+        df = self.query(statement, user=user)
+        return Run(self, df, json.dumps(statement, default=str), user, limits)
 
     def table_names(self) -> list[str]:
         """All catalog-addressable table names (managed + external +

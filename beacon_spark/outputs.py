@@ -12,6 +12,10 @@ Two modes everywhere:
   - ``single=False`` (lake-scale): ``df.write.*`` — distributed, one file
     per partition; the right call on a 1000-executor cluster.
 
+Statement results reach this module through ``engine.Run``
+(``Run.batches`` → :func:`iter_arrow_batches`, ``Run.write`` →
+:func:`write_output`).
+
 NetCDF writing needs a netcdf library (absent here) — the re-gridding
 logic (rows → dense grid arrays) is pure numpy and tested; the final
 file-write is gated.
@@ -20,7 +24,9 @@ file-write is gated.
 from __future__ import annotations
 
 import contextlib
+import itertools
 import json
+import logging
 import os
 
 import numpy as np
@@ -28,6 +34,8 @@ import pyarrow as pa
 import pyarrow.ipc as pa_ipc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
+
+_log = logging.getLogger("beacon_spark.outputs")
 
 
 def arrow_schema_of(df: DataFrame) -> pa.Schema:
@@ -38,15 +46,33 @@ def arrow_schema_of(df: DataFrame) -> pa.Schema:
     return to_arrow_schema(df.schema)
 
 
+def _spool_blocker(dt) -> str | None:
+    """Name of the first type in ``dt`` the parquet spool cannot
+    round-trip, or None: Spark refuses to write CALENDAR INTERVAL and
+    empty structs (a DDL statement's zero-column result), and pyarrow
+    cannot read back the VARIANT logical type Spark writes."""
+    from pyspark.sql import types as T
+
+    if isinstance(dt, (T.VariantType, T.CalendarIntervalType)) or \
+            dt == T.StructType([]):
+        return dt.simpleString()
+    kids = ([f.dataType for f in dt.fields] if isinstance(dt, T.StructType)
+            else [dt.elementType] if isinstance(dt, T.ArrayType)
+            else [dt.keyType, dt.valueType] if isinstance(dt, T.MapType)
+            else [])
+    return next(filter(None, map(_spool_blocker, kids)), None)
+
+
 @contextlib.contextmanager
-def _parquet_spool(df: DataFrame):
+def _parquet_spool(df: DataFrame, site: str):
     """Executor-written parquet spool (the analog of the reference's
     per-partition RecordBatch streams, ``beacon-core/src/runtime.rs:
     159-246``): yields the part ``ParquetFile`` handles in partition
     order — which is result order (a sorted plan writes range-
-    partitioned parts) — or ``None`` when the schema is one parquet
-    cannot hold (VOID literal projections, intervals), signalling the
-    caller to fall back to a driver-side materialization. Any OTHER
+    partitioned parts) — or ``None``, logged at WARNING naming ``site``,
+    when the schema holds a type the spool cannot round-trip
+    (:func:`_spool_blocker`; NULL, array(NULL) and ANSI intervals spool
+    fine): the caller falls back to a driver-side materialization. A
     write failure surfaces: a storage/permission error must not silently
     reintroduce the unbounded driver collect the spool exists to remove.
 
@@ -58,18 +84,17 @@ def _parquet_spool(df: DataFrame):
     import shutil
     import tempfile
 
+    blocker = _spool_blocker(df.schema)
+    if blocker is not None:
+        _log.warning("%s: a %s result cannot be spooled through parquet; "
+                     "falling back to a driver-side collect", site, blocker)
+        yield None
+        return
     spool = tempfile.mkdtemp(
         prefix="beacon_spool_", dir=os.environ.get("BEACON_SPOOL_DIR")
     )
     try:
-        try:
-            df.write.mode("overwrite").parquet(spool)
-        except Exception as e:
-            msg = str(e).lower()
-            if not ("does not support" in msg or "unsupported" in msg):
-                raise
-            yield None
-            return
+        df.write.mode("overwrite").parquet(spool)
         # numeric part index, not lexicographic: past 100k partitions
         # Spark's part numbering grows a digit ("part-100000" sorts
         # BEFORE "part-99999" as text) and a sorted export would
@@ -91,32 +116,28 @@ def iter_arrow_batches(df: DataFrame, max_chunksize: int = 1 << 15):
 
     ``df.toArrow()`` is a full driver collect; this instead streams the
     executor-written parquet spool back file-by-file, so the driver
-    holds one batch at a time — never the result. Batches are cast back
-    to the DataFrame's Arrow schema so the parquet hop is
-    type-invisible. Unspoolable schemas fall back to a driver-side
-    collect — degenerate schemas, not data paths.
+    holds one batch at a time — never the result. The spool is written
+    under positional column names (Spark refuses duplicate names, which
+    Arrow allows) and each batch is rebuilt against the DataFrame's
+    Arrow schema, so the parquet hop is type- and name-invisible.
+    Unspoolable schemas fall back to a driver-side collect.
     """
     target = arrow_schema_of(df)
-    with _parquet_spool(df) as pfs:
+    positional = df.toDF(*(f"_c{i}" for i in range(len(df.columns))))
+    with _parquet_spool(positional, "iter_arrow_batches") as pfs:
         if pfs is None:
-            import sys
-
-            print(
-                "warning: result schema not spoolable; falling back to "
-                "a driver-side collect",
-                file=sys.stderr,
-            )
             yield from df.toArrow().to_batches(max_chunksize=max_chunksize)
             return
         for pf in pfs:
             for batch in pf.iter_batches(batch_size=max_chunksize):
+                batch = batch.rename_columns(target.names)
                 try:
                     yield batch.cast(target)
                 except Exception:
                     yield batch
 
 
-def write_csv(df: DataFrame, path: str, single: bool = True) -> None:
+def write_csv(df: DataFrame, path: str, single: bool = True) -> int | None:
     """csv output. ``single=True`` batch-streams Arrow batches through
     pyarrow's C++ CSV writer (the reference's COPY-TO stream,
     runtime.rs:192-246) — bounded driver memory AND vectorized encode;
@@ -128,13 +149,13 @@ def write_csv(df: DataFrame, path: str, single: bool = True) -> None:
         # default backslash-escaping is its own dialect
         (df.write.mode("overwrite").option("header", "true")
          .option("escape", '"').csv(path))
-        return
+        return None
     import csv as _csv
     import io
 
     from pyarrow import csv as pa_csv
 
-    first, schema, rest = _first_and_schema(df)
+    schema, batches = _schema_and_batches(df)
 
     def _arrow_csv_encodable(t: pa.DataType) -> bool:
         # binary passes CSVWriter CONSTRUCTION but fails on the first
@@ -151,8 +172,7 @@ def write_csv(df: DataFrame, path: str, single: bool = True) -> None:
         except pa.ArrowException:
             probe_ok = False
     if not probe_ok:
-        _write_csv_rows(df, path, first, rest)
-        return
+        return _write_csv_rows(df, path, batches)
     # MINIMAL quoting throughout (ADVICE r7): pyarrow's CSV writer
     # always quotes string cells — even its "needed" style means
     # "rendering COULD contain quotes", i.e. every string — but the
@@ -164,12 +184,13 @@ def write_csv(df: DataFrame, path: str, single: bool = True) -> None:
     # that need it, join element-wise — all C++-side, no per-row Python.
     hdr = io.StringIO()
     _csv.writer(hdr, lineterminator="\n").writerow(df.columns)
+    rows = 0
     with open(path, "wb") as f:
         f.write(hdr.getvalue().encode("utf-8"))
-        if first is not None:
-            f.write(_render_csv_batch(first))
-        for batch in rest:
+        for batch in batches:
             f.write(_render_csv_batch(batch))
+            rows += batch.num_rows
+    return rows
 
 
 def _render_csv_batch(batch: pa.RecordBatch) -> bytes:
@@ -197,77 +218,56 @@ def _render_csv_batch(batch: pa.RecordBatch) -> bytes:
     return (joined + "\n").encode("utf-8")
 
 
-def _write_csv_rows(df: DataFrame, path: str, first, rest) -> None:
+def _write_csv_rows(df: DataFrame, path: str, batches) -> int:
     """Row-loop fallback for schemas Arrow CSV can't encode — renders
     python values like the pre-Arrow writer did (None → empty field)."""
     import csv as _csv
 
-    def batches():
-        if first is not None:
-            yield first
-        yield from rest
-
+    rows = 0
     with open(path, "w", newline="", encoding="utf-8") as f:
         w = _csv.writer(f)
         w.writerow(df.columns)
-        for batch in batches():
+        for batch in batches:
             for row in zip(*(c.to_pylist() for c in batch.columns)):
                 w.writerow(["" if v is None else v for v in row])
+            rows += batch.num_rows
+    return rows
 
 
-def guarded_arrow_stream(df: DataFrame, limits):
-    """(schema, guarded batch generator) — the ONE transport streaming
-    core (Flight do_get, FlightSQL streams, HTTP chunked responses):
-    executor-spooled batches, row/byte caps, the time-guard watchdog,
-    schema-aligning casts, and an explicit empty batch for zero-row
-    results so every consumer sees at least the schema."""
-    import pyarrow as _pa
-
-    schema = arrow_schema_of(df)
-
-    def gen():
-        with limits.time_guard(df.sparkSession):
-            yielded = False
-            for b in limits.guard_batches(iter_arrow_batches(df)):
-                yield b if b.schema == schema else b.cast(schema)
-                yielded = True
-            if not yielded:
-                yield _pa.RecordBatch.from_pylist([], schema=schema)
-
-    return schema, gen()
-
-
-def _write_batches(writer, first, rest) -> None:
-    if first is not None:
-        writer.write_batch(first)
-    for batch in rest:
+def _write_batches(writer, batches) -> int:
+    """Write every batch; returns the row count."""
+    rows = 0
+    for batch in batches:
         writer.write_batch(batch)
+        rows += batch.num_rows
+    return rows
 
 
-def _first_and_schema(df: DataFrame):
-    """(first batch | None, schema) for a batch-streamed write: the
-    schema comes from the first real batch (self-consistent with the
-    rest of the stream even on the cast-fallback path), or from the
-    Spark schema when the result is empty."""
+def _schema_and_batches(df: DataFrame):
+    """(schema, batches) for a batch-streamed write: the schema comes
+    from the first real batch (self-consistent with the rest of the
+    stream even on the cast-fallback path), or from the Spark schema
+    when the result is empty."""
     it = iter_arrow_batches(df)
     first = next(it, None)
-    schema = first.schema if first is not None else arrow_schema_of(df)
-    return first, schema, it
+    if first is None:
+        return arrow_schema_of(df), iter(())
+    return first.schema, itertools.chain([first], it)
 
 
-def write_parquet(df: DataFrame, path: str, single: bool = True) -> None:
+def write_parquet(df: DataFrame, path: str, single: bool = True) -> int | None:
     if single:
         # batch-streamed single file: bounded driver memory even for a
         # 100 GB export (the reference streams its COPY the same way,
         # stream_coalescer.rs:9-16)
-        first, schema, rest = _first_and_schema(df)
+        schema, batches = _schema_and_batches(df)
         with pq.ParquetWriter(path, schema, compression="zstd") as w:
-            _write_batches(w, first, rest)
-    else:
-        df.write.mode("overwrite").parquet(path)
+            return _write_batches(w, batches)
+    df.write.mode("overwrite").parquet(path)
+    return None
 
 
-def write_arrow(df: DataFrame, path: str, single: bool = True) -> None:
+def write_arrow(df: DataFrame, path: str, single: bool = True) -> int:
     """ipc/arrow output (zstd Arrow IPC is the reference's default wire
     format, query/mod.rs:26-27) — batch-streamed, never a full collect.
     Arrow IPC is the DOWNLOAD format: always one streamed file; Spark
@@ -280,14 +280,14 @@ def write_arrow(df: DataFrame, path: str, single: bool = True) -> None:
             "use parquet for distributed multi-file export"
         )
     options = pa_ipc.IpcWriteOptions(compression="zstd")
-    first, schema, rest = _first_and_schema(df)
+    schema, batches = _schema_and_batches(df)
     with pa_ipc.new_file(path, schema, options=options) as w:
-        _write_batches(w, first, rest)
+        return _write_batches(w, batches)
 
 
 def write_geoparquet(
     df: DataFrame, path: str, longitude_column: str, latitude_column: str
-) -> None:
+) -> int:
     """GeoParquet output (output.rs:113-119): parquet + a ``geo`` file
     metadata block describing a WKB point column built from lon/lat."""
     import struct
@@ -323,12 +323,12 @@ def write_geoparquet(
             "geometry": {"encoding": "WKB", "geometry_types": ["Point"]}
         },
     }
-    first, schema, rest = _first_and_schema(out)
+    schema, batches = _schema_and_batches(out)
     schema = schema.with_metadata(
         {**(schema.metadata or {}), b"geo": json.dumps(geo_meta).encode()}
     )
     with pq.ParquetWriter(path, schema, compression="zstd") as w:
-        _write_batches(w, first, rest)
+        return _write_batches(w, batches)
 
 
 # ------------------------------------------------------------ netcdf
@@ -530,10 +530,11 @@ def _write_netcdf_flat_streamed(
     exact nullability (an int column with nulls becomes a NaN-filled
     double, exactly like the in-memory path), take every string width
     from one column-pruned pass, then stream every variable's values
-    sequentially through FlatStreamWriter. Schemas parquet can't hold
-    (VOID, intervals) fall back to the materialized writer."""
+    sequentially through FlatStreamWriter. Schemas the spool cannot
+    hold (VARIANT, CALENDAR INTERVAL) fall back to the materialized
+    writer."""
     target = arrow_schema_of(df)
-    with _parquet_spool(df) as pfs:
+    with _parquet_spool(df, "_write_netcdf_flat_streamed") as pfs:
         if pfs is None:
             _write_netcdf_table(df.toArrow(), path)
             return
@@ -716,12 +717,12 @@ def _write_netcdf4_flat_streamed(
     holds the result. Unlike NetCDF-3, HDF5 holds int64/uint64 natively,
     so no stats-gated narrowing is needed — only nullability matters
     (nulls choose the NaN-double encoding, like every other writer).
-    Schemas parquet can't spool (VOID, intervals) fall back to the
-    materialized writer, which those degenerate schemas keep tiny."""
+    Schemas the spool cannot hold (VARIANT, CALENDAR INTERVAL) fall back
+    to the materialized writer."""
     from beacon_spark.sources.hdf5write import Nc4StreamWriter
 
     target = arrow_schema_of(df)
-    with _parquet_spool(df) as pfs:
+    with _parquet_spool(df, "_write_netcdf4_flat_streamed") as pfs:
         if pfs is None:
             _write_netcdf_table(df.toArrow(), path, None, flavor="netcdf4")
             return
@@ -852,7 +853,7 @@ def _write_netcdf_nd_streamed(
         # grid, which for a billion-cell export was a driver OOM the
         # output file itself never needed
         df = df.orderBy(*dimension_columns)
-    with _parquet_spool(df) as pfs:
+    with _parquet_spool(df, "_write_netcdf_nd_streamed") as pfs:
         if pfs is None:
             _write_netcdf_table(df.toArrow(), path, dimension_columns,
                                 flavor=flavor)
@@ -1106,8 +1107,10 @@ def _write_netcdf_nd_streamed(
 # ------------------------------------------------------------ dispatcher
 
 
-def write_output(df: DataFrame, fmt: str, path: str, **options) -> None:
-    """The ``output.format`` dispatcher (output.rs:89-120).
+def write_output(df: DataFrame, fmt: str, path: str, **options) -> int | None:
+    """The ``output.format`` dispatcher (output.rs:89-120). Returns the
+    rows written where the writer counts them (the batch-streamed
+    csv/arrow/parquet/geoparquet files), else None.
 
     ``path`` may be an object-store URI: single-file outputs are written
     to a local temp file (batch-streamed, bounded memory) and chunk-
@@ -1126,19 +1129,23 @@ def write_output(df: DataFrame, fmt: str, path: str, **options) -> None:
             fd, tmp = tempfile.mkstemp(prefix="beacon_out_", suffix=suffix)
             _os.close(fd)
             try:
-                write_output(df, fmt, tmp, **options)
+                rows = write_output(df, fmt, tmp, **options)
                 bs.upload_file(tmp, path)
             finally:
                 _os.unlink(tmp)
-            return
+            return rows
     fmt = fmt.lower()
     if fmt == "csv":
-        write_csv(df, path, options.get("single", True))
-    elif fmt in ("ipc", "arrow"):
-        write_arrow(df, path, options.get("single", True))
-    elif fmt == "parquet":
-        write_parquet(df, path, options.get("single", True))
-    elif fmt in ("hdf5", "h5", "netcdf4"):
+        return write_csv(df, path, options.get("single", True))
+    if fmt in ("ipc", "arrow"):
+        return write_arrow(df, path, options.get("single", True))
+    if fmt == "parquet":
+        return write_parquet(df, path, options.get("single", True))
+    if fmt == "geoparquet":
+        return write_geoparquet(
+            df, path, options["longitude_column"], options["latitude_column"]
+        )
+    if fmt in ("hdf5", "h5", "netcdf4"):
         # the reference aliases hdf5/h5 to netcdf because it writes
         # NetCDF-4, which IS an HDF5 container (output.rs:99-101).
         # Since r12 this engine writes real NetCDF-4 too: an HDF5 file
@@ -1166,10 +1173,6 @@ def write_output(df: DataFrame, fmt: str, path: str, **options) -> None:
         write_netcdf(df, path)
     elif fmt == "ndnetcdf":
         write_netcdf(df, path, options["dimension_columns"])
-    elif fmt == "geoparquet":
-        write_geoparquet(
-            df, path, options["longitude_column"], options["latitude_column"]
-        )
     elif fmt == "odv":
         from beacon_spark.sources.odv import write_odv
 

@@ -25,23 +25,27 @@ pyarrow wheel ships Flight but not the Flight SQL extension):
     ``ATTACH … WITH ('token' …)``, parser/statement.rs:60).
 
 Scale: federation ships QUERIES in and RESULTS out — table inputs never
-cross the wire. Results stream executor→driver→wire one Arrow batch at
-a time (``outputs.iter_arrow_batches``; the reference streams its
-RecordBatch channels the same way, ``beacon-core/src/runtime.rs:
-159-246``), guarded by per-query row/byte caps: an over-limit stream
-fails with a clean FlightError in the gRPC trailers, never a driver
-OOM.
+cross the wire. Statements run through ``Engine.run``, the runner every
+surface shares (limits plus one ``beacon.system.query_metrics`` row per
+completed statement); ``do_get`` is a ``GeneratorStream`` over
+``Run.batches``, executor→driver→wire one Arrow batch at a time (the
+reference streams its RecordBatch channels the same way,
+``beacon-core/src/runtime.rs:159-246``). An over-limit stream fails with
+a clean FlightError in the gRPC trailers, never a driver OOM.
 """
 
 from __future__ import annotations
 
 import json
+import logging
 import threading
 
 import pyarrow as pa
 import pyarrow.flight as fl
 
 __all__ = ["BeaconFlightServer"]
+
+_log = logging.getLogger("beacon_spark.server.flight")
 
 
 class _Identity(fl.ServerMiddleware):
@@ -162,20 +166,17 @@ class BeaconFlightServer(fl.FlightServerBase):
         return mw.user
 
     def do_get(self, context, ticket: fl.Ticket):
-        from beacon_spark.outputs import guarded_arrow_stream
-
         # FlightSQL tickets (Any-wrapped protobuf) first; legacy JSON else
         stream = self._fsql.do_get(ticket.ticket, self._user(context))
         if stream is not None:
             return stream
         cmd = json.loads(ticket.ticket.decode())
-        df = self.engine.sql(
-            cmd["sql"], params=cmd.get("params"), user=self._user(context)
-        )
+        run = self.engine.run(cmd["sql"], params=cmd.get("params"),
+                              user=self._user(context), limits=self._limits)
         # DDL/DML status frames and SELECT results ride the same path;
         # the generator evaluates lazily so execution happens as the
         # stream is consumed, one batch in memory at a time
-        return fl.GeneratorStream(*guarded_arrow_stream(df, self._limits))
+        return fl.GeneratorStream(run.schema, run.batches())
 
     def get_flight_info(self, context, descriptor):
         from beacon_spark.server.guard import is_readonly_sql
@@ -249,11 +250,14 @@ class BeaconFlightServer(fl.FlightServerBase):
                 # CommandStatementUpdate drains the (empty) stream;
                 # CommandPreparedStatementQuery consumed the bound
                 # parameter batch inside the handler. Either way the
-                # result rides the app metadata.
+                # result rides the app metadata, so a failed drain is
+                # reported, not raised.
                 try:
                     reader.read_all()
-                except Exception:
-                    pass
+                except Exception as exc:
+                    _log.warning("do_put: draining the FlightSQL update "
+                                 "stream failed: %s: %s",
+                                 type(exc).__name__, exc)
                 _n, meta = upd
                 writer.write(pa.py_buffer(meta))
                 return

@@ -266,10 +266,9 @@ class FlightSqlHandler:
     def _sql_stream(self, sql: str, user, params=None):
         import pyarrow.flight as fl
 
-        from beacon_spark.outputs import guarded_arrow_stream
-
-        df = self.engine.sql(sql, params=params, user=user)
-        return fl.GeneratorStream(*guarded_arrow_stream(df, self.limits))
+        run = self.engine.run(sql, params=params, user=user,
+                              limits=self.limits)
+        return fl.GeneratorStream(run.schema, run.batches())
 
     def _statement_sql(self, kind: str, payload: bytes):
         """→ (sql, bound-params | None), or (None, None) when the
@@ -495,18 +494,15 @@ class FlightSqlHandler:
                 f"unsupported FlightSQL do_put command {kind!r}"
             )
         sql = decode_fields(payload)[1][0].decode()
-        result = self.engine.sql(sql, user=user)
+        run = self.engine.run(sql, user=user, limits=self.limits)
         # the engine returns a one-row STATUS frame for DML, not the
         # affected rows — reporting its count() would claim "1 row" for
         # every statement. The FlightSQL spec's value for "unknown" is
         # -1; use a real count only when the result carries one.
+        rows = run.rows()
         n = -1
-        try:
-            rows = result.collect()
-            if len(rows) == 1 and "rows" in result.columns:
-                n = int(rows[0]["rows"])
-        except Exception:
-            pass
+        if len(rows) == 1 and "rows" in run.df.columns:
+            n = int(rows[0]["rows"])
         return n, _field_varint(1, n)
 
     def action(self, action_type: str, body: bytes, user):

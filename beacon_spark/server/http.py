@@ -27,12 +27,14 @@ The Spark analog of the reference's axum client API
     contract as the Flight transport) and/or HTTP Basic credentials
     resolving to an RBAC user (auth.py) whose statements run gated.
 
-Queries in, results out; inputs never cross the wire. Results STREAM:
-Arrow responses are chunk-streamed one batch at a time
-(``outputs.iter_arrow_batches`` — executor-spooled, bounded driver
-memory), file downloads are written batch-streamed then chunk-copied
-to the socket, and JSON responses are row/byte/time-capped
-(``server/limits.py``) so one request can never OOM the server.
+Queries in, results out; inputs never cross the wire. A statement runs
+through ``Engine.run`` — the one runner under every surface, which
+applies the row/byte/time limits (``server/limits.py``) and records the
+query's ``beacon.system.query_metrics`` row — and this module is its
+codec: Arrow responses chunk-stream ``Run.batches`` one executor-spooled
+batch at a time, file downloads are written by ``Run.write`` and then
+chunk-copied to the socket, and JSON responses are ``Run.rows``, so one
+request can never OOM the server.
 """
 
 from __future__ import annotations
@@ -519,16 +521,10 @@ class BeaconHttpServer:
                         except _auth_mod.AuthError as e:
                             self._deny(403, str(e))
                             return
+                    # the persisted row Run recorded; a store failure
+                    # answers 400 (Runtime::get_query_metrics, runtime.rs:429)
                     qid = path.rsplit("/", 1)[1]
-                    metrics = outer._metrics.get(qid)
-                    if metrics is None and outer.engine.catalog is not None:
-                        # evicted from the ring: the persisted
-                        # system.query_metrics row survives restarts
-                        # (Runtime::get_query_metrics, runtime.rs:429-435)
-                        try:
-                            metrics = outer.engine.metrics.read(qid)
-                        except Exception:
-                            metrics = None
+                    metrics = outer.engine.metrics.read(qid)
                     if metrics is None:
                         self._deny(404, f"no metrics for query {qid!r}")
                     else:
@@ -650,53 +646,48 @@ class BeaconHttpServer:
                             "(BEACON_SPARK_ENABLE_SQL=false); use the "
                             "JSON query DSL"
                         )
+                    ident = getattr(self, "_ident", None)
                     if "sql" in req:
-                        df = outer.engine.sql(
+                        run = outer.engine.run(
                             req["sql"], params=req.get("params"),
-                            user=getattr(self, "_ident", None),
-                        )
+                            user=ident, limits=outer._limits)
                     else:
                         # the JSON query DSL rides the same endpoint
                         # (query.rs: InnerQuery::Sql | Json); "format"/
                         # "output" are transport-level, not part of the DSL
                         body = req.get("query", req)
-                        df = outer.engine.query(
+                        run = outer.engine.run(
                             {k: v for k, v in body.items()
                              if k not in ("format", "output")},
-                            user=getattr(self, "_ident", None),
-                        )
-                    import time as _time
-                    import uuid as _uuid
-
-                    qid = str(_uuid.uuid4())
-                    t0 = _time.perf_counter()
-                    hdr = {"x-beacon-query-id": qid}
-                    # the row beacon.system.query_metrics will persist
-                    self._qtext = req.get("sql") or json.dumps(
-                        req.get("query", req), default=str
-                    )
+                            user=ident, limits=outer._limits)
+                    hdr = {"x-beacon-query-id": run.query_id}
                     if output:
                         # file-output formats come back as a download
                         # (query.rs:20-44: CSV/Parquet/Arrow/ODV/NetCDF/
                         # GeoParquet) — written batch-streamed to a temp
                         # file, then copied to the socket in chunks: the
                         # result is never held in driver memory
-                        with outer._limits.time_guard(outer.engine.spark):
-                            path, ctype = outer._materialize(df, output)
-                        try:
-                            outer._record(qid, df, None, t0, getattr(self, '_qtext', None), getattr(self, '_ident', None))
-                            self._send_file(path, ctype, hdr)
-                        finally:
-                            import os as _os
+                        import os as _os
+                        import tempfile
 
+                        fmt = output.get("format", "csv").lower()
+                        fd, path = tempfile.mkstemp(prefix="beacon_dl_",
+                                                    suffix=f".{fmt}")
+                        _os.close(fd)
+                        try:
+                            run.write(fmt, path, **{
+                                k: v for k, v in output.items()
+                                if k != "format"})
+                            self._send_file(path, outer._OUTPUT_MIME.get(
+                                fmt, "application/octet-stream"), hdr)
+                        finally:
                             _os.unlink(path)
                         return
                     if req.get("format") == "json":
                         # row/byte/time-capped (the reference's
                         # resource_limits contract): over-limit is a clean
                         # 400, never an unbounded driver collect
-                        rows = outer._limits.collect_rows(df)
-                        outer._record(qid, df, len(rows), t0, getattr(self, '_qtext', None), getattr(self, '_ident', None))
+                        rows = run.rows()
                         # default=str: timestamp/date/Decimal/binary columns
                         # are common result types and json.dumps has no
                         # native encoding for them (the MCP paths already
@@ -706,7 +697,7 @@ class BeaconHttpServer:
                             "application/json", hdr,
                         )
                         return
-                    self._send_arrow_stream(df, qid, t0, hdr)
+                    self._send_arrow_stream(run, hdr)
                 except Exception as e:
                     if getattr(self, "_response_started", False):
                         # a cap/time trip mid-chunked-stream: the status
@@ -716,21 +707,22 @@ class BeaconHttpServer:
                     else:
                         self._deny(400, str(e))
 
-            def _send_arrow_stream(self, df, qid, t0, hdr) -> None:
-                """Arrow IPC response, chunk-streamed (Transfer-Encoding:
-                chunked): one batch in driver memory at a time, caps
-                enforced per batch. A cap/time trip BEFORE the first
+            def _send_arrow_stream(self, run, hdr) -> None:
+                """``run.batches()`` as Arrow IPC, chunk-streamed (Transfer-
+                Encoding: chunked): one batch in driver memory at a time,
+                caps enforced per batch. A cap/time trip BEFORE the first
                 chunk is a clean 400; mid-stream it aborts the chunked
                 stream (the client sees a truncated-stream error — the
                 standard failure shape for streamed HTTP)."""
+                import itertools as _it
+
                 import pyarrow as pa
 
-                from beacon_spark.outputs import guarded_arrow_stream
-
-                schema, batches = guarded_arrow_stream(df, outer._limits)
+                batches = run.batches()
                 # pull the first batch BEFORE committing the status line:
-                # a cap/time trip on it stays a clean 400
-                first = next(batches, None)
+                # a cap/time trip on it stays a clean 400 (a zero-row
+                # result still yields one empty batch)
+                first = next(batches)
                 # chunked Transfer-Encoding is an HTTP/1.1 construct: a
                 # 1.0 client would parse the chunk-size lines as body
                 # bytes and corrupt the Arrow stream. For 1.0 requests,
@@ -760,9 +752,6 @@ class BeaconHttpServer:
                         self.wfile.write(data)
 
                 sink = io.BytesIO()
-                rows = 0
-                import itertools as _it
-
                 # the reference's default response is a ZSTD-compressed
                 # Arrow IPC stream (query.rs:23,36 — IPC-level buffer
                 # compression, transparent to any Arrow reader). Clients
@@ -776,25 +765,20 @@ class BeaconHttpServer:
                             else pa.ipc.IpcWriteOptions(compression="zstd"))
                 except Exception:  # codec not built into this pyarrow
                     opts = pa.ipc.IpcWriteOptions()
-                with pa.ipc.new_stream(sink, schema, options=opts) as w:
-                    for batch in _it.chain(
-                        [first] if first is not None else [], batches
-                    ):
+                # Run records its metrics row when the batches run out,
+                # i.e. BEFORE the terminating chunk: a client that fetches
+                # /api/query/metrics/{id} the instant the body ends raced
+                # a post-EOF record and got a 404. A failing metrics
+                # store is logged, never raised
+                # (Engine.record_query_metrics), so it cannot truncate an
+                # otherwise-complete Arrow stream.
+                with pa.ipc.new_stream(sink, run.schema, options=opts) as w:
+                    for batch in _it.chain([first], batches):
                         w.write_batch(batch)
-                        rows += batch.num_rows
                         chunk(sink.getvalue())
                         sink.seek(0)
                         sink.truncate()
                 chunk(sink.getvalue())
-                # record BEFORE the terminating chunk: a client that
-                # fetches /api/query/metrics/{id} the instant the body
-                # ends raced the (post-EOF) record and got a 404. A
-                # failing metrics store is logged, never raised
-                # (Engine.record_query_metrics), so it cannot truncate
-                # an otherwise-complete Arrow stream.
-                outer._record(qid, df, rows, t0,
-                              getattr(self, '_qtext', None),
-                              getattr(self, '_ident', None))
                 if chunked:
                     self.wfile.write(b"0\r\n\r\n")
 
@@ -823,40 +807,6 @@ class BeaconHttpServer:
         self._httpd = ThreadingHTTPServer((host, port), Handler)
         self.port = self._httpd.server_address[1]
         self._thread: threading.Thread | None = None
-        # query metrics by id (GET /api/query/metrics/{query_id}; the
-        # reference retains these per query, api.rs:193), bounded ring
-        self._metrics: dict[str, dict] = {}
-
-    def _record(self, qid: str, df, rows, t0, query: str | None = None,
-                username: str | None = None) -> None:
-        import time as _time
-
-        try:
-            plan = df._jdf.queryExecution().executedPlan().toString()
-        except Exception:
-            plan = None
-        seconds = round(_time.perf_counter() - t0, 3)
-        self._metrics[qid] = {
-            "query_id": qid,
-            "rows": rows,
-            "seconds": seconds,
-            "plan": plan,
-        }
-        while len(self._metrics) > 256:  # bounded
-            try:
-                # concurrent handler threads may race on the same oldest
-                # key — a double-pop must not 400 a successful query
-                self._metrics.pop(next(iter(self._metrics)), None)
-            except (StopIteration, RuntimeError):
-                break
-        # persist into beacon.system.query_metrics (query_metrics_store.rs:
-        # every query that runs to completion writes one row)
-        self.engine.record_query_metrics(
-            query_id=qid, query=query or "", username=username,
-            result_num_rows=rows,
-            execution_time_ms=int(seconds * 1000),
-            node_metrics=plan,
-        )
 
     _OUTPUT_MIME = {
         "csv": "text/csv",
@@ -867,28 +817,6 @@ class BeaconHttpServer:
         "odv": "text/plain",
         "geoparquet": "application/vnd.apache.parquet",
     }
-
-    def _materialize(self, df, output: dict) -> tuple[str, str]:
-        """``{"format": fmt, ...opts}`` → (temp file path, content type)
-        via the engine's output writers (outputs.py / write_output). The
-        writers batch-stream, the caller chunk-copies the file to the
-        socket and unlinks it — the result bytes never sit in driver
-        memory."""
-        import os
-        import tempfile
-
-        from beacon_spark.outputs import write_output
-
-        fmt = output.get("format", "csv").lower()
-        opts = {k: v for k, v in output.items() if k != "format"}
-        fd, path = tempfile.mkstemp(prefix="beacon_dl_", suffix=f".{fmt}")
-        os.close(fd)
-        try:
-            write_output(df, fmt, path, **opts)
-        except BaseException:
-            os.unlink(path)
-            raise
-        return path, self._OUTPUT_MIME.get(fmt, "application/octet-stream")
 
     # ------------------------------------------------------------ MCP
 
@@ -1064,12 +992,6 @@ class BeaconHttpServer:
             self._tool_cache = (sig, tools)
         return tools
 
-    @classmethod
-    def _is_readonly_sql(cls, sql: str) -> bool:
-        from beacon_spark.server.guard import is_readonly_sql
-
-        return is_readonly_sql(sql)
-
     @staticmethod
     def _check_where_predicate(pred: str) -> None:
         """Per-table tool ``where`` arguments must be PLAIN predicates
@@ -1103,7 +1025,18 @@ class BeaconHttpServer:
 
     def _mcp_tool(self, name: str, args: dict,
                   user: str | None = None) -> str:
+        from beacon_spark.engine import Run
+        from beacon_spark.server.guard import is_readonly_sql
+
         eng = self.engine
+
+        def capped_rows(sql: str) -> str:
+            # row/byte/time capped (server/limits.py): a giant caller
+            # limit must not turn into an unbounded driver collect
+            df = eng.sql(sql, user=user).limit(int(args.get("limit", 100)))
+            rows = Run(eng, df, sql, user, self._limits).rows()
+            return json.dumps(rows, default=str)
+
         if name == "list_tables":
             try:
                 datasets = [r.dataset for r in eng.list_datasets().collect()]
@@ -1128,21 +1061,17 @@ class BeaconHttpServer:
             )
         if name == "run_sql":
             sql = args["sql"]
-            if not self._is_readonly_sql(sql):
+            if not is_readonly_sql(sql):
                 raise ValueError(
                     "run_sql is read-only: statement must be SELECT-shaped "
                     "and free of write/DDL/admin keywords"
                 )
-            limit = int(args.get("limit", 100))
-            rows = self._limits.collect_rows(
-                eng.sql(sql, user=user).limit(limit)
-            )
-            return json.dumps(rows, default=str)
+            return capped_rows(sql)
         if name == "export_query":
             # fetch recipe only — the (potentially huge) file never
             # streams through model context (catalog.rs:221-224)
             sql = args["sql"]
-            if not self._is_readonly_sql(sql):
+            if not is_readonly_sql(sql):
                 raise ValueError("export_query is read-only")
             fmt = args.get("format", "parquet")
             body = {"sql": sql, "output": {"format": fmt}}
@@ -1216,11 +1145,7 @@ class BeaconHttpServer:
             sql = f"SELECT {', '.join(quoted)} FROM {inner} AS __scoped"
             if args.get("where"):
                 sql += f" WHERE ({args['where']})"
-            # same row/byte/time caps as run_sql — a giant caller limit
-            # must not turn into an unbounded driver collect
-            df = eng.sql(sql, user=user).limit(int(args.get("limit", 100)))
-            rows = self._limits.collect_rows(df)  # row/byte/time capped
-            return json.dumps(rows, default=str)
+            return capped_rows(sql)
         raise ValueError(f"unknown tool {name!r}")
 
     def _mcp_handle(self, msg: dict, user: str | None = None):

@@ -22,12 +22,15 @@ against accidents, not a quota system.
 
 from __future__ import annotations
 
+import logging
 import threading
 import uuid
 from contextlib import contextmanager
 from dataclasses import dataclass
 
 __all__ = ["QueryLimits", "ResourceLimitExceeded"]
+
+_log = logging.getLogger("beacon_spark.server.limits")
 
 
 class ResourceLimitExceeded(ValueError):
@@ -129,12 +132,18 @@ class QueryLimits:
             # interruptTag only cancels jobs RUNNING at that instant; a
             # query that is a sequence of short jobs (toLocalIterator
             # consumption) would sail on if the interrupt landed in an
-            # inter-job gap — keep interrupting until the block exits
+            # inter-job gap — keep interrupting until the block exits.
+            # A failing interrupt is reported once per guard, not once
+            # per retry
+            warned = False
             while not done.is_set():
                 try:
                     spark.interruptTag(tag)
-                except Exception:
-                    pass
+                except Exception as exc:
+                    if not warned:
+                        _log.warning("time_guard: interruptTag(%s) failed: "
+                                     "%s: %s", tag, type(exc).__name__, exc)
+                        warned = True
                 done.wait(0.25)
 
         watchdog = threading.Thread(target=_watchdog, daemon=True)
@@ -153,8 +162,9 @@ class QueryLimits:
             done.set()
             try:
                 spark.removeTag(tag)
-            except Exception:
-                pass
+            except Exception as exc:
+                _log.warning("time_guard: removeTag(%s) failed: %s: %s",
+                             tag, type(exc).__name__, exc)
         if fired.is_set():
             # the interrupt landed between the last job and the exit
             raise ResourceLimitExceeded(

@@ -85,11 +85,12 @@ def _pa_schema():
 class QueryMetricsStore:
     """Micro-batched persistence for per-query metrics.
 
-    ``record()`` is called by every transport that materializes a
-    result (HTTP, Flight, FlightSQL, the embedded client); rows land in
-    the internal managed table ``__beacon_query_metrics`` next to the
-    user tables, NOT registered in the catalog — the ``__beacon_``
-    prefix keeps it out of listings, as in the reference
+    ``Engine.run`` records once per completed statement: its ``Run``,
+    the runner under HTTP, Flight, FlightSQL, MCP and the embedded
+    client, calls ``record()`` through ``Engine.record_query_metrics``.
+    Rows land in the internal managed table ``__beacon_query_metrics``
+    next to the user tables, NOT registered in the catalog — the
+    ``__beacon_`` prefix keeps it out of listings, as in the reference
     (query_metrics_store.rs:41-44).
     """
 

@@ -336,7 +336,8 @@ def test_http_explain_and_metrics(spark, served):
         qid = headers["x-beacon-query-id"]
         with urllib.request.urlopen(base + f"/api/query/metrics/{qid}") as r:
             m = json.loads(r.read())
-        assert m["rows"] == 1 and m["seconds"] >= 0 and m["plan"]
+        assert m["result_num_rows"] == 1 and m["execution_time_ms"] >= 0 \
+            and m["node_metrics"]
     finally:
         hs.shutdown()
 

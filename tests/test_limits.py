@@ -139,6 +139,33 @@ def test_time_guard_post_check(spark):
             time.sleep(0.3)
 
 
+def test_time_guard_reports_failing_tag_calls(caplog):
+    """A session whose interruptTag/removeTag raise still trips the
+    limit; each failing call is logged once per guard, not per retry."""
+    import logging
+    import time
+
+    class Session:
+        def addTag(self, tag):
+            pass
+
+        def interruptTag(self, tag):
+            raise RuntimeError("interrupt down")
+
+        def removeTag(self, tag):
+            raise RuntimeError("remove down")
+
+    logger = "beacon_spark.server.limits"
+    with caplog.at_level(logging.WARNING, logger=logger):
+        with pytest.raises(ResourceLimitExceeded, match="time limit"):
+            with QueryLimits(timeout_seconds=0.05).time_guard(Session()):
+                time.sleep(0.7)  # the watchdog retries every 0.25 s
+    warned = [r.getMessage() for r in caplog.records if r.name == logger]
+    assert sum("interruptTag" in m and "interrupt down" in m
+               for m in warned) == 1
+    assert sum("removeTag" in m and "remove down" in m for m in warned) == 1
+
+
 # ------------------------------------------------------------ streaming
 
 

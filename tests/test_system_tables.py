@@ -111,8 +111,8 @@ def test_qualified_non_system_names_untouched(eng):
 
 
 def test_http_metrics_fallback_reads_persisted(spark, tmp_path):
-    """/api/query/metrics/{qid} falls back to the persisted table when
-    the in-memory ring no longer holds the id."""
+    """/api/query/metrics/{qid} serves a row this server never ran (an
+    earlier server run recorded it) from the persisted table."""
     import urllib.request
 
     from beacon_spark.server.http import BeaconHttpServer
