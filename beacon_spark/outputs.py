@@ -116,15 +116,19 @@ def iter_arrow_batches(df: DataFrame, max_chunksize: int = 1 << 15):
 
     ``df.toArrow()`` is a full driver collect; this instead streams the
     executor-written parquet spool back file-by-file, so the driver
-    holds one batch at a time — never the result. The spool is written
-    under positional column names (Spark refuses duplicate names, which
-    Arrow allows) and each batch is rebuilt against the DataFrame's
-    Arrow schema, so the parquet hop is type- and name-invisible.
-    Unspoolable schemas fall back to a driver-side collect.
+    holds one batch at a time — never the result. A result with
+    duplicate column names (which Arrow allows and Spark's writer
+    refuses, case-insensitively) is spooled under positional names;
+    any other result spools as it is, without an extra projection to
+    analyze. Each batch is rebuilt against the DataFrame's Arrow schema,
+    so the parquet hop is type- and name-invisible. Unspoolable schemas
+    fall back to a driver-side collect.
     """
     target = arrow_schema_of(df)
-    positional = df.toDF(*(f"_c{i}" for i in range(len(df.columns))))
-    with _parquet_spool(positional, "iter_arrow_batches") as pfs:
+    folded = [n.lower() for n in target.names]
+    spooled = (df if len(set(folded)) == len(folded)
+               else df.toDF(*(f"_c{i}" for i in range(len(folded)))))
+    with _parquet_spool(spooled, "iter_arrow_batches") as pfs:
         if pfs is None:
             yield from df.toArrow().to_batches(max_chunksize=max_chunksize)
             return

@@ -155,17 +155,19 @@ def test_every_surface_records_one_metrics_row(servers, surface):
     assert _metrics_rows(eng, bad) == []
 
 
-def test_duplicate_output_names_reach_arrow(servers):
+@pytest.mark.parametrize("second", ["id", "ID"])
+def test_duplicate_output_names_reach_arrow(servers, second):
     """Arrow allows duplicate field names; Spark's parquet writer does
-    not, so the spool writes positional names and renames back."""
+    not (case-insensitively), so the spool writes positional names and
+    renames back."""
     eng, http, _ = servers
-    q = "SELECT a.id, b.id FROM three a JOIN three b ON a.id = b.id"
+    q = f"SELECT a.id, b.id AS {second} FROM three a JOIN three b ON a.id = b.id"
     con = Connection(eng)
     want = sorted(con.sql(q).fetchall())
     assert want == [(0, 0), (1, 1), (2, 2)]
     body, _ = _post(f"{http}/api/query", {"sql": q})
     for tbl in (con.sql(q).arrow(), pa.ipc.open_stream(body).read_all()):
-        assert tbl.column_names == ["id", "id"]
+        assert tbl.column_names == ["id", second]
         assert sorted(zip(*(c.to_pylist() for c in tbl.columns))) == want
 
 
