@@ -34,17 +34,24 @@ Statement surface (mirrors ``parser/statement.rs:141-211``)::
 
 Identity threading: ``Engine.sql(stmt, user="alice")``. ``user=None``
 is the embedded caller — the implicit super-user, exactly the
-reference's default identity when no auth is configured. Divergences
+reference's default identity when no auth is configured. Divergence
 (documented): passwords hash with PBKDF2-HMAC-SHA256 (no Argon2 in the
-stdlib), and SQL read targets are resolved lexically against the
-catalog's table names + ``read_*`` path arguments rather than by
-walking resolved TableScans — an over-approximation, so it errs toward
-denial, never toward leaking. JSON-DSL queries check EXACTLY
-(:func:`authorize_dsl`): the DSL's ``from`` spec names its tables and
-paths. Views are DEFINER-rights objects (PostgreSQL semantics): a
-SELECT grant on a view authorizes its whole definition — the
-underlying tables are not re-checked against the caller's roles, so
-grant views deliberately, as the curated projections they are.
+stdlib).
+
+Reads are checked where they resolve, for a restricted caller under
+enforcement (:class:`ReadGate`): ``Engine.resolve_from(spec, user=…)``
+checks a from-spec's paths and a table name before opening anything
+(SQL ``read_*`` calls, nd reads, the DSL, ``Connection.read``), and
+``Engine.sql`` walks the analyzed plan the way the reference checks
+every TableScan (authz.rs:25-41) — so names Spark resolves itself
+(``IDENTIFIER(…)``, subqueries, CTEs) are checked, and a column alias
+is not a read. Views are DEFINER-rights objects (PostgreSQL
+semantics): the walk checks a view and does not descend into it, so a
+SELECT grant on a view authorizes its whole definition — grant views
+deliberately, as the curated projections they are. A session temp
+view outside the catalog is checked like any view: default-denied
+unless its name (or ALL) is granted. The super-user, metadata-schema
+and ``__beacon*`` gates read the statement text.
 """
 
 from __future__ import annotations
@@ -55,8 +62,9 @@ import re
 import secrets
 
 __all__ = [
-    "AuthError", "run_auth_statement", "authorize", "authorize_dsl",
-    "require_super", "verify_user", "hash_password", "is_allowed",
+    "AuthError", "ReadGate", "run_auth_statement", "authorize",
+    "authorize_dsl", "read_gate", "require_super", "verify_user",
+    "hash_password", "is_allowed",
 ]
 
 PRIVILEGES = {"SELECT", "INSERT", "UPDATE", "DELETE", "CREATE", "DROP", "ALL"}
@@ -64,6 +72,9 @@ PRIVILEGES = {"SELECT", "INSERT", "UPDATE", "DELETE", "CREATE", "DROP", "ALL"}
 
 class AuthError(PermissionError):
     pass
+
+
+INTERNAL_NAMES = "permission denied: internal __beacon* names are super-user-only"
 
 
 # ------------------------------------------------------------ passwords
@@ -128,28 +139,21 @@ def _rule_matches(rule: dict, privilege: str, target: tuple[str, str]) -> bool:
 
 
 def is_allowed(auth: dict, roles: list[str], privilege: str,
-               target: tuple[str, str]) -> bool:
-    """Deny-wins over the user's roles; default-deny (role.rs:322-344)."""
+               *targets: tuple[str, str]) -> bool:
+    """Deny-wins over the user's roles and every spelling in
+    ``targets``: ANY target matching a deny denies; otherwise ANY
+    matching a grant allows; default-deny (role.rs:322-344)."""
     matched = [auth["roles"][r] for r in roles if r in auth["roles"]]
-    if any(
-        _rule_matches(rule, privilege, target)
-        for role in matched for rule in role.get("denies", [])
-    ):
-        return False
-    return any(
-        _rule_matches(rule, privilege, target)
-        for role in matched for rule in role.get("grants", [])
-    )
+
+    def hit(kind: str) -> bool:
+        return any(_rule_matches(rule, privilege, t)
+                   for role in matched for rule in role.get(kind, [])
+                   for t in targets)
+
+    return not hit("denies") and hit("grants")
 
 
 # ------------------------------------------------------------ authorize
-
-# Spark's direct-file scans: ``SELECT … FROM parquet.`/path```,
-# csv.`…`, json.`…`, … — a read target with no catalog name. Runs on
-# scrub_sql output, where comments are ONE space — a /*comment*/ between
-# the format word and the dot can't break adjacency.
-_FILE_SCAN_RE = re.compile(r"\b\w+\s*\.\s*`([^`]+)`")
-
 
 def _path_candidates(engine, path: str) -> set[str]:
     """The spellings a path rule must be checked against: as written,
@@ -205,19 +209,7 @@ def _check_path(engine, a: dict, roles: list[str], path: str) -> None:
             )
         for rp in resolved:
             cands |= _path_candidates(engine, rp)
-    allowed = False
-    for c in cands:
-        matched = [a["roles"][r] for r in roles if r in a["roles"]]
-        if any(
-            _rule_matches(rule, "SELECT", ("path", c))
-            for role in matched for rule in role.get("denies", [])
-        ):
-            raise AuthError(f"permission denied: SELECT on path {path!r}")
-        allowed = allowed or any(
-            _rule_matches(rule, "SELECT", ("path", c))
-            for role in matched for rule in role.get("grants", [])
-        )
-    if not allowed:
+    if not is_allowed(a, roles, "SELECT", *[("path", c) for c in cands]):
         raise AuthError(f"permission denied: SELECT on path {path!r}")
 
 
@@ -251,20 +243,75 @@ def _resolve_ident(engine, a: dict, user: str) -> dict | None:
     return a["users"].get(user)
 
 
-def authorize(engine, statement: str, user: str | None) -> None:
-    """Gate one statement for ``user``. ``None`` = embedded super-user
-    (no checks). Super-user gate is unconditional; read grants are
-    enforced only when ``auth.enforce`` is on (authz.rs:25-41)."""
+def _restricted(engine, user: str | None) -> tuple[dict, dict] | None:
+    """The auth section and identity of a caller the gates apply to;
+    ``None`` for the embedded caller (``user=None``) and super-users.
+    An unknown user raises."""
     if user is None:
-        return
-    cat = engine.catalog._load() if engine.catalog is not None else {}
-    a = _auth(cat)
+        return None
+    a = _auth(engine.catalog._load() if engine.catalog is not None else {})
     ident = _resolve_ident(engine, a, user)
     if ident is None:
         raise AuthError(f"unknown user {user!r}")
-    if ident.get("super_user"):
-        return
-    from beacon_spark.server.guard import is_readonly_sql
+    return None if ident.get("super_user") else (a, ident)
+
+
+class ReadGate:
+    """The SELECT checks of one restricted caller under enforcement:
+    deny-wins, default-deny, through :func:`is_allowed` (tables) and
+    :func:`_check_path` (paths)."""
+
+    def __init__(self, engine, auth: dict, roles: list[str]):
+        self.engine, self.auth, self.roles = engine, auth, roles
+
+    def allows_table(self, name: str) -> bool:
+        return is_allowed(self.auth, self.roles, "SELECT", ("table", name))
+
+    def table(self, name: str) -> None:
+        if not self.allows_table(name):
+            raise AuthError(f"permission denied: SELECT on table {name!r}")
+
+    def path(self, path: str) -> None:
+        _check_path(self.engine, self.auth, self.roles, path)
+
+    def source(self, cfg) -> None:
+        """Every path of one from-spec's ``{"paths": …}`` (or its
+        ``location``); a spec naming none fails closed."""
+        paths = cfg.get("paths") if isinstance(cfg, dict) else None
+        if paths is None and isinstance(cfg, dict) and cfg.get("location"):
+            paths = [cfg["location"]]
+        if isinstance(paths, str):
+            # the engine accepts a bare string (resolve_globs wraps it);
+            # iterating it here would authorize per CHARACTER
+            paths = [paths]
+        if not paths:
+            raise AuthError("permission denied: unresolvable DSL from target")
+        for p in paths:
+            self.path(str(p))
+
+
+def _gate(engine, restricted: tuple[dict, dict] | None) -> ReadGate | None:
+    if restricted is None or not restricted[0].get("enforce"):
+        return None
+    a, ident = restricted
+    return ReadGate(engine, a, ident.get("roles", []))
+
+
+def read_gate(engine, user: str | None) -> ReadGate | None:
+    """``user``'s read checks, or ``None`` when none apply: the embedded
+    caller, a super-user, or enforcement off (authz.rs:25-41)."""
+    return _gate(engine, _restricted(engine, user))
+
+
+def authorize(engine, statement: str, user: str | None) -> ReadGate | None:
+    """Gate one statement's text for ``user`` and return its read
+    checks (:func:`read_gate`), which ``Engine.sql`` applies where the
+    statement's reads resolve. ``None`` = embedded super-user (no
+    checks). The super-user gate is unconditional (mod.rs:58-78)."""
+    restricted = _restricted(engine, user)
+    if restricted is None:
+        return None
+    from beacon_spark.server.guard import is_readonly_sql, scrub_sql
 
     if not is_readonly_sql(statement):
         # validate_query_plan's reframed message (mod.rs:63-70)
@@ -279,12 +326,10 @@ def authorize(engine, statement: str, user: str | None) -> None:
     # the lexer-accurate blanking (backslash escapes, comments) shared
     # with the read-only gate — a desynced regex here let references
     # hide inside fake literals.
-    from beacon_spark.server.guard import scrub_sql
-
-    blanked_stmt = scrub_sql(statement)
+    blanked = scrub_sql(statement)
     if re.search(
         r"(?<![\w.])(?:beacon\s*\.\s*)?(?:system|information_schema)\s*\.\s*\w",
-        blanked_stmt, re.IGNORECASE,
+        blanked, re.IGNORECASE,
     ):
         raise AuthError(
             "permission denied: metadata schemas are super-user-only"
@@ -292,60 +337,9 @@ def authorize(engine, statement: str, user: str | None) -> None:
     # internal temp views (__beacon_system_*, __beacon_meta_*, …) are the
     # rewrite machinery's implementation detail — naming one directly
     # would read metadata schemas through the back door
-    if re.search(r"(?<![\w.])__beacon\w*", blanked_stmt, re.IGNORECASE):
-        raise AuthError(
-            "permission denied: internal __beacon* names are super-user-only"
-        )
-    if not a.get("enforce"):
-        return
-    roles = ident.get("roles", [])
-    blanked = blanked_stmt
-    idents = {w.lower() for w in re.findall(r"\w+", blanked)}
-    # a time-travel snapshot view (<table>__v<n>, left registered by an
-    # earlier super-user query) is a read of its base table — grants and
-    # DENYs on the base name apply to every pinned version of it
-    for w in list(idents):
-        m = re.fullmatch(r"(\w+?)__v\d+(?:_\d+)?", w)
-        if m:
-            idents.add(m.group(1))
-    names = (
-        list(cat.get("tables", {}))
-        + list(cat.get("external_tables", {}))
-        + list(cat.get("views", {}))
-        + list(cat.get("materialized_views", {}))
-    )
-    for name in names:
-        if name.lower() in idents and not is_allowed(
-            a, roles, "SELECT", ("table", name)
-        ):
-            raise AuthError(f"permission denied: SELECT on table {name!r}")
-    # attached-remote references (alias__tbl) are read targets too —
-    # check them as tables under their full reference name
-    for alias in cat.get("attachments", {}):
-        for w in idents:
-            if w.startswith(f"{alias.lower()}__") and not is_allowed(
-                a, roles, "SELECT", ("table", w)
-            ):
-                raise AuthError(f"permission denied: SELECT on table {w!r}")
-    # every quoted argument of every read_* call (multi-path calls read
-    # ALL their paths), deny-wins across path spellings. The extraction
-    # MIRRORS the engine's rewrite exactly — same regex, same
-    # literal-span skip, same raw (unescaped) path text — so auth checks
-    # precisely the paths the engine will read; a looser regex here once
-    # let a ')' inside a quoted glob hide the whole arg list.
-    from beacon_spark.engine import _READ_FN_RE, _in_literal, _literal_spans
-
-    spans = _literal_spans(statement)
-    for call in _READ_FN_RE.finditer(statement):
-        if _in_literal(spans, call.start()):
-            continue
-        arglist = call.group(3) if call.group(3) is not None else call.group(4)
-        for g in arglist.split(","):
-            _check_path(engine, a, roles, g.strip()[1:-1])
-    # Spark's direct-file scans (parquet.`/path`) are path reads with no
-    # catalog name — without this they'd slip past both checks above
-    for m in _FILE_SCAN_RE.finditer(blanked):
-        _check_path(engine, a, roles, m.group(1))
+    if re.search(r"(?<![\w.])__beacon\w*", blanked, re.IGNORECASE):
+        raise AuthError(INTERNAL_NAMES)
+    return _gate(engine, restricted)
 
 
 def resolve_unauthenticated(engine) -> str | None:
@@ -399,89 +393,26 @@ def resolve_unauthenticated(engine) -> str | None:
 
 def require_super(engine, user: str | None, msg: str) -> None:
     """Raise unless ``user`` is the embedded caller or a super-user."""
-    if user is None:
-        return
-    a = _auth(engine.catalog._load() if engine.catalog is not None else {})
-    ident = _resolve_ident(engine, a, user)
-    if ident is None:
-        raise AuthError(f"unknown user {user!r}")
-    if not ident.get("super_user"):
+    if _restricted(engine, user) is not None:
         raise AuthError(msg)
 
 
 def authorize_dsl(engine, body: dict, user: str | None) -> None:
-    """Gate a JSON-DSL query body for ``user``. The DSL is read-only by
-    construction, and its ``from`` spec NAMES its targets — so this
-    check is exact, not lexical: a table name checks a table grant,
-    ``{"<fmt>": {"paths": [...]}}`` checks each path. An ``output``
-    block writes files, so it stays super-user-only."""
-    if user is None:
-        return
-    cat = engine.catalog._load() if engine.catalog is not None else {}
-    a = _auth(cat)
-    ident = _resolve_ident(engine, a, user)
-    if ident is None:
-        raise AuthError(f"unknown user {user!r}")
-    if ident.get("super_user"):
+    """Gate what a JSON-DSL body does besides reading, for ``user``: an
+    ``output`` block writes files, so it stays super-user-only, and an
+    internal ``__beacon*`` name is refused whatever the enforcement.
+    The ``from`` it reads is checked where ``Engine.resolve_from``
+    resolves it."""
+    if _restricted(engine, user) is None:
         return
     if body.get("output"):
         raise AuthError(
             "operation not permitted: DSL file output requires super-user "
             "privileges"
         )
-    # internal temp views leak metadata regardless of enforcement (same
-    # unconditional gate as the SQL path)
-    spec0 = body.get("from")
-    if isinstance(spec0, str) and spec0.lower().startswith("__beacon"):
-        raise AuthError(
-            "permission denied: internal __beacon* names are super-user-only"
-        )
-    if not a.get("enforce"):
-        return
-    roles = ident.get("roles", [])
-    # an EXPLICIT "from": null is the same read as an absent key — both
-    # make resolve_from fall back to the engine's default table, so both
-    # must check it (an early return here was a grant bypass)
     spec = body.get("from")
-    if spec is None:
-        spec = engine.default_table
-    if spec is None:
-        return
-    if isinstance(spec, str):
-        # a time-travel snapshot view (<t>__v<n> of a real catalog
-        # table) is a read of its base table — check BOTH names,
-        # deny-wins across them, exactly the SQL path's behavior (a
-        # REAL table literally named t__v1 keeps its own grants/DENYs)
-        targets = {spec}
-        base = re.fullmatch(r"(\w+?)__v\d+(?:_\d+)?", spec)
-        if base and base.group(1) in cat.get("tables", {}):
-            targets.add(base.group(1))
-            if spec not in cat.get("tables", {}):
-                # a pure snapshot view: only the base name is a catalog
-                # object, so only IT carries grants
-                targets.discard(spec)
-        for target in targets:
-            if not is_allowed(a, roles, "SELECT", ("table", target)):
-                raise AuthError(
-                    f"permission denied: SELECT on table {target!r}")
-        return
-    if isinstance(spec, dict):
-        ((_fmt, cfg),) = spec.items()
-        paths = cfg.get("paths") if isinstance(cfg, dict) else None
-        if paths is None and isinstance(cfg, dict) and cfg.get("location"):
-            paths = [cfg["location"]]
-        if isinstance(paths, str):
-            # the engine accepts a bare string (resolve_globs wraps it);
-            # iterating it here would authorize per CHARACTER
-            paths = [paths]
-        for p in paths or []:
-            # same normalized deny-wins walk as the SQL path — a
-            # './x' or absolute spelling must not dodge a DENY
-            _check_path(engine, a, roles, str(p))
-        if paths:
-            return
-    # unknown from shape: fail CLOSED, never leak
-    raise AuthError("permission denied: unresolvable DSL from target")
+    if isinstance(spec, str) and spec.lower().startswith("__beacon"):
+        raise AuthError(INTERNAL_NAMES)
 
 
 # ------------------------------------------------------------ statements
@@ -539,15 +470,10 @@ def run_auth_statement(engine, statement: str, user: str | None):
             break
     else:
         return None
+    require_super(engine, user, "operation not permitted: auth management "
+                  "requires super-user privileges")
     cat = engine.catalog._load()
     a = _auth(cat)
-    if user is not None:
-        ident = _resolve_ident(engine, a, user)
-        if ident is None or not ident.get("super_user"):
-            raise AuthError(
-                "operation not permitted: auth management requires "
-                "super-user privileges"
-            )
 
     def save():
         # commit through _mutate (lock + merge-on-conflict): a raw

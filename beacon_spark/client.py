@@ -470,14 +470,13 @@ class Connection:
     def read(self, function: str, paths, *, columns=None,
              **options) -> Relation:
         """Read ``paths`` as a ``read_*`` table function's format
-        (``"parquet"`` or ``"read_parquet"``): the from-spec
-        ``{fmt: {"paths": paths, **options}}`` passes the same RBAC gate
-        as a DSL query for this connection's user, then
-        ``Engine.resolve_from``. Options go by keyword under the spec's
+        (``"parquet"`` or ``"read_parquet"``): ``Engine.resolve_from``
+        of the from-spec ``{fmt: {"paths": paths, **options}}``, which
+        checks this connection's user's path grants like a DSL query's.
+        Options go by keyword under the spec's
         keys (``delimiter``, ``infer_records``, ``dimensions``,
         ``version_as_of``, ``timestamp_as_of``, ``snapshot_id``);
         ``columns`` projects."""
-        from beacon_spark import auth as _auth
         from beacon_spark.engine import READ_FORMATS
 
         self._check_open()
@@ -487,8 +486,8 @@ class Connection:
         spec = {fmt: {"paths": [paths] if isinstance(paths, str)
                       else list(paths), **options}}
         try:
-            _auth.authorize_dsl(self.engine, {"from": spec}, self._user)
-            df = self.engine.resolve_from(spec, projection=columns)
+            df = self.engine.resolve_from(spec, projection=columns,
+                                          user=self._user)
         except Exception as e:
             raise _wrap_error(e) from e
         if columns:

@@ -408,10 +408,12 @@ def apply_distinct_on(
 # ---------------------------------------------------------------- entry
 
 
-def compile_query(engine, body: dict[str, Any]) -> DataFrame:
+def compile_query(engine, body: dict[str, Any],
+                  user: str | None = None) -> DataFrame:
     """Compile a JSON query body into a DataFrame (query/compiler.rs:12-85).
 
-    ``engine`` provides ``resolve_from(from_spec, projection)``; pipeline is
+    ``engine`` provides ``resolve_from(from_spec, projection)``, which
+    checks ``user``'s read grants; pipeline is
     project → filter → legacy filters → sort → distinct_on → offset/limit,
     matching the reference exactly (filters see the projected schema).
     """
@@ -530,7 +532,7 @@ def compile_query(engine, body: dict[str, Any]) -> DataFrame:
                 scan_cols.append(src)
 
     df = engine.resolve_from(
-        body.get("from"), scan_cols or None, ranges, terms, eqs
+        body.get("from"), scan_cols or None, ranges, terms, eqs, user=user
     )
     src_schema = df.schema  # pre-projection: reach-through coercion types
     df = df.select(*[_select_to_column(s) for s in select])

@@ -83,7 +83,17 @@ _QUERY_CHILD = {
     "InsertIntoStatement": "query",
     "CreateViewCommand": "plan",
     "ExplainCommand": "logicalPlan",
+    "DescribeQueryCommand": "plan",
 }
+#: analyzed DESCRIBE/SHOW command -> the field naming the table it reads
+_COMMAND_TABLE = {
+    "DescribeTableCommand": "table",
+    "DescribeColumnCommand": "table",
+    "ShowColumnsCommand": "tableName",
+    "ShowTablePropertiesCommand": "table",
+}
+#: the relations a restricted reader may reach outside any view
+_LITERAL_RELATIONS = ("LocalRelation", "OneRowRelation")
 #: Catalyst comparison with the attribute on the left -> (bounds it from
 #: below, bounds it from above); a literal on the left swaps the pair
 _ND_BOUNDS = {
@@ -875,6 +885,8 @@ class Engine:
         self._session_secrets: dict[str, dict] = {}
         self._metrics = None
         self._reg_lock = _threading.RLock()
+        #: time-travel snapshot view -> the managed table it pins
+        self._pins: dict[str, str] = {}
         if datasets_root is not None:
             from beacon_spark.managed import Catalog
 
@@ -968,15 +980,17 @@ class Engine:
           embedded super-user (the reference's default identity); a
           named non-super user is gated to read-only statements and,
           with enforcement on, to its roles' SELECT grants (deny-wins,
-          default-deny — authz.rs:25-41, mod.rs:58-78)
+          default-deny — authz.rs:25-41, mod.rs:58-78), checked where
+          each read resolves (``resolve_from``, :meth:`_authorize_plan`)
         """
+        gate = None
         if self.catalog is not None:
             from beacon_spark import auth as _auth
 
             handled = _auth.run_auth_statement(self, statement, user)
             if handled is not None:
                 return handled
-            _auth.authorize(self, statement, user)
+            gate = _auth.authorize(self, statement, user)
             for kind, rx in _DDL_RES:
                 m = rx.match(statement)
                 if m:
@@ -1050,11 +1064,15 @@ class Engine:
             src = m.group(1).strip()
             if src.startswith("(") and src.endswith(")"):
                 src = src[1:-1]
-            if re.match(r"^\s*SELECT\b", src, re.IGNORECASE) or _READ_FN_RE.search(src):
-                return summarize(self.sql(src))
-            return summarize(self.spark.table(src))
+            if not re.match(r"^\s*SELECT\b", src, re.IGNORECASE):
+                # a table or read_* call: read through the same gate
+                src = f"SELECT * FROM {src}"
+            return summarize(self.sql(src, user=user))
 
-        statement = self._resolve_remote(statement, has_params=params is not None)
+        # a restricted reader's grants name remote tables one by one, so
+        # its statement is never pushed whole
+        statement = self._resolve_remote(
+            statement, whole=params is None and gate is None)
         statement = self._rewrite_system_tables(statement)
         statement = self._rewrite_information_schema(statement)
         statement = self._rewrite_time_travel(statement)
@@ -1064,9 +1082,11 @@ class Engine:
         keep_views = _DEFINES_TEMP_VIEW_RE.match(statement)
         nd_calls: list[_NdCall] = []
         views: list[str] = []
+        # the metadata views this statement binds: engine facts, not reads
+        meta_views: list[str] = []
         try:
-            statement = self._rewrite_read_fns(statement, nd_calls, views)
-            statement = self._rewrite_metadata_fns(statement)
+            statement = self._rewrite_read_fns(statement, nd_calls, views, user)
+            statement = self._rewrite_metadata_fns(statement, meta_views)
             statement = self._rewrite_try_arrow_cast(statement)
             statement = self._rewrite_macros(statement)
             statement = self._rewrite_extract_fields(statement)
@@ -1100,11 +1120,19 @@ class Engine:
                 args = params
             elif params is not None:
                 statement, args = _bind_placeholders(statement, params)
+            df = None
             if nd_calls:
                 statement = self._bind_nd_views(
-                    statement, args, nd_calls, views)
-            df = (self.spark.sql(statement, args=args) if args
-                  else self.spark.sql(statement))
+                    statement, args, nd_calls, views, gate, meta_views)
+            elif gate is not None:
+                qe, whole = self._authorize_plan(
+                    statement, args, gate, views + meta_views)
+                if whole:  # reuse the analysis the check made
+                    df = DataFrame(self._jvm_sql.dataset.ofRows(
+                        self.spark._jsparkSession, qe.analyzed()), self.spark)
+            if df is None:
+                df = (self.spark.sql(statement, args=args) if args
+                      else self.spark.sql(statement))
         finally:
             if not keep_views:
                 for view in views:
@@ -1273,6 +1301,7 @@ class Engine:
             ManagedTable(self.spark, tables[name]).read(
                 version=ver
             ).createOrReplaceTempView(view)
+            self._pins[view] = name
             return view
 
         def repl_version(m: re.Match) -> str:
@@ -1312,7 +1341,7 @@ class Engine:
             self._TIMESTAMP_AS_OF_RE, repl_timestamp, statement
         )
 
-    def _rewrite_metadata_fns(self, statement: str) -> str:
+    def _rewrite_metadata_fns(self, statement: str, views: list) -> str:
         """Metadata table functions → temp views:
         ``list_datasets()`` (file_formats/list_datasets.rs),
         ``view_statistics_cache()`` / bare ``view_dataset_statistics()``
@@ -1320,7 +1349,8 @@ class Engine:
         (per-column stats of one file, computed on demand when
         uncached) and ``view_external_table_statistics('<table>')``
         (cache coverage per file) — beacon-functions/src/metadata/* and
-        table-functions-utility.md:52-117."""
+        table-functions-utility.md:52-117. Each view's name is appended
+        to ``views``."""
 
         def repl(m: re.Match) -> str:
             fn, arg = m.group(1).lower(), m.group(2)
@@ -1342,6 +1372,7 @@ class Engine:
             name = f"__beacon_meta_{fn}_{self._view_tag}" + (
                 f"_{abs(hash(arg)) % 10**8}" if arg else "")
             df.createOrReplaceTempView(name)
+            views.append(name)
             return name
 
         return _sub_outside_literals(
@@ -1454,12 +1485,8 @@ class Engine:
                 except Exception as e:
                     # fail-open: a missing optional reader lib (netcdf/zarr)
                     # must not break unrelated statements — but say so
-                    import sys
-
-                    print(
-                        f"warning: external table {name!r} not registered: {e}",
-                        file=sys.stderr,
-                    )
+                    _log.warning("register_catalog: external table %r not "
+                                 "registered: %r", name, e)
             self._remote_ext = remote_ext
             for name, mv in cat["materialized_views"].items():
                 ManagedTable(self.spark, mv["path"]).read().createOrReplaceTempView(name)
@@ -1495,12 +1522,8 @@ class Engine:
                                 tls=aroot.get("tls", False),
                             )
                         except Exception as e:
-                            import sys
-
-                            print(
-                                f"warning: remote attachment {aname!r}: {e}",
-                                file=sys.stderr,
-                            )
+                            _log.warning("register_catalog: remote attachment "
+                                         "%r not connected: %r", aname, e)
                     continue
                 try:
                     sub = Engine(self.spark, datasets_root=aroot)
@@ -1518,9 +1541,8 @@ class Engine:
                             sub._ext_spec(ext, subcat)
                         ).createOrReplaceTempView(f"{aname}_{t}")
                 except Exception as e:
-                    import sys
-
-                    print(f"warning: attachment {aname!r}: {e}", file=sys.stderr)
+                    _log.warning("register_catalog: attachment %r not "
+                                 "registered: %r", aname, e)
             from beacon_spark.secretbox import default_box
 
             for s in cat.get("secrets", {}).values():
@@ -2526,7 +2548,7 @@ class Engine:
             .load()
         )
 
-    def _resolve_remote(self, statement: str, has_params: bool = False) -> str:
+    def _resolve_remote(self, statement: str, whole: bool = True) -> str:
         """SQL surface for attached remotes: ``remote_query('alias',
         'sql')`` pushes the statement down; a bare ``alias__table``
         reference becomes a LAZY federated scan (temp view over the
@@ -2534,7 +2556,8 @@ class Engine:
         remote — never an eager SELECT * fetch. A read-only statement
         whose table references are ALL tables of ONE attached remote is
         pushed WHOLE as a single remote statement (the
-        FederationOptimizerRule analog — see _federated_pushdown)."""
+        FederationOptimizerRule analog — see _federated_pushdown) unless
+        ``whole`` is false."""
         remotes = getattr(self, "_remotes", {})
         if not remotes and not getattr(self, "_remote_ext", None):
             return statement
@@ -2551,7 +2574,7 @@ class Engine:
             return name
 
         statement = _sub_outside_literals(self._REMOTE_QUERY_RE, repl, statement)
-        if not has_params:
+        if whole:
             pushed = self._federated_pushdown(statement, remotes)
             if pushed is not None:
                 return pushed
@@ -2782,16 +2805,20 @@ class Engine:
                 location, token=token)
         return rb
 
-    def _nd_placeholder(self, call: _NdCall) -> _NdCall:
+    def _nd_placeholder(self, call: _NdCall, gate=None) -> _NdCall:
         """Register ``call``'s schema-only placeholder view: an empty RDD
         relation, which Catalyst cannot fold away the way it folds an
         empty local relation, so the optimized plan keeps the pushed-down
         Filter and the column-pruning Project directly above it. The
-        schema is read_nd's own 1-row sample. (The relation is built in
-        the JVM, as createDataFrame does for an RDD, minus the Python
-        round trip.)"""
+        schema is read_nd's own 1-row sample, opened only after a
+        restricted reader's ``gate`` passed the call's paths (the view
+        :meth:`_register_nd_view` binds later reads the same paths).
+        (The relation is built in the JVM, as createDataFrame does for
+        an RDD, minus the Python round trip.)"""
         from beacon_spark.sources.nd import nd_sample_schema
 
+        if gate is not None:
+            gate.source({"paths": list(call.globs)})
         sample = _paths.resolve_globs(list(call.globs), self.datasets_root)[0]
         schema = tabular._arrow_to_spark_schema(
             nd_sample_schema(call.fmt, sample, call.dims))
@@ -2845,16 +2872,33 @@ class Engine:
         df.createOrReplaceTempView(name)
         return name
 
-    def _nd_optimized_plan(self, statement: str, args: dict | None):
-        """Optimize the fully rewritten statement without executing it,
-        the way Spark's EXPLAIN does. A CTAS/INSERT/EXPLAIN/CREATE VIEW
-        optimizes its query child (the command itself never runs)."""
+    @functools.cached_property
+    def _jvm_sql(self):
+        """The JVM classes the plan pass calls: py4j resolves each dotted
+        name with round trips (about 2.5 ms a name)."""
+        from types import SimpleNamespace
+
+        jvm = self.spark._jvm
+        return SimpleNamespace(
+            skip=jvm.org.apache.spark.sql.execution.CommandExecutionMode.SKIP(),
+            params=jvm.org.apache.spark.sql.catalyst.analysis.NameParameterizedQuery,
+            dataset=jvm.org.apache.spark.sql.classic.Dataset)
+
+    def _query_execution(self, statement: str, args: dict | None):
+        """Parse ``statement`` (binding ``args``) and open a
+        QueryExecution of the query it runs without running it, the way
+        Spark's EXPLAIN does. A CTAS/INSERT/EXPLAIN/CREATE VIEW/DESCRIBE
+        QUERY opens its query child (the command itself never runs).
+        Returns (the parsed query, its QueryExecution, whether that
+        query is the whole statement); analysis and optimization run
+        when first asked for."""
         jss = self.spark._jsparkSession
         jvm = self.spark._jvm
         plan = jss.sessionState().sqlParser().parsePlan(statement)
         field = _QUERY_CHILD.get(plan.nodeName())
         if field is not None:
             plan = getattr(plan, field)()
+        query = plan
         if args:
             from pyspark.sql import functions as F
             from pyspark.sql.classic.column import _to_java_column
@@ -2862,26 +2906,108 @@ class Engine:
             names = list(args)
             values = [jss.expression(_to_java_column(F.lit(args[n])))
                       for n in names]
-            plan = jvm.org.apache.spark.sql.catalyst.analysis.NameParameterizedQuery(
+            plan = self._jvm_sql.params(
                 plan, jvm.PythonUtils.toSeq(names), jvm.PythonUtils.toSeq(values))
-        skip = jvm.org.apache.spark.sql.execution.CommandExecutionMode.SKIP()
-        return jss.sessionState().executePlan(plan, skip).optimizedPlan()
+        qe = jss.sessionState().executePlan(plan, self._jvm_sql.skip)
+        return query, qe, field is None
+
+    def _nd_optimized_plan(self, statement: str, args: dict | None):
+        """The optimized plan of ``statement``'s query, not executed."""
+        return self._query_execution(statement, args)[1].optimizedPlan()
+
+    def _authorize_plan(self, statement: str, args: dict | None, gate,
+                        trusted) -> tuple:
+        """Check the reads of ``statement`` for a restricted caller
+        (``gate``), as the reference checks ``Select`` on every TableScan
+        of the resolved plan (authz.rs:25-41), walking plan children,
+        expression subqueries and CTE definitions. Returns
+        :meth:`_query_execution`'s QueryExecution and ``whole`` flag.
+
+        - parsed plan: ``fmt.`path``` (a two-part name) is Spark's direct
+          file scan, path-checked before analysis opens it; a snapshot
+          written as ``t__v3`` is a read of ``t``.
+        - analyzed plan: a ``View`` or DESCRIBE/SHOW target that this
+          statement's rewrites bound over reads they checked
+          (``trusted``) passes; any other is checked as a table (a
+          snapshot as the table it pins) and not descended into, so
+          granted views are definer-rights. A file relation outside any
+          view is path-checked; any other relation there is refused."""
+        from beacon_spark.auth import INTERNAL_NAMES, AuthError
+
+        parsed, qe, whole = self._query_execution(statement, args)
+        todo = [parsed]
+        while todo:
+            node = todo.pop()
+            kind = node.nodeName()
+            if kind == "UnresolvedRelation":
+                parts = _jseq(node.multipartIdentifier())
+                if len(parts) == 2:
+                    gate.path(parts[1])
+                base = self._snapshot_base(parts[-1])
+                if base is not None:
+                    gate.table(base)
+                continue
+            if kind == "UnresolvedWith":
+                todo += [cte._2() for cte in _jseq(node.cteRelations())]
+            todo += _jseq(node.children()) + _jseq(node.subqueries())
+        todo = [qe.analyzed()]
+        while todo:
+            node = todo.pop()
+            kind = node.nodeName()
+            if kind == "View" or kind in _COMMAND_TABLE:
+                ident = (node.desc().identifier() if kind == "View"
+                         else getattr(node, _COMMAND_TABLE[kind])())
+                name = ident.table()
+                if name in trusted:
+                    continue
+                if name.lower().startswith("__beacon"):
+                    raise AuthError(INTERNAL_NAMES)
+                gate.table(self._snapshot_base(name) or name)
+                continue
+            if kind == "LogicalRelation" and node.relation().getClass() \
+                    .getSimpleName() == "HadoopFsRelation":
+                for root in _jseq(node.relation().location().rootPaths()):
+                    uri = root.toUri()
+                    gate.path(uri.getPath() if uri.getScheme() == "file"
+                              else root.toString())
+                continue
+            if kind.endswith("Relation") and kind not in _LITERAL_RELATIONS:
+                raise AuthError(f"permission denied: {kind} read outside "
+                                "a catalog table")
+            todo += _jseq(node.children()) + _jseq(node.subqueries())
+        return qe, whole
+
+    def _snapshot_base(self, name: str) -> str | None:
+        """The managed table a time-travel snapshot view pins, for the
+        view's name or the ``t__v<n>`` it was written as."""
+        return (self._pins.get(name)
+                or self._pins.get(f"{name}_{self._view_tag}"))
 
     def _bind_nd_views(self, statement: str, args: dict | None,
-                       nd_calls: list, views: list) -> str:
+                       nd_calls: list, views: list, gate=None,
+                       trusted=()) -> str:
         """Bind every nd call in ``statement`` to its pruned ``read_nd``
         view (appended to ``views``): placeholders stand in while
         Catalyst optimizes the statement, and the ranges and columns come
         from that plan (:func:`_nd_pushdown`). A call the walk cannot use
         reads unpruned — Spark still applies the WHERE, so rows stay
-        exact — and is reported at WARNING (``nd_sql_pushdown``)."""
+        exact — and is reported at WARNING (``nd_sql_pushdown``). A
+        restricted reader's ``gate`` checks the statement on the same
+        pass (:meth:`_authorize_plan`; ``trusted``: views bound besides
+        the read views)."""
         bound: list[_NdCall] = []
         try:
-            bound = [self._nd_placeholder(call) for call in nd_calls]
+            bound = [self._nd_placeholder(call, gate) for call in nd_calls]
+            qe = None
+            if gate is not None:
+                qe = self._authorize_plan(
+                    statement, args, gate,
+                    {*views, *trusted, *(c.name for c in nd_calls)})[0]
             reason = "not found in the optimized plan"
             try:
                 pushed = _nd_pushdown(
-                    self._nd_optimized_plan(statement, args), bound)
+                    qe.optimizedPlan() if qe is not None
+                    else self._nd_optimized_plan(statement, args), bound)
             except Exception as exc:
                 pushed = {}
                 reason = f"{type(exc).__name__}: {str(exc).splitlines()[0]}"
@@ -2899,7 +3025,8 @@ class Engine:
         return statement
 
     def _rewrite_read_fns(self, statement: str, nd_calls: list,
-                          views: list | None = None) -> str:
+                          views: list | None = None,
+                          user: str | None = None) -> str:
         """Replace ``read_*('glob' [, 'glob'...])`` table functions with
         temp views over ``resolve_from`` of the call's from-spec (the
         reference registers these as UDTFs —
@@ -2908,7 +3035,9 @@ class Engine:
         twin parses the same arguments into the same spec and reads as
         that read's (column_name, data_type, nullable) rows. Each view's
         name is appended to ``views``. An nd call leaves a reserved name
-        and appends itself to ``nd_calls`` for :meth:`_bind_nd_views`."""
+        and appends itself to ``nd_calls`` for :meth:`_bind_nd_views`.
+        ``user``'s read checks run in ``resolve_from`` (nd calls: in
+        :meth:`_nd_placeholder`)."""
 
         def repl(m: re.Match) -> str:
             fmt = m.group(1).lower()
@@ -2978,7 +3107,7 @@ class Engine:
                 nd_calls.append(_NdCall(name, fmt, tuple(globs), dims))
                 return name
             spec = {fmt: cfg}
-            df = self.resolve_from(spec)
+            df = self.resolve_from(spec, user=user)
             if schema_only:
                 df = tabular._schema_df(self.spark, df.schema)
             name = self._read_view(
@@ -3330,8 +3459,8 @@ class Engine:
         compile to the same plans (README.md:117-119). An ``output`` block
         (``{"format": ..., ...options}``) plus ``output_path`` writes the
         result in the requested format (query/output.rs). ``user`` gates
-        the query through RBAC (auth.authorize_dsl — exact target
-        checks: the DSL's ``from`` names its tables/paths)."""
+        the query through RBAC: ``auth.authorize_dsl`` gates the output
+        block, and ``resolve_from`` checks the ``from`` it reads."""
         body = dict(body)
         if user is not None and self.catalog is not None:
             from beacon_spark import auth as _auth
@@ -3350,7 +3479,7 @@ class Engine:
         df = (
             self.sql(body["sql"], user=user)
             if "sql" in body
-            else dsl.compile_query(self, body)
+            else dsl.compile_query(self, body, user=user)
         )
         if output is not None and output_path is not None:
             from beacon_spark.outputs import write_output
@@ -3489,6 +3618,7 @@ class Engine:
         ranges: dict | None = None,
         terms: dict | None = None,
         eqs: dict | None = None,
+        user: str | None = None,
     ) -> DataFrame:
         """Resolve a DSL ``from`` (query/from.rs:23-131): named table, or
         ``{"<format>": {"paths": [...], ...}}``. The one place a format
@@ -3499,12 +3629,27 @@ class Engine:
         set — Catalyst prunes scans on its own, so it only gates nd
         readers (which prune variables).
         ``ranges`` (column → [lo, hi] from the filter) drives stats-index
-        file pruning for parquet collections (fail-open)."""
+        file pruning for parquet collections (fail-open).
+        ``user``'s SELECT grants (auth.py) are checked before anything
+        is opened: a name as a table (or the table its time-travel
+        snapshot pins), a spec's paths as paths."""
+        gate = None
+        if user is not None and self.catalog is not None:
+            from beacon_spark import auth as _auth
+
+            gate = _auth.read_gate(self, user)
         if spec is None:
             if self.default_table is None:
                 raise ValueError("query has no 'from' and engine has no default table")
             spec = self.default_table
         if isinstance(spec, str):
+            if gate is not None:
+                if not re.fullmatch(r"\w+", spec):
+                    # catalog names are plain words; spark.table reads a
+                    # dotted fmt.`path` name as a direct file scan
+                    raise _auth.AuthError(
+                        f"permission denied: SELECT on table {spec!r}")
+                gate.table(self._snapshot_base(spec) or spec)
             if self.catalog is not None:
                 # the DSL path must see catalog tables too (sql() does
                 # this in its own preamble)
@@ -3519,6 +3664,8 @@ class Engine:
                     "from spec must be one {'<format>': {...}} entry, "
                     f"got: {spec!r}")
             ((fmt, cfg),) = spec.items()
+            if gate is not None:
+                gate.source(cfg)
             fmt = fmt.lower()
             # the one location of a table, repository or database format
             loc = cfg["paths"][0] if cfg.get("paths") else cfg.get("location")
@@ -3644,13 +3791,3 @@ class Engine:
         from beacon_spark.stats import statistics_df
 
         return statistics_df(self.spark, self.datasets_root)
-
-    # ------------------------------------------------------------ operators
-
-    def summarize(self, df_or_name) -> DataFrame:
-        df = (
-            df_or_name
-            if isinstance(df_or_name, DataFrame)
-            else self.spark.table(df_or_name)
-        )
-        return summarize(df)

@@ -315,23 +315,16 @@ class BeaconHttpServer:
 
                 ident = getattr(self, "_ident", None)
                 if ident is not None:
-                    # _resolve_ident, NOT a raw directory lookup: an OIDC
-                    # ExternalPrincipal whose username collides with a
-                    # local super-user must not inherit that user's
-                    # privileges (external principals are never super)
-                    try:
-                        from beacon_spark import auth as _auth_mod
+                    # an OIDC ExternalPrincipal whose username collides
+                    # with a local super-user is still not super; a
+                    # catalog that cannot be read denies too
+                    from beacon_spark import auth as _auth_mod
 
-                        cat = outer.engine.catalog._load()
-                        rec = _auth_mod._resolve_ident(
-                            outer.engine, _auth_mod._auth(cat), ident)
-                        ok = bool(rec and rec.get("super_user"))
+                    msg = "admin endpoints require a super-user identity"
+                    try:
+                        _auth_mod.require_super(outer.engine, ident, msg)
                     except Exception:
-                        ok = False
-                    if not ok:
-                        self._deny(
-                            403, "admin endpoints require a super-user "
-                                 "identity")
+                        self._deny(403, msg)
                         return
                 u = urlparse(self.path)
                 q = {k: v[0] for k, v in parse_qs(u.query).items()}
@@ -487,15 +480,11 @@ class BeaconHttpServer:
                     if not ds:
                         raise ValueError("dataset-schema needs ?dataset=")
                     fmt, cfg = _sniff_cfg(ds)
-                    from beacon_spark import auth as _auth
-
-                    # path grants gate dataset introspection too — same
-                    # normalized deny-wins walk as a DSL read of it
-                    _auth.authorize_dsl(
-                        eng, {"from": {fmt: cfg}},
-                        getattr(self, "_ident", None),
-                    )
-                    df = eng.resolve_from({fmt: cfg}).limit(0)
+                    # path grants gate dataset introspection too — the
+                    # same check as a DSL read of it
+                    df = eng.resolve_from(
+                        {fmt: cfg}, user=getattr(self, "_ident", None),
+                    ).limit(0)
                     self._send_json(json.loads(df.schema.json()))
                 elif path == "/api/default-table":
                     self._send_json({"table": eng.default_table})
@@ -1183,17 +1172,13 @@ class BeaconHttpServer:
                 # the same answer /api/table-schema gives it — nothing
                 from beacon_spark import auth as _auth
 
-                def _readable(tool) -> bool:
-                    tbl = tool.get("x-table", "")
-                    try:
-                        _auth.authorize(
-                            self.engine, f"SELECT * FROM {tbl} LIMIT 0",
-                            user)
-                        return True
-                    except Exception:
-                        return False
-
-                raw = [t for t in raw if _readable(t)]
+                try:
+                    gate = _auth.read_gate(self.engine, user)
+                except _auth.AuthError:
+                    gate, raw = None, []  # an unknown user reads nothing
+                if gate is not None:
+                    raw = [t for t in raw
+                           if gate.allows_table(t.get("x-table", ""))]
             table_tools = [
                 {k: v for k, v in t.items() if not k.startswith("x-")}
                 for t in raw

@@ -649,3 +649,95 @@ def test_glob_no_match_still_textual_checked(aeng, spark, tmp_path):
         aeng.sql("SELECT * FROM read_parquet('nosuch-*.parquet')",
                  user="alice")
     assert not isinstance(ei.value, AuthError)
+
+
+# ---- reads are checked where they resolve (resolve_from + plan walk) ----
+
+
+@pytest.fixture()
+def probe_eng(aeng, spark, tmp_path):
+    """Enforcement on; ``public`` granted, table ``secrets`` and path
+    ``hidden*`` denied; an attached lake whose table nobody granted."""
+    spark.range(5).coalesce(1).write.parquet(str(tmp_path / "hidden.parquet"))
+    lake = Engine(spark, datasets_root=str(tmp_path / "lake"))
+    lake.sql("CREATE TABLE payroll AS SELECT id FROM range(4)")
+    aeng.sql(f"ATTACH '{tmp_path / 'lake'}' AS hr")
+    aeng.sql("CREATE VIEW curated AS SELECT id FROM secrets WHERE id < 3")
+    aeng.sql("SET AUTH ENFORCEMENT ON")
+    aeng.sql("GRANT SELECT ON TABLE public TO ROLE readers")
+    aeng.sql("GRANT SELECT ON TABLE curated TO ROLE readers")
+    aeng.sql("DENY SELECT ON TABLE secrets TO ROLE readers")
+    aeng.sql("DENY SELECT ON PATH 'hidden*' TO ROLE readers")
+    return aeng
+
+
+@pytest.mark.parametrize("stmt", [
+    "SELECT count(*) AS n FROM IDENTIFIER('secrets')",
+    "SELECT count(*) AS n FROM IDENTIFIER('sec' || 'rets')",
+    "SELECT count(*) AS n FROM IDENTIFIER('parquet.`{root}/hid' || 'den.parquet`')",
+    "SELECT * FROM public WHERE id IN (SELECT id FROM IDENTIFIER('secrets'))",
+    "SELECT * FROM hr_payroll",
+    "EXPLAIN SELECT * FROM IDENTIFIER('secrets')",
+    "DESCRIBE secrets",
+    "SUMMARIZE secrets",
+])
+def test_names_spark_resolves_are_checked(probe_eng, tmp_path, stmt):
+    with pytest.raises(AuthError, match="permission denied"):
+        probe_eng.sql(stmt.format(root=tmp_path), user="alice").collect()
+
+
+@pytest.mark.parametrize("stmt, params, n", [
+    ("SELECT id AS secrets FROM public", None, 5),
+    ("WITH p AS (SELECT id FROM public) SELECT * FROM p JOIN p q USING (id)",
+     None, 5),
+    ("SELECT * FROM public WHERE id = $1", [3], 1),
+    ("DESCRIBE public", None, 1),
+    ("SUMMARIZE public", None, 1),
+])
+def test_granted_reads_return_rows(probe_eng, stmt, params, n):
+    """A column alias is not a read; CTEs, bound parameters, DESCRIBE
+    and SUMMARIZE of a granted table pass the same checks."""
+    rows = probe_eng.sql(stmt, params=params, user="alice").collect()
+    assert len(rows) == n
+
+
+def test_granted_view_is_definer_rights(probe_eng):
+    """A granted view over a denied table reads (PostgreSQL semantics:
+    the walk checks the view, not what it is defined over)."""
+    rows = probe_eng.sql("SELECT id FROM curated", user="alice").collect()
+    assert sorted(r.id for r in rows) == [0, 1, 2]
+
+
+def test_denied_paths_refused_before_anything_is_opened(probe_eng, monkeypatch):
+    from beacon_spark.sources import nd, tabular
+
+    def opened(*a, **k):
+        raise AssertionError("a denied path was opened")
+
+    monkeypatch.setattr(tabular, "read_parquet", opened)
+    monkeypatch.setattr(nd, "nd_sample_schema", opened)
+    with pytest.raises(AuthError, match="permission denied"):
+        probe_eng.sql("SELECT * FROM read_parquet('hidden.parquet')",
+                      user="alice")
+    with pytest.raises(AuthError, match="permission denied"):
+        probe_eng.sql("SELECT * FROM read_netcdf('hidden.nc')", user="alice")
+
+
+def test_granted_nd_read_plans_once_for_restricted_reader(probe_eng, tmp_path):
+    """An nd read shares its one planning pass between pushdown and the
+    read checks: a granted store reads its WHERE window."""
+    import numpy as np
+
+    from beacon_spark.sources.zarrlite import write_zarr_store
+
+    write_zarr_store(str(tmp_path / "g.zarr"),
+                     {"t": (("t",), np.arange(40.0)),
+                      "v": (("t",), np.arange(40.0) * 2)},
+                     version=2, codec=None)
+    probe_eng.sql("GRANT SELECT ON PATH 'g.zarr*' TO ROLE readers")
+    rows = probe_eng.sql("SELECT t, v FROM read_zarr('g.zarr') "
+                         "WHERE t >= 10 AND t <= 19", user="alice").collect()
+    assert sorted(r.v for r in rows) == [2.0 * t for t in range(10, 20)]
+    with pytest.raises(AuthError, match="secrets"):
+        probe_eng.sql("SELECT t FROM read_zarr('g.zarr') "
+                      "WHERE t IN (SELECT id FROM secrets)", user="alice")

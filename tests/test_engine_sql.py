@@ -88,6 +88,31 @@ def test_attached_external_table_keeps_its_options(spark, tmp_path):
     assert sorted((r.a, r.b) for r in df.collect()) == [(1, "x"), (2, "y")]
 
 
+
+def test_unregistrable_external_table_is_logged_not_fatal(spark, tmp_path,
+                                                         caplog):
+    """An external table whose files are gone fails open: statements on
+    other tables still run, and the skipped table is reported at WARNING
+    under the site name ``register_catalog``."""
+    import logging
+    import shutil
+
+    root = tmp_path / "root"
+    (root / "gone").mkdir(parents=True)
+    spark.range(3).write.parquet(str(root / "gone" / "p.parquet"))
+    eng = Engine(spark, datasets_root=str(root))
+    eng.sql("CREATE TABLE kept AS SELECT id FROM range(2)")
+    eng.sql("CREATE EXTERNAL TABLE vanished STORED AS PARQUET "
+            "LOCATION 'gone/p.parquet/*.parquet'")
+    shutil.rmtree(root / "gone")
+    fresh = Engine(spark, datasets_root=str(root))
+    with caplog.at_level(logging.WARNING, logger="beacon_spark.engine"):
+        assert fresh.sql("SELECT count(*) AS n FROM kept").collect()[0].n == 2
+    hits = [r.getMessage() for r in caplog.records
+            if r.levelno == logging.WARNING
+            and r.getMessage().startswith("register_catalog:")]
+    assert any("'vanished'" in m for m in hits), hits
+
 def test_explain_analyze(spark, sf_dir):
     from beacon_spark.engine import Engine
 
