@@ -50,8 +50,8 @@ semantics): the walk checks a view and does not descend into it, so a
 SELECT grant on a view authorizes its whole definition — grant views
 deliberately, as the curated projections they are. A session temp
 view outside the catalog is checked like any view: default-denied
-unless its name (or ALL) is granted. The super-user, metadata-schema
-and ``__beacon*`` gates read the statement text.
+unless its name (or ALL) is granted. ``Engine.sql`` decides from Spark's
+parse whether a statement may write; a restricted caller only reads.
 """
 
 from __future__ import annotations
@@ -62,7 +62,7 @@ import re
 import secrets
 
 __all__ = [
-    "AuthError", "ReadGate", "run_auth_statement", "authorize",
+    "AuthError", "WriteRefused", "ReadGate", "run_auth_statement",
     "authorize_dsl", "read_gate", "require_super", "verify_user",
     "hash_password", "is_allowed",
 ]
@@ -74,7 +74,16 @@ class AuthError(PermissionError):
     pass
 
 
+class WriteRefused(AuthError):
+    """A write from a caller or call that may only read."""
+
+
 INTERNAL_NAMES = "permission denied: internal __beacon* names are super-user-only"
+METADATA_SCHEMAS = "permission denied: metadata schemas are super-user-only"
+#: refusals of a write: a restricted caller's (mod.rs:63-70), a read-only call's
+SUPER_ONLY = ("operation not permitted: this statement requires super-user "
+              "privileges")
+READ_ONLY = "operation not permitted: this call is read-only"
 
 
 # ------------------------------------------------------------ passwords
@@ -257,22 +266,26 @@ def _restricted(engine, user: str | None) -> tuple[dict, dict] | None:
 
 
 class ReadGate:
-    """The SELECT checks of one restricted caller under enforcement:
-    deny-wins, default-deny, through :func:`is_allowed` (tables) and
-    :func:`_check_path` (paths)."""
+    """The SELECT checks of one restricted caller: deny-wins,
+    default-deny, through :func:`is_allowed` (tables) and
+    :func:`_check_path` (paths); with enforcement off all pass."""
 
-    def __init__(self, engine, auth: dict, roles: list[str]):
-        self.engine, self.auth, self.roles = engine, auth, roles
+    def __init__(self, engine, auth: dict, ident: dict):
+        self.engine, self.auth, self.roles = engine, auth, ident.get("roles", [])
+        self.enforce = bool(auth.get("enforce"))
 
     def allows_table(self, name: str) -> bool:
-        return is_allowed(self.auth, self.roles, "SELECT", ("table", name))
+        # a dotted name is no catalog table: spark.table scans fmt.`path`
+        return not self.enforce or bool(re.fullmatch(r"\w+", name)) and \
+            is_allowed(self.auth, self.roles, "SELECT", ("table", name))
 
     def table(self, name: str) -> None:
         if not self.allows_table(name):
             raise AuthError(f"permission denied: SELECT on table {name!r}")
 
     def path(self, path: str) -> None:
-        _check_path(self.engine, self.auth, self.roles, path)
+        if self.enforce:
+            _check_path(self.engine, self.auth, self.roles, path)
 
     def source(self, cfg) -> None:
         """Every path of one from-spec's ``{"paths": …}`` (or its
@@ -284,62 +297,17 @@ class ReadGate:
             # the engine accepts a bare string (resolve_globs wraps it);
             # iterating it here would authorize per CHARACTER
             paths = [paths]
-        if not paths:
+        if not paths and self.enforce:
             raise AuthError("permission denied: unresolvable DSL from target")
-        for p in paths:
+        for p in paths or ():
             self.path(str(p))
 
 
-def _gate(engine, restricted: tuple[dict, dict] | None) -> ReadGate | None:
-    if restricted is None or not restricted[0].get("enforce"):
-        return None
-    a, ident = restricted
-    return ReadGate(engine, a, ident.get("roles", []))
-
-
 def read_gate(engine, user: str | None) -> ReadGate | None:
-    """``user``'s read checks, or ``None`` when none apply: the embedded
-    caller, a super-user, or enforcement off (authz.rs:25-41)."""
-    return _gate(engine, _restricted(engine, user))
-
-
-def authorize(engine, statement: str, user: str | None) -> ReadGate | None:
-    """Gate one statement's text for ``user`` and return its read
-    checks (:func:`read_gate`), which ``Engine.sql`` applies where the
-    statement's reads resolve. ``None`` = embedded super-user (no
-    checks). The super-user gate is unconditional (mod.rs:58-78)."""
+    """``user``'s read checks (authz.rs:25-41); ``None`` for the
+    embedded caller or a super-user, who are not restricted."""
     restricted = _restricted(engine, user)
-    if restricted is None:
-        return None
-    from beacon_spark.server.guard import is_readonly_sql, scrub_sql
-
-    if not is_readonly_sql(statement):
-        # validate_query_plan's reframed message (mod.rs:63-70)
-        raise AuthError(
-            "operation not permitted: this statement requires super-user "
-            "privileges"
-        )
-    # metadata schemas (beacon.system.*, information_schema.*) are
-    # super-user-only UNCONDITIONALLY — even with enforcement off, the
-    # auth directory and other users' query texts must not be readable
-    # on a default runtime (system_schema/mod.rs:50-66). scrub_sql is
-    # the lexer-accurate blanking (backslash escapes, comments) shared
-    # with the read-only gate — a desynced regex here let references
-    # hide inside fake literals.
-    blanked = scrub_sql(statement)
-    if re.search(
-        r"(?<![\w.])(?:beacon\s*\.\s*)?(?:system|information_schema)\s*\.\s*\w",
-        blanked, re.IGNORECASE,
-    ):
-        raise AuthError(
-            "permission denied: metadata schemas are super-user-only"
-        )
-    # internal temp views (__beacon_system_*, __beacon_meta_*, …) are the
-    # rewrite machinery's implementation detail — naming one directly
-    # would read metadata schemas through the back door
-    if re.search(r"(?<![\w.])__beacon\w*", blanked, re.IGNORECASE):
-        raise AuthError(INTERNAL_NAMES)
-    return _gate(engine, restricted)
+    return None if restricted is None else ReadGate(engine, *restricted)
 
 
 def resolve_unauthenticated(engine) -> str | None:
@@ -460,18 +428,23 @@ def _priv(p: str) -> str:
     return p
 
 
-def run_auth_statement(engine, statement: str, user: str | None):
+def run_auth_statement(engine, statement: str, gate: ReadGate | None,
+                       deny: str | None = None):
     """Execute an auth-management statement; None when ``statement``
     is not one. Auth DDL itself needs the super-user (the reference
-    routes AuthStatement through the same super-user gate)."""
+    routes AuthStatement through the same super-user gate), and a
+    read-only call (``deny``: its refusal) may only list."""
     for kind, rx in _AUTH_RES:
         m = rx.match(statement)
         if m:
             break
     else:
         return None
-    require_super(engine, user, "operation not permitted: auth management "
-                  "requires super-user privileges")
+    if gate is not None:
+        raise AuthError("operation not permitted: auth management "
+                        "requires super-user privileges")
+    if deny is not None and kind not in ("show_users", "show_roles"):
+        raise WriteRefused(deny)
     cat = engine.catalog._load()
     a = _auth(cat)
 

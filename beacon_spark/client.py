@@ -401,15 +401,9 @@ class Connection:
 
     def _engine_sql(self, statement: str, params=None):
         self._check_open()
-        if self._read_only:
-            from beacon_spark.server.guard import is_readonly_sql
-
-            if not is_readonly_sql(statement):
-                raise NotPermittedError(
-                    "connection is read-only: statement rejected"
-                )
         try:
-            return self.engine.sql(statement, params=params, user=self._user)
+            return self.engine.sql(statement, params=params, user=self._user,
+                                   read_only=self._read_only)
         except Exception as e:
             raise _wrap_error(e) from e
 
@@ -612,17 +606,11 @@ class Connection:
 
     def json_query(self, spec: dict[str, Any]) -> Result:
         self._check_open()
-        # the DSL rides the same guard as SQL: an embedded {"sql": …}
-        # statement on a read-only connection must not smuggle DDL/DML
-        if self._read_only and isinstance(spec, dict) and "sql" in spec:
-            from beacon_spark.server.guard import is_readonly_sql
-
-            if not is_readonly_sql(str(spec["sql"])):
-                raise NotPermittedError(
-                    "connection is read-only: statement rejected"
-                )
         try:
-            df = self.engine.query(spec, user=self._user)
+            # an embedded {"sql": …} statement is read-only on a
+            # read-only connection, like SQL
+            df = self.engine.query(spec, user=self._user,
+                                   read_only=self._read_only)
         except Exception as e:
             raise _wrap_error(e) from e
         return Result(self, df, json.dumps(spec, default=str))

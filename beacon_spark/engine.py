@@ -29,6 +29,7 @@ from typing import Any, NamedTuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from beacon_spark import auth as _auth
 from beacon_spark import dsl
 from beacon_spark.functions.core import _arrow_name_to_spark, register_functions
 from beacon_spark.operators.summarize import summarize
@@ -76,6 +77,12 @@ _DEFINES_TEMP_VIEW_RE = re.compile(
     r"^\s*CREATE\s+(?:OR\s+REPLACE\s+)?(?:GLOBAL\s+)?TEMP(?:ORARY)?\s+VIEW\b",
     re.IGNORECASE,
 )
+#: parsed roots besides a query a read-only call may run: none writes
+_READ_ONLY_COMMANDS = frozenset({
+    "DescribeRelation", "DescribeColumn", "DescribeQueryCommand",
+    "ShowTables", "ShowViews", "ShowColumns", "ShowFunctions",
+    "ShowTableProperties", "ShowCreateTable", "ExplainCommand",
+})
 #: parsed command node -> the field holding the query it would run
 _QUERY_CHILD = {
     "CreateTableAsSelect": "query",
@@ -559,6 +566,9 @@ _DDL_RES: list[tuple[str, re.Pattern]] = [
         r"^\s*DROP\s+(?:MATERIALIZED\s+)?VIEW\s+(IF\s+EXISTS\s+)?(\w+);?\s*$",
         re.IGNORECASE)),
 ]
+#: the dialect statements a read-only call may run: they only list
+_READ_ONLY_KINDS = frozenset(
+    k for k, _ in _DDL_RES if k.startswith("show_") or k == "describe_history")
 
 
 def _split_top_level(s: str) -> list[str]:
@@ -919,16 +929,18 @@ class Engine:
                          exc_info=True)
 
     def run(self, statement: str | dict, *, params=None,
-            user: str | None = None, limits=None) -> Run:
+            user: str | None = None, limits=None,
+            read_only: bool = False) -> Run:
         """Compile SQL text (:meth:`sql`) or a JSON-DSL body
         (:meth:`query`) into a :class:`Run` for a surface to drain.
         DDL/DML execute here; their status frame is the result."""
         if isinstance(statement, str):
-            df = self.sql(statement, params=params, user=user)
+            df = self.sql(statement, params=params, user=user,
+                          read_only=read_only)
             return Run(self, df, statement, user, limits)
         if params is not None:
             raise ValueError("params bind SQL placeholders, not a DSL body")
-        df = self.query(statement, user=user)
+        df = self.query(statement, user=user, read_only=read_only)
         return Run(self, df, json.dumps(statement, default=str), user, limits)
 
     def table_names(self) -> list[str]:
@@ -964,7 +976,7 @@ class Engine:
     # ------------------------------------------------------------ sql
 
     def sql(self, statement: str, params: list | dict | None = None,
-            user: str | None = None) -> DataFrame:
+            user: str | None = None, read_only: bool = False) -> DataFrame:
         """Spark SQL with the dialect extensions pre-compiled away.
 
         - ``SUMMARIZE <table|query>`` → one-pass profiling aggregate
@@ -978,22 +990,28 @@ class Engine:
           options rewritten onto Spark's ``* EXCEPT`` / ``withColumn``
         - ``user``: caller identity for RBAC (auth.py). ``None`` = the
           embedded super-user (the reference's default identity); a
-          named non-super user is gated to read-only statements and,
-          with enforcement on, to its roles' SELECT grants (deny-wins,
-          default-deny — authz.rs:25-41, mod.rs:58-78), checked where
-          each read resolves (``resolve_from``, :meth:`_authorize_plan`)
+          named non-super user is read-only and, with enforcement on,
+          gated to its roles' SELECT grants (deny-wins, default-deny —
+          authz.rs:25-41, mod.rs:58-78), checked where each read
+          resolves (``resolve_from``, :meth:`_authorize_plan`)
+        - ``read_only``: refuse (``auth.WriteRefused``) anything but a
+          query, DESCRIBE/SHOW/EXPLAIN or listing dialect statement,
+          decided from Spark's parse (:meth:`_read_only_plan`)
         """
-        gate = None
+        gate = (_auth.read_gate(self, user)
+                if self.catalog is not None else None)
+        # the refusal a non-read-only statement gets; None = may write
+        deny = (_auth.READ_ONLY if read_only
+                else _auth.SUPER_ONLY if gate is not None else None)
         if self.catalog is not None:
-            from beacon_spark import auth as _auth
-
-            handled = _auth.run_auth_statement(self, statement, user)
+            handled = _auth.run_auth_statement(self, statement, gate, deny)
             if handled is not None:
                 return handled
-            gate = _auth.authorize(self, statement, user)
             for kind, rx in _DDL_RES:
                 m = rx.match(statement)
                 if m:
+                    if deny is not None and kind not in _READ_ONLY_KINDS:
+                        raise _auth.WriteRefused(deny)
                     return self._run_ddl(kind, m)
             self._register_catalog()
 
@@ -1001,13 +1019,18 @@ class Engine:
         if m:
             # EXPLAIN ANALYZE <q>: params ride through — the reference
             # binds placeholders before the analyze wrapper, so
-            # `EXPLAIN ANALYZE … WHERE x = $1` works
-            inner = self.sql(m.group(1), params=params)
+            # `EXPLAIN ANALYZE … WHERE x = $1` works; the inner
+            # statement runs as the caller
+            inner = self.sql(m.group(1), params=params, user=user,
+                             read_only=read_only)
             return self.spark.createDataFrame(
                 [(line,) for line in explain_analyze(inner).splitlines()],
                 T.StructType([T.StructField("plan", T.StringType())]),
             )
 
+        if deny is not None and (_COPY_RE.match(statement)
+                                 or _ANALYZE_RE.match(statement)):
+            raise _auth.WriteRefused(deny)
         m = _COPY_RE.match(statement)
         if m:
             # COPY <table|(query)> TO '<path>' [STORED AS fmt] — the
@@ -1067,14 +1090,14 @@ class Engine:
             if not re.match(r"^\s*SELECT\b", src, re.IGNORECASE):
                 # a table or read_* call: read through the same gate
                 src = f"SELECT * FROM {src}"
-            return summarize(self.sql(src, user=user))
+            return summarize(self.sql(src, user=user, read_only=read_only))
 
         # a restricted reader's grants name remote tables one by one, so
         # its statement is never pushed whole
         statement = self._resolve_remote(
-            statement, whole=params is None and gate is None)
-        statement = self._rewrite_system_tables(statement)
-        statement = self._rewrite_information_schema(statement)
+            statement, whole=params is None and gate is None, deny=deny)
+        statement = self._rewrite_system_tables(statement, gate)
+        statement = self._rewrite_information_schema(statement, gate)
         statement = self._rewrite_time_travel(statement)
         # a SQL temp view stores its text and resolves the views it names
         # on every use, so the read views such a statement binds must
@@ -1084,9 +1107,10 @@ class Engine:
         views: list[str] = []
         # the metadata views this statement binds: engine facts, not reads
         meta_views: list[str] = []
+        df = None
         try:
             statement = self._rewrite_read_fns(statement, nd_calls, views, user)
-            statement = self._rewrite_metadata_fns(statement, meta_views)
+            statement = self._rewrite_metadata_fns(statement, meta_views, gate)
             statement = self._rewrite_try_arrow_cast(statement)
             statement = self._rewrite_macros(statement)
             statement = self._rewrite_extract_fields(statement)
@@ -1120,21 +1144,27 @@ class Engine:
                 args = params
             elif params is not None:
                 statement, args = _bind_placeholders(statement, params)
-            df = None
+            # one parse: a read-only call's is checked, and the plan
+            # checks and the DataFrame reuse it
+            plan = None if deny is None else self._read_only_plan(
+                statement, deny, gate,
+                {*views, *meta_views, *(c.name for c in nd_calls)})
             if nd_calls:
                 statement = self._bind_nd_views(
-                    statement, args, nd_calls, views, gate, meta_views)
+                    statement, args, nd_calls, views, gate, meta_views, plan)
+                plan = None  # the statement now names the pruned views
             elif gate is not None:
                 qe, whole = self._authorize_plan(
-                    statement, args, gate, views + meta_views)
+                    statement, args, gate, views + meta_views, plan)
                 if whole:  # reuse the analysis the check made
-                    df = DataFrame(self._jvm_sql.dataset.ofRows(
-                        self.spark._jsparkSession, qe.analyzed()), self.spark)
+                    df = self._dataframe(qe.analyzed())
             if df is None:
-                df = (self.spark.sql(statement, args=args) if args
-                      else self.spark.sql(statement))
+                if plan is None:
+                    plan = self._jvm_sql.parser.parsePlan(statement)
+                df = self._dataframe(self._bind_args(plan, args))
         finally:
-            if not keep_views:
+            # a refused or failed statement keeps none of its read views
+            if not (keep_views and df is not None):
                 for view in views:
                     self.spark.catalog.dropTempView(view)
         if replaces:
@@ -1181,12 +1211,13 @@ class Engine:
         the read_* rewrite closes by hashing the root)."""
         return f"{abs(hash(self.datasets_root)) % 10**8}"
 
-    def _rewrite_system_tables(self, statement: str) -> str:
+    def _rewrite_system_tables(self, statement: str, gate=None) -> str:
         """``beacon.system.<t>`` / ``system.<t>`` → a temp view refreshed
         at reference time (system_schema/mod.rs:44-66: users, roles,
-        file_stats, query_metrics). Super-user-only — the gate is in
-        auth.authorize, unconditional like the reference's
-        is_metadata_schema (mod.rs:50-66)."""
+        file_stats, query_metrics). Super-user-only: a restricted
+        caller (``gate``) is refused before any view is built, whatever
+        the enforcement, like the reference's is_metadata_schema
+        (mod.rs:50-66)."""
         if self.catalog is None or "system" not in statement.lower():
             return statement
         from beacon_spark.system_tables import SYSTEM_TABLES
@@ -1194,6 +1225,8 @@ class Engine:
         names: list[str] = []
 
         def sub(m: re.Match) -> str:
+            if gate is not None:
+                raise _auth.AuthError(_auth.METADATA_SCHEMAS)
             name = m.group(1).lower()
             if name not in SYSTEM_TABLES:
                 raise ValueError(
@@ -1214,7 +1247,7 @@ class Engine:
         r"\binformation_schema\s*\.\s*(tables|columns)\b", re.IGNORECASE
     )
 
-    def _rewrite_information_schema(self, statement: str) -> str:
+    def _rewrite_information_schema(self, statement: str, gate=None) -> str:
         """``information_schema.tables`` / ``.columns`` → temp views
         snapshotted at reference time — the reference engine exposes
         DataFusion's information_schema and its Python dialect reflects
@@ -1222,8 +1255,8 @@ class Engine:
         session information_schema, so the views are built from the
         catalog: every managed/external table and (materialized) view,
         schema 'public' / catalog 'beacon' like the reference's
-        defaults. Super-user-only — the same unconditional
-        auth.authorize gate that covers beacon.system.*."""
+        defaults. Super-user-only, as beacon.system.*: a restricted
+        caller (``gate``) is refused before any view is built."""
         if self.catalog is None or "information_schema" not in statement.lower():
             return statement
         spans = _literal_spans(statement)
@@ -1234,6 +1267,8 @@ class Engine:
         }
         if not wanted:
             return statement
+        if gate is not None:
+            raise _auth.AuthError(_auth.METADATA_SCHEMAS)
         self._register_catalog()
         cat = self.catalog._load()
         entries = (
@@ -1341,7 +1376,8 @@ class Engine:
             self._TIMESTAMP_AS_OF_RE, repl_timestamp, statement
         )
 
-    def _rewrite_metadata_fns(self, statement: str, views: list) -> str:
+    def _rewrite_metadata_fns(self, statement: str, views: list,
+                              gate=None) -> str:
         """Metadata table functions → temp views:
         ``list_datasets()`` (file_formats/list_datasets.rs),
         ``view_statistics_cache()`` / bare ``view_dataset_statistics()``
@@ -1349,8 +1385,9 @@ class Engine:
         (per-column stats of one file, computed on demand when
         uncached) and ``view_external_table_statistics('<table>')``
         (cache coverage per file) — beacon-functions/src/metadata/* and
-        table-functions-utility.md:52-117. Each view's name is appended
-        to ``views``."""
+        table-functions-utility.md:52-117. A restricted caller's
+        ``gate`` checks a path or table argument before anything is
+        computed. Each view's name is appended to ``views``."""
 
         def repl(m: re.Match) -> str:
             fn, arg = m.group(1).lower(), m.group(2)
@@ -1362,10 +1399,14 @@ class Engine:
                 if arg is None:
                     raise ValueError(
                         "view_external_table_statistics takes a table name")
+                if gate is not None:
+                    gate.table(arg)
                 df = external_table_statistics_df(self.spark, self, arg)
             elif fn == "view_dataset_statistics" and arg is not None:
                 from beacon_spark.stats import dataset_statistics_df
 
+                if gate is not None:
+                    gate.path(arg)
                 df = dataset_statistics_df(self.spark, self, arg)
             else:
                 df = self.view_statistics()
@@ -1629,6 +1670,9 @@ class Engine:
     def _run_ddl(self, kind: str, m: re.Match) -> DataFrame:
         """Dialect DDL/DML → Catalog ops (statement enum parser/statement.rs:8-30,
         lowering actions.rs:221-795). Always returns a small status frame."""
+        if kind in _READ_ONLY_KINDS:
+            # a listing changes nothing: the registration stays valid
+            return self._run_ddl_inner(kind, m)
         cat = self.catalog
         try:
             out = self._run_ddl_inner(kind, m)
@@ -2548,7 +2592,8 @@ class Engine:
             .load()
         )
 
-    def _resolve_remote(self, statement: str, whole: bool = True) -> str:
+    def _resolve_remote(self, statement: str, whole: bool = True,
+                        deny: str | None = None) -> str:
         """SQL surface for attached remotes: ``remote_query('alias',
         'sql')`` pushes the statement down; a bare ``alias__table``
         reference becomes a LAZY federated scan (temp view over the
@@ -2557,12 +2602,16 @@ class Engine:
         whose table references are ALL tables of ONE attached remote is
         pushed WHOLE as a single remote statement (the
         FederationOptimizerRule analog — see _federated_pushdown) unless
-        ``whole`` is false."""
+        ``whole`` is false. A read-only call (``deny``: its refusal) may
+        not ``remote_query``: the remote runs any payload."""
         remotes = getattr(self, "_remotes", {})
-        if not remotes and not getattr(self, "_remote_ext", None):
+        attached = remotes or getattr(self, "_remote_ext", None)
+        if not attached and deny is None:
             return statement
 
         def repl(m: re.Match) -> str:
+            if deny is not None:
+                raise _auth.WriteRefused(deny)
             alias, rsql = m.group(1), m.group(2).replace("''", "'")
             rb = remotes.get(alias)
             if rb is None:
@@ -2574,6 +2623,8 @@ class Engine:
             return name
 
         statement = _sub_outside_literals(self._REMOTE_QUERY_RE, repl, statement)
+        if not attached:
+            return statement
         if whole:
             pushed = self._federated_pushdown(statement, remotes)
             if pushed is not None:
@@ -2613,6 +2664,12 @@ class Engine:
         re.IGNORECASE,
     )
 
+    #: a DML body after WITH, or a second statement: never pushed (a
+    #: false match only runs locally). Spark cannot parse the dialect
+    #: (``* EXCLUDE``) the remote accepts, so this is lexical.
+    _FED_DML_RE = re.compile(
+        r"\b(insert|update|delete|merge)\b|;\s*\S", re.IGNORECASE)
+
     def _federated_pushdown(self, statement: str, remotes) -> str | None:
         """FederationOptimizerRule analog (reference
         beacon-core/src/runtime_builder.rs:814-827,
@@ -2638,13 +2695,12 @@ class Engine:
         local/remote reference, multi-endpoint reference, unparseable
         table position, or remote planning failure falls back safely.
         """
-        from beacon_spark.server.guard import is_readonly_sql
-
         if not re.match(r"^\s*(select|with)\b", statement, re.IGNORECASE):
             return None
-        if not is_readonly_sql(statement):
-            return None
         spans = _literal_spans(statement)
+        if any(not _in_literal(spans, m.start())
+               for m in self._FED_DML_RE.finditer(statement)):
+            return None
         idents = _table_position_idents(statement, spans)
         if idents is None:
             return None
@@ -2880,76 +2936,115 @@ class Engine:
 
         jvm = self.spark._jvm
         return SimpleNamespace(
+            parser=self.spark._jsparkSession.sessionState().sqlParser(),
             skip=jvm.org.apache.spark.sql.execution.CommandExecutionMode.SKIP(),
             params=jvm.org.apache.spark.sql.catalyst.analysis.NameParameterizedQuery,
             dataset=jvm.org.apache.spark.sql.classic.Dataset)
 
-    def _query_execution(self, statement: str, args: dict | None):
-        """Parse ``statement`` (binding ``args``) and open a
-        QueryExecution of the query it runs without running it, the way
-        Spark's EXPLAIN does. A CTAS/INSERT/EXPLAIN/CREATE VIEW/DESCRIBE
-        QUERY opens its query child (the command itself never runs).
-        Returns (the parsed query, its QueryExecution, whether that
-        query is the whole statement); analysis and optimization run
-        when first asked for."""
-        jss = self.spark._jsparkSession
-        jvm = self.spark._jvm
-        plan = jss.sessionState().sqlParser().parsePlan(statement)
+    def _read_only_plan(self, statement: str, deny: str, gate=None,
+                        trusted=()):
+        """The parse of a statement a read-only call may run, decided
+        from its type as Beacon's planner does (mod.rs:58-78), else
+        ``WriteRefused(deny)``: a query by Spark's ``query`` grammar
+        (not ``WITH … INSERT``, ``EXECUTE IMMEDIATE``, ``CALL``, a second
+        statement) or a :data:`_READ_ONLY_COMMANDS` root. One walk of the
+        query (children, subqueries, CTEs) refuses ``TRANSFORM … USING``
+        (it runs a program) and checks a restricted caller's (``gate``)
+        names before analysis: ``__beacon*`` unless bound by this
+        statement's rewrites (``trusted``) is refused whatever the
+        enforcement, ``fmt.`path``` is path-checked, a snapshot
+        ``t__v3`` is a read of ``t``."""
+        from pyspark.errors import ParseException
+
+        try:
+            plan = self._jvm_sql.parser.parseQuery(
+                re.sub(r"[\s;]+$", "", statement))
+        except ParseException:
+            plan = self._jvm_sql.parser.parsePlan(statement)
+            if plan.nodeName() not in _READ_ONLY_COMMANDS:
+                raise _auth.WriteRefused(deny) from None
         field = _QUERY_CHILD.get(plan.nodeName())
-        if field is not None:
-            plan = getattr(plan, field)()
-        query = plan
-        if args:
-            from pyspark.sql import functions as F
-            from pyspark.sql.classic.column import _to_java_column
-
-            names = list(args)
-            values = [jss.expression(_to_java_column(F.lit(args[n])))
-                      for n in names]
-            plan = self._jvm_sql.params(
-                plan, jvm.PythonUtils.toSeq(names), jvm.PythonUtils.toSeq(values))
-        qe = jss.sessionState().executePlan(plan, self._jvm_sql.skip)
-        return query, qe, field is None
-
-    def _nd_optimized_plan(self, statement: str, args: dict | None):
-        """The optimized plan of ``statement``'s query, not executed."""
-        return self._query_execution(statement, args)[1].optimizedPlan()
-
-    def _authorize_plan(self, statement: str, args: dict | None, gate,
-                        trusted) -> tuple:
-        """Check the reads of ``statement`` for a restricted caller
-        (``gate``), as the reference checks ``Select`` on every TableScan
-        of the resolved plan (authz.rs:25-41), walking plan children,
-        expression subqueries and CTE definitions. Returns
-        :meth:`_query_execution`'s QueryExecution and ``whole`` flag.
-
-        - parsed plan: ``fmt.`path``` (a two-part name) is Spark's direct
-          file scan, path-checked before analysis opens it; a snapshot
-          written as ``t__v3`` is a read of ``t``.
-        - analyzed plan: a ``View`` or DESCRIBE/SHOW target that this
-          statement's rewrites bound over reads they checked
-          (``trusted``) passes; any other is checked as a table (a
-          snapshot as the table it pins) and not descended into, so
-          granted views are definer-rights. A file relation outside any
-          view is path-checked; any other relation there is refused."""
-        from beacon_spark.auth import INTERNAL_NAMES, AuthError
-
-        parsed, qe, whole = self._query_execution(statement, args)
-        todo = [parsed]
+        todo = [getattr(plan, field)() if field else plan]
         while todo:
             node = todo.pop()
             kind = node.nodeName()
-            if kind == "UnresolvedRelation":
+            if kind == "ScriptTransformation":
+                raise _auth.WriteRefused(deny)
+            if kind == "UnresolvedRelation" and gate is not None:
                 parts = _jseq(node.multipartIdentifier())
+                if parts[-1] not in trusted \
+                        and parts[-1].lower().startswith("__beacon"):
+                    raise _auth.AuthError(_auth.INTERNAL_NAMES)
                 if len(parts) == 2:
                     gate.path(parts[1])
                 base = self._snapshot_base(parts[-1])
                 if base is not None:
                     gate.table(base)
-                continue
             if kind == "UnresolvedWith":
                 todo += [cte._2() for cte in _jseq(node.cteRelations())]
             todo += _jseq(node.children()) + _jseq(node.subqueries())
+        return plan
+
+    def _bind_args(self, plan, args: dict | None):
+        """``plan`` with ``args`` bound to its ``:name`` markers."""
+        if not args:
+            return plan
+        from pyspark.sql import functions as F
+        from pyspark.sql.classic.column import _to_java_column
+
+        jss = self.spark._jsparkSession
+        seq = self.spark._jvm.PythonUtils.toSeq
+        names = list(args)
+        values = [jss.expression(_to_java_column(F.lit(args[n])))
+                  for n in names]
+        return self._jvm_sql.params(plan, seq(names), seq(values))
+
+    def _dataframe(self, plan) -> DataFrame:
+        """``plan``'s DataFrame, built as ``spark.sql`` builds one."""
+        return DataFrame(self._jvm_sql.dataset.ofRows(
+            self.spark._jsparkSession, plan), self.spark)
+
+    def _query_execution(self, statement: str, args: dict | None,
+                         plan=None):
+        """Parse ``statement`` (unless ``plan`` is its parse), bind
+        ``args`` and open a QueryExecution of the query it runs without
+        running it, the way Spark's EXPLAIN does. A CTAS/INSERT/EXPLAIN/
+        CREATE VIEW/DESCRIBE QUERY opens its query child (the command
+        itself never runs). Returns (its QueryExecution, whether that
+        query is the whole statement); analysis and optimization run
+        when first asked for."""
+        if plan is None:
+            plan = self._jvm_sql.parser.parsePlan(statement)
+        field = _QUERY_CHILD.get(plan.nodeName())
+        if field is not None:
+            plan = getattr(plan, field)()
+        qe = self.spark._jsparkSession.sessionState().executePlan(
+            self._bind_args(plan, args), self._jvm_sql.skip)
+        return qe, field is None
+
+    def _nd_optimized_plan(self, statement: str, args: dict | None):
+        """The optimized plan of ``statement``'s query, not executed."""
+        return self._query_execution(statement, args)[0].optimizedPlan()
+
+    def _authorize_plan(self, statement: str, args: dict | None, gate,
+                        trusted, plan=None) -> tuple:
+        """Check the reads of ``statement`` for a restricted caller
+        (``gate``) on its analyzed plan, as the reference checks
+        ``Select`` on every TableScan of the resolved plan
+        (authz.rs:25-41), walking plan children and expression
+        subqueries; the names of the parse were checked by
+        :meth:`_read_only_plan`. ``plan``: the statement's parse.
+        Returns :meth:`_query_execution`'s QueryExecution and ``whole``
+        flag.
+
+        A ``View`` or DESCRIBE/SHOW target this statement's rewrites did
+        not bind over reads they checked (``trusted``) is checked as a
+        table (a snapshot as the table it pins) and not descended into,
+        so granted views are definer-rights; an internal ``__beacon*``
+        one is refused whatever the enforcement (``gate.enforce``).
+        Under enforcement a file relation outside any view is
+        path-checked and any other relation there refused."""
+        qe, whole = self._query_execution(statement, args, plan)
         todo = [qe.analyzed()]
         while todo:
             node = todo.pop()
@@ -2961,19 +3056,20 @@ class Engine:
                 if name in trusted:
                     continue
                 if name.lower().startswith("__beacon"):
-                    raise AuthError(INTERNAL_NAMES)
+                    raise _auth.AuthError(_auth.INTERNAL_NAMES)
                 gate.table(self._snapshot_base(name) or name)
                 continue
-            if kind == "LogicalRelation" and node.relation().getClass() \
-                    .getSimpleName() == "HadoopFsRelation":
+            if (gate.enforce and kind.endswith("Relation")
+                    and kind not in _LITERAL_RELATIONS):
+                if kind != "LogicalRelation" or node.relation().getClass() \
+                        .getSimpleName() != "HadoopFsRelation":
+                    raise _auth.AuthError(f"permission denied: {kind} "
+                                          "read outside a catalog table")
                 for root in _jseq(node.relation().location().rootPaths()):
                     uri = root.toUri()
                     gate.path(uri.getPath() if uri.getScheme() == "file"
                               else root.toString())
                 continue
-            if kind.endswith("Relation") and kind not in _LITERAL_RELATIONS:
-                raise AuthError(f"permission denied: {kind} read outside "
-                                "a catalog table")
             todo += _jseq(node.children()) + _jseq(node.subqueries())
         return qe, whole
 
@@ -2985,7 +3081,7 @@ class Engine:
 
     def _bind_nd_views(self, statement: str, args: dict | None,
                        nd_calls: list, views: list, gate=None,
-                       trusted=()) -> str:
+                       trusted=(), plan=None) -> str:
         """Bind every nd call in ``statement`` to its pruned ``read_nd``
         view (appended to ``views``): placeholders stand in while
         Catalyst optimizes the statement, and the ranges and columns come
@@ -2994,7 +3090,8 @@ class Engine:
         exact — and is reported at WARNING (``nd_sql_pushdown``). A
         restricted reader's ``gate`` checks the statement on the same
         pass (:meth:`_authorize_plan`; ``trusted``: views bound besides
-        the read views)."""
+        the read views); ``plan`` is the statement's parse, when the
+        caller has it."""
         bound: list[_NdCall] = []
         try:
             bound = [self._nd_placeholder(call, gate) for call in nd_calls]
@@ -3002,7 +3099,9 @@ class Engine:
             if gate is not None:
                 qe = self._authorize_plan(
                     statement, args, gate,
-                    {*views, *trusted, *(c.name for c in nd_calls)})[0]
+                    {*views, *trusted, *(c.name for c in nd_calls)}, plan)[0]
+            elif plan is not None:
+                qe = self._query_execution(statement, args, plan)[0]
             reason = "not found in the optimized plan"
             try:
                 pushed = _nd_pushdown(
@@ -3454,17 +3553,16 @@ class Engine:
     # ------------------------------------------------------------ json dsl
 
     def query(self, body: dict[str, Any], output_path: str | None = None,
-              user: str | None = None) -> DataFrame:
+              user: str | None = None, read_only: bool = False) -> DataFrame:
         """JSON query DSL (or ``{"sql": ...}``) → DataFrame — the two forms
         compile to the same plans (README.md:117-119). An ``output`` block
         (``{"format": ..., ...options}``) plus ``output_path`` writes the
         result in the requested format (query/output.rs). ``user`` gates
         the query through RBAC: ``auth.authorize_dsl`` gates the output
-        block, and ``resolve_from`` checks the ``from`` it reads."""
+        block, and ``resolve_from`` checks the ``from`` it reads;
+        ``read_only`` refuses file output and reaches the ``sql`` form."""
         body = dict(body)
         if user is not None and self.catalog is not None:
-            from beacon_spark import auth as _auth
-
             if "sql" not in body:
                 _auth.authorize_dsl(self, body, user)
             elif body.get("output") or output_path:
@@ -3476,8 +3574,10 @@ class Engine:
                     "super-user privileges",
                 )
         output = body.pop("output", None)
+        if read_only and output is not None and output_path is not None:
+            raise _auth.WriteRefused(_auth.READ_ONLY)
         df = (
-            self.sql(body["sql"], user=user)
+            self.sql(body["sql"], user=user, read_only=read_only)
             if "sql" in body
             else dsl.compile_query(self, body, user=user)
         )
@@ -3635,8 +3735,6 @@ class Engine:
         snapshot pins), a spec's paths as paths."""
         gate = None
         if user is not None and self.catalog is not None:
-            from beacon_spark import auth as _auth
-
             gate = _auth.read_gate(self, user)
         if spec is None:
             if self.default_table is None:
@@ -3644,11 +3742,6 @@ class Engine:
             spec = self.default_table
         if isinstance(spec, str):
             if gate is not None:
-                if not re.fullmatch(r"\w+", spec):
-                    # catalog names are plain words; spark.table reads a
-                    # dotted fmt.`path` name as a direct file scan
-                    raise _auth.AuthError(
-                        f"permission denied: SELECT on table {spec!r}")
                 gate.table(self._snapshot_base(spec) or spec)
             if self.catalog is not None:
                 # the DSL path must see catalog tables too (sql() does

@@ -117,4 +117,10 @@ def register_functions(spark: SparkSession) -> None:
         lambda: VERSION,
         T.StringType(),
     )
+    # Java reflection from a SELECT (System.setProperty, System.exit) is
+    # invisible to every read check, and Beacon has no such function
+    registry = spark._jsparkSession.sessionState().functionRegistry()
+    ident = spark._jvm.org.apache.spark.sql.catalyst.FunctionIdentifier
+    for name in ("reflect", "java_method", "try_reflect"):
+        registry.dropFunction(ident.apply(name))
     spark._beacon_fns_registered = True

@@ -179,8 +179,6 @@ class BeaconFlightServer(fl.FlightServerBase):
         return fl.GeneratorStream(run.schema, run.batches())
 
     def get_flight_info(self, context, descriptor):
-        from beacon_spark.server.guard import is_readonly_sql
-
         if descriptor.command:
             info = self._fsql.flight_info(
                 descriptor, descriptor.command, self._user(context)
@@ -188,21 +186,16 @@ class BeaconFlightServer(fl.FlightServerBase):
             if info is not None:
                 return info
         cmd = self._cmd_from_descriptor(descriptor)
-        # planning a statement runs Engine.sql, which EXECUTES DDL/DML to
-        # completion — and the get_flight_info → do_get flow would then
-        # run the command twice. Only read-only statements get an info.
-        if not is_readonly_sql(cmd["sql"]):
-            raise fl.FlightServerError(
-                "get_flight_info is read-only (planning would execute the "
-                "statement; send DDL/DML via do_get directly)"
-            )
-        # schema-only planning: LIMIT 0 keeps it metadata-sized (params
-        # must bind here too, or parameterized commands fail at info time)
+        # planning a statement runs Engine.sql, which EXECUTES DDL/DML —
+        # and do_get would then run it twice: only reads get an info.
+        # LIMIT 0 keeps it metadata-sized (params must bind here too, or
+        # parameterized commands fail at info time)
         from beacon_spark.outputs import arrow_schema_of
 
         schema = arrow_schema_of(
             self.engine.sql(
-                cmd["sql"], params=cmd.get("params"), user=self._user(context)
+                cmd["sql"], params=cmd.get("params"), user=self._user(context),
+                read_only=True,
             ).limit(0)
         )
         ticket = fl.Ticket(json.dumps(cmd).encode())

@@ -411,17 +411,13 @@ class FlightSqlHandler:
             raise fl.FlightServerError(
                 f"unsupported FlightSQL command {kind!r}"
             )
-        from beacon_spark.server.guard import is_readonly_sql
-
-        if not is_readonly_sql(sql):
-            raise fl.FlightServerError(
-                "get_flight_info is read-only (use CommandStatementUpdate "
-                "via do_put for DML)"
-            )
+        # planning executes DDL/DML: only reads get an info (DML is
+        # CommandStatementUpdate via do_put)
         from beacon_spark.outputs import arrow_schema_of
 
         schema = arrow_schema_of(
-            self.engine.sql(sql, params=params, user=user).limit(0)
+            self.engine.sql(sql, params=params, user=user,
+                            read_only=True).limit(0)
         )
         if kind == "CommandPreparedStatementQuery":
             # the ticket must keep the prepared handle — a re-stated
@@ -533,16 +529,19 @@ class FlightSqlHandler:
                     oldest = next(iter(self._prepared))
                     self._prepared.pop(oldest, None)
                     self._bound.pop(oldest, None)
-            from beacon_spark.server.guard import is_readonly_sql
+            from beacon_spark.auth import WriteRefused
 
             dataset_schema = b""
-            if is_readonly_sql(sql) and not re.search(r"\$\d+", sql):
-                # parameterized statements can't plan before binding —
-                # the spec allows an absent dataset schema at create
-                schema = arrow_schema_of(
-                    self.engine.sql(sql, user=user).limit(0)
-                )
-                dataset_schema = schema.serialize().to_pybytes()
+            if not re.search(r"\$\d+", sql):
+                # parameterized statements can't plan before binding,
+                # and an update has no result set — the spec allows an
+                # absent dataset schema at create for both
+                try:
+                    df = self.engine.sql(sql, user=user, read_only=True)
+                    dataset_schema = arrow_schema_of(
+                        df.limit(0)).serialize().to_pybytes()
+                except WriteRefused:
+                    dataset_schema = b""
             result = (
                 _field_bytes(1, handle)
                 + _field_bytes(2, dataset_schema)

@@ -1,36 +1,27 @@
-"""Read-only SQL gate shared by the HTTP/MCP and Flight transports,
-plus the ONE lexer-accurate scrubber every lexical gate in the engine
-uses (auth keyword/reference checks, dialect rewrites).
+"""The ONE lexer-accurate SQL scanner the engine's lexical rewrites use
+(dialect rewrites, placeholder binding, remote-name scans), plus the
+literal helpers built on it.
 
-The reference enforces read-only surfaces at the planner by clearing
-the session's super-user flag (beacon-mcp server.rs:70-85); we have no
-per-plan privilege bit, so the gate is lexical and deliberately
-conservative: a statement passes only when it is SELECT-shaped AND
-contains no write/DDL/admin keyword outside string literals/comments
-AND does not invoke ``remote_query()`` at all — the remote payload is a
-quoted literal the engine would extract and execute on the attached
-remote with full privileges, so no scan of the *outer* statement can
-vouch for it.
+Whether a statement may write is not decided here: ``Engine.sql``
+decides it from Spark's own parse (``read_only=True``, or a restricted
+caller), as the reference decides it from the planned statement's type
+(beacon-mcp server.rs:70-85, statement_plan/mod.rs:58-78).
 
 Why a hand lexer and not a regex: Spark's default lexer
 (``escapedStringLiterals=false``) treats backslash as an escape inside
 string literals, and allows comments between any two tokens. A blanking
 regex that knows only the SQL ``''`` escape desyncs from the real lexer
-on ``'\\''`` — and a desynced scrub lets write keywords ride inside what
-Spark parses as a literal (or hides references inside what Spark parses
-as code). Every scrub below tracks literals (single- AND double-quoted,
-with ``\\x`` and doubled-quote escapes), ``--``/``/* */`` comments, and
-backtick-quoted identifiers exactly as Spark's ANTLR lexer does.
+on ``'\\''`` — a rewrite then fires inside what Spark parses as a literal,
+or skips what Spark parses as code. Every scan below tracks literals
+(single- AND double-quoted, with ``\\x`` and doubled-quote escapes),
+``--``/``/* */`` comments, and backtick-quoted identifiers exactly as
+Spark's ANTLR lexer does.
 """
 
 from __future__ import annotations
 
-import re
-
 __all__ = [
-    "is_readonly_sql", "scrub_sql", "sql_noncode_spans",
-    "sql_string_literal", "sql_is_closed",
-    "READONLY_START_RE", "WRITE_KEYWORD_RE",
+    "scrub_sql", "sql_noncode_spans", "sql_string_literal", "sql_is_closed",
 ]
 
 
@@ -42,20 +33,6 @@ def sql_string_literal(value: str) -> str:
     text and re-opens code at an attacker-influenced point. Every
     value spliced into engine-executed SQL must come through here."""
     return "'" + value.replace("\\", "\\\\").replace("'", "''") + "'"
-
-READONLY_START_RE = re.compile(
-    r"^\s*(SELECT|WITH|SUMMARIZE|EXPLAIN|SHOW|DESCRIBE)\b",
-    re.IGNORECASE,
-)
-# write/DDL/admin keywords that must not appear ANYWHERE outside string
-# literals — a WITH-prefixed INSERT or an EXPLAIN ANALYZE of a COPY both
-# start "read-only" but execute writes
-WRITE_KEYWORD_RE = re.compile(
-    r"\b(INSERT|UPDATE|DELETE|MERGE|DROP|CREATE|ALTER|TRUNCATE|COPY|"
-    r"VACUUM|ATTACH|DETACH|ANALYZE|GRANT|REVOKE|DENY|SET|RUN|REFRESH|"
-    r"OVERWRITE)\b",
-    re.IGNORECASE,
-)
 
 
 def _lex(sql: str):
@@ -138,17 +115,16 @@ def sql_noncode_spans(
     return [(s, e) for kind, s, e in _lex(sql) if kind in skip]
 
 
-def scrub_sql(sql: str, blank_literals: bool = True) -> str:
-    """Lexer-accurate scrub for keyword/reference scans: comments become
-    one space (so token adjacency survives — ``parquet/**/.`` still
-    reads as ``parquet .``), string-literal bodies are blanked (quotes
-    kept) unless ``blank_literals=False``, backtick identifiers pass
-    through."""
+def scrub_sql(sql: str) -> str:
+    """Lexer-accurate scrub for keyword scans: comments become one space
+    (so token adjacency survives — ``parquet/**/.`` still reads as
+    ``parquet .``), string-literal bodies are blanked (quotes kept),
+    backtick identifiers pass through."""
     out: list[str] = []
     for kind, s, e in _lex(sql):
         if kind == "comment":
             out.append(" ")
-        elif kind == "lit" and blank_literals:
+        elif kind == "lit":
             out.append(sql[s] + sql[e - 1] if e - s >= 2 else "''")
         else:
             out.append(sql[s:e])
@@ -170,12 +146,3 @@ def sql_is_closed(sql: str) -> bool:
         if kind == "code" and marker in probe[s:e]:
             return True
     return False
-
-
-def is_readonly_sql(sql: str) -> bool:
-    if not READONLY_START_RE.match(sql):
-        return False
-    # remote_query is checked BEFORE literal blanking (see module doc)
-    if re.search(r"\bremote_query\s*\(", sql, re.IGNORECASE):
-        return False
-    return not WRITE_KEYWORD_RE.search(scrub_sql(sql))

@@ -18,8 +18,9 @@ The Spark analog of the reference's axum client API
   - ``POST /mcp`` — MCP streamable-HTTP (JSON-RPC 2.0): ``initialize``,
     ``tools/list``, ``tools/call`` with the reference's core tool set
     (``list_tables`` / ``describe_table`` / ``run_sql``, beacon-mcp
-    catalog.rs:134-136). ``run_sql`` is strictly read-only: anything
-    that is not a SELECT-shaped statement is rejected, mirroring the
+    catalog.rs:134-136). Every MCP statement runs read-only
+    (``Engine.sql(…, read_only=True)``): anything Spark does not parse
+    as a query or a DESCRIBE/SHOW/EXPLAIN is rejected, mirroring the
     reference's cleared super-user flag (server.rs:70-85). Tool
     failures come back as tool-result errors (isError), not protocol
     errors, so a model can read and react.
@@ -497,7 +498,7 @@ class BeaconHttpServer:
                 elif path.startswith("/api/query/metrics/"):
                     # same unconditional gate as beacon.system.
                     # query_metrics: other users' query TEXTS are
-                    # super-user-only (auth.authorize's metadata-schema
+                    # super-user-only (the metadata-schema
                     # rule) — this endpoint serves the identical rows
                     ident = getattr(self, "_ident", None)
                     if ident is not None:
@@ -543,26 +544,17 @@ class BeaconHttpServer:
                                 "(BEACON_SPARK_ENABLE_SQL=false); use "
                                 "the JSON query DSL")
                         ident = getattr(self, "_ident", None)
+                        # engine.sql executes DDL/DML EAGERLY — a
+                        # plan/parse endpoint must never mutate, even
+                        # for the transport super-identity
                         if "sql" in req:
-                            from beacon_spark.server.guard import (
-                                is_readonly_sql,
-                            )
-
-                            if not is_readonly_sql(req["sql"]):
-                                # engine.sql executes DDL/DML EAGERLY — a
-                                # plan/parse endpoint must never mutate,
-                                # even for the transport super-identity
-                                # (flight.py get_flight_info guards the
-                                # identical pattern)
-                                raise ValueError(
-                                    "only read-only SELECT statements "
-                                    "can be planned here")
                             df = outer.engine.sql(
                                 req["sql"], params=req.get("params"),
-                                user=ident)
+                                user=ident, read_only=True)
                         else:
                             df = outer.engine.query(
-                                req.get("query", req), user=ident)
+                                req.get("query", req), user=ident,
+                                read_only=True)
                         if u.path == "/api/parse-query":
                             # parse/plan succeeded; return the schema
                             self._send_json(json.loads(df.schema.json()))
@@ -984,17 +976,12 @@ class BeaconHttpServer:
     @staticmethod
     def _check_where_predicate(pred: str) -> None:
         """Per-table tool ``where`` arguments must be PLAIN predicates
-        over the (scoped) table: no writes, no subqueries, no federation
-        — a subquery could read other tables or unexposed columns
-        oracle-style, defeating the exposed_columns scoping."""
-        from beacon_spark.server.guard import (
-            WRITE_KEYWORD_RE,
-            scrub_sql,
-            sql_is_closed,
-        )
+        over the (scoped) table: no subqueries — one could read other
+        tables or unexposed columns oracle-style, defeating the
+        exposed_columns scoping. (The composed statement runs read-only,
+        so neither a write nor ``remote_query`` can run.)"""
+        from beacon_spark.server.guard import scrub_sql, sql_is_closed
 
-        if re.search(r"\bremote_query\s*\(", pred, re.IGNORECASE):
-            raise ValueError("where predicate must not use remote_query")
         if not sql_is_closed(pred):
             # a fragment ending inside an open literal/comment would
             # swallow whatever template text is spliced after it and
@@ -1004,25 +991,21 @@ class BeaconHttpServer:
         # scrub_sql = the lexer-accurate blanking (backslash escapes,
         # comments) — a regex knowing only '' desyncs on '\'' and lets
         # a subquery hide inside a fake literal
-        stripped = scrub_sql(pred)
-        if WRITE_KEYWORD_RE.search(stripped):
-            raise ValueError("where predicate is read-only")
-        if re.search(r"\b(SELECT|EXISTS)\b", stripped, re.IGNORECASE):
-            raise ValueError(
-                "where predicate must not contain subqueries"
-            )
+        if re.search(r"\b(SELECT|EXISTS)\b", scrub_sql(pred), re.IGNORECASE):
+            raise ValueError("where predicate must not contain subqueries")
 
     def _mcp_tool(self, name: str, args: dict,
                   user: str | None = None) -> str:
         from beacon_spark.engine import Run
-        from beacon_spark.server.guard import is_readonly_sql
 
         eng = self.engine
 
         def capped_rows(sql: str) -> str:
-            # row/byte/time capped (server/limits.py): a giant caller
-            # limit must not turn into an unbounded driver collect
-            df = eng.sql(sql, user=user).limit(int(args.get("limit", 100)))
+            # every MCP statement is read-only; row/byte/time capped
+            # (server/limits.py): a giant caller limit must not turn
+            # into an unbounded driver collect
+            df = eng.sql(sql, user=user, read_only=True).limit(
+                int(args.get("limit", 100)))
             rows = Run(eng, df, sql, user, self._limits).rows()
             return json.dumps(rows, default=str)
 
@@ -1043,25 +1026,21 @@ class BeaconHttpServer:
                 # the strictly-read-only MCP surface
                 raise ValueError(
                     "describe_table needs a bare table identifier")
-            df = eng.sql(f"SELECT * FROM {tbl} LIMIT 0", user=user)
+            df = eng.sql(f"SELECT * FROM {tbl} LIMIT 0", user=user,
+                         read_only=True)
             return json.dumps(
                 [{"column": f.name, "type": f.dataType.simpleString()}
                  for f in df.schema.fields]
             )
         if name == "run_sql":
-            sql = args["sql"]
-            if not is_readonly_sql(sql):
-                raise ValueError(
-                    "run_sql is read-only: statement must be SELECT-shaped "
-                    "and free of write/DDL/admin keywords"
-                )
-            return capped_rows(sql)
+            return capped_rows(args["sql"])
         if name == "export_query":
             # fetch recipe only — the (potentially huge) file never
-            # streams through model context (catalog.rs:221-224)
+            # streams through model context (catalog.rs:221-224); the
+            # statement is planned read-only first, so the recipe is
+            # for a statement this caller may run
             sql = args["sql"]
-            if not is_readonly_sql(sql):
-                raise ValueError("export_query is read-only")
+            eng.sql(sql, user=user, read_only=True)
             fmt = args.get("format", "parquet")
             body = {"sql": sql, "output": {"format": fmt}}
             snippet = (

@@ -8,8 +8,8 @@ is the internal managed table ``__beacon_query_metrics`` under a public
 name — every completed query persists one row so metrics survive a
 restart and are queryable like any other table
 (``query_metrics_store.rs:1-75``). Reads of the schema are super-user-
-only, unconditionally (``mod.rs:50-66``); the gate lives in
-:func:`beacon_spark.auth.authorize`.
+only, unconditionally (``mod.rs:50-66``); the gate lives in the
+rewrite that binds the views (``Engine._rewrite_system_tables``).
 
 Here ``FROM beacon.system.<name>`` (or ``system.<name>``) is rewritten
 outside string literals to a temp view refreshed at reference time, so

@@ -596,6 +596,76 @@ def test_federated_single_table_agg_pushed_whole(spark, served, tmp_path):
         ceng.sql("DETACH fa")
 
 
+def test_federated_dialect_join_pushed_whole(spark, served, tmp_path):
+    """A join of two remote tables written with dialect syntax Spark's
+    grammar lacks (``* EXCLUDE``) still ships whole: the remote speaks
+    the dialect. A WITH … INSERT over the same tables is not a query:
+    it is never sent to the remote (Spark then fails it locally: a
+    managed table is a view)."""
+    eng, _server, port = served
+    eng.sql("CREATE TABLE fxnames AS "
+            "SELECT id AS k, char(ascii('a') + id) AS nm FROM range(3)")
+    recorded = []
+    orig = eng.sql
+
+    def rec(sql, **kw):
+        recorded.append(sql)
+        return orig(sql, **kw)
+
+    eng.sql = rec
+    try:
+        ceng = Engine(spark, datasets_root=str(tmp_path / "fedx"))
+        ceng.sql(f"ATTACH 'grpc://127.0.0.1:{port}' AS fx")
+        rows = ceng.sql(
+            "SELECT * EXCLUDE (nm) FROM fx__remobs r "
+            "JOIN fx__fxnames n ON r.id = n.k ORDER BY id").collect()
+        assert [tuple(r) for r in rows] == [(0, 0, 0), (1, 1, 1), (2, 2, 2)]
+        assert len({s for s in recorded
+                    if "EXCLUDE" in s.upper() and "JOIN" in s.upper()}) == 1
+        recorded.clear()
+        ceng.sql("CREATE TABLE fxloc (id BIGINT, nm STRING)")
+        with pytest.raises(Exception, match="InsertIntoStatement"):
+            ceng.sql("WITH c AS (SELECT r.id, n.nm FROM fx__remobs r "
+                     "JOIN fx__fxnames n ON r.id = n.k) "
+                     "INSERT INTO fxloc SELECT * FROM c")
+        assert not [s for s in recorded if "INSERT" in s.upper()]
+    finally:
+        eng.sql = orig
+        ceng.sql("DETACH fx")
+        eng.sql("DROP TABLE fxnames")
+
+
+def test_federated_default_path_parses_once(spark, served, tmp_path):
+    """With a remote attached, a ``user=None`` statement still makes
+    only the one ``parsePlan`` ``spark.sql`` would make, whether it is
+    pushed whole, scanned per table or local."""
+    from types import SimpleNamespace
+
+    _eng, _server, port = served
+    ceng = Engine(spark, datasets_root=str(tmp_path / "fedp"))
+    ceng.sql(f"ATTACH 'grpc://127.0.0.1:{port}' AS fp")
+    ceng.sql("CREATE TABLE ploc AS SELECT 1 AS a")
+    calls = []
+    parser = ceng._jvm_sql.parser
+
+    class Recorder:
+        def __getattr__(self, name):
+            calls.append(name)
+            return getattr(parser, name)
+
+    ceng._jvm_sql = SimpleNamespace(**{**vars(ceng._jvm_sql),
+                                       "parser": Recorder()})
+    try:
+        for stmt in ("SELECT g, count(*) AS c FROM fp__remobs GROUP BY g",
+                     "SELECT id FROM fp__remobs WHERE g = 1",
+                     "SELECT a FROM ploc"):
+            assert ceng.sql(stmt).collect()
+        assert calls == ["parsePlan"] * 3
+    finally:
+        ceng.sql("DROP TABLE ploc")
+        ceng.sql("DETACH fp")
+
+
 def test_federated_mixed_local_remote_falls_back(spark, served, tmp_path):
     """A statement mixing a remote table with a LOCAL one must NOT push
     whole (the remote does not have the local table — and might have a

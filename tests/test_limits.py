@@ -311,18 +311,27 @@ def test_iter_arrow_batches_void_fallback(spark):
 # ------------------------------------------------------------ readonly gates
 
 
-def test_readonly_rejects_remote_query():
-    from beacon_spark.server.guard import is_readonly_sql
+def test_readonly_rejects_remote_query(spark, tmp_path):
+    from beacon_spark.auth import WriteRefused
 
-    assert is_readonly_sql("SELECT * FROM t WHERE x > 1")
-    assert not is_readonly_sql(
-        "SELECT * FROM remote_query('lake', 'DROP TABLE t')")
-    assert not is_readonly_sql("WITH c AS (SELECT 1) INSERT INTO t SELECT *")
+    eng = Engine(spark, datasets_root=str(tmp_path))
+    eng.sql("CREATE TABLE t AS SELECT 2 AS x")
+    assert eng.sql("SELECT * FROM t WHERE x > 1",
+                   read_only=True).collect()[0].x == 2
+    with pytest.raises(WriteRefused, match="read-only"):
+        eng.sql("SELECT * FROM remote_query('lake', 'DROP TABLE t')",
+                read_only=True)
+    with pytest.raises(WriteRefused, match="read-only"):
+        eng.sql("WITH c AS (SELECT 1) INSERT INTO t SELECT *",
+                read_only=True)
     # write keyword inside a literal is fine...
-    assert is_readonly_sql("SELECT 'DROP TABLE t' AS s")
-    # ...but remote_query is rejected even though its payload is a literal
-    assert not is_readonly_sql(
-        "SELECT 1 WHERE EXISTS (SELECT * FROM ReMoTe_QuErY('a','x'))")
+    assert eng.sql("SELECT 'DROP TABLE t' AS s",
+                   read_only=True).collect()[0].s == "DROP TABLE t"
+    # ...but remote_query is refused, though its payload is a literal
+    with pytest.raises(WriteRefused, match="read-only"):
+        eng.sql("SELECT 1 WHERE EXISTS (SELECT * FROM ReMoTe_QuErY('a','x'))",
+                read_only=True)
+    assert eng.sql("SELECT count(*) AS n FROM t").collect()[0].n == 1
 
 
 def test_flight_info_rejects_ddl(spark, tmp_path):

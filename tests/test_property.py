@@ -164,7 +164,8 @@ def test_sql_lexer_matches_spark_string_parsing(spark, content):
     as exactly one literal span ending where Spark ends it (the 'END'
     sentinel stays code and write keywords inside the literal stay
     hidden)."""
-    from beacon_spark.server.guard import is_readonly_sql, scrub_sql
+    from beacon_spark.engine import Engine
+    from beacon_spark.server.guard import scrub_sql
 
     lit = "'" + content.replace("\\", "\\\\").replace("'", "\\'") + "'"
     stmt = f"SELECT {lit} AS v, 'END' AS e"
@@ -175,8 +176,9 @@ def test_sql_lexer_matches_spark_string_parsing(spark, content):
     # literal exactly where Spark did
     assert scrubbed.endswith(" AS v, '' AS e")
     assert scrubbed.startswith("SELECT '")
-    # write keywords inside the literal never reach the keyword scan
-    assert is_readonly_sql(stmt)
+    # write keywords inside the literal are data to a read-only call
+    row = Engine(spark).sql(stmt, read_only=True).collect()[0]
+    assert row.v == content and row.e == "END"
 
 
 @settings(max_examples=40, deadline=None)
@@ -393,28 +395,27 @@ def test_split_top_level_reconstruction(items):
 
 
 def test_remote_query_guard_and_engine_rewrite_stay_paired(spark, tmp_path):
-    """r11 guard review: the read-only gate refuses remote_query by a
-    raw-text `remote_query\\s*\\(` scan, and the engine's rewrite uses
-    the SAME adjacency shape — so a spelling the gate misses (comment
-    between name and paren) must ALSO not be rewritten by the engine:
-    it reaches Spark as an unknown function and fails loudly, never
-    executing the remote payload. This pin keeps the pair from
-    drifting apart (a looser engine regex + the current gate would be
-    a write-through-read-only hole)."""
+    """r11 guard review: a read-only call refuses remote_query where the
+    engine's rewrite binds it, so a spelling the rewrite does not bind
+    (comment between name and paren) must reach Spark as an unknown
+    function and fail loudly, never executing the remote payload."""
     import pytest as _pytest
 
+    from beacon_spark.auth import WriteRefused
     from beacon_spark.engine import Engine
-    from beacon_spark.server.guard import is_readonly_sql
 
     plain = "SELECT * FROM remote_query('r', 'DROP TABLE t')"
     sneaky = "SELECT * FROM remote_query/*c*/('r', 'DROP TABLE t')"
-    assert not is_readonly_sql(plain)
-    # the gate misses the comment form — the engine must too
     eng = Engine(spark, datasets_root=str(tmp_path))
+    with _pytest.raises(WriteRefused):
+        eng.sql(plain, read_only=True)
+    # the rewrite does not bind the comment form: Spark refuses it
     with _pytest.raises(Exception) as e:
         eng.sql(sneaky)
     msg = str(e.value).lower()
     assert ("could not resolve" in msg or "unresolved" in msg
             or "cannot be resolved" in msg or "not found" in msg), msg
-    # and a literal containing the call shape is refused fail-closed
-    assert not is_readonly_sql("SELECT 'remote_query(x)' AS s")
+    # a literal containing the call shape is data: it reads back and no
+    # remote is contacted (none is attached)
+    assert eng.sql("SELECT 'remote_query(x)' AS s",
+                   read_only=True).collect()[0].s == "remote_query(x)"
