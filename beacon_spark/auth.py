@@ -62,7 +62,7 @@ import re
 import secrets
 
 __all__ = [
-    "AuthError", "WriteRefused", "ReadGate", "run_auth_statement",
+    "AuthError", "WriteRefused", "ReadGate",
     "authorize_dsl", "read_gate", "require_super", "verify_user",
     "hash_password", "is_allowed",
 ]
@@ -384,32 +384,9 @@ def authorize_dsl(engine, body: dict, user: str | None) -> None:
 
 
 # ------------------------------------------------------------ statements
-
-_TARGET = r"(?:\s+ON\s+(?:TABLE\s+(\w+)|PATH\s+'([^']*)'|(ALL)))?"
-_AUTH_RES: list[tuple[str, re.Pattern]] = [
-    ("create_user", re.compile(
-        r"^\s*CREATE\s+USER\s+(\w+)\s+WITH\s+PASSWORD\s+'((?:[^']|'')*)'"
-        r"(\s+SUPERUSER)?;?\s*$", re.IGNORECASE)),
-    ("drop_user", re.compile(r"^\s*DROP\s+USER\s+(\w+);?\s*$", re.IGNORECASE)),
-    ("create_role", re.compile(r"^\s*CREATE\s+ROLE\s+(\w+);?\s*$", re.IGNORECASE)),
-    ("drop_role", re.compile(r"^\s*DROP\s+ROLE\s+(\w+);?\s*$", re.IGNORECASE)),
-    ("grant_role", re.compile(
-        r"^\s*GRANT\s+ROLE\s+(\w+)\s+TO\s+USER\s+(\w+);?\s*$", re.IGNORECASE)),
-    ("revoke_role", re.compile(
-        r"^\s*REVOKE\s+ROLE\s+(\w+)\s+FROM\s+USER\s+(\w+);?\s*$", re.IGNORECASE)),
-    ("grant_priv", re.compile(
-        rf"^\s*GRANT\s+(\w+){_TARGET}\s+TO\s+ROLE\s+(\w+);?\s*$", re.IGNORECASE)),
-    ("deny_priv", re.compile(
-        rf"^\s*DENY\s+(\w+){_TARGET}\s+TO\s+ROLE\s+(\w+);?\s*$", re.IGNORECASE)),
-    ("revoke_priv", re.compile(
-        rf"^\s*REVOKE\s+(DENY\s+)?(\w+){_TARGET}\s+FROM\s+ROLE\s+(\w+);?\s*$",
-        re.IGNORECASE)),
-    ("set_enforce", re.compile(
-        r"^\s*SET\s+AUTH\s+ENFORCEMENT\s+(ON|OFF);?\s*$", re.IGNORECASE)),
-    ("show_users", re.compile(r"^\s*SHOW\s+USERS;?\s*$", re.IGNORECASE)),
-    ("show_roles", re.compile(r"^\s*SHOW\s+ROLES;?\s*$", re.IGNORECASE)),
-]
-
+# the auth rows' handlers (beacon_spark.statements holds their patterns
+# and access rules; the auth DDL is super-user-only, as the reference
+# routes AuthStatement through the same super-user gate)
 
 def _parse_target(tbl, path, allkw) -> dict | None:
     if tbl:
@@ -428,143 +405,139 @@ def _priv(p: str) -> str:
     return p
 
 
-def run_auth_statement(engine, statement: str, gate: ReadGate | None,
-                       deny: str | None = None):
-    """Execute an auth-management statement; None when ``statement``
-    is not one. Auth DDL itself needs the super-user (the reference
-    routes AuthStatement through the same super-user gate), and a
-    read-only call (``deny``: its refusal) may only list."""
-    for kind, rx in _AUTH_RES:
-        m = rx.match(statement)
-        if m:
-            break
-    else:
-        return None
-    if gate is not None:
-        raise AuthError("operation not permitted: auth management "
-                        "requires super-user privileges")
-    if deny is not None and kind not in ("show_users", "show_roles"):
-        raise WriteRefused(deny)
-    cat = engine.catalog._load()
-    a = _auth(cat)
-
-    def save():
+def _edit(fn):
+    """An auth-DDL handler from ``fn(a, m) -> (op, name)``, which edits
+    the loaded auth section ``a``: the section is committed and the
+    statement answers its status frame."""
+    def handler(engine, m, _call):
+        cat = engine.catalog._load()
+        op, name = fn(_auth(cat), m)
         # commit through _mutate (lock + merge-on-conflict): a raw
         # whole-document save here erased concurrent non-auth catalog
         # commits (CREATE TABLE etc.). The auth SECTION replaces
         # wholesale — auth DDL is serialized admin activity, and the
         # merge protects the rest of the catalog.
-        auth_doc = cat.get("auth")
-
-        def apply(doc: dict) -> None:
-            doc["auth"] = auth_doc
-
-        engine.catalog._mutate(apply)
-        engine._cat_sig = None
+        auth_doc = cat["auth"]
+        engine.catalog._mutate(lambda doc: doc.__setitem__("auth", auth_doc))
         # auth changed: the unauthenticated-resolution TTL cache must
         # not serve a pre-change decision in this process
         engine.__dict__.pop("_unauth_cache", None)
+        return engine._status(status="ok", op=op, name=name)
+    return handler
 
-    if kind == "create_user":
-        name, pw, sup = m.group(1), m.group(2).replace("''", "'"), m.group(3)
-        if name in a["users"]:
-            raise AuthError(f"user {name!r} already exists")
-        a["users"][name] = {
-            "password": hash_password(pw),
-            "roles": [],
-            "super_user": bool(sup),
-        }
-        save()
-        return engine._status(status="ok", op="create_user", name=name)
-    if kind == "drop_user":
-        if a["users"].pop(m.group(1), None) is None:
-            raise AuthError(f"unknown user {m.group(1)!r}")
-        save()
-        return engine._status(status="ok", op="drop_user", name=m.group(1))
-    if kind == "create_role":
-        name = m.group(1)
-        if name in a["roles"]:
-            raise AuthError(f"role {name!r} already exists")
-        a["roles"][name] = {"grants": [], "denies": []}
-        save()
-        return engine._status(status="ok", op="create_role", name=name)
-    if kind == "drop_role":
-        name = m.group(1)
-        if a["roles"].pop(name, None) is None:
-            raise AuthError(f"unknown role {name!r}")
-        for u in a["users"].values():
-            u["roles"] = [r for r in u.get("roles", []) if r != name]
-        save()
-        return engine._status(status="ok", op="drop_role", name=name)
-    if kind == "grant_role":
-        role, uname = m.group(1), m.group(2)
-        if role not in a["roles"]:
-            raise AuthError(f"unknown role {role!r}")
-        if uname not in a["users"]:
-            raise AuthError(f"unknown user {uname!r}")
-        if role not in a["users"][uname]["roles"]:
-            a["users"][uname]["roles"].append(role)
-        save()
-        return engine._status(status="ok", op="grant_role", name=role)
-    if kind == "revoke_role":
-        role, uname = m.group(1), m.group(2)
-        if uname not in a["users"]:
-            raise AuthError(f"unknown user {uname!r}")
-        a["users"][uname]["roles"] = [
-            r for r in a["users"][uname]["roles"] if r != role
-        ]
-        save()
-        return engine._status(status="ok", op="revoke_role", name=role)
-    if kind in ("grant_priv", "deny_priv"):
-        priv, role = _priv(m.group(1)), m.group(5)
-        target = _parse_target(m.group(2), m.group(3), m.group(4))
-        if role not in a["roles"]:
-            raise AuthError(f"unknown role {role!r}")
-        key = "denies" if kind == "deny_priv" else "grants"
-        rule = {"privilege": priv, "target": target}
-        if rule not in a["roles"][role][key]:
-            a["roles"][role][key].append(rule)
-        save()
-        return engine._status(status="ok", op=kind, name=role)
-    if kind == "revoke_priv":
-        deny, priv, role = bool(m.group(1)), _priv(m.group(2)), m.group(6)
-        target = _parse_target(m.group(3), m.group(4), m.group(5))
-        if role not in a["roles"]:
-            raise AuthError(f"unknown role {role!r}")
-        key = "denies" if deny else "grants"
-        rule = {"privilege": priv, "target": target}
-        a["roles"][role][key] = [
-            r for r in a["roles"][role][key] if r != rule
-        ]
-        save()
-        return engine._status(status="ok", op="revoke_priv", name=role)
-    if kind == "set_enforce":
-        a["enforce"] = m.group(1).upper() == "ON"
-        save()
-        return engine._status(
-            status="ok", op="set_auth_enforcement",
-            name="on" if a["enforce"] else "off",
-        )
-    if kind == "show_users":
-        # is_anonymous marks the unauthenticated-caller principal
-        # (context.rs:12; the reference's user listing carries both
-        # is_super_user and is_anonymous flags, test_rbac.py:88-95)
-        rows = [
-            (n, bool(u.get("super_user")), n == "anonymous",
+
+@_edit
+def create_user(a, m):
+    name, pw, sup = m.group(1), m.group(2).replace("''", "'"), m.group(3)
+    if name in a["users"]:
+        raise AuthError(f"user {name!r} already exists")
+    a["users"][name] = {"password": hash_password(pw), "roles": [],
+                        "super_user": bool(sup)}
+    return "create_user", name
+
+
+@_edit
+def drop_user(a, m):
+    if a["users"].pop(m.group(1), None) is None:
+        raise AuthError(f"unknown user {m.group(1)!r}")
+    return "drop_user", m.group(1)
+
+
+@_edit
+def create_role(a, m):
+    name = m.group(1)
+    if name in a["roles"]:
+        raise AuthError(f"role {name!r} already exists")
+    a["roles"][name] = {"grants": [], "denies": []}
+    return "create_role", name
+
+
+@_edit
+def drop_role(a, m):
+    name = m.group(1)
+    if a["roles"].pop(name, None) is None:
+        raise AuthError(f"unknown role {name!r}")
+    for u in a["users"].values():
+        u["roles"] = [r for r in u.get("roles", []) if r != name]
+    return "drop_role", name
+
+
+@_edit
+def grant_role(a, m):
+    role, uname = m.group(1), m.group(2)
+    if role not in a["roles"]:
+        raise AuthError(f"unknown role {role!r}")
+    if uname not in a["users"]:
+        raise AuthError(f"unknown user {uname!r}")
+    if role not in a["users"][uname]["roles"]:
+        a["users"][uname]["roles"].append(role)
+    return "grant_role", role
+
+
+@_edit
+def revoke_role(a, m):
+    role, uname = m.group(1), m.group(2)
+    if uname not in a["users"]:
+        raise AuthError(f"unknown user {uname!r}")
+    a["users"][uname]["roles"] = [
+        r for r in a["users"][uname]["roles"] if r != role]
+    return "revoke_role", role
+
+
+def _rules(a: dict, role: str, key: str) -> list:
+    if role not in a["roles"]:
+        raise AuthError(f"unknown role {role!r}")
+    return a["roles"][role][key]
+
+
+def _add_rule(key: str, op: str):
+    @_edit
+    def add(a, m):
+        rule = {"privilege": _priv(m.group(1)),
+                "target": _parse_target(m.group(2), m.group(3), m.group(4))}
+        rules = _rules(a, m.group(5), key)
+        if rule not in rules:
+            rules.append(rule)
+        return op, m.group(5)
+    return add
+
+
+grant_priv = _add_rule("grants", "grant_priv")
+deny_priv = _add_rule("denies", "deny_priv")
+
+
+@_edit
+def revoke_priv(a, m):
+    priv, role = _priv(m.group(2)), m.group(6)
+    rule = {"privilege": priv,
+            "target": _parse_target(m.group(3), m.group(4), m.group(5))}
+    key = "denies" if m.group(1) else "grants"
+    a["roles"][role][key] = [r for r in _rules(a, role, key) if r != rule]
+    return "revoke_priv", role
+
+
+@_edit
+def set_enforce(a, m):
+    a["enforce"] = m.group(1).upper() == "ON"
+    return "set_auth_enforcement", "on" if a["enforce"] else "off"
+
+
+def show_users(engine, m, _call):
+    # is_anonymous marks the unauthenticated-caller principal
+    # (context.rs:12; the reference's user listing carries both
+    # is_super_user and is_anonymous flags, test_rbac.py:88-95)
+    a = _auth(engine.catalog._load())
+    rows = [(n, bool(u.get("super_user")), n == "anonymous",
              ",".join(sorted(u.get("roles", []))))
-            for n, u in sorted(a["users"].items())
-        ]
-        return engine.spark.createDataFrame(
-            rows,
-            "user_name string, super_user boolean, is_anonymous boolean, "
-            "roles string",
-        )
-    if kind == "show_roles":
-        rows = [
-            (n, len(r.get("grants", [])), len(r.get("denies", [])))
-            for n, r in sorted(a["roles"].items())
-        ]
-        return engine.spark.createDataFrame(
-            rows, "role_name string, grants int, denies int"
-        )
-    return None
+            for n, u in sorted(a["users"].items())]
+    return engine.spark.createDataFrame(
+        rows, "user_name string, super_user boolean, is_anonymous boolean, "
+        "roles string")
+
+
+def show_roles(engine, m, _call):
+    a = _auth(engine.catalog._load())
+    rows = [(n, len(r.get("grants", [])), len(r.get("denies", [])))
+            for n, r in sorted(a["roles"].items())]
+    return engine.spark.createDataFrame(
+        rows, "role_name string, grants int, denies int")

@@ -31,8 +31,8 @@ from pyspark.sql import types as T
 
 from beacon_spark import auth as _auth
 from beacon_spark import dsl
+from beacon_spark import statements as _statements
 from beacon_spark.functions.core import _arrow_name_to_spark, register_functions
-from beacon_spark.operators.summarize import summarize
 from beacon_spark.sources import paths as _paths
 from beacon_spark.sources import tabular
 from beacon_spark.sources.nd import read_nd
@@ -56,19 +56,7 @@ _READ_FN_RE = re.compile(
 _TRY_ARROW_CAST_RE = re.compile(
     r"\btry_arrow_cast\s*\(", re.IGNORECASE
 )
-_SUMMARIZE_RE = re.compile(r"^\s*SUMMARIZE\s+(.*?);?\s*$", re.IGNORECASE | re.DOTALL)
 _QUALIFY_RE = re.compile(r"\bQUALIFY\b", re.IGNORECASE)
-_EXPLAIN_ANALYZE_RE = re.compile(
-    r"^\s*EXPLAIN\s+ANALYZE\s+(.*?);?\s*$", re.IGNORECASE | re.DOTALL
-)
-_COPY_RE = re.compile(
-    r"^\s*COPY\s+(.*?)\s+TO\s+'([^']+)'"
-    r"(?:\s+(?:STORED\s+AS|FORMAT)\s+(\w+))?\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_ANALYZE_RE = re.compile(
-    r"^\s*ANALYZE\s+FILES(?:\s+'([^']*)')?(\s+FORCE)?;?\s*$", re.IGNORECASE
-)
 
 _log = logging.getLogger("beacon_spark.engine")
 
@@ -437,17 +425,6 @@ def _split_order_limit(statement: str) -> tuple[str, str | None, str | None, str
     return s[:order_at].rstrip(), order_clause, m.group(2), m.group(3)
 
 
-def _split_top_level_where(rest: str) -> tuple[str, str | None]:
-    """Split ``<body> [WHERE <pred>]`` at the first TOP-LEVEL WHERE —
-    one inside a string literal (``SET msg = ' WHERE …'``) or a
-    subquery (``SET a = (SELECT … WHERE …)``) never splits. Returns
-    (body, pred-or-None)."""
-    m = re.search(r"\bWHERE\b", _top_level_blanked(rest), re.IGNORECASE)
-    if m is None:
-        return rest, None
-    return rest[: m.start()].rstrip(), rest[m.end():]
-
-
 def _order_columns(order_clause: str):
     """'a DESC, b, c ASC NULLS LAST' → Column sort expressions."""
     from pyspark.sql import functions as F
@@ -470,107 +447,6 @@ def _order_columns(order_clause: str):
     return cols
 
 
-# DDL/DML dialect statements (parser/statement.rs:8-30), dispatched ahead
-# of spark.sql exactly as BeaconParser tries custom statements first
-_DDL_RES: list[tuple[str, re.Pattern]] = [
-    ("create_external", re.compile(
-        r"^\s*CREATE\s+(OR\s+REPLACE\s+)?EXTERNAL\s+TABLE\s+"
-        r"(IF\s+NOT\s+EXISTS\s+)?(\w+)\s+STORED\s+AS\s+(\w+)\s+"
-        r"LOCATION\s+'([^']+)'"
-        r"(?:\s+PARTITIONED\s+BY\s*\(([^)]*)\))?"
-        r"(?:\s+OPTIONS\s*\(([^)]*)\))?;?\s*$",
-        re.IGNORECASE)),
-    ("create_index", re.compile(
-        r"^\s*CREATE\s+INDEX\s+(?:(\w+)\s+)?ON\s+(\w+)\s*"
-        r"\(\s*(\w+(?:\s*,\s*\w+)*)\s*\)"
-        r"(?:\s+USING\s+(\w+))?;?\s*$", re.IGNORECASE)),
-    ("drop_index", re.compile(
-        r"^\s*DROP\s+INDEX\s+(?:IF\s+EXISTS\s+)?(\w+);?\s*$", re.IGNORECASE)),
-    ("show_indexes", re.compile(r"^\s*SHOW\s+INDEXES;?\s*$", re.IGNORECASE)),
-    ("create_crawler", re.compile(
-        r"^\s*CREATE\s+CRAWLER\s+(\w+)(?:\s+ON\s+'([^']*)')?"
-        r"(?:\s+WITH\s*\(([^)]*)\))?;?\s*$", re.IGNORECASE)),
-    ("run_crawler", re.compile(
-        r"^\s*RUN\s+CRAWLER\s+(\w+);?\s*$", re.IGNORECASE)),
-    ("drop_crawler", re.compile(
-        r"^\s*DROP\s+CRAWLER\s+(?:IF\s+EXISTS\s+)?(\w+);?\s*$", re.IGNORECASE)),
-    ("show_crawlers", re.compile(r"^\s*SHOW\s+CRAWLERS;?\s*$", re.IGNORECASE)),
-    ("create_stream", re.compile(
-        r"^\s*CREATE\s+STREAM\s+(\w+)\s+ON\s+'([^']*)'\s+INTO\s+(\w+)"
-        r"(?:\s+WITH\s*\(([^)]*)\))?;?\s*$", re.IGNORECASE)),
-    ("run_stream", re.compile(
-        r"^\s*RUN\s+STREAM\s+(\w+);?\s*$", re.IGNORECASE)),
-    ("drop_stream", re.compile(
-        r"^\s*DROP\s+STREAM\s+(IF\s+EXISTS\s+)?(\w+);?\s*$", re.IGNORECASE)),
-    ("show_streams", re.compile(r"^\s*SHOW\s+STREAMS;?\s*$", re.IGNORECASE)),
-    ("describe_history", re.compile(
-        r"^\s*DESCRIBE\s+HISTORY\s+(\w+);?\s*$", re.IGNORECASE)),
-    ("show_tables", re.compile(r"^\s*SHOW\s+(TABLES|VIEWS);?\s*$", re.IGNORECASE)),
-    ("attach", re.compile(
-        r"^\s*ATTACH\s+'([^']+)'\s+AS\s+(\w+)(?:\s+WITH\s*\(([^)]*)\))?;?\s*$",
-        re.IGNORECASE)),
-    ("detach", re.compile(r"^\s*DETACH\s+(\w+);?\s*$", re.IGNORECASE)),
-    ("create_secret", re.compile(
-        r"^\s*CREATE\s+(PERSISTENT\s+|TEMPORARY\s+)?SECRET\s+(\w+)\s*\((.*)\)\s*;?\s*$",
-        re.IGNORECASE | re.DOTALL)),
-    ("drop_secret", re.compile(
-        r"^\s*DROP\s+SECRET\s+(IF\s+EXISTS\s+)?(\w+);?\s*$", re.IGNORECASE)),
-    ("show_secrets", re.compile(r"^\s*SHOW\s+SECRETS;?\s*$", re.IGNORECASE)),
-    ("set_extension", re.compile(
-        r"^\s*SET\s+EXTENSION\s+'([^']+)'\s+FOR\s+([\w.]+)\s+TO\s+'((?:[^']|'')*)'\s*;?\s*$",
-        re.IGNORECASE | re.DOTALL)),
-    ("drop_extension", re.compile(
-        r"^\s*DROP\s+EXTENSION\s+'([^']+)'\s+FOR\s+([\w.]+);?\s*$", re.IGNORECASE)),
-    ("show_extensions", re.compile(
-        r"^\s*SHOW\s+EXTENSIONS\s+FOR\s+([\w.]+);?\s*$", re.IGNORECASE)),
-    ("create_table_as", re.compile(
-        r"^\s*CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?(\w+)\s+AS\s+(.*?);?\s*$",
-        re.IGNORECASE | re.DOTALL)),
-    ("create_table_schema", re.compile(
-        r"^\s*CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?(\w+)\s*\((.+)\)\s*;?\s*$",
-        re.IGNORECASE | re.DOTALL)),
-    ("drop_table", re.compile(r"^\s*DROP\s+TABLE\s+(IF\s+EXISTS\s+)?(\w+);?\s*$", re.IGNORECASE)),
-    ("vacuum", re.compile(
-        r"^\s*VACUUM\s+(\w+)(?:\s+RETAIN\s+(\d+)\s+VERSIONS?)?;?\s*$", re.IGNORECASE)),
-    ("optimize", re.compile(
-        r"^\s*OPTIMIZE\s+(\w+)(?:\s+TARGET\s+SIZE\s+(\d+))?;?\s*$",
-        re.IGNORECASE)),
-    ("insert_into", re.compile(
-        r"^\s*INSERT\s+INTO\s+(\w+)\s+(.*?);?\s*$", re.IGNORECASE | re.DOTALL)),
-    ("delete_from", re.compile(
-        r"^\s*DELETE\s+FROM\s+(\w+)(?:\s+WHERE\s+(.*?))?;?\s*$",
-        re.IGNORECASE | re.DOTALL)),
-    ("update", re.compile(
-        # SET-list/WHERE split happens lexer-aware in the handler — a
-        # regex-lazy "(?:\s+WHERE…)?" here bound the first WHERE even
-        # inside a SET string literal
-        r"^\s*UPDATE\s+(\w+)\s+SET\s+(.*?);?\s*$",
-        re.IGNORECASE | re.DOTALL)),
-    ("alter_add", re.compile(
-        r"^\s*ALTER\s+TABLE\s+(\w+)\s+ADD\s+COLUMN\s+(\w+)\s+([\w()<>, ]+?);?\s*$",
-        re.IGNORECASE)),
-    ("alter_drop", re.compile(
-        r"^\s*ALTER\s+TABLE\s+(\w+)\s+DROP\s+COLUMN\s+(\w+);?\s*$", re.IGNORECASE)),
-    ("alter_rename", re.compile(
-        r"^\s*ALTER\s+TABLE\s+(\w+)\s+RENAME\s+COLUMN\s+(\w+)\s+TO\s+(\w+);?\s*$",
-        re.IGNORECASE)),
-    ("create_mview", re.compile(
-        r"^\s*CREATE\s+MATERIALIZED\s+VIEW\s+(\w+)\s+AS\s+(.*?);?\s*$",
-        re.IGNORECASE | re.DOTALL)),
-    ("create_view", re.compile(
-        r"^\s*CREATE\s+(OR\s+REPLACE\s+)?VIEW\s+(\w+)\s+AS\s+(.*?);?\s*$",
-        re.IGNORECASE | re.DOTALL)),
-    ("refresh", re.compile(
-        r"^\s*REFRESH\s+(?:MATERIALIZED\s+VIEW\s+|TABLE\s+)?(\w+);?\s*$", re.IGNORECASE)),
-    ("drop_view", re.compile(
-        r"^\s*DROP\s+(?:MATERIALIZED\s+)?VIEW\s+(IF\s+EXISTS\s+)?(\w+);?\s*$",
-        re.IGNORECASE)),
-]
-#: the dialect statements a read-only call may run: they only list
-_READ_ONLY_KINDS = frozenset(
-    k for k, _ in _DDL_RES if k.startswith("show_") or k == "describe_history")
-
-
 def _split_top_level(s: str) -> list[str]:
     """Split on TOP-LEVEL commas (UPDATE SET lists, macro/secret
     argument lists): commas inside parens, string literals, comments,
@@ -586,54 +462,6 @@ def _split_top_level(s: str) -> list[str]:
             last = i + 1
     parts.append(s[last:])
     return [p for p in (p.strip() for p in parts) if p]
-
-
-def _parse_crawler_schedule(with_opts: str | None) -> int | None:
-    """``WITH (schedule = '15m')`` → seconds (units s/m/h/d, bare number
-    = seconds; the reference's definition.rs:116-171 parse)."""
-    if not with_opts:
-        return None
-    m = re.search(
-        r"['\"]?schedule['\"]?\s*[=,]?\s*['\"]([0-9]+)\s*([smhd]?)['\"]",
-        with_opts,
-        re.IGNORECASE,
-    )
-    if not m:
-        return None
-    n, unit = int(m.group(1)), m.group(2).lower()
-    return n * {"": 1, "s": 1, "m": 60, "h": 3600, "d": 86400}[unit]
-
-
-def _parse_crawler_opts(with_opts: str | None) -> dict:
-    """The crawler's WITH options: schedule (as above) plus the
-    reference CrawlerDefinition's ``format_filter`` and ``table_naming``
-    (crawler/definition.rs; exercised by test_crawlers_advanced.py):
-
-      WITH ('schedule' '15m', 'formats' 'parquet,csv',
-            'table_naming' 'leaf_prefix')
-    """
-    out: dict = {"schedule_secs": _parse_crawler_schedule(with_opts)}
-    if not with_opts:
-        return out
-    kv = dict(re.findall(r"'(\w+)'\s*[= ]\s*'([^']*)'", with_opts))
-    kv = {k.lower(): v for k, v in kv.items()}
-    if "schedule" in kv and out["schedule_secs"] is None:
-        raise ValueError(
-            f"bad crawler schedule {kv['schedule']!r} (want e.g. '15m')")
-    if "formats" in kv or "format_filter" in kv:
-        raw = kv.get("formats") or kv.get("format_filter", "")
-        out["format_filter"] = [f.strip().lower()
-                                for f in raw.split(",") if f.strip()]
-    naming = kv.get("table_naming", "file").lower()
-    if naming not in ("file", "leaf_prefix"):
-        raise ValueError(
-            f"table_naming must be 'file' or 'leaf_prefix', got {naming!r}")
-    out["table_naming"] = naming
-    known = {"schedule", "formats", "format_filter", "table_naming"}
-    unknown = set(kv) - known
-    if unknown:
-        raise ValueError(f"bad crawler WITH options: {sorted(unknown)}")
-    return out
 
 
 class _NdCall(NamedTuple):
@@ -897,6 +725,8 @@ class Engine:
         self._reg_lock = _threading.RLock()
         #: time-travel snapshot view -> the managed table it pins
         self._pins: dict[str, str] = {}
+        #: managed tables changed through this engine since registration
+        self._dirty_tables: set[str] = set()
         if datasets_root is not None:
             from beacon_spark.managed import Catalog
 
@@ -979,7 +809,8 @@ class Engine:
             user: str | None = None, read_only: bool = False) -> DataFrame:
         """Spark SQL with the dialect extensions pre-compiled away.
 
-        - ``SUMMARIZE <table|query>`` → one-pass profiling aggregate
+        - dialect, auth and utility statements (SUMMARIZE, COPY, …) →
+          their row in :data:`beacon_spark.statements.ROWS`
         - ``read_parquet('glob')`` etc. (and their ``read_*_schema``
           twins) in FROM → per-statement temp views over
           ``resolve_from``, dropped once the statement is analyzed
@@ -1003,94 +834,12 @@ class Engine:
         # the refusal a non-read-only statement gets; None = may write
         deny = (_auth.READ_ONLY if read_only
                 else _auth.SUPER_ONLY if gate is not None else None)
+        done = _statements.run(self, statement, gate, deny,
+                               _statements.Call(params, user, read_only))
+        if done is not None:
+            return done
         if self.catalog is not None:
-            handled = _auth.run_auth_statement(self, statement, gate, deny)
-            if handled is not None:
-                return handled
-            for kind, rx in _DDL_RES:
-                m = rx.match(statement)
-                if m:
-                    if deny is not None and kind not in _READ_ONLY_KINDS:
-                        raise _auth.WriteRefused(deny)
-                    return self._run_ddl(kind, m)
             self._register_catalog()
-
-        m = _EXPLAIN_ANALYZE_RE.match(statement)
-        if m:
-            # EXPLAIN ANALYZE <q>: params ride through — the reference
-            # binds placeholders before the analyze wrapper, so
-            # `EXPLAIN ANALYZE … WHERE x = $1` works; the inner
-            # statement runs as the caller
-            inner = self.sql(m.group(1), params=params, user=user,
-                             read_only=read_only)
-            return self.spark.createDataFrame(
-                [(line,) for line in explain_analyze(inner).splitlines()],
-                T.StructType([T.StructField("plan", T.StringType())]),
-            )
-
-        if deny is not None and (_COPY_RE.match(statement)
-                                 or _ANALYZE_RE.match(statement)):
-            raise _auth.WriteRefused(deny)
-        m = _COPY_RE.match(statement)
-        if m:
-            # COPY <table|(query)> TO '<path>' [STORED AS fmt] — the
-            # reference wraps the plan in a DataFusion CopyTo and rewrites
-            # the target into the datasets store (statement_plan/lower.rs:
-            # 12-13, output.rs). Format defaults from the path extension.
-            import os as _os
-
-            from beacon_spark.outputs import write_output
-            from beacon_spark.sources.paths import detect_format
-
-            src, target, fmt = m.group(1).strip(), m.group(2), m.group(3)
-            if src.startswith("(") and src.endswith(")"):
-                src = src[1:-1]
-            df = self.sql(src) if re.search(r"(?i)\bSELECT\b", src) else self.sql(
-                f"SELECT * FROM {src}"
-            )
-            fmt = (fmt or detect_format(target) or "parquet").lower()
-            from beacon_spark.sources import bytesource as _bs
-
-            if (
-                self.datasets_root is not None
-                and not _os.path.isabs(target)
-                and not _bs.is_uri(target)
-            ):
-                target = (
-                    _bs.join(self.datasets_root, target)
-                    if _bs.is_uri(self.datasets_root)
-                    else _os.path.join(self.datasets_root, target)
-                )
-            write_output(df, fmt, target)
-            return self._status(status="ok", op="copy_to", name=target)
-
-        m = _ANALYZE_RE.match(statement)
-        if m:
-            # ANALYZE FILES ['prefix'] [FORCE] (parser/statement.rs:305-318)
-            from beacon_spark.stats import analyze_files
-
-            if self.datasets_root is None:
-                raise ValueError("ANALYZE FILES needs a datasets_root")
-            prefix, force = m.group(1), bool(m.group(2))
-            files = None
-            if prefix:
-                from beacon_spark.sources.paths import resolve_globs
-
-                files = resolve_globs(f"{prefix}*.parquet", self.datasets_root)
-            n = analyze_files(self.datasets_root, files, force=force)
-            return self.spark.createDataFrame(
-                [(n,)], T.StructType([T.StructField("files_analyzed", T.IntegerType())])
-            )
-
-        m = _SUMMARIZE_RE.match(statement)
-        if m:
-            src = m.group(1).strip()
-            if src.startswith("(") and src.endswith(")"):
-                src = src[1:-1]
-            if not re.match(r"^\s*SELECT\b", src, re.IGNORECASE):
-                # a table or read_* call: read through the same gate
-                src = f"SELECT * FROM {src}"
-            return summarize(self.sql(src, user=user, read_only=read_only))
 
         # a restricted reader's grants name remote tables one by one, so
         # its statement is never pushed whole
@@ -1464,7 +1213,7 @@ class Engine:
         # stale pinned file list (ADVICE r7). Cleared only when the full
         # pass below actually completes.
         force_full = getattr(self, "_force_full", False)
-        dirty = getattr(self, "_dirty_tables", None)
+        dirty = self._dirty_tables
         if dirty:
             # manifest-only DML through THIS engine: refresh just the
             # mutated tables/MVs (plus a cheap re-plan of plain views,
@@ -1636,688 +1385,27 @@ class Engine:
             if k in keymap:
                 conf.set(prefix + keymap[k], v)
 
-    #: statement kinds that mutate MANIFESTS, not the catalog structure —
-    #: these record themselves via note_table_version (one small catalog
-    #: write) and re-register only their own temp view, instead of
-    #: invalidating the whole catalog registration (O(tables) at scale)
-    _MANIFEST_ONLY_KINDS = frozenset({
-        "vacuum", "optimize", "insert_into", "delete_from", "update",
-        "alter_add", "alter_drop", "alter_rename", "refresh",
-    })
-
-    def _table_columns_for_extension(self, table: str) -> list[str]:
-        """The table's live column names for extension validation
-        (extensions.rs table_schema: errors ``table '<name>' not
-        found`` when the name is not a registered table)."""
-        try:
-            return [
-                f.name
-                for f in self.sql(f"SELECT * FROM {table} LIMIT 0").schema
-            ]
-        except Exception as e:
-            # only rewrite genuine name-resolution failures; a registered
-            # view whose underlying SQL is broken (or an external table
-            # whose credentials fail) must surface its REAL error, not a
-            # misleading "not found"
-            msg = str(e)
-            unresolved = ("TABLE_OR_VIEW_NOT_FOUND" in msg
-                          or "cannot be found" in msg)
-            if (unresolved and f"`{table}`" in msg) or (
-                    "PARSE_SYNTAX_ERROR" in msg):
-                raise ValueError(f"table '{table}' not found") from None
-            raise
-
-    def _run_ddl(self, kind: str, m: re.Match) -> DataFrame:
-        """Dialect DDL/DML → Catalog ops (statement enum parser/statement.rs:8-30,
-        lowering actions.rs:221-795). Always returns a small status frame."""
-        if kind in _READ_ONLY_KINDS:
-            # a listing changes nothing: the registration stays valid
-            return self._run_ddl_inner(kind, m)
-        cat = self.catalog
-        try:
-            out = self._run_ddl_inner(kind, m)
-        except BaseException:
-            # failed statement: state unknown — force the full re-check,
-            # but never note a version (a failed DELETE on a missing
-            # table must not write phantom catalog entries or make every
-            # other engine re-register for nothing). _force_full makes
-            # the demand survive a later successful DML's dirty-path
-            # signature adoption (ADVICE r7).
-            self._cat_sig = None
-            self._force_full = True
-            raise
-        # invalidate AFTER the mutation: nested self.sql() calls during
-        # the DDL re-register and would otherwise cache a pre-mutation pin
-        if kind in self._MANIFEST_ONLY_KINDS:
-            name = m.group(1)
-            try:
-                self._noted_sig = cat.note_table_version(name)
-                self._dirty_tables = getattr(self, "_dirty_tables", set())
-                self._dirty_tables.add(name)
-            except Exception:
-                self._cat_sig = None  # fall back to the full pass
-                self._force_full = True
-        else:
-            self._cat_sig = None
-            self._force_full = True
-        return out
-
-    def _run_ddl_inner(self, kind: str, m: re.Match) -> DataFrame:
-        cat = self.catalog
-        if kind == "create_external":
-            replace, if_not_exists, name, fmt, loc, partby, optstr = m.groups()
-            if replace and if_not_exists:
-                raise ValueError(
-                    "CREATE EXTERNAL TABLE: OR REPLACE and IF NOT EXISTS "
-                    "cannot be combined")
-            if if_not_exists and name in cat._load()["external_tables"]:
-                # reference contract (create-table.md): skip, no error
-                return self._status(
-                    status="noop", op="create_external_table", name=name)
-            fmt_l = fmt.lower()
-            opts = dict(
-                re.findall(r"'?(\w+)'?\s+'((?:[^']|'')*)'", optstr or "")
-            )
-            opts = {k.lower(): v.replace("''", "'") for k, v in opts.items()}
-            # options are format-scoped and FAIL LOUDLY when a format
-            # would ignore them — a silently-dropped csv delimiter
-            # means silently mis-parsed data
-            allowed = {
-                "postgres": {"host", "port", "user", "password",
-                             "database", "sslmode"},
-                "mysql": {"host", "port", "user", "password", "database"},
-                "csv": {"delimiter"},
-                "remote": {"token", "tls"},
-            }.get(fmt_l, set())
-            bad = set(opts) - allowed
-            if bad:
-                raise ValueError(
-                    f"OPTIONS not supported for STORED AS {fmt}: "
-                    f"{sorted(bad)} (supported: {sorted(allowed) or 'none'})"
-                )
-            password = opts.pop("password", None)
-            if fmt_l == "remote":
-                # the bearer token is a credential: it rides the same
-                # encrypted password-secret slot the DB formats use
-                password = opts.pop("token", None) or password
-            # validate format + location/connection eagerly (the
-            # reference plans the listing at CREATE time,
-            # actions.rs:221-492; sql-databases connects at CREATE).
-            # DB formats only probe their schema (LIMIT 0)
-            probe_df = self.resolve_from(
-                {fmt_l: {"paths": [loc], "options":
-                         {**opts, **({"password": password}
-                                     if password else {})}}}
-            )
-            part_cols = None
-            if partby:
-                # PARTITIONED BY (create-table.md): declared hive-style
-                # partition columns. Spark's directory scan discovers
-                # and prunes them natively; the declaration is VALIDATED
-                # against the probed schema so a typo'd column errors at
-                # CREATE, not silently never-prunes at query time.
-                part_cols = [c.strip() for c in partby.split(",") if c.strip()]
-                have = {c.lower() for c in probe_df.columns}
-                missing = [c for c in part_cols if c.lower() not in have]
-                if missing:
-                    raise ValueError(
-                        f"PARTITIONED BY column(s) {missing} not present "
-                        f"in the table (have: {sorted(have)})")
-            # one atomic catalog commit: entry + credential secret
-            # together (reference EncryptedSecret, sql-databases/secret.rs)
-            cat.create_external_table(name, fmt, [loc], opts,
-                                      password=password,
-                                      partitioned_by=part_cols,
-                                      replace=bool(replace))
-            return self._status(status="ok", op="create_external_table", name=name)
-        if kind == "create_index":
-            idx, table, column, using = m.groups()
-            cols = [c.strip() for c in column.split(",")]
-            column = ",".join(cols)
-            idx = idx or f"{table}_{column.replace(',', '_')}_idx"
-            using = (using or "btree").lower()
-            if len(cols) > 1 and using != "btree":
-                raise ValueError(
-                    f"multi-column CREATE INDEX is btree/Z-order only, not {using}"
-                )
-            cat.create_index(idx, table, column, using)
-            if using == "btree" and self.datasets_root is not None:
-                # the btree role (range pruning) is served by physical
-                # clustering + the file-stats min/max index
-                c = cat._load()
-                ext = c["external_tables"].get(table)
-                if ext and ext["format"] == "parquet":
-                    from beacon_spark.sources.paths import resolve_globs
-                    from beacon_spark.stats import analyze_files
-
-                    files = resolve_globs(ext["paths"], self.datasets_root)
-                    analyze_files(self.datasets_root, files)
-                elif table in c["tables"]:
-                    # managed table: rewrite clustered on the index
-                    # column(s) — range for one column, Morton/Z-order
-                    # for several (each file a value hyper-rectangle) —
-                    # then index the new files' min/max: scans skip
-                    # files via the stats index and row groups via
-                    # parquet footers
-                    from beacon_spark.managed import ManagedTable
-                    from beacon_spark.stats import analyze_files
-
-                    mt = ManagedTable(self.spark, c["tables"][table])
-                    mt.cluster_by(cols)
-                    analyze_files(self.datasets_root, mt.files())
-            elif using in ("inverted", "bitmap") and self.datasets_root is not None:
-                # real posting-file indexes (managed tables): built here,
-                # consulted by _pruned_managed_read — inverted for
-                # contains/LIKE predicates, bitmap for eq/IN on
-                # low-cardinality columns
-                c = cat._load()
-                if table in c["tables"]:
-                    from beacon_spark.managed import ManagedTable
-
-                    mt = ManagedTable(self.spark, c["tables"][table])
-                    if using == "inverted":
-                        mt.build_inverted_index(column, idx)
-                    else:
-                        mt.build_bitmap_index(column, idx)
-            return self._status(status="ok", op="create_index", name=idx)
-        if kind == "drop_index":
-            cat.drop_index(m.group(1))
-            return self._status(status="ok", op="drop_index", name=m.group(1))
-        if kind == "show_indexes":
-            rows = [
-                (n, d["table"], d["column"], d["using"])
-                for n, d in sorted(cat._load()["indexes"].items())
-            ]
-            return self.spark.createDataFrame(
-                rows, "index_name string, table_name string, column_name string, using string"
-            )
-        if kind == "create_crawler":
-            name, prefix, with_opts = m.groups()
-            opts = _parse_crawler_opts(with_opts)
-            cat.create_crawler(
-                name, prefix, opts.get("schedule_secs"),
-                format_filter=opts.get("format_filter"),
-                table_naming=opts.get("table_naming", "file"),
-            )
-            return self._status(status="ok", op="create_crawler", name=name)
-        if kind == "run_crawler":
-            return self._run_crawler(m.group(1))
-        if kind == "drop_crawler":
-            cat.drop_crawler(m.group(1))
-            return self._status(status="ok", op="drop_crawler", name=m.group(1))
-        if kind == "create_stream":
-            # CREATE STREAM s ON 'prefix' INTO table [WITH(...)] — a
-            # streaming-ingestion extension (the reference has no
-            # streaming engine, SURVEY §2.12): exactly-once file→table
-            # ingestion with a Structured Streaming checkpoint
-            from beacon_spark.streaming.ingest import create_stream
-
-            name, prefix, table, optstr = m.groups()
-            opts = dict(
-                re.findall(r"'(\w+)'\s+'((?:[^']|'')*)'", optstr or "")
-            )
-            create_stream(
-                self, name, prefix, table,
-                {k.lower(): v.replace("''", "'") for k, v in opts.items()},
-            )
-            return self._status(status="ok", op="create_stream", name=name)
-        if kind == "run_stream":
-            from beacon_spark.streaming.ingest import run_stream
-
-            return run_stream(self, m.group(1))
-        if kind == "drop_stream":
-            from beacon_spark.streaming.ingest import drop_stream
-
-            dropped = drop_stream(self, m.group(2),
-                                  if_exists=bool(m.group(1)))
-            return self._status(
-                status="ok" if dropped else "noop", op="drop_stream",
-                name=m.group(2),
-            )
-        if kind == "show_streams":
-            from beacon_spark.streaming.ingest import stream_rows
-
-            return self.spark.createDataFrame(
-                stream_rows(self),
-                "stream_name string, prefix string, target_table string, "
-                "format string",
-            )
-        if kind == "describe_history":
-            # DESCRIBE HISTORY t — the version log behind VERSION AS OF
-            # (Delta's DESCRIBE HISTORY shape; the reference's Lance
-            # datasets carry the same per-version metadata)
-            from beacon_spark.managed import ManagedTable
-            from beacon_spark.sources import bytesource as bs
-
-            name = m.group(1)
-            path = cat._load()["tables"].get(name)
-            if path is None:
-                raise ValueError(f"{name!r} is not a managed table")
-            t = ManagedTable(self.spark, path)
-            import datetime as _dt
-
-            rows = []
-            for ver, committed in t.versions():
-                mani = t._read_manifest(ver)
-                ts = _dt.datetime.fromtimestamp(
-                    committed, tz=_dt.timezone.utc,
-                )
-                rows.append((ver, ts, len(mani["files"])))
-            return self.spark.createDataFrame(
-                sorted(rows, reverse=True),
-                "version long, committed_at timestamp, num_files long",
-            )
-        if kind == "show_crawlers":
-            rows = [
-                (n, d["prefix"], d.get("schedule_secs"))
-                for n, d in sorted(cat._load()["crawlers"].items())
-            ]
-            return self.spark.createDataFrame(
-                rows, "crawler_name string, prefix string, schedule_secs long"
-            )
-        if kind == "show_tables":
-            c = cat._load()
-            rows = (
-                [(n, "managed") for n in c["tables"]]
-                + [(n, "external") for n in c["external_tables"]]
-                + [(n, "view") for n in c["views"]]
-                + [(n, "materialized_view") for n in c["materialized_views"]]
-            )
-            return self.spark.createDataFrame(
-                sorted(rows), "table_name string, table_type string"
-            )
-        if kind == "attach":
-            # ATTACH '<target>' AS name [WITH ('token' 't', 'tls' 'true')]
-            # (parser/statement.rs:60-76). Two forms:
-            #   - a remote engine URL (beacon://host:port or grpc://…):
-            #     connect over Arrow Flight and enumerate its tables once
-            #     (remote/catalog.rs:1-11; validated eagerly like
-            #     connection.rs:57). Queried via remote_query('name', sql)
-            #     pushdown or name__table references (server/remote.py).
-            #   - a local lake root: mount its catalog; tables resolve as
-            #     <name>_<table> (plain views are not re-planned
-            #     cross-catalog — documented divergence).
-            path, name, optstr = m.group(1), m.group(2), m.group(3)
-            from beacon_spark.server.remote import RemoteBeacon, parse_remote_url
-
-            if parse_remote_url(path):
-                opts = dict(
-                    re.findall(r"'([^']*)'\s+'((?:[^']|'')*)'", optstr or "")
-                )
-                rb = RemoteBeacon(
-                    path,
-                    token=opts.get("token"),
-                    tls=opts.get("tls", "").lower() == "true",
-                )
-                rb.list_tables()  # eager validation, like the reference
-                self._remotes = getattr(self, "_remotes", {})
-                self._remotes[name] = rb
-                att_entry = {
-                    "url": path,
-                    "tls": opts.get("tls", "").lower() == "true",
-                }
-                att_secret = None
-                if opts.get("token"):
-                    # the bearer token rides the SECRET store, never the
-                    # attachment entry itself — the reference routes
-                    # remote credentials through its secrets mechanism
-                    # (remote/connection.rs, secrets.rs) as
-                    # EncryptedSecret values; ours are ChaCha20+HMAC
-                    # encrypted under a key held OUTSIDE the lake root
-                    # (secretbox.py), so catalog.json alone is useless
-                    # to a reader with data-directory access
-                    from beacon_spark.secretbox import default_box
-
-                    sname = f"__attach_{name}"
-                    att_secret = (sname, {
-                        "type": "bearer",
-                        "scope": path,
-                        "persistent": True,
-                        "options": {
-                            "token": default_box().encrypt(opts["token"])
-                        },
-                    })
-                    att_entry["token_secret"] = sname
-
-                def apply_attach(doc: dict) -> None:
-                    # rides _mutate: a raw load->save raced concurrent
-                    # catalog commits last-writer-wins
-                    doc.setdefault("attachments", {})[name] = att_entry
-                    if att_secret is not None:
-                        doc.setdefault("secrets", {})[att_secret[0]] = \
-                            att_secret[1]
-
-                cat._mutate(apply_attach)
-                return self._status(
-                    status="ok", op="attach", name=name, remote="true"
-                )
-            # local lake root: validate eagerly like the remote branch
-            # (the reference connects/enumerates at ATTACH time,
-            # remote/connection.rs:57) — a typo'd path otherwise lands
-            # in the catalog and every later registration just warns
-            import os as _os
-
-            from beacon_spark.sources import bytesource as _bs
-
-            if not (_os.path.isdir(path) if not _bs.is_uri(path)
-                    else _bs.exists(path)):
-                raise ValueError(
-                    f"ATTACH: lake root {path!r} does not exist")
-            cat._mutate(
-                lambda doc: doc.setdefault("attachments", {})
-                .__setitem__(name, path))
-            return self._status(status="ok", op="attach", name=name)
-        if kind == "detach":
-            name = m.group(1)
-            if name not in cat._load().get("attachments", {}):
-                raise ValueError(f"no attachment {name!r}")
-
-            def apply_detach(doc: dict) -> None:
-                entry = doc.setdefault("attachments", {}).pop(name, None)
-                if isinstance(entry, dict) and entry.get("token_secret"):
-                    doc.get("secrets", {}).pop(entry["token_secret"], None)
-
-            cat._mutate(apply_detach)
-            rb = getattr(self, "_remotes", {}).pop(name, None)
-            if rb is not None:
-                rb.close()
-            # drop materialized remote views — a stale temp view would
-            # keep serving data from a connection the user detached
-            # (federated-pushdown views too: they may reference this
-            # endpoint, and re-running the statement re-derives them)
-            views = getattr(self, "_remote_views", {})
-            for v in views.pop(name, set()) | views.pop("__federated__", set()):
-                self.spark.catalog.dropTempView(v)  # False when absent
-            return self._status(status="ok", op="detach", name=name)
-        if kind == "create_secret":
-            # CREATE [PERSISTENT|TEMPORARY] SECRET n (TYPE t, k 'v', …,
-            # SCOPE 's') — actions.rs:110-220. Persistent secrets go to
-            # the catalog encrypted (ChaCha20 + HMAC-SHA256, key from
-            # env/keyfile outside the lake root — secretbox.py; the
-            # reference stores EncryptedSecret in its db file);
-            # TEMPORARY/default live only in this Engine.
-            from beacon_spark.secretbox import default_box
-
-            modifier = (m.group(1) or "").strip().lower()
-            name, body = m.group(2), m.group(3)
-            params: dict[str, str] = {}
-            stype = scope = None
-            for item in _split_top_level(body):
-                item = item.strip()
-                tm = re.match(r"(?i)^TYPE\s+'?(\w+)'?$", item)
-                sm = re.match(r"(?i)^SCOPE\s+'([^']*)'$", item)
-                km = re.match(r"^(\w+)\s+'([^']*)'$", item)
-                if tm:
-                    stype = tm.group(1).lower()
-                elif sm:
-                    scope = sm.group(1)
-                elif km:
-                    params[km.group(1).lower()] = km.group(2)
-                elif item:
-                    raise ValueError(f"bad secret parameter: {item!r}")
-            entry = {"type": stype, "scope": scope, "persistent": modifier == "persistent"}
-            self._apply_secret(entry, params)
-            if modifier == "persistent":
-                box = default_box()
-                sec_doc = {
-                    **entry,
-                    "options": {
-                        k: box.encrypt(v) for k, v in params.items()
-                    },
-                }
-                cat._mutate(
-                    lambda d: d.setdefault("secrets", {})
-                    .__setitem__(name, sec_doc))
-            else:
-                self._session_secrets[name] = {**entry, "options": params}
-            return self._status(status="ok", op="create_secret", name=name)
-        if kind == "drop_secret":
-            if_exists, name = bool(m.group(1)), m.group(2)
-            found = (name in self._session_secrets
-                     or name in cat._load().get("secrets", {}))
-            if not found and not if_exists:
-                raise ValueError(f"secret {name!r} does not exist")
-            self._session_secrets.pop(name, None)
-            cat._mutate(
-                lambda d: d.setdefault("secrets", {}).pop(name, None))
-            return self._status(status="ok", op="drop_secret", name=name)
-        if kind == "show_secrets":
-            # values never shown (the reference stores them encrypted)
-            rows = []
-            c = cat._load()
-            for name, s in sorted(
-                {**c.get("secrets", {}), **self._session_secrets}.items()
-            ):
-                rows.append(
-                    (name, s.get("type"), s.get("scope"),
-                     bool(s.get("persistent")),
-                     ",".join(sorted(s.get("options", {}))))
-                )
-            return self.spark.createDataFrame(
-                rows,
-                "name string, type string, scope string, persistent boolean, option_keys string",
-            )
-        if kind == "set_extension":
-            # SET EXTENSION '<kind>' FOR <table> TO '<json>' (statement.rs;
-            # typed contract + strict validation = extensions.rs:1-460:
-            # unknown kind/key/ill-shaped value/missing column REJECTED)
-            from beacon_spark import extensions as _ext
-
-            ext_kind, table, payload = m.group(1), m.group(2), m.group(3)
-            doc = _ext.parse_kind(
-                ext_kind, payload.replace("''", "'"),
-                self._table_columns_for_extension(table))
-            payload_json = json.dumps(doc)
-            cat._mutate(
-                lambda d: d.setdefault("extensions", {})
-                .setdefault(table, {})
-                .__setitem__(ext_kind.lower(), payload_json))
-            return self._status(status="ok", op="set_extension", name=table)
-        if kind == "drop_extension":
-            from beacon_spark import extensions as _ext
-
-            ext_kind, table = m.group(1), m.group(2)
-            self._table_columns_for_extension(table)  # table must exist
-            k = ext_kind.lower()
-
-            def apply_dropext(d: dict) -> None:
-                stored = d.setdefault("extensions", {}).get(table, {})
-                if k in stored:
-                    # a stored entry always drops — including legacy
-                    # free-form kinds written before the typed contract,
-                    # which SHOW keeps readable and must stay removable
-                    stored.pop(k)
-                else:
-                    _ext.drop_kind_name(ext_kind)  # unknown + absent → error
-
-            cat._mutate(apply_dropext)
-            return self._status(status="ok", op="drop_extension", name=table)
-        if kind == "show_extensions":
-            # ONE row, one Utf8 'extensions' column holding the whole
-            # JSON document (show_extensions_arrow_schema, pinned by the
-            # reference's table_extensions_sql_round_trip test)
-            table = m.group(1)
-            self._table_columns_for_extension(table)  # table must exist
-            c = cat._load()
-            doc = {}
-            for k, v in sorted(c.get("extensions", {}).get(table, {}).items()):
+    def _invalidate(self, table: str | None = None,
+                    version: int | None = None) -> None:
+        """Drop what the catalog registration caches after a change made
+        through this engine. A manifest-level change to ``table`` is
+        noted (note_table_version: one small catalog write) so the next
+        registration re-pins only that table — never the O(tables) full
+        pass; no ``table``, or a failed note, demands the full pass
+        (``_force_full`` survives a later note's signature). Under the
+        registration lock: stream ingestion calls this from the
+        scheduler's thread."""
+        with self._reg_lock:
+            if table is not None:
                 try:
-                    doc[k] = json.loads(v)
+                    self._noted_sig = self.catalog.note_table_version(
+                        table, version)
+                    self._dirty_tables.add(table)
+                    return
                 except Exception:
-                    doc[k] = v  # legacy free-form payloads stay readable
-            return self.spark.createDataFrame(
-                [(json.dumps(doc),)], "extensions string")
-        if kind == "create_table_as":
-            if_not_exists, name, src = m.groups()
-            if if_not_exists and name in cat._load()["tables"]:
-                # managed-tables.md: IF NOT EXISTS does nothing, no error
-                return self._status(status="noop", op="create_table",
-                                    name=name)
-            cat.create_table(name, self.sql(src))
-            return self._status(status="ok", op="create_table", name=name)
-        if kind == "create_table_schema":
-            # CREATE TABLE t (id BIGINT, name VARCHAR) — an EMPTY managed
-            # table with an explicit schema (the reference's default
-            # Lance-backed CREATE, actions.rs:221-360; contract:
-            # integration-tests/test_lance_tables.py). Dialect types the
-            # reference accepts bare (VARCHAR/TEXT) map to Spark string.
-            from beacon_spark.managed import _parse_type as _managed_parse_type
-
-            if_not_exists, name, collist = m.groups()
-            if if_not_exists and name in cat._load()["tables"]:
-                return self._status(status="noop", op="create_table",
-                                    name=name)
-            fields = []
-            for item in _split_top_level(collist):
-                cm = re.match(
-                    r"^\s*(\w+)\s+(.+?)(?:\s+NOT\s+NULL)?\s*$",
-                    item, re.IGNORECASE | re.DOTALL)
-                if not cm:
-                    raise ValueError(f"bad column definition: {item!r}")
-                cname, ctype = cm.group(1), cm.group(2).strip()
-                fields.append(
-                    T.StructField(cname, _managed_parse_type(ctype), True))
-            cat.create_table(
-                name,
-                self.spark.createDataFrame([], T.StructType(fields)),
-            )
-            return self._status(status="ok", op="create_table", name=name)
-        if kind == "drop_table":
-            # DROP TABLE removes an external table, a managed table, OR
-            # a view/MV — the reference has no separate DROP VIEW
-            # (docs server/view.md; actions.rs:37-43 deregisters any
-            # provider) and errors on a missing name unless IF EXISTS
-            if_exists, name = bool(m.group(1)), m.group(2)
-            names = cat.names()
-            if not cat.drop_external_table(name):
-                if name in names["tables"]:
-                    cat.drop_table(name)
-                elif (name in names["views"]
-                      or name in names["materialized_views"]):
-                    cat.drop_view(name)
-                elif not if_exists:
-                    raise ValueError(f"Table '{name}' does not exist")
-            self.spark.catalog.dropTempView(name)
-            return self._status(status="ok", op="drop_table", name=name)
-        if kind == "vacuum":
-            name, retain = m.group(1), int(m.group(2) or 1)
-            n_manifests, n_files = cat.table(name).vacuum(retain)
-            return self._status(
-                status="ok", op="vacuum", name=name,
-                manifests_removed=str(n_manifests), files_removed=str(n_files),
-            )
-        if kind == "optimize":
-            # OPTIMIZE t [TARGET SIZE <bytes>] — fold the small-file
-            # tail (streaming micro-batches, tiny INSERTs) into
-            # target-sized files; COW, so time travel still crosses the
-            # compaction boundary and VACUUM reclaims the old files
-            name = m.group(1)
-            target = int(m.group(2)) if m.group(2) else 128 << 20
-            before, after = cat.table(name).compact(target)
-            self.spark.catalog.dropTempView(name)  # re-register next use
-            # postings/stats reference file NAMES and inverted/bitmap
-            # pruning is fail-closed — compacted files with no postings
-            # would be falsely pruned (rows silently missing) without
-            # the same refresh every other DML statement does
-            self._refresh_index_stats(name)
-            return self._status(
-                status="ok", op="optimize", name=name,
-                files_before=str(before), files_after=str(after),
-            )
-        if kind == "insert_into":
-            name, rest = m.group(1), m.group(2).strip()
-            cols = None
-            # a leading paren group is a COLUMN LIST only when it is not
-            # itself a query ("INSERT INTO t (SELECT …)" is a
-            # parenthesized source, Postgres-style) and a source follows
-            mcols = re.match(
-                r"^\(\s*(?!(?:SELECT|VALUES|WITH|TABLE)\b)([\w\s,]+?)\s*\)\s*(.+)$",
-                rest, re.DOTALL | re.IGNORECASE)
-            if mcols:
-                cols = [c.strip() for c in mcols.group(1).split(",")]
-                rest = mcols.group(2)
-            df = self.sql(rest)
-            # positional → named: INSERT binds by position (actions.rs:604-652)
-            names = cols or [f.name for f in cat.table(name).schema().fields]
-            version = cat.table(name).insert(df.toDF(*names[: len(df.columns)]))
-            self._refresh_index_stats(name)
-            return self._status(status="ok", op="insert", name=name, version=str(version))
-        if kind == "delete_from":
-            # no WHERE = delete every row (test_lance_tables.py:89-91);
-            # a present-but-empty predicate ("DELETE FROM t WHERE ") is
-            # an error, not delete-all — only a truly absent clause
-            # defaults
-            name, pred = m.group(1), m.group(2)
-            if pred is None:
-                pred = "true"
-            elif not pred.strip():
-                raise ValueError("DELETE: empty WHERE predicate")
-            version = cat.table(name).delete(pred)
-            self._refresh_index_stats(name)
-            return self._status(status="ok", op="delete", name=name, version=str(version))
-        if kind == "update":
-            name = m.group(1)
-            sets, pred = _split_top_level_where(m.group(2))
-            if pred is not None and not pred.strip():
-                raise ValueError("UPDATE: empty WHERE predicate")
-            assignments = {}
-            for part in _split_top_level(sets):
-                lhs, _, rhs = part.partition("=")
-                assignments[lhs.strip()] = rhs.strip()
-            version = cat.table(name).update(assignments, pred)
-            self._refresh_index_stats(name)
-            return self._status(status="ok", op="update", name=name, version=str(version))
-        if kind == "alter_add":
-            name, col, typ = m.group(1), m.group(2), m.group(3)
-            cat.table(name).alter_add_column(col, typ.strip())
-            return self._status(status="ok", op="alter_add", name=name)
-        if kind == "alter_drop":
-            name, col = m.group(1), m.group(2)
-            cat.table(name).alter_drop_column(col)
-            return self._status(status="ok", op="alter_drop", name=name)
-        if kind == "alter_rename":
-            name, old, new = m.group(1), m.group(2), m.group(3)
-            cat.table(name).alter_rename_column(old, new)
-            return self._status(status="ok", op="alter_rename", name=name)
-        if kind == "create_view":
-            replace, name, src = bool(m.group(1)), m.group(2), m.group(3)
-            self.sql(src)  # validate eagerly, as the reference plans the view body
-            cat.create_view(name, src, replace=replace)
-            return self._status(status="ok", op="create_view", name=name)
-        if kind == "create_mview":
-            name, src = m.group(1), m.group(2)
-            cat.create_materialized_view(name, src, self.sql(src))
-            return self._status(status="ok", op="create_mview", name=name)
-        if kind == "refresh":
-            # the reference's REFRESH error contract
-            # (create-materialized-view.md): unknown name vs
-            # known-but-not-an-MV give distinct, clear errors
-            name = m.group(1)
-            mv_sql = cat.mv_sql(name)
-            if mv_sql is None:
-                names = cat.names()
-                if any(name in names[k] for k in
-                       ("tables", "external_tables", "views")):
-                    raise ValueError(
-                        f"Object '{name}' is not a materialized view")
-                raise ValueError(
-                    f"Materialized view '{name}' does not exist")
-            cat.refresh_materialized_view(name, self.sql(mv_sql))
-            return self._status(status="ok", op="refresh", name=name)
-        if kind == "drop_view":
-            # errors on a missing name unless IF EXISTS — mirroring
-            # drop_table (silent success hid typos before)
-            if_exists, name = bool(m.group(1)), m.group(2)
-            names = cat.names()
-            if (name not in names["views"]
-                    and name not in names["materialized_views"]):
-                if not if_exists:
-                    raise ValueError(f"View '{name}' does not exist")
-                return self._status(status="noop", op="drop_view", name=name)
-            cat.drop_view(name)
-            self.spark.catalog.dropTempView(name)
-            return self._status(status="ok", op="drop_view", name=name)
-        raise ValueError(f"unhandled ddl kind {kind}")
+                    pass
+            self._cat_sig = None
+            self._force_full = True
 
     def run_due_crawlers(self, now: float | None = None) -> list[tuple]:
         """One scheduler sweep (the reference's periodic re-discovery,

@@ -171,22 +171,8 @@ def run_stream(engine, name: str):
             # the crash-recovery run (commit landed, checkpoint didn't)
             # is exactly the one that must heal a stale engine, and the
             # old early-return skipped the healing.
-            # The shared marks ride the registration lock: this runs on
-            # the scheduler's daemon thread, and an unlocked set.add
-            # raced the user thread's sorted(dirty) iteration (and both
-            # threads could each mint their own _dirty_tables set,
-            # silently dropping one thread's mark).
             engine._refresh_index_stats(table)
-            with engine._reg_lock:
-                try:
-                    engine._noted_sig = engine.catalog.note_table_version(
-                        table, version)
-                    engine._dirty_tables = getattr(
-                        engine, "_dirty_tables", set())
-                    engine._dirty_tables.add(table)
-                except Exception:
-                    engine._cat_sig = None
-                    engine._force_full = True
+            engine._invalidate(table, version)
             if replay:
                 return  # already applied: bookkeeping done, no re-count
             totals["batches"] += 1

@@ -11,8 +11,9 @@ from types import SimpleNamespace
 import pytest
 from pyspark.errors import ParseException
 
-from beacon_spark.auth import _AUTH_RES, AuthError, WriteRefused
-from beacon_spark.engine import _DDL_RES, _READ_ONLY_KINDS, Engine
+from beacon_spark.auth import AuthError, WriteRefused
+from beacon_spark.engine import Engine
+from beacon_spark.statements import ROWS
 
 #: one statement per dialect kind that writes
 DIALECT_WRITES = {
@@ -80,20 +81,19 @@ SPARK_WRITES = [
 ]
 
 
-def _first_kind(statement, table):
-    return next((k for k, rx in table if rx.match(statement)), None)
+def _first_kind(statement):
+    return next((r.kind for r in ROWS if r.pattern.match(statement)), None)
 
 
 def test_write_statement_tables_cover_every_kind():
     """Each statement above is the kind it is filed under, and every
-    dialect and auth kind that writes has one."""
-    for kind, stmt in DIALECT_WRITES.items():
-        assert _first_kind(stmt, _DDL_RES) == kind, stmt
-    for kind, stmt in AUTH_WRITES.items():
-        assert _first_kind(stmt, _AUTH_RES) == kind, stmt
-    assert set(DIALECT_WRITES) == {k for k, _ in _DDL_RES} - _READ_ONLY_KINDS
-    assert set(AUTH_WRITES) == {k for k, _ in _AUTH_RES} - {
-        "show_users", "show_roles"}
+    statement-table row that writes has a refusal statement here."""
+    for kind, stmt in {**DIALECT_WRITES, **AUTH_WRITES}.items():
+        assert _first_kind(stmt) == kind, stmt
+    writes = {r.kind for r in ROWS if r.access == "write"}
+    assert set(DIALECT_WRITES) | set(AUTH_WRITES) <= writes
+    refused = [*SPARK_WRITES, *DIALECT_WRITES.values(), *AUTH_WRITES.values()]
+    assert writes <= {_first_kind(s) for s in refused}
 
 
 @pytest.fixture(scope="module")
@@ -314,3 +314,77 @@ def test_metadata_functions_check_their_argument(spark, tmp_path):
     rows = eng.sql("SELECT * FROM view_dataset_statistics('open.parquet')",
                    user="alice").collect()
     assert rows
+
+
+#: one statement per statement-table row, run in row order on one
+#: engine: the writes above (the drops aimed at what earlier rows made)
+#: and the rows that only read
+ROW_STATEMENTS = {
+    **DIALECT_WRITES, **AUTH_WRITES,
+    "drop_user": "DROP USER bob", "drop_role": "DROP ROLE r2",
+    "drop_table": "DROP TABLE t2",
+    "alter_rename": "ALTER TABLE t RENAME COLUMN a TO z",
+    "show_users": "SHOW USERS", "show_roles": "SHOW ROLES",
+    "show_indexes": "SHOW INDEXES", "show_crawlers": "SHOW CRAWLERS",
+    "show_streams": "SHOW STREAMS", "describe_history": "DESCRIBE HISTORY t",
+    "show_tables": "SHOW TABLES", "show_secrets": "SHOW SECRETS",
+    "show_extensions": "SHOW EXTENSIONS FOR t",
+    "explain_analyze": "EXPLAIN ANALYZE SELECT 1",
+    "copy": "COPY t TO 'out.parquet'", "analyze_files": "ANALYZE FILES",
+    "summarize": "SUMMARIZE t",
+}
+
+
+@pytest.fixture(scope="module")
+def rowseng(spark, tmp_path_factory):
+    eng = Engine(spark, datasets_root=str(tmp_path_factory.mktemp("rows")))
+    eng.sql("CREATE TABLE t AS SELECT id AS a, CAST(id AS string) AS b "
+            "FROM range(3)")
+    eng.sql("CREATE USER alice WITH PASSWORD 'pw'")
+    eng.sql("CREATE ROLE readers")
+    return eng
+
+
+def _registration(eng):
+    return eng._cat_sig, eng._force_full, set(eng._dirty_tables)
+
+
+@pytest.mark.parametrize("row", ROWS, ids=[r.kind for r in ROWS])
+def test_each_row_applies_its_invalidation(rowseng, row):
+    """A listing leaves the catalog registration alone, a manifest-level
+    change re-pins only its table, and a structural change or a failed
+    write demands the full re-registration."""
+    eng, stmt = rowseng, ROW_STATEMENTS[row.kind]
+    assert _first_kind(stmt) == row.kind
+    eng.sql("SELECT 1").collect()  # registered: nothing pending
+    before = _registration(eng)
+    assert before[0] is not None and before[1:] == (False, set())
+    try:
+        eng.sql(stmt)
+        failed = False
+    except Exception:
+        failed = True
+    if row.invalidates == "none":
+        assert _registration(eng) == before
+    elif failed or row.invalidates == "catalog":
+        assert _registration(eng)[:2] == (None, True)
+    else:
+        m = row.pattern.match(stmt)
+        assert _registration(eng)[1:] == (False, {m.group(1)})
+        # the same change to a missing table fails: the full pass
+        eng.sql("SELECT 1").collect()
+        with pytest.raises(Exception):
+            eng.sql(f"{stmt[:m.start(1)]}no_such_table{stmt[m.end(1):]}")
+        assert _registration(eng)[:2] == (None, True)
+
+
+def test_catalog_less_engine_hands_dialect_text_to_spark(spark):
+    eng = Engine(spark)
+    spark.sql("DROP VIEW IF EXISTS default.v")
+    try:
+        eng.sql("CREATE VIEW v AS SELECT 1")
+        assert spark.sql("SELECT * FROM default.v").collect()[0][0] == 1
+        eng.sql("DROP VIEW v")
+        assert not spark.catalog.tableExists("default.v")
+    finally:
+        spark.sql("DROP VIEW IF EXISTS default.v")
