@@ -64,7 +64,7 @@ import secrets
 __all__ = [
     "AuthError", "WriteRefused", "ReadGate",
     "authorize_dsl", "read_gate", "require_super", "verify_user",
-    "hash_password", "is_allowed",
+    "hash_password", "is_allowed", "is_internal", "INTERNAL_PREFIXES",
 ]
 
 PRIVILEGES = {"SELECT", "INSERT", "UPDATE", "DELETE", "CREATE", "DROP", "ALL"}
@@ -164,14 +164,28 @@ def is_allowed(auth: dict, roles: list[str], privilege: str,
 
 # ------------------------------------------------------------ authorize
 
+#: store areas owned by the engine's own machinery (catalog, stats,
+#: posting indexes) — the reference's INTERNAL_PREFIX analog: system
+#: state, outside every user grant
+INTERNAL_PREFIXES = (".beacon_catalog", ".beacon_stats", "__beacon__")
+
+
+def is_internal(path: str) -> bool:
+    """Whether a segment of ``path`` names the engine's own state."""
+    return any(seg in INTERNAL_PREFIXES for seg in path.split("/"))
+
+
 def _path_candidates(engine, path: str) -> set[str]:
     """The spellings a path rule must be checked against: as written,
     normalized (``./hidden.parquet`` ≡ ``hidden.parquet`` — an alternate
     spelling must not dodge a DENY), and resolved against the engine's
-    datasets root (the form the reader actually opens)."""
+    datasets root (the form the reader actually opens); a ``file:`` URI
+    as the local path it names."""
     import posixpath
 
-    out = {path, posixpath.normpath(path)}
+    out = {path}
+    path = re.sub(r"^file:(?://)?(?=/)", "", path)
+    out |= {path, posixpath.normpath(path)}
     root = getattr(engine, "datasets_root", None)
     if root is None or "://" in path:
         return out
@@ -190,36 +204,6 @@ def _path_candidates(engine, path: str) -> set[str]:
                 out.add(rel)
                 out.add(f"./{rel}")
     return out
-
-
-def _check_path(engine, a: dict, roles: list[str], path: str) -> None:
-    """Deny-wins across every spelling: ANY candidate matching a deny
-    denies; otherwise ANY candidate matching a grant allows. A path
-    containing glob metacharacters additionally checks every CONCRETE
-    file the engine will expand it to — a char-class spelling like
-    ``[s]ecret/x`` must not dodge a deny aimed at ``secret/*`` (the
-    rules match text; the reader matches files)."""
-    cands = _path_candidates(engine, path)
-    if any(ch in path for ch in "*?["):
-        from beacon_spark.sources.paths import resolve_globs
-
-        try:
-            resolved = resolve_globs(
-                path, getattr(engine, "datasets_root", None))
-        except FileNotFoundError:
-            resolved = []  # nothing matches → the read itself will fail
-        except Exception as exc:
-            # fail CLOSED: a transient listing/storage error must not
-            # skip the concrete-file deny check this expansion exists
-            # for (a char-class spelling dodging a deny on secret/*)
-            raise AuthError(
-                f"permission denied: SELECT on path {path!r} "
-                f"(glob expansion failed: {exc})"
-            )
-        for rp in resolved:
-            cands |= _path_candidates(engine, rp)
-    if not is_allowed(a, roles, "SELECT", *[("path", c) for c in cands]):
-        raise AuthError(f"permission denied: SELECT on path {path!r}")
 
 
 class ExternalPrincipal(str):
@@ -267,8 +251,8 @@ def _restricted(engine, user: str | None) -> tuple[dict, dict] | None:
 
 class ReadGate:
     """The SELECT checks of one restricted caller: deny-wins,
-    default-deny, through :func:`is_allowed` (tables) and
-    :func:`_check_path` (paths); with enforcement off all pass."""
+    default-deny, through :func:`is_allowed`; with enforcement off all
+    pass but a path into the engine's own state."""
 
     def __init__(self, engine, auth: dict, ident: dict):
         self.engine, self.auth, self.roles = engine, auth, ident.get("roles", [])
@@ -284,8 +268,41 @@ class ReadGate:
             raise AuthError(f"permission denied: SELECT on table {name!r}")
 
     def path(self, path: str) -> None:
-        if self.enforce:
-            _check_path(self.engine, self.auth, self.roles, path)
+        if not self.allows_path(path):
+            raise AuthError(f"permission denied: SELECT on path {path!r}")
+
+    def allows_path(self, path: str) -> bool:
+        """Deny-wins across every spelling: ANY candidate matching a
+        deny denies; otherwise ANY candidate matching a grant allows. A
+        glob additionally checks every CONCRETE file the engine will
+        expand it to — a char-class spelling like ``[s]ecret/x`` must
+        not dodge a deny aimed at ``secret/*`` (the rules match text;
+        the reader matches files). A spelling with an engine-owned
+        segment (:func:`is_internal`) is refused whatever the
+        enforcement; with enforcement off a glob is expanded only when
+        it could match one."""
+        cands = _path_candidates(self.engine, path)
+        globs = [seg for seg in path.split("/") if any(c in seg for c in "*?[")]
+        if globs and (self.enforce or any(
+                fnmatch.fnmatch(p, g) for g in globs for p in INTERNAL_PREFIXES)):
+            from beacon_spark.sources.paths import resolve_globs
+
+            try:
+                resolved = resolve_globs(path, self.engine.datasets_root)
+            except FileNotFoundError:
+                resolved = []  # nothing matches → the read itself will fail
+            except Exception as exc:
+                # fail CLOSED: a transient listing/storage error must not
+                # skip the concrete-file checks this expansion exists for
+                raise AuthError(
+                    f"permission denied: SELECT on path {path!r} "
+                    f"(glob expansion failed: {exc})")
+            for rp in resolved:
+                cands |= _path_candidates(self.engine, rp)
+        if any(is_internal(c) for c in cands):
+            return False
+        return not self.enforce or is_allowed(
+            self.auth, self.roles, "SELECT", *[("path", c) for c in cands])
 
     def source(self, cfg) -> None:
         """Every path of one from-spec's ``{"paths": …}`` (or its

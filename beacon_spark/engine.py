@@ -787,12 +787,15 @@ class Engine:
             + list(cat.get("materialized_views", {}))
         )
 
-    def list_datasets(self) -> DataFrame:
+    def list_datasets(self, gate=None) -> DataFrame:
         """Every file under the datasets root + detected format
-        (beacon-functions/src/file_formats/list_datasets.rs)."""
+        (beacon-functions/src/file_formats/list_datasets.rs); with a
+        restricted caller's ``gate``, only the files it may read."""
         if self.datasets_root is None:
             raise ValueError("Engine has no datasets_root configured")
         rows = _paths.list_datasets(self.datasets_root)
+        if gate is not None:
+            rows = [r for r in rows if gate.allows_path(r[0])]
         return self.spark.createDataFrame(
             rows,
             T.StructType(
@@ -1136,12 +1139,13 @@ class Engine:
         (cache coverage per file) — beacon-functions/src/metadata/* and
         table-functions-utility.md:52-117. A restricted caller's
         ``gate`` checks a path or table argument before anything is
-        computed. Each view's name is appended to ``views``."""
+        computed, and keeps only the whole-index rows of the files it
+        may read. Each view's name is appended to ``views``."""
 
         def repl(m: re.Match) -> str:
             fn, arg = m.group(1).lower(), m.group(2)
             if fn == "list_datasets":
-                df = self.list_datasets()
+                df = self.list_datasets(gate)
             elif fn == "view_external_table_statistics":
                 from beacon_spark.stats import external_table_statistics_df
 
@@ -1158,7 +1162,7 @@ class Engine:
                     gate.path(arg)
                 df = dataset_statistics_df(self.spark, self, arg)
             else:
-                df = self.view_statistics()
+                df = self.view_statistics(gate)
             name = f"__beacon_meta_{fn}_{self._view_tag}" + (
                 f"_{abs(hash(arg)) % 10**8}" if arg else "")
             df.createOrReplaceTempView(name)
@@ -1488,8 +1492,6 @@ class Engine:
         groups: dict[tuple[str, str], list[str]] = {}
         for rel, fmt in _paths.list_datasets(self.datasets_root):
             if prefix and not rel.startswith(prefix):
-                continue
-            if rel.startswith(".beacon"):
                 continue
             if fmt_filter is not None and (fmt or "") not in fmt_filter:
                 # dropped BEFORE the extension check, so filtered files
@@ -2129,9 +2131,10 @@ class Engine:
         not bind over reads they checked (``trusted``) is checked as a
         table (a snapshot as the table it pins) and not descended into,
         so granted views are definer-rights; an internal ``__beacon*``
-        one is refused whatever the enforcement (``gate.enforce``).
-        Under enforcement a file relation outside any view is
-        path-checked and any other relation there refused."""
+        one is refused whatever the enforcement (``gate.enforce``). A
+        file relation outside any view is path-checked (the engine's own
+        files whatever the enforcement); under enforcement any other
+        relation there is refused."""
         qe, whole = self._query_execution(statement, args, plan)
         todo = [qe.analyzed()]
         while todo:
@@ -2147,16 +2150,16 @@ class Engine:
                     raise _auth.AuthError(_auth.INTERNAL_NAMES)
                 gate.table(self._snapshot_base(name) or name)
                 continue
-            if (gate.enforce and kind.endswith("Relation")
-                    and kind not in _LITERAL_RELATIONS):
-                if kind != "LogicalRelation" or node.relation().getClass() \
-                        .getSimpleName() != "HadoopFsRelation":
+            if kind.endswith("Relation") and kind not in _LITERAL_RELATIONS:
+                if kind == "LogicalRelation" and node.relation().getClass() \
+                        .getSimpleName() == "HadoopFsRelation":
+                    for root in _jseq(node.relation().location().rootPaths()):
+                        uri = root.toUri()
+                        gate.path(uri.getPath() if uri.getScheme() == "file"
+                                  else root.toString())
+                elif gate.enforce:
                     raise _auth.AuthError(f"permission denied: {kind} "
                                           "read outside a catalog table")
-                for root in _jseq(node.relation().location().rootPaths()):
-                    uri = root.toUri()
-                    gate.path(uri.getPath() if uri.getScheme() == "file"
-                              else root.toString())
                 continue
             todo += _jseq(node.children()) + _jseq(node.subqueries())
         return qe, whole
@@ -2968,7 +2971,10 @@ class Engine:
             raise ValueError("Engine has no datasets_root configured")
         return analyze_files(self.datasets_root, force=force)
 
-    def view_statistics(self) -> DataFrame:
+    def view_statistics(self, gate=None) -> DataFrame:
+        """The statistics index; with a restricted caller's ``gate``,
+        only the rows of the files it may read."""
         from beacon_spark.stats import statistics_df
 
-        return statistics_df(self.spark, self.datasets_root)
+        return statistics_df(self.spark, self.datasets_root,
+                             None if gate is None else gate.allows_path)

@@ -34,12 +34,9 @@ import json
 import posixpath
 import uuid
 
-__all__ = ["AdminApi", "FileError", "validate_dataset_path",
-           "INTERNAL_PREFIXES", "MAX_PART_BYTES"]
+from beacon_spark.auth import INTERNAL_PREFIXES
 
-#: store areas owned by the engine's own machinery (catalog, stats,
-#: posting indexes) — the reference's INTERNAL_PREFIX analog
-INTERNAL_PREFIXES = (".beacon_catalog", ".beacon_stats", "__beacon__")
+__all__ = ["AdminApi", "FileError", "validate_dataset_path", "MAX_PART_BYTES"]
 
 #: per-part buffer cap for chunked uploads (files.rs MAX_PART_BYTES)
 MAX_PART_BYTES = 128 << 20

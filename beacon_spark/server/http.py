@@ -974,13 +974,15 @@ class BeaconHttpServer:
         return tools
 
     @staticmethod
-    def _check_where_predicate(pred: str) -> None:
+    def _check_where_predicate(eng, pred: str) -> None:
         """Per-table tool ``where`` arguments must be PLAIN predicates
-        over the (scoped) table: no subqueries — one could read other
-        tables or unexposed columns oracle-style, defeating the
-        exposed_columns scoping. (The composed statement runs read-only,
-        so neither a write nor ``remote_query`` can run.)"""
-        from beacon_spark.server.guard import scrub_sql, sql_is_closed
+        over the (scoped) table: one expression by Spark's parse, with
+        no subquery anywhere in it — one could read other tables or
+        unexposed columns oracle-style, defeating the exposed_columns
+        scoping. (The composed statement runs read-only, so neither a
+        write nor ``remote_query`` can run.)"""
+        from beacon_spark.engine import _jseq
+        from beacon_spark.server.guard import sql_is_closed
 
         if not sql_is_closed(pred):
             # a fragment ending inside an open literal/comment would
@@ -988,11 +990,13 @@ class BeaconHttpServer:
             # re-open code at a caller-chosen point
             raise ValueError(
                 "where predicate has an unterminated literal or comment")
-        # scrub_sql = the lexer-accurate blanking (backslash escapes,
-        # comments) — a regex knowing only '' desyncs on '\'' and lets
-        # a subquery hide inside a fake literal
-        if re.search(r"\b(SELECT|EXISTS)\b", scrub_sql(pred), re.IGNORECASE):
-            raise ValueError("where predicate must not contain subqueries")
+        todo = [eng._jvm_sql.parser.parseExpression(pred)]
+        while todo:
+            node = todo.pop()
+            if node.nodeName() in ("ListQuery", "Exists", "ScalarSubquery",
+                                   "LateralSubquery"):
+                raise ValueError("where predicate must not contain subqueries")
+            todo += _jseq(node.children())
 
     def _mcp_tool(self, name: str, args: dict,
                   user: str | None = None) -> str:
@@ -1087,7 +1091,7 @@ class BeaconHttpServer:
                     "extension's exposed_columns"
                 )
             if args.get("where"):
-                self._check_where_predicate(args["where"])
+                self._check_where_predicate(eng, args["where"])
             # scoping is STRUCTURAL, not lexical: the user-facing query
             # runs against an inline subselect projecting only the
             # exposed columns, so a where predicate referencing an

@@ -17,6 +17,8 @@ from __future__ import annotations
 import glob as _glob
 import os
 
+from beacon_spark.auth import is_internal
+
 
 def resolve_globs(paths: str | list[str], datasets_root: str | None = None) -> list[str]:
     from beacon_spark.sources import bytesource as _bs
@@ -159,7 +161,8 @@ def list_datasets(datasets_root: str) -> list[tuple[str, str | None]]:
                 continue
             rel = rel_of(join(dp, f))
             out.append((rel, detect_format(rel)))
-    return sorted(out)
+    # the engine's own state (catalog, statistics) is no dataset
+    return sorted(e for e in out if not is_internal(e[0]))
 
 
 def _is_hive_partitioned(path: str) -> bool:

@@ -364,12 +364,21 @@ def prune_files(
     return kept
 
 
-def statistics_df(spark, datasets_root: str):
-    """``view_statistics_cache`` / ``view_dataset_statistics`` analog."""
+def statistics_df(spark, datasets_root: str, keep=None):
+    """``view_statistics_cache`` / ``view_dataset_statistics`` analog;
+    ``keep(path)`` (when given) chooses the files whose rows it holds."""
+    from pyspark.sql import functions as F
+
     idx_file = index_path(datasets_root)
     if not bs.exists(idx_file):
         raise FileNotFoundError("no statistics index; run ANALYZE FILES first")
-    return spark.read.parquet(bs.spark_path(idx_file))
+    df = spark.read.parquet(bs.spark_path(idx_file))
+    if keep is None:
+        return df
+    p, fs = bs.dataset_source(idx_file)
+    paths = pq.read_table(p, columns=["path"], filesystem=fs).column("path")
+    return df.where(F.col("path").isin(
+        [f for f in paths.unique().to_pylist() if keep(f)]))
 
 
 def _stats_rows_for_file(f: str, cached: list[dict]) -> list[tuple]:

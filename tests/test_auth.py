@@ -741,3 +741,64 @@ def test_granted_nd_read_plans_once_for_restricted_reader(probe_eng, tmp_path):
     with pytest.raises(AuthError, match="secrets"):
         probe_eng.sql("SELECT t FROM read_zarr('g.zarr') "
                       "WHERE t IN (SELECT id FROM secrets)", user="alice")
+
+
+@pytest.mark.parametrize("enforce", ["ON", "OFF"])
+def test_engine_files_are_never_a_read_target(aeng, enforce):
+    """The catalog (password hashes, encrypted secrets) and the
+    statistics index are the engine's own state: no spelling of a path
+    into them reads for a restricted caller, whatever the enforcement
+    and even under ``GRANT SELECT ON ALL``."""
+    root = aeng.datasets_root
+    with open(f"{root}/open.csv", "w") as f:
+        f.write("a|b\n1|x\n")
+    aeng.sql("GRANT SELECT ON ALL TO ROLE readers")
+    aeng.sql(f"SET AUTH ENFORCEMENT {enforce}")
+    for stmt in [
+        "SELECT * FROM read_csv('.beacon_catalog/catalog.json', '|')",
+        f"SELECT * FROM text.`{root}/.beacon_catalog/catalog.json`",
+        "SELECT * FROM read_csv('./.beacon_catalog/catalog.json', '|')",
+        f"SELECT * FROM read_csv('{root}/.beacon_catalog/catalog.json', '|')",
+        f"SELECT * FROM read_csv('file://{root}/.beacon_catalog/catalog.json',"
+        " '|')",
+        f"SELECT * FROM text.`file://{root}/.beacon_catalog/catalog.json`",
+        "SELECT * FROM read_csv('.beacon*/*', '|')",
+    ]:
+        with pytest.raises(AuthError, match="permission denied"):
+            aeng.sql(stmt, user="alice").collect()
+    # a plain file read still passes, and the super-user reads the catalog
+    assert aeng.sql("SELECT * FROM read_csv('open.csv', '|')",
+                    user="alice").collect()[0].b == "x"
+    assert aeng.sql(f"SELECT * FROM text.`{root}/.beacon_catalog/"
+                    "catalog.json`", user="root").count() > 0
+
+
+@pytest.mark.parametrize("enforce", ["ON", "OFF"])
+def test_whole_index_metadata_functions_keep_readable_rows(aeng, enforce):
+    """``list_datasets()``, ``view_statistics_cache()`` and a bare
+    ``view_dataset_statistics()`` keep only the files a restricted
+    caller may read (deny-wins), and never list the engine's own
+    files; a super-user still sees every statistics row."""
+    spark, root = aeng.spark, aeng.datasets_root
+    spark.range(5).coalesce(1).write.parquet(f"{root}/hidden.parquet")
+    spark.range(3).coalesce(1).write.parquet(f"{root}/open.parquet")
+    aeng.sql("ANALYZE FILES")
+    aeng.sql("GRANT SELECT ON ALL TO ROLE readers")
+    aeng.sql("DENY SELECT ON PATH 'hidden*' TO ROLE readers")
+    aeng.sql(f"SET AUTH ENFORCEMENT {enforce}")
+    visible = {"open.parquet"} | ({"hidden.parquet"} if enforce == "OFF"
+                                  else set())
+
+    def datasets(user):
+        return {r.dataset for r in aeng.sql(
+            "SELECT * FROM list_datasets()", user=user).collect()}
+
+    def stat_files(fn, user):
+        return {r.path.split("/")[-2] for r in aeng.sql(
+            f"SELECT * FROM {fn}()", user=user).collect()}
+
+    assert datasets("alice") == visible
+    assert datasets("root") == {"hidden.parquet", "open.parquet"}
+    for fn in ("view_statistics_cache", "view_dataset_statistics"):
+        assert stat_files(fn, "alice") == visible
+        assert stat_files(fn, "root") == {"hidden.parquet", "open.parquet"}

@@ -561,3 +561,48 @@ def test_query_metrics_endpoint_super_only(spark, tmp_path):
             assert json.loads(r.read())["query_id"] == qid
     finally:
         hs.shutdown()
+
+
+@pytest.mark.parametrize("enforce", ["ON", "OFF"])
+def test_mcp_where_subquery_refused_on_its_parse(spark, tmp_path, enforce):
+    """A per-table tool's ``where`` is checked on Spark's parse, not
+    by keyword: ``id IN (TABLE other)`` names no SELECT but reads all of
+    ``other``, so it is refused; a plain predicate still filters."""
+    import os
+
+    from beacon_spark.server.http import BeaconHttpServer
+
+    root = str(tmp_path / "r")
+    os.makedirs(root)
+    eng = Engine(spark, datasets_root=root)
+    eng.sql("CREATE TABLE pub AS SELECT id, id * 7 AS hidden FROM range(5)")
+    eng.sql("CREATE TABLE other AS SELECT 3 AS id")
+    eng.sql('SET EXTENSION \'mcp\' FOR pub TO '
+            '\'{"enabled": true, "exposed_columns": ["id"]}\'')
+    eng.sql("CREATE USER anonymous WITH PASSWORD 'x'")
+    eng.sql("CREATE ROLE readers")
+    eng.sql("GRANT ROLE readers TO USER anonymous")
+    eng.sql("GRANT SELECT ON ALL TO ROLE readers")
+    eng.sql(f"SET AUTH ENFORCEMENT {enforce}")
+    hs = BeaconHttpServer(eng, port=0)
+    port = hs.serve_background()
+    try:
+        def call(where):
+            body = {"jsonrpc": "2.0", "id": 1, "method": "tools/call",
+                    "params": {"name": "query_pub",
+                               "arguments": {"where": where}}}
+            req = urllib.request.Request(
+                f"http://127.0.0.1:{port}/mcp",
+                data=json.dumps(body).encode(),
+                headers={"Content-Type": "application/json"}, method="POST")
+            with urllib.request.urlopen(req) as r:
+                return json.loads(r.read())["result"]
+
+        r = call("id IN (TABLE other)")
+        assert r["isError"] and "subquer" in r["content"][0]["text"]
+        r = call("id < 2")
+        assert not r["isError"]
+        assert sorted(x["id"] for x in json.loads(r["content"][0]["text"])) \
+            == [0, 1]
+    finally:
+        hs.shutdown()

@@ -1,5 +1,8 @@
-"""ODV ASCII reader/writer tests against the reference's own test file
+"""ODV ASCII reader/writer tests against a small hand-written profile
+file in the layout of the reference's test file
 (beacon-arrow-odv/test-data/test_file.txt) and synthetic round-trips."""
+
+import os
 
 import pyarrow as pa
 import pytest
@@ -12,10 +15,7 @@ from beacon_spark.sources.odv import (
     resolve_columns,
 )
 
-REF_FILE = (
-    "/root/reference/beacon-db/beacon-file-formats/beacon-arrow-odv/"
-    "test-data/test_file.txt"
-)
+REF_FILE = os.path.join(os.path.dirname(__file__), "data", "odv_profiles.txt")
 
 
 def test_header_parse_value_types():
