@@ -170,9 +170,13 @@ def is_allowed(auth: dict, roles: list[str], privilege: str,
 INTERNAL_PREFIXES = (".beacon_catalog", ".beacon_stats", "__beacon__")
 
 
+_INTERNAL_SEGMENT_RE = re.compile(
+    "(?:^|/)(?:{})(?:/|$)".format("|".join(map(re.escape, INTERNAL_PREFIXES))))
+
+
 def is_internal(path: str) -> bool:
     """Whether a segment of ``path`` names the engine's own state."""
-    return any(seg in INTERNAL_PREFIXES for seg in path.split("/"))
+    return _INTERNAL_SEGMENT_RE.search(path) is not None
 
 
 def _path_candidates(engine, path: str) -> set[str]:
@@ -184,7 +188,8 @@ def _path_candidates(engine, path: str) -> set[str]:
     import posixpath
 
     out = {path}
-    path = re.sub(r"^file:(?://)?(?=/)", "", path)
+    if path.startswith("file:"):
+        path = re.sub(r"^file:(?://)?(?=/)", "", path)
     out |= {path, posixpath.normpath(path)}
     root = getattr(engine, "datasets_root", None)
     if root is None or "://" in path:
